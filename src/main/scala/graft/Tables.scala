@@ -2,15 +2,18 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the ten testdata parquet tables (FIXTURES.md).
   *
   * Scale posture: each loader is a plain parquet scan — Catalyst pushes
   * filters and projections down into the vectorized parquet reader, so at
   * 100 TB the same code reads only the needed columns / row groups. No
-  * caching here; callers own lifecycle. At cluster scale the same paths
-  * would point at a partitioned parquet layout and partition pruning would
-  * kick in with zero code change.
+  * data is cached here; callers own lifecycle. The one thing kept is each
+  * table's inferred schema, keyed by a fingerprint of its files (see
+  * [[table]]), so reopening an unchanged table runs no Spark job. At
+  * cluster scale the same paths would point at a partitioned parquet
+  * layout and partition pruning would kick in with zero code change.
   */
 object Tables {
 
@@ -35,9 +38,50 @@ object Tables {
     graft.functions.CharNgrams.register(spark)
   }
 
+  /** Opens `dir/name.parquet` with a known schema. `spark.read.parquet`
+    * infers the schema with a one-task Spark job on every open; here it is
+    * inferred once per (path, fingerprint) and reused. The fingerprint
+    * covers every file's name, size and mtime plus the session's explicitly
+    * set parquet confs (which steer type mapping, e.g. `nanosAsLong`), so a
+    * rewritten table or a changed mapping infers again — a cached schema
+    * is never stale. A missing path opens uncached, raising Spark's own
+    * error. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     prep(spark)
-    spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    fingerprint(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some(fp) =>
+        val schema = schemas.get(path) match {
+          case (`fp`, known) => known
+          case _ =>
+            val inferred = spark.read.parquet(path).schema
+            schemas.put(path, (fp, inferred))
+            inferred
+        }
+        spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]()
+
+  private def fingerprint(spark: SparkSession, path: String): Option[String] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else {
+      val it = fs.listFiles(p, true)
+      val files = Seq.newBuilder[String]
+      while (it.hasNext) {
+        val f = it.next()
+        files += s"${f.getPath}:${f.getLen}:${f.getModificationTime}"
+      }
+      val confs = spark.conf.getAll.toSeq
+        .filter(_._1.matches("spark\\.sql\\.(legacy\\.)?parquet\\..*")).sorted
+      Some((files.result().sorted ++ confs.map { case (k, v) => s"$k=$v" })
+        .mkString("\n"))
+    }
   }
 
   def region(s: SparkSession, dir: String): DataFrame = table(s, dir, "region")

@@ -311,7 +311,7 @@ object Relational {
         graft.sources.Layout.morton16(col("px"), col("sx")).as("z"))
     val stage = Tables.stageDir(s, "zorder", dir)
     graft.sources.Layout.zorderWrite(scaled, stage, col("z"), numFiles = 8)
-    s.read.parquet(stage)
+    s.read.schema(scaled.schema).parquet(stage) // the schema just written
       .groupBy(expr("z div 67108864").as("zbucket")) // 2^26: 64 coarse z-ranges
       .agg(count(lit(1)).as("n"),
         min(col("pk")).as("min_pk"), max(col("pk")).as("max_pk"),
@@ -345,7 +345,7 @@ object Relational {
         graft.sources.Layout.hilbert16(col("px"), col("sx")).as("h"))
     val stage = Tables.stageDir(s, "hilbert", dir)
     graft.sources.Layout.zorderWrite(scaled, stage, col("h"), numFiles = 8)
-    s.read.parquet(stage)
+    s.read.schema(scaled.schema).parquet(stage) // the schema just written
       .agg(count(lit(1)).as("n"), dsum(col("price")).as("revenue"),
         sum(col("pk")).as("sum_pk"), sum(col("sk")).as("sum_sk"),
         min(col("pk")).as("min_pk"), max(col("pk")).as("max_pk"),

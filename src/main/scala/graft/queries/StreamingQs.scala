@@ -535,12 +535,12 @@ object StreamingQs {
     val ckpt = Tables.stageDir(s, "stream-rollup-ckpt", dir)
     Tables.deleteRecursively(rollup)
     Tables.deleteRecursively(ckpt)
-    SR.runRollupMaintain(
+    val written = SR.runRollupMaintain(
       SR.eventsStreamSplitByTime(s, dir)
         .filter(col("event_type") =!= "flush")
         .select(col("event_type"), col("value")),
       rollup, ckpt, keyCol = "event_type", valCol = "value")
-    s.read.parquet(rollup)
+    s.read.schema(written).parquet(rollup)
       .groupBy(col("event_type"))
       .agg(sum(col("n")).as("n"),
         graft.functions.Det.dsumMerge(col("s"), 6).as("sum_value"))

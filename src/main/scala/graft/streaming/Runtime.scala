@@ -41,7 +41,7 @@ object Runtime {
       java.nio.file.Files.copy(src, d.resolve("events.parquet"),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
-    val schema = spark.read.parquet(src.toString).schema
+    val schema = Tables.table(spark, dir, "events").schema
     Tables.decodeEventTs(spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", 1)
@@ -134,7 +134,7 @@ object Runtime {
         java.nio.file.Files.copy(src, d.resolve(name),
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
-    val schema = spark.read.parquet(src.toString).schema
+    val schema = Tables.table(spark, dir, "events").schema
     Tables.decodeEventTs(spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", 1)
@@ -210,19 +210,18 @@ object Runtime {
     * emission at minimal replay cost. */
   def eventsStreamWithFlush(spark: SparkSession, dir: String): DataFrame = {
     Tables.prep(spark)
-    val src = java.nio.file.Paths.get(s"$dir/events.parquet")
     val names = Seq("events_0_flush.parquet")
     // The fixture stages the DECODED frame (ts normalized to TimestampType
     // micros) so the sentinel arithmetic below is representation-agnostic;
     // v6 marks the decoded layout (v5 staged raw nanos).
     val streamDir = stageReplay(spark, dir, "stream-flush", "v6", names) { d =>
-      val batch = Tables.decodeEventTs(spark.read.parquet(src.toString))
+      val batch = Tables.events(spark, dir)
       val maxTsUs = batch.agg(max(unix_micros(col("ts")))).head().getLong(0)
       stageOne(batch.unionByName(
           flushFrame(batch, maxTsUs + 4L * 3600L * 1000000L)),
         d, "events_0_flush.parquet")
     }
-    val schema = Tables.decodeEventTs(spark.read.parquet(src.toString)).schema
+    val schema = Tables.events(spark, dir).schema
     Tables.decodeEventTs(spark.readStream
       .schema(schema)
       .parquet(streamDir.toString + "/events_*.parquet"))
@@ -243,12 +242,11 @@ object Runtime {
     * Margin > delay + window makes the proof unconditional. */
   private[graft] def stagedSplitDir(spark: SparkSession,
                                     dir: String): java.nio.file.Path = {
-    val src = java.nio.file.Paths.get(s"$dir/events.parquet")
     val names = Seq("events_0_early.parquet", "events_1_late.parquet")
     // Decoded-layout fixture (see eventsStreamWithFlush); the median split
     // runs over epoch-micros of the normalized ts.
     stageReplay(spark, dir, "stream-split", "v6", names) { d =>
-      val batch = Tables.decodeEventTs(spark.read.parquet(src.toString))
+      val batch = Tables.events(spark, dir)
       val bounds = batch.select(
         expr("approx_percentile(unix_micros(ts), 0.5)").as("mid"),
         max(unix_micros(col("ts"))).as("mx")).head()
@@ -275,10 +273,9 @@ object Runtime {
     * identical semantics. */
   def eventsStreamSplitByTime(spark: SparkSession, dir: String): DataFrame = {
     Tables.prep(spark)
-    val src = java.nio.file.Paths.get(s"$dir/events.parquet")
     val streamDir = stagedSplitDir(spark, dir)
     Tables.decodeEventTs(spark.readStream
-      .schema(Tables.decodeEventTs(spark.read.parquet(src.toString)).schema)
+      .schema(Tables.events(spark, dir).schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(streamDir.toString + "/events_*.parquet"))
   }
@@ -296,7 +293,6 @@ object Runtime {
     * late-data-accounting contract. */
   def eventsStreamLateArrivals(spark: SparkSession, dir: String): DataFrame = {
     Tables.prep(spark)
-    val src = java.nio.file.Paths.get(s"$dir/events.parquet")
     val names = Seq("events_0_ontime.parquet", "events_1_tick.parquet",
       "events_2_late.parquet")
     // THREE batches, not two: Spark filters a batch's late rows against
@@ -308,7 +304,7 @@ object Runtime {
     // against max(on-time ts) − 1 h — the production shape, where the
     // stream has been running long before a straggler arrives.
     val streamDir = stageReplay(spark, dir, "stream-late", "v2", names) { d =>
-      val batch = Tables.decodeEventTs(spark.read.parquet(src.toString))
+      val batch = Tables.events(spark, dir)
       val onTime = batch.filter(col("event_id") % 5 =!= 2)
       val maxOnTimeUs = onTime.agg(max(unix_micros(col("ts")))).head().getLong(0)
       val maxTsUs = batch.agg(max(unix_micros(col("ts")))).head().getLong(0)
@@ -319,7 +315,7 @@ object Runtime {
         d, "events_2_late.parquet")
     }
     Tables.decodeEventTs(spark.readStream
-      .schema(Tables.decodeEventTs(spark.read.parquet(src.toString)).schema)
+      .schema(Tables.events(spark, dir).schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(streamDir.toString + "/events_*.parquet"))
   }
@@ -371,7 +367,7 @@ object Runtime {
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
     spark.readStream
-      .schema(spark.read.parquet(src.toString).schema)
+      .schema(Tables.documents(spark, dir).schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(streamDir.toString)
       .withColumn("ts", timestamp_micros(lit(983750400000000L) + col("doc_id")))
@@ -865,8 +861,7 @@ object Runtime {
       java.nio.file.Files.copy(fixture.resolve(name), arrivals.resolve(name),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING,
         java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
-    val schema = Tables.decodeEventTs(
-      spark.read.parquet(s"$dir/events.parquet")).schema
+    val schema = Tables.events(spark, dir).schema
     // One run = one StreamingQuery instance over whatever has arrived;
     // AvailableNow drains the unprocessed files and stops cleanly (the
     // controlled stand-in for a crash AFTER the last batch commit).
@@ -964,20 +959,21 @@ object Runtime {
     * serving-table story: at 100 TB of accumulated events the rollup
     * table holds O(ticks × keys) tiny rows and compacts like any other
     * layout; recomputing the view per tick is the full-scan this sink
-    * exists to delete. */
+    * exists to delete. Returns the schema of the rollup rows, so the
+    * serving read opens the table without inferring it. */
   def runRollupMaintain(rows: DataFrame, rollupPath: String,
                         checkpoint: String, keyCol: String,
-                        valCol: String): Unit =
+                        valCol: String): org.apache.spark.sql.types.StructType =
     withStreamShufflePartitions(rows.sparkSession) {
+    def partial(batch: DataFrame, tick: Long) = batch.groupBy(col(keyCol))
+      .agg(count(lit(1)).as("n"),
+        graft.functions.Det.dsumPartial(col(valCol)).as("s"))
+      .withColumn("tick", lit(tick))
     val q = rows.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, tick: Long) =>
-        batch.groupBy(col(keyCol))
-          .agg(count(lit(1)).as("n"),
-            graft.functions.Det.dsumPartial(col(valCol)).as("s"))
-          .withColumn("tick", lit(tick))
-          .coalesce(1)
+        partial(batch, tick).coalesce(1)
           .write.mode(SaveMode.Append).parquet(rollupPath)
         ()
       }
@@ -989,6 +985,7 @@ object Runtime {
       throw new IllegalStateException(
         s"rollup stream into $rollupPath did not finish within 120s")
     }
+    partial(rows, 0L).schema
   }
 
   /** UPDATE-MODE streaming → a latest-wins SERVING TABLE: each micro-batch
@@ -1126,11 +1123,10 @@ object Runtime {
     * q_dedup_incremental key and the DuckDB oracle rebuild). */
   private def corpusArrivalsDir(spark: SparkSession,
                                 dir: String): java.nio.file.Path = {
-    val src = java.nio.file.Paths.get(s"$dir/documents.parquet")
     val names = (0 until 3).map(i => s"arrivals_$i.parquet")
     stageReplay(spark, dir, "docs-corpus-dedup", "v1", names,
       srcName = "documents.parquet") { d =>
-      val batch = spark.read.parquet(src.toString)
+      val batch = Tables.documents(spark, dir)
         .filter(col("doc_id") % 10 === 3)
         .select(col("doc_id"), col("text"), col("source"))
       val ids = batch.select(col("doc_id")).orderBy("doc_id")
@@ -1327,8 +1323,7 @@ object Runtime {
       java.nio.file.Files.copy(fixture.resolve(n), arrivals.resolve(n),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING,
         java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
-    val schema = Tables.decodeEventTs(
-      spark.read.parquet(s"$dir/events.parquet")).schema
+    val schema = Tables.events(spark, dir).schema
     arrive(names(0))
     val src = Tables.decodeEventTs(spark.readStream
       .schema(schema)

@@ -43,8 +43,9 @@ object Unigram {
     * the max over pieces of length ≤ maxLen ending there (scanned
     * LONGEST-first; strict `>` keeps the first, so ties break to the
     * longest piece — deterministic). Missing pieces (`element_at` → null)
-    * are skipped; an uncoverable word ends at the −1e18 sentinel (the
-    * trainer's never-prune-single-chars rule makes that unreachable). */
+    * are skipped; an uncoverable word ends at the −1e18 sentinel with an
+    * empty segmentation (the trainer's never-prune-single-chars rule makes
+    * that unreachable, and `train` requires it). */
   def viterbiBest(w: Column, logp: Column, maxLen: Int): Column = {
     val zeroSegs = array().cast("array<string>")
     val init = array(struct(lit(0.0).as("s"), zeroSegs.as("segs")))
@@ -89,12 +90,13 @@ object Unigram {
   def train(wordsIn: DataFrame, seedSize: Int = 300,
             prunes: Seq[Int] = Seq(200, 120), finalRounds: Int = 2,
             maxLen: Int = 4): (Seq[Piece], Seq[Double]) = {
-    // Persist the word-frequency table: the trainer fires 2 vocab-sized
-    // jobs per EM round plus the seed pass, and an unpersisted input
+    // Persist the word-frequency table: the trainer runs one vocab-sized
+    // action per EM round plus the seed pass, and an unpersisted input
     // re-runs the CORPUS word-count shuffle under every one of them
-    // (measured 9 × ~4 s at sf0.1 — 36 s of the key's 39 s; persisted,
-    // the whole train is ~3 s). The family's law — the corpus is touched
-    // once — needs the persist to actually hold.
+    // (measured at sf0.1: the re-runs cost 36 s of the key's 39 s;
+    // persisted, the whole train was ~3 s). The family's law — the corpus
+    // is touched once — needs the persist to actually hold. It is the
+    // trainer's only cache.
     val words = graft.operators.ScaleOps.trackedPersist(wordsIn)
     val cand = candidateCounts(words, maxLen).collect()
       .map(r => (r.getString(0), r.getLong(1)))
@@ -109,29 +111,25 @@ object Unigram {
     val losses = Seq.newBuilder[Double]
     val rounds = prunes.size + finalRounds
     for (r <- 1 to rounds) {
-      val lp = typedlit(logpMap)
-      val best = viterbiBest(col("w"), lp, maxLen)
-      // ONE Viterbi pass per round (r20): the DP is the round's dominant
-      // cost (O(len·maxLen) nested folds per word), and the E-step counts
-      // and the loss both read only its output — persist the per-word best
-      // struct and run the two cheap aggregations over the cache instead
-      // of re-running the DP for the loss (it ran twice per round before).
-      // The aggregations themselves are unchanged expressions over
-      // unchanged rows. They are also independent — overlap them
-      // (guide §2.6); the persisted input is materialized by the first
-      // action semantics of inParallel's contract via the explicit count.
-      val bestF = graft.operators.ScaleOps.trackedPersist(
-        words.select(col("n"), best.as("b")))
-      bestF.count()
-      val (agg, loss) = graft.operators.ScaleOps.inParallel2(
-        () => bestF
-          .select(col("n"), explode(col("b")("segs")).as("piece"))
-          .groupBy(col("piece"))
-          .agg(sum(col("n")).as("cnt")).collect()
-          .map(rr => (rr.getString(0), rr.getLong(1))),
-        () => -bestF.select(col("b")("s").multiply(col("n")).as("t"))
-          .agg(sum(col("t"))).head().getDouble(0))
-      losses += loss
+      // ONE Spark action per round: Viterbi-segment every distinct word
+      // under this round's log-probs and sum word frequencies per chosen
+      // piece — the E-step statistic. The round's loss needs no action of
+      // its own: a word's Viterbi score is the sum of its pieces'
+      // log-probs, so the corpus loss −Σ_w n_w·score(w) equals
+      // −Σ_p cnt(p)·logp(p) over the collected counts (summed in piece
+      // order, so it is deterministic).
+      val lpm = logpMap
+      val agg = words
+        .select(col("n"), explode_outer(
+          viterbiBest(col("w"), typedlit(lpm), maxLen)("segs")).as("piece"))
+        .groupBy(col("piece"))
+        .agg(sum(col("n")).as("cnt")).collect()
+        .map(rr => (rr.getString(0), rr.getLong(1)))
+      // explode_outer keeps a word with an empty segmentation (uncoverable:
+      // its DP ended at the sentinel) as a null piece.
+      require(!agg.exists(_._1 == null),
+        "unigram trainer: a word has no segmentation under the piece table")
+      losses += -agg.sortBy(_._1).map { case (p, c) => c * lpm(p) }.sum
       // M-step: exact MLE over the chosen segmentations. Pieces with zero
       // expected count drop out (they were never chosen — every word's
       // current segmentation survives, so coverage holds); early rounds

@@ -99,4 +99,42 @@ class IterativeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(math.abs(g.weights.sum - 1.0) < 1e-9)
     df.unpersist()
   }
+
+  test("unigram trainer: one SQL execution per EM round plus the seed pass; caches only the word table") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val sc = spark.sparkContext
+    val words = Tables.documents(spark, Sf0001)
+      .select(explode(split(lower(col("text")), " ")).as("w"))
+      .filter(length(col("w")) > 0)
+      .groupBy(col("w")).agg(count(lit(1)).as("n"))
+    val execs = new AtomicInteger(0)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        execs.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        execs.incrementAndGet()
+    }
+    val prunes = Seq(200, 120)
+    val finalRounds = 2
+    ListenerBusDrain(sc)
+    val rdds0 = sc.getPersistentRDDs.size
+    spark.listenerManager.register(listener)
+    try {
+      val (pieces, losses) = graft.text.Unigram.train(words,
+        prunes = prunes, finalRounds = finalRounds)
+      ListenerBusDrain(sc)
+      val rounds = prunes.size + finalRounds
+      assert(pieces.nonEmpty && losses.length == rounds)
+      assert(execs.get() == 1 + rounds,
+        s"${execs.get()} SQL executions; expected the seed pass + one per round")
+      assert(sc.getPersistentRDDs.size - rdds0 <= 1,
+        "the trainer may cache only its word table")
+    } finally {
+      spark.listenerManager.unregister(listener)
+      graft.operators.ScaleOps.releaseTracked()
+    }
+  }
 }

@@ -97,4 +97,37 @@ class StagingSpec extends AnyFunSuite {
       assert(got == us, s"$name: $got != $us")
     }
   }
+
+  test("Tables.table: a rewritten table reopens with its new schema; an unchanged one starts no job") {
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val dir = Files.createTempDirectory("graft-schema-spec").toString
+    def jobsDuring(body: => Unit): Int = {
+      val jobs = new AtomicInteger(0)
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      }
+      ListenerBusDrain(sc)
+      sc.addSparkListener(l)
+      try { body; ListenerBusDrain(sc) } finally sc.removeSparkListener(l)
+      jobs.get()
+    }
+    try {
+      Seq((1L, "a")).toDF("id", "s").write.parquet(s"$dir/t.parquet")
+      // The first open infers the schema, which is a Spark job (this also
+      // shows the listener sees the inference job).
+      assert(jobsDuring(Tables.table(spark, dir, "t").schema) >= 1)
+      assert(Tables.table(spark, dir, "t").schema.fieldNames.toSeq == Seq("id", "s"))
+      // Same path, different schema: the new files change the fingerprint.
+      Seq((1.5, 2, true)).toDF("x", "y", "z")
+        .write.mode("overwrite").parquet(s"$dir/t.parquet")
+      val t2 = Tables.table(spark, dir, "t")
+      assert(t2.schema.fieldNames.toSeq == Seq("x", "y", "z"))
+      assert(t2.as[(Double, Int, Boolean)].collect().toSeq == Seq((1.5, 2, true)))
+      // Unchanged since the last open: the cached schema is reused.
+      assert(jobsDuring(Tables.table(spark, dir, "t").schema) == 0)
+    } finally Tables.deleteRecursively(dir)
+  }
 }
