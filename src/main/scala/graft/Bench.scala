@@ -28,10 +28,6 @@ object Bench {
     val stageRoot = Paths.get(sys.props("java.io.tmpdir"),
       s"graft-stage-bench-${ProcessHandle.current().pid()}").toString
     spark.conf.set("graft.stage.dir", stageRoot)
-    // A/B knob for the streaming state backend (default rocksdb — the
-    // declared posture; "hdfs" = the heap provider escape hatch).
-    sys.env.get("SPARK_GRAFT_STATE_PROVIDER")
-      .foreach(spark.conf.set("graft.stream.stateStoreProvider", _))
 
     // Untimed warmup: touch the scan + shuffle + window + broadcast-join
     // codepaths once so JIT/codegen warmup isn't billed to the first query.

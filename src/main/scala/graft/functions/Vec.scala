@@ -23,7 +23,7 @@ object Vec {
   def dot(a: String, b: String): Column = expr(s"vec_dot($a, $b)")
 
   /** Reference HOF formulation of dot — interpreted three-fold version;
-    * VecSpec asserts bit-equality with the native expression. */
+    * VecGramSpec asserts bit-equality with the native expression. */
   def dotHof(a: String, b: String): Column =
     expr(s"aggregate(zip_with($a, $b, (x, y) -> double(x) * double(y)), 0D, (s, v) -> s + v)")
 

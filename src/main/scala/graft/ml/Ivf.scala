@@ -22,9 +22,6 @@ import org.apache.spark.sql.functions._
   */
 object Ivf {
 
-  private def dbg[A](name: String)(f: => A): A =
-    graft.operators.ScaleOps.dbg("ivf")(name)(f)
-
   case class Index(assigned: DataFrame, model: KMeansModel,
                    arrayCol: String, idCol: String)
 
@@ -192,17 +189,17 @@ object Ivf {
                        idCol: String = "vec_id",
                        tuneForK: Int = 10,
                        targetRecall: Double = 0.9): DiskIndex = {
-    val idx0 = dbg("build.kmeans") { build(embeddings, arrayCol, nCells, seed, idCol) }
+    val idx0 = build(embeddings, arrayCol, nCells, seed, idCol)
     val idx = idx0.copy(assigned =
       graft.operators.ScaleOps.trackedPersist(idx0.assigned))
     // Materialize the assigned cache once, then OVERLAP the probe-width
     // tune and the layout write (guide §2.6): both only READ the persisted
     // frame, neither depends on the other, and the tuned width is written
     // to its sidecar after both finish — identical artifacts, less wall.
-    dbg("build.assign") { idx.assigned.count() }
+    idx.assigned.count()
     val (nProbe, _) = graft.operators.ScaleOps.inParallel2(
-      () => dbg("build.tune") { tuneNProbe(idx, tuneForK, targetRecall) },
-      () => dbg("build.write") { graft.sources.Layout.writePartitioned(idx.assigned, path, "cell") })
+      () => tuneNProbe(idx, tuneForK, targetRecall),
+      () => graft.sources.Layout.writePartitioned(idx.assigned, path, "cell"))
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(path, "_ivf_nprobe"), nProbe.toString)
     DiskIndex(path, idx.model, arrayCol, idCol, Some(nProbe))
@@ -441,16 +438,16 @@ object Ivf {
       .drop("cell")
       .join(graft.operators.ScaleOps.maybeBroadcast(snapIds),
         Seq(index.idCol), "left_anti")
-    val idx0 = dbg("rebuild.kmeans") { build(survivors, index.arrayCol, nCells, seed, index.idCol) }
+    val idx0 = build(survivors, index.arrayCol, nCells, seed, index.idCol)
     val idx = idx0.copy(assigned =
       graft.operators.ScaleOps.trackedPersist(idx0.assigned))
     // Same overlap as buildPartitioned: tune + new-generation write are
     // independent reads of the materialized cache (guide §2.6).
-    dbg("rebuild.assign") { idx.assigned.count() }
+    idx.assigned.count()
     val gen = s"gen-${nextGen(index.path)}"
     val (nProbe, _) = graft.operators.ScaleOps.inParallel2(
-      () => dbg("rebuild.tune") { tuneNProbe(idx, tuneForK, targetRecall) },
-      () => dbg("rebuild.write") { graft.sources.Layout.writePartitioned(idx.assigned, s"${index.path}/$gen", "cell") })
+      () => tuneNProbe(idx, tuneForK, targetRecall),
+      () => graft.sources.Layout.writePartitioned(idx.assigned, s"${index.path}/$gen", "cell"))
     val tmpNp = Paths.get(index.path,
       s"_ivf_nprobe.tmp-${java.util.UUID.randomUUID()}")
     Files.writeString(tmpNp, nProbe.toString)
@@ -480,8 +477,8 @@ object Ivf {
     * Layout.compact's DV-aware shape applied to the index): rewrite the
     * cell partitions WITHOUT the tombstoned rows into a NEW generation
     * dir, publish it with one atomic `_gen` pointer swap, then clean up.
-    * Search results are identical before and after (IvfDeleteSpec pins
-    * this); only the physical files change.
+    * Search results are identical before and after (R18OpsSpec's
+    * q_sim_ivf_delete test pins this); only the physical files change.
     *
     * Concurrency + crash posture (ADVICE r18): the fold SNAPSHOTS the
     * sidecar's part files first and deletes EXACTLY those parts after the

@@ -44,18 +44,15 @@ object Pq {
     * paper's one-byte setting) — `random` init keeps 8 × k=256 fits cheap;
     * codebook quality only shifts which candidates make the shortlist, the
     * exact re-rank decides the final ranking. */
-  private def dbg[A](name: String)(f: => A): A =
-    graft.operators.ScaleOps.dbg("pq")(name)(f)
-
   def build(embeddings: DataFrame, arrayCol: String, nCells: Int,
             m: Int = 8, seed: Long = 42L, idCol: String = "vec_id",
             targetRecall: Double = 0.9, tuneForK: Int = 10): PqIndex = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val idx0 = dbg("ivf.build") { Ivf.build(embeddings, arrayCol, nCells, seed, idCol, maxIter = 4) }
+    val idx0 = Ivf.build(embeddings, arrayCol, nCells, seed, idCol, maxIter = 4)
     val assigned = graft.operators.ScaleOps.trackedPersist(idx0.assigned)
-    val nProbe = dbg("tuneNProbe") { Ivf.tuneNProbe(idx0.copy(assigned = assigned),
-      tuneForK, targetRecall) }
+    val nProbe = Ivf.tuneNProbe(idx0.copy(assigned = assigned),
+      tuneForK, targetRecall)
     val dim = assigned.select(size(col(arrayCol))).head().getInt(0)
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val dsub = dim / m
@@ -79,13 +76,13 @@ object Pq {
     // depends on nothing another fit does, so the models are bit-identical
     // to the sequential loop; only the wall-clock changes — measured 8.6 s
     // of serial fits at sf0.1 collapse to the slowest single fit).
-    dbg("resP materialize") { resP.count() }
+    resP.count()
     val models = graft.operators.ScaleOps.inParallel((0 until m).map { s =>
-      () => dbg(s"fit book $s") { new KMeans().setK(256).setSeed(seed + s)
+      () => new KMeans().setK(256).setSeed(seed + s)
         .setInitMode("random").setMaxIter(2).setFeaturesCol("features")
         .fit(Pipelines.withFeatures(
           resP.withColumn("__sub", subCol("__res", s, dsub)), "__sub")
-          .select("features")) }
+          .select("features"))
     })
     var cur: DataFrame = resP
     models.zipWithIndex.foreach { case (model, s) =>

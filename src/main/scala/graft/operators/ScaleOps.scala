@@ -68,21 +68,6 @@ object ScaleOps {
     p
   }
 
-  /** Env-gated phase-timing probe (ADVICE r19: ONE helper instead of three
-    * divergent private copies). Set `GRAFT_DEBUG_TIMING` (or the legacy
-    * `GRAFT_PQ_DEBUG` name the old copies used) to print
-    * "[tag] name   1.234 s" per probed phase. Dev scaffolding only — the
-    * gate is read once and the helper is a plain call-through when unset. */
-  private val debugTiming =
-    sys.env.contains("GRAFT_DEBUG_TIMING") || sys.env.contains("GRAFT_PQ_DEBUG")
-  def dbg[A](tag: String)(name: String)(f: => A): A =
-    if (debugTiming) {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[$tag] $name%-24s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
-      r
-    } else f
-
   /** Run independent Spark ACTIONS concurrently and return their results in
     * input order (spark_optimization_guide §2.6: the scheduler runs several
     * jobs at once; actions are only sequential because driver code calls

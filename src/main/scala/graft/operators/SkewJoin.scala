@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * rows spread over `saltFactor` tasks. The salt VALUE never affects the
   * result set (every salt matches an exploded dim copy), so task retries
   * re-salting differently are harmless; result-set equality with the
-  * plain join is asserted in SkewJoinSpec.
+  * plain join is asserted in LayoutSkewSpec.
   */
 object SkewJoin {
 

@@ -1070,7 +1070,8 @@ object LlmOps {
     * a single-task sort on the hottest key at 100 TB. Past the gate the
     * router switches to the map-side-combined `groupBy(term).count()` +
     * size-gated broadcast join-back (the ngram-freq pattern above): same
-    * rows bit-for-bit (TextRouteSpec), no whole-partition sort anywhere. */
+    * rows bit-for-bit (ScaleOpsSpec's tfidf router test), no
+    * whole-partition sort anywhere. */
   private def tfidfPlan(s: SparkSession, dir: String, scaleForm: Boolean): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(s, dir)
@@ -1484,7 +1485,8 @@ object LlmOps {
     * skew is STRUCTURAL — the planted global footer occurs in every doc,
     * so that one window partition is the whole corpus in one task at
     * scale. Past the gate: `groupBy(seg).count()` + size-gated broadcast
-    * join-back, same rows bit-for-bit (TextRouteSpec). */
+    * join-back, same rows bit-for-bit (ScaleOpsSpec's boilerplate router
+    * test). */
   private def boilerplatePlan(s: SparkSession, dir: String, scaleForm: Boolean): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val minDf = 3
@@ -1690,31 +1692,21 @@ object LlmOps {
     * Scale posture: the corpus is touched ONCE (the word-count shuffle
     * that q_text_bpe_pairs already pays — zipf economy: counting words
     * first makes every later pass vocabulary-sized). Each of the 10 steps
-    * is one map-side-combined pair aggregation over the VOCAB plus a
-    * narrow codegen'd fold rewriting the symbol arrays (functions
-    * .aggregate — no UDF); the per-step driver fetch is ONE row (the
-    * argmax rule), the P2-loop convention. Steps persist vocab-sized
-    * frames only. The merge fold is leftmost-first like the reference
-    * algorithm; all arithmetic is exact integer sums. Declared no-oracle
-    * (the data-dependent rule recursion has no tractable SQL form);
-    * TextOpsSpec pins the full 10-rule sequence against an independent
-    * driver-side reference BPE at sf0.001. */
+    * is one map-side-combined pair aggregation over the VOCAB, whose
+    * symbols the learned rules rewrite as a narrow codegen'd `replace`
+    * chain on the packed form (no UDF); the per-step driver fetch is ONE
+    * row (the argmax rule), the P2-loop convention. The only cache is the
+    * vocab-sized packed word table. The merge is leftmost-first like the
+    * reference algorithm; all arithmetic is exact integer sums. Declared
+    * no-oracle (the data-dependent rule recursion has no tractable SQL
+    * form); NoOracleSpec pins the full 10-rule sequence against an
+    * independent driver-side reference BPE at sf0.001. */
   val qTextBpeTrain: Q = (s, dir) => {
     import s.implicits._
-    trainBpeMerges(s, dir)
+    trainBpeMerges(corpusWordFreqs(s, dir))
       .toDF("step", "left", "right", "merged", "n_occurrences")
       .orderBy("step")
   }
-
-  /** The leftmost-first BPE merge fold as a column expression — pure
-    * column functions (codegen'd, and symbol text can never inject into a
-    * SQL string). Shared by the train loop and the encode apply. */
-  private def bpeMergeFold(syms: Column, a: String, b: String): Column =
-    aggregate(syms, array().cast("array<string>"),
-      (out, sym) => when(
-          size(out) > 0 && element_at(out, -1) === lit(a) && sym === lit(b),
-          concat(slice(out, lit(1), size(out) - 1), array(lit(a + b))))
-        .otherwise(concat(out, array(sym))))
 
   /** Character symbolization: one symbol per char + the '</w>' word
     * terminator — the classic word-level BPE alphabet. */
@@ -1734,73 +1726,36 @@ object LlmOps {
       i => hx.substr(i * lit(2) - lit(1), lit(2))), array(lit("</w>")))
   }
 
-  /** The corpus word-frequency frame the BPE trainer symbolizes. */
-  private def bpeTrainWords(s: SparkSession, dir: String) =
-    Tables.documents(s, dir)
-      .select(explode(split(lower(col("text")), " ")).as("w"))
-      .filter(length(col("w")) > 0)
-      .groupBy(col("w")).agg(count(lit(1)).as("n"))
-
   /** The distributed BPE training loop (see [[qTextBpeTrain]] for the
-    * algorithm and scale argument). Returns the learned rule table.
-    * `symize` picks the initial alphabet: char-level (default) or
-    * byte-level ([[byteSyms]]) — the merge machinery is alphabet-blind.
+    * algorithm and scale argument) over `words` (`(w, n)` frequencies).
+    * Returns the learned rule table. `symize` picks the initial alphabet:
+    * char-level (default) or byte-level ([[byteSyms]]) — the merge
+    * machinery is alphabet-blind.
     *
-    * r20: each merge step rewrites the vocabulary on the PACKED string form
-    * (graft.text.SymPack — one codegen'd `replace` per word instead of the
-    * O(len²) interpreted array fold) with pair counts derived from the same
-    * packed column; the learned rules are bit-identical (TextOpsSpec pins
-    * the sequence against the driver reference). A corpus word containing
-    * the marker char would make the packing ambiguous — one cached-scan
-    * check routes that input through [[trainBpeMergesFold]] (byte-level
-    * symbols are hex pairs, so the byteSyms path can never be dirty). */
-  def trainBpeMerges(s: SparkSession, dir: String, steps: Int = 10,
+    * The symbolized table is packed once (graft.text.SymPack — total on
+    * any input) and is the trainer's only cache; step k re-applies the
+    * k−1 learned rules as one codegen'd `replace` chain and counts pairs
+    * over the result, so each step is exactly one Spark action. The
+    * collected argmax row is unescaped on the driver. */
+  def trainBpeMerges(words: DataFrame, steps: Int = 10,
                      symize: Column => Column = charSyms)
       : Seq[(Int, String, String, String, Long)] = {
     import graft.text.SymPack._
-    val words0 = graft.operators.ScaleOps.trackedPersist(
-      bpeTrainWords(s, dir)
-        .select(pack(symize(col("w"))).as("ms"), col("n"),
-          dirty(symize(col("w"))).as("__dirty")))
-    if (words0.filter(col("__dirty")).limit(1).count() > 0)
-      return trainBpeMergesFold(s, dir, steps, symize)
-    var words: DataFrame = words0.select(col("ms"), col("n"))
+    val packed = graft.operators.ScaleOps.trackedPersist(
+      words.select(pack(symize(col("w"))).as("ms"), col("n")))
     val merges = Seq.newBuilder[(Int, String, String, String, Long)]
+    var rules = Vector.empty[(String, String, String)]
     for (step <- 1 to steps) {
-      val top = words
-        .select(explode(adjacentPairs(unpack(col("ms")))).as("p"), col("n"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("n")).as("cnt"))
-        .orderBy(col("cnt").desc, col("a"), col("b"))
-        .limit(1).collect()(0)
-      val (a, b, cnt) = (top.getString(0), top.getString(1), top.getLong(2))
-      merges += ((step, a, b, a + b, cnt))
-      words = graft.operators.ScaleOps.trackedPersist(words.select(
-        mergeStep(col("ms"), a, b, a + b).as("ms"), col("n")))
-    }
-    merges.result()
-  }
-
-  /** The original array-fold BPE trainer — exact-semantics fallback for
-    * marker-containing corpora (see [[trainBpeMerges]]). */
-  private def trainBpeMergesFold(s: SparkSession, dir: String, steps: Int,
-                                 symize: Column => Column)
-      : Seq[(Int, String, String, String, Long)] = {
-    var words = graft.operators.ScaleOps.trackedPersist(
-      bpeTrainWords(s, dir).select(symize(col("w")).as("syms"), col("n")))
-    val merges = Seq.newBuilder[(Int, String, String, String, Long)]
-    for (step <- 1 to steps) {
-      val top = words
-        .select(explode(graft.text.SymPack.adjacentPairs(col("syms"))).as("p"),
+      val top = packed
+        .select(explode(adjacentPairs(unpack(mergeAll(col("ms"), rules)))).as("p"),
           col("n"))
         .groupBy(col("p.a").as("a"), col("p.b").as("b"))
         .agg(sum(col("n")).as("cnt"))
         .orderBy(col("cnt").desc, col("a"), col("b"))
         .limit(1).collect()(0)
-      val (a, b, cnt) = (top.getString(0), top.getString(1), top.getLong(2))
-      merges += ((step, a, b, a + b, cnt))
-      words = graft.operators.ScaleOps.trackedPersist(words.select(
-        bpeMergeFold(col("syms"), a, b).as("syms"), col("n")))
+      val (a, b) = (unescape(top.getString(0)), unescape(top.getString(1)))
+      merges += ((step, a, b, a + b, top.getLong(2)))
+      rules :+= ((a, b, a + b))
     }
     merges.result()
   }
@@ -1824,21 +1779,12 @@ object LlmOps {
       .select(col("doc_id"), col("lang"),
         explode(split(lower(col("text")), " ")).as("w"))
       .filter(length(col("w")) > 0)
-    val initS = concat(
-      expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))"),
-      array(lit("</w>")))
-    // r20: the 10 merge folds run on the PACKED string form (codegen'd
-    // replace chain; token count = half the marker count). A
-    // marker-containing word (ambiguous packing) takes the original fold
-    // chain through the per-row `when` instead, so counts are exact on any
-    // input; both branches are lazy per row.
-    val ms = merges.foldLeft(pack(initS)) {
-      case (acc, (a, b)) => mergeStep(acc, a, b, a + b) }
-    val foldTok = size(merges.foldLeft(initS) {
-      case (acc, (a, b)) => bpeMergeFold(acc, a, b) })
+    // The 10 merge folds run on the PACKED string form (graft.text.SymPack
+    // — a codegen'd replace chain; token count = half the marker count).
+    val ms = mergeAll(pack(charSyms(col("w"))),
+      merges.map { case (a, b) => (a, b, a + b) })
     val wordTokens = docWords.select(col("w")).distinct()
-      .select(col("w"), when(dirty(initS), foldTok.cast("long"))
-        .otherwise(packedSize(ms)).as("n_tok"))
+      .select(col("w"), packedSize(ms).as("n_tok"))
     docWords
       .join(graft.operators.ScaleOps.broadcastIfSourceSmall(
         wordTokens, Tables.documents(s, dir)), Seq("w"))
@@ -1867,20 +1813,20 @@ object LlmOps {
     * are one word count and one gated-broadcast join each. No oracle
     * (merge recursion has no tractable SQL form), like its siblings. */
   val qTextBpeBytes: Q = (s, dir) => {
-    val merges = trainBpeMerges(s, dir, symize = byteSyms)
+    val merges = trainBpeMerges(corpusWordFreqs(s, dir), symize = byteSyms)
     val mergedVocab = merges.map(_._4)
     val words = Relational.malformedLines(s, dir)
       .select(when(col("is_malformed"), lit("_quarantine"))
         .otherwise(lit("clean")).as("bucket"),
         explode(split(col("line"), " ")).as("w"))
       .filter(length(col("w")) > 0)
-    // r20: merge folds on the PACKED string form (graft.text.SymPack — a
+    // Merge folds on the PACKED string form (graft.text.SymPack — a
     // codegen'd replace chain). Byte-level symbols are hex pairs + the
-    // terminator, so the packing can NEVER be ambiguous — no dirty guard
-    // needed on this path, for any input bytes.
-    val msFinal = merges.foldLeft(graft.text.SymPack.pack(byteSyms(col("w")))) {
-      case (acc, (_, a, b, _, _)) =>
-        graft.text.SymPack.mergeStep(acc, a, b, a + b) }
+    // terminator, which escaping leaves unchanged, so the unpacked symbols
+    // are the raw ones the membership test below expects.
+    val msFinal = graft.text.SymPack.mergeAll(
+      graft.text.SymPack.pack(byteSyms(col("w"))),
+      merges.map { case (_, a, b, m, _) => (a, b, m) })
     val vocab = words.select(col("w")).distinct()
       .select(col("w"), graft.text.SymPack.unpack(msFinal).as("syms"))
     // The unk certificate is a real membership test: a symbol is known
@@ -2012,10 +1958,11 @@ object LlmOps {
     (syms, syms.map(_.stripPrefix("##").length).max)
   }
 
-  /** The corpus word-frequency table every tokenizer trainer starts from
-    * (the one corpus-sized shuffle of the family; identical normalization
-    * to the BPE keys: lower + single-space split + nonempty). */
-  private def corpusWordFreqs(s: SparkSession, dir: String) =
+  /** The corpus word-frequency table `(w, n)` every tokenizer trainer
+    * (BPE, WordPiece, unigram) starts from — the one corpus-sized shuffle
+    * of the family: lower + single-space split + nonempty, the same
+    * normalization as every tokenizer encode. */
+  def corpusWordFreqs(s: SparkSession, dir: String) =
     Tables.documents(s, dir)
       .select(explode(split(lower(col("text")), " ")).as("w"))
       .filter(length(col("w")) > 0)
@@ -2046,7 +1993,7 @@ object LlmOps {
     val staged = Tables.stagedFixture(s, s"$dir/documents.parquet",
       "bpe-merges", dir, "v1") { d =>
       import s.implicits._
-      trainBpeMerges(s, dir)
+      trainBpeMerges(corpusWordFreqs(s, dir))
         .toDF("step", "left", "right", "merged", "n_occurrences")
         .coalesce(1)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$d/merges")
@@ -2454,9 +2401,9 @@ object LlmOps {
     * compaction (Ivf.compactPartitioned) folds tombstones into a rewritten
     * layout offline. The query probes with vec_id 0's embedding, k = 10 —
     * the result is the top-10 over the SURVIVING corpus. No oracle (seeded
-    * k-means has no DuckDB twin, like its IVF siblings); IvfDeleteSpec in
-    * R18OpsSpec pins the never-surfaces certificate, recall vs brute force
-    * over survivors, and search identity across compaction. */
+    * k-means has no DuckDB twin, like its IVF siblings); R18OpsSpec's
+    * q_sim_ivf_delete test pins the never-surfaces certificate, recall vs
+    * brute force over survivors, and search identity across compaction. */
   val qSimIvfDelete: Q = (s, dir) => {
     val e = Tables.embeddings(s, dir)
     val path = Tables.stagedFixture(s, s"$dir/embeddings.parquet",

@@ -62,7 +62,7 @@ object Layout {
 
   /** Read a partitioned layout back; filters on the partition column prune
     * directories before any IO (verify via PartitionFilters in the scan
-    * node — asserted in LayoutSpec). */
+    * node — asserted in LayoutSkewSpec). */
   def readPartitioned(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 

@@ -17,9 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object Runtime {
 
-  private def dbg[A](name: String)(f: => A): A =
-    graft.operators.ScaleOps.dbg("rt")(name)(f)
-
   /** The events table as a file-source stream (one file → one micro-batch;
     * `maxFilesPerTrigger=1` keeps replay deterministic). Schema comes from a
     * batch peek — required by file streaming sources. `ts` is normalized
@@ -751,13 +748,10 @@ object Runtime {
     // O(state). Results must be backend-invisible: every q_stream_* oracle
     // hash and the q_stream_restart checkpoint-recovery law are re-graded
     // under this provider (StreamingEquivSpec pins the swap explicitly).
-    // `graft.stream.stateStoreProvider=hdfs` is the escape hatch back.
-    if (!spark.conf.get("graft.stream.stateStoreProvider", "rocksdb")
-          .equalsIgnoreCase("hdfs")) {
-      spark.conf.set(prov,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      spark.conf.set(chlog, "true")
-    }
+    // The r18 A/B over the streaming keys settled the backend (SCALE.md).
+    spark.conf.set(prov,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    spark.conf.set(chlog, "true")
     def restore(k: String, v: Option[String]): Unit =
       v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     try body finally {
@@ -1164,18 +1158,15 @@ object Runtime {
     // staged appends (guide §2.6): they touch disjoint paths, the appends
     // stay invisible until the single txnPublish after all three land, and
     // every committed byte is identical to the sequential order.
-    dbg(s"tick $batchId bMeta") { bMeta.count() }
+    bMeta.count()
     val txn = Layout.txnBegin(spark, marker)
     graft.operators.ScaleOps.inParallel3(
-      () => dbg(s"tick $batchId survivors") {
-        batch.select(col("doc_id"), col("source"))
-          .join(dropped, Seq("doc_id"), "left_anti")
-          .coalesce(1).write.mode(SaveMode.Overwrite)
-          .parquet(s"$outPath/tick-$batchId") },
-      () => dbg(s"tick $batchId append meta") {
-        Layout.txnAppendManifested(bMeta, metaPath, "doc_id", 1, txn) },
-      () => dbg(s"tick $batchId append bkt") {
-        Layout.txnAppendManifested(bBuckets, bktPath, "doc_id", 1, txn) })
+      () => batch.select(col("doc_id"), col("source"))
+        .join(dropped, Seq("doc_id"), "left_anti")
+        .coalesce(1).write.mode(SaveMode.Overwrite)
+        .parquet(s"$outPath/tick-$batchId"),
+      () => Layout.txnAppendManifested(bMeta, metaPath, "doc_id", 1, txn),
+      () => Layout.txnAppendManifested(bBuckets, bktPath, "doc_id", 1, txn))
     Layout.txnPublish(spark, txn)
   }
 
@@ -1205,14 +1196,13 @@ object Runtime {
     Tables.deleteRecursively(root)
     val (metaPath, bktPath) = (s"$root/meta", s"$root/buckets")
     val (outPath, ckpt, txnRoot) = (s"$root/out", s"$root/ckpt", s"$root/txn")
-    val (baseMeta, baseBuckets) = dbg("stagedCorpusIndex") {
-      graft.queries.LlmOps.stagedCorpusIndex(spark, dir) }
+    val (baseMeta, baseBuckets) = graft.queries.LlmOps.stagedCorpusIndex(spark, dir)
     // The two bootstrap layouts are independent writes — overlap them
     // (guide §2.6; same files, same manifests, less wall-clock).
     graft.operators.ScaleOps.inParallel2(
-      () => dbg("bootstrap meta") { Layout.writeManifested(baseMeta, metaPath, "doc_id", 4) },
-      () => dbg("bootstrap bkt") { Layout.writeManifested(baseBuckets, bktPath, "doc_id", 4) })
-    val arrivalsDir = dbg("arrivalsDir") { corpusArrivalsDir(spark, dir) }
+      () => Layout.writeManifested(baseMeta, metaPath, "doc_id", 4),
+      () => Layout.writeManifested(baseBuckets, bktPath, "doc_id", 4))
+    val arrivalsDir = corpusArrivalsDir(spark, dir)
     val schema = spark.read
       .parquet(s"$arrivalsDir/arrivals_0.parquet").schema
     val arrivals = spark.readStream.schema(schema)
@@ -1221,10 +1211,9 @@ object Runtime {
     val q = arrivals.writeStream.outputMode("append")
       .option("checkpointLocation", ckpt)
       .foreachBatch { (b: DataFrame, id: Long) =>
-        dbg(s"tick $id total") {
-          corpusDedupTickCommit(spark, b, id, metaPath, bktPath, outPath, txnRoot) }
+        corpusDedupTickCommit(spark, b, id, metaPath, bktPath, outPath, txnRoot)
       }.start()
-    dbg("stream drain") { try q.processAllAvailable() finally q.stop() }
+    try q.processAllAvailable() finally q.stop()
     // Certificate 1: one published tick marker and one index commit per
     // micro-batch (v0 build + 3 tick appends = version 3 on both layouts).
     val markers = {

@@ -5,10 +5,11 @@ import org.apache.spark.sql.functions._
 
 /** PACKED symbol-sequence form shared by the tokenizer trainers/encoders
   * (r20 optimization): a word's symbol array `[s1, s2, ...]` packs to the
-  * string `"<M>s1<M><M>s2<M>...<M>sk<M>"` — every symbol WRAPPED in one
-  * marker char on each side. The BPE/WordPiece leftmost-first
-  * non-overlapping merge of an adjacent pair (a, b) is then EXACTLY one
-  * literal string `replace` of `"<M>a<M><M>b<M>"` with `"<M>merged<M>"`:
+  * string `"<M>e1<M><M>e2<M>...<M>ek<M>"` — every ESCAPED symbol `ei`
+  * wrapped in one marker char on each side. The BPE/WordPiece
+  * leftmost-first non-overlapping merge of an adjacent pair (a, b) is then
+  * EXACTLY one literal string `replace` of `"<M>a<M><M>b<M>"` with
+  * `"<M>merged<M>"` (all three escaped):
   *
   *  - boundary-safe BOTH sides: a symbol that merely ends with `a` cannot
   *    match (`a` needs its own opening marker right before it), and a
@@ -25,45 +26,64 @@ import org.apache.spark.sql.functions._
   *    occurrence of `<M>a<M><M>b<M>` — `merged` strictly extends `a`, so
   *    `merged != a`, and the fold likewise only compares whole symbols.
   *
-  * Why: the array mergeFold is a Catalyst higher-order `aggregate` whose
+  * Why: an array merge fold is a Catalyst higher-order `aggregate` whose
   * per-element slice+concat copies make it O(len²) interpreted work per
   * word PER MERGE STEP (HigherOrderFunctions are CodegenFallback);
   * `replace` is a codegen'd O(len) scan (guide §4: prefer codegen'd
-  * built-ins in the hot path). Symbol COUNTS derived from either form are
-  * identical, so trainer argmaxes and encoder token counts are unchanged —
-  * pinned by the trainer/encoder reference specs AND SymPackSpec's direct
-  * fold-vs-packed property sweep.
+  * built-ins in the hot path).
   *
-  * Validity: the packing is unambiguous iff no SYMBOL contains the marker
-  * char. Initial alphabets are corpus-derived (single chars / `##`-forms /
-  * hex byte pairs), so [[dirty]] tests exactly that; callers route dirty
-  * words through the original array fold (trainers: one cached-scan check
-  * then a full fallback; encoders: a per-row `when`), keeping results
-  * exact on ANY input while the packed path serves the clean ~100%. */
+  * Totality: every symbol is escaped with the prefix code
+  * `\u0002 → \u0002\u0003`, then `\u0001 → \u0002\u0002`, so escaped text
+  * never contains the marker and the packing is unambiguous on ANY input.
+  * The code is injective, commutes with concatenation (so a merged
+  * symbol's escape is the concatenation of its parts' escapes), and keeps
+  * UTF-8 byte order (so `orderBy` tie-breaks on escaped symbols rank
+  * exactly as on raw ones). Counts over escaped symbols therefore equal
+  * counts over raw ones; the driver [[unescape]]s what it collects.
+  * SymPackSpec pins the packed chain against a driver array fold on
+  * marker-bearing symbols, plus both trainers against their references. */
 object SymPack {
 
-  /** Marker char: U+0001 — outside every trainer alphabet in practice;
-    * [[dirty]] guards the exception. */
+  /** Marker char: U+0001 — escaped text never contains it. */
   val M = "\u0001"
 
-  /** Pack a symbol array into its marker-wrapped string form:
-    * `M s1 M M s2 M ... M sk M`. */
+  /** Escape one symbol (column form): the order-preserving prefix code. */
+  private def escapeCol(s: Column): Column =
+    replace(replace(s, lit("\u0002"), lit("\u0002\u0003")), lit(M), lit("\u0002\u0002"))
+
+  /** Escape one symbol (driver form) — the literal twin of [[escapeCol]]. */
+  def escape(s: String): String =
+    s.replace("\u0002", "\u0002\u0003").replace(M, "\u0002\u0002")
+
+  /** Decode an escaped symbol. `\u0002` only ever starts a two-char code,
+    * so a left-to-right replace of `\u0002\u0002` first cannot split a
+    * `\u0002\u0003` pair, and no `\u0002\u0002` is left to confuse the
+    * second replace. */
+  def unescape(s: String): String =
+    s.replace("\u0002\u0002", M).replace("\u0002\u0003", "\u0002")
+
+  /** Pack a symbol array into its marker-wrapped escaped string form:
+    * `M e1 M M e2 M ... M ek M`. */
   def pack(syms: Column): Column =
-    concat(lit(M), array_join(syms, M + M), lit(M))
+    concat(lit(M), array_join(transform(syms, escapeCol(_)), M + M), lit(M))
 
-  /** True iff packing `syms` would be ambiguous (a symbol contains the
-    * marker). */
-  def dirty(syms: Column): Column = exists(syms, s => s.contains(M))
-
-  /** Unpack back to the symbol array: trim the outermost markers, split on
-    * the double-marker separators. */
+  /** Unpack back to the ESCAPED symbol array: trim the outermost markers,
+    * split on the double-marker separators. Escaping is a bijection that
+    * keeps order, so counts and argmaxes over this array are those of the
+    * raw symbols; [[unescape]] what reaches the driver. */
   def unpack(ms: Column): Column =
     split(ms.substr(lit(2), length(ms) - 2), M + M)
 
-  /** One leftmost-first non-overlapping merge of adjacent (a, b) into
-    * `merged` on the packed form — the codegen'd twin of the array fold. */
+  /** One leftmost-first non-overlapping merge of adjacent RAW symbols
+    * (a, b) into `merged` on the packed form — the codegen'd twin of an
+    * array fold. */
   def mergeStep(ms: Column, a: String, b: String, merged: String): Column =
-    replace(ms, lit(M + a + M + M + b + M), lit(M + merged + M))
+    replace(ms, lit(M + escape(a) + M + M + escape(b) + M), lit(M + escape(merged) + M))
+
+  /** Apply learned (left, right, merged) rules in order — the expression
+    * chain every trainer step, encoder and vocabulary readout shares. */
+  def mergeAll(ms: Column, rules: Seq[(String, String, String)]): Column =
+    rules.foldLeft(ms) { case (acc, (a, b, m)) => mergeStep(acc, a, b, m) }
 
   /** Symbol count of a packed form without materializing the array: each
     * symbol carries exactly two marker chars. */

@@ -26,9 +26,6 @@ import org.apache.spark.sql.functions._
   * with ties broken (left ASC, right ASC). */
 object WordPiece {
 
-  private def dbg[A](name: String)(f: => A): A =
-    graft.operators.ScaleOps.dbg("wp")(name)(f)
-
   /** Initial WordPiece symbol array of a word: first char bare, the rest
     * `##`-prefixed (no end-of-word marker — WordPiece marks
     * continuations, not ends). */
@@ -37,82 +34,37 @@ object WordPiece {
       when(i === 1, w.substr(lit(1), lit(1)))
         .otherwise(concat(lit("##"), w.substr(i, lit(1)))))
 
-  /** Leftmost-first merge fold of adjacent (a, b) into `a + strip##(b)`
-    * — the bpeMergeFold shape on WordPiece symbols. */
-  private def mergeFold(syms: Column, a: String, b: String): Column = {
-    val merged = a + b.stripPrefix("##")
-    aggregate(syms, array().cast("array<string>"),
-      (out, sym) => when(
-          size(out) > 0 && element_at(out, -1) === lit(a) && sym === lit(b),
-          concat(slice(out, lit(1), size(out) - 1), array(lit(merged))))
-        .otherwise(concat(out, array(sym))))
-  }
+  /** The learned (left, right, merged) rules of a merge table. */
+  private def rules(merges: Seq[(Int, String, String, String, Double)])
+      : Seq[(String, String, String)] =
+    merges.map { case (_, a, b, m, _) => (a, b, m) }
 
   /** Train `steps` WordPiece merges over `words` (`(w, n)` frequencies).
     * Returns (step, left, right, merged, score) — score the exact-count
     * double the argmax compared.
     *
-    * r20: the per-step vocabulary rewrite runs on the PACKED string form
-    * ([[SymPack]] — one codegen'd `replace` per word instead of the O(len²)
-    * interpreted array fold), with uni/pair counts derived from the same
-    * packed column. Counts, argmax, and the merge sequence are bit-identical
-    * to the fold form (NoOracleSpec pins the rules + scores against the
-    * driver reference); a corpus whose words contain the marker char would
-    * make the packing ambiguous, so ONE cached-scan check routes such input
-    * through [[trainFold]], the original fold implementation. */
+    * The symbolized table is packed once ([[SymPack]] — total on any
+    * input) and is the trainer's only cache; step k re-applies the k−1
+    * learned rules as one codegen'd `replace` chain and derives the
+    * uni/pair counts from the result, so each step is exactly one Spark
+    * action. The collected argmax row is unescaped on the driver;
+    * NoOracleSpec pins the rules + scores against the driver reference. */
   def train(words: DataFrame, steps: Int = 10)
       : Seq[(Int, String, String, String, Double)] = {
     import SymPack._
-    val vocab0 = graft.operators.ScaleOps.trackedPersist(
-      words.select(pack(initSyms(col("w"))).as("ms"), col("n"),
-        dirty(initSyms(col("w"))).as("__dirty")))
-    if (vocab0.filter(col("__dirty")).limit(1).count() > 0)
-      return trainFold(words, steps)
-    var vocab: DataFrame = vocab0.select(col("ms"), col("n"))
+    val packed = graft.operators.ScaleOps.trackedPersist(
+      words.select(pack(initSyms(col("w"))).as("ms"), col("n")))
     val merges = Seq.newBuilder[(Int, String, String, String, Double)]
     for (step <- 1 to steps) {
       // Vocab-sized: per-symbol unigram counts and adjacent-pair counts,
       // both corpus-weighted; the likelihood-gain argmax joins them.
-      val arr = unpack(col("ms"))
-      val uni = vocab
-        .select(explode(arr).as("s"), col("n"))
-        .groupBy(col("s")).agg(sum(col("n")).as("cnt"))
-      val pairs = vocab
-        .select(explode(adjacentPairs(arr)).as("p"), col("n"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("n")).as("cnt_ab"))
-      val top = dbg(s"step $step argmax") { pairs
-        .join(uni.withColumnRenamed("s", "a").withColumnRenamed("cnt", "cnt_a"), "a")
-        .join(uni.withColumnRenamed("s", "b").withColumnRenamed("cnt", "cnt_b"), "b")
-        .select(col("a"), col("b"),
-          (col("cnt_ab").cast("double") /
-            (col("cnt_a").cast("double") * col("cnt_b").cast("double")))
-            .as("score"))
-        .orderBy(col("score").desc, col("a"), col("b"))
-        .limit(1).collect()(0) }
-      val (a, b, score) = (top.getString(0), top.getString(1), top.getDouble(2))
-      merges += ((step, a, b, a + b.stripPrefix("##"), score))
-      vocab = graft.operators.ScaleOps.trackedPersist(vocab.select(
-        mergeStep(col("ms"), a, b, a + b.stripPrefix("##")).as("ms"), col("n")))
-    }
-    merges.result()
-  }
-
-  /** The original array-fold trainer — the exact-semantics fallback for
-    * corpora whose words contain [[SymPack.M]] (packing would be ambiguous
-    * there). Kept verbatim so the fallback provably computes what the
-    * packed path computes on clean input. */
-  private def trainFold(words: DataFrame, steps: Int)
-      : Seq[(Int, String, String, String, Double)] = {
-    var vocab = graft.operators.ScaleOps.trackedPersist(
-      words.select(initSyms(col("w")).as("syms"), col("n")))
-    val merges = Seq.newBuilder[(Int, String, String, String, Double)]
-    for (step <- 1 to steps) {
+      val vocab = packed.select(
+        unpack(mergeAll(col("ms"), rules(merges.result()))).as("syms"), col("n"))
       val uni = vocab
         .select(explode(col("syms")).as("s"), col("n"))
         .groupBy(col("s")).agg(sum(col("n")).as("cnt"))
       val pairs = vocab
-        .select(explode(SymPack.adjacentPairs(col("syms"))).as("p"), col("n"))
+        .select(explode(adjacentPairs(col("syms"))).as("p"), col("n"))
         .groupBy(col("p.a").as("a"), col("p.b").as("b"))
         .agg(sum(col("n")).as("cnt_ab"))
       val top = pairs
@@ -124,10 +76,8 @@ object WordPiece {
             .as("score"))
         .orderBy(col("score").desc, col("a"), col("b"))
         .limit(1).collect()(0)
-      val (a, b, score) = (top.getString(0), top.getString(1), top.getDouble(2))
-      merges += ((step, a, b, a + b.stripPrefix("##"), score))
-      vocab = graft.operators.ScaleOps.trackedPersist(
-        vocab.select(mergeFold(col("syms"), a, b).as("syms"), col("n")))
+      val (a, b) = (unescape(top.getString(0)), unescape(top.getString(1)))
+      merges += ((step, a, b, a + b.stripPrefix("##"), top.getDouble(2)))
     }
     merges.result()
   }
@@ -177,11 +127,10 @@ object WordPiece {
     * occurrence away; the alphabet backstop guarantees progress). */
   def finalSymbols(words: DataFrame,
                    merges: Seq[(Int, String, String, String, Double)]): Set[String] = {
-    var vocab = words.select(initSyms(col("w")).as("syms"))
-    for ((_, a, b, _, _) <- merges)
-      vocab = vocab.select(mergeFold(col("syms"), a, b).as("syms"))
-    val survived = vocab.select(explode(col("syms")).as("s")).distinct()
-      .collect().map(_.getString(0)).toSet
+    import SymPack._
+    val survived = words
+      .select(explode(unpack(mergeAll(pack(initSyms(col("w"))), rules(merges)))).as("s"))
+      .distinct().collect().map(r => unescape(r.getString(0))).toSet
     val alphabet = words.select(explode(initSyms(col("w"))).as("s")).distinct()
       .collect().map(_.getString(0)).toSet
     survived ++ alphabet

@@ -137,4 +137,42 @@ class IterativeSpec extends AnyFunSuite with BeforeAndAfterAll {
       graft.operators.ScaleOps.releaseTracked()
     }
   }
+
+  test("BPE and WordPiece trainers: one SQL execution per merge step; cache only the packed word table") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val sc = spark.sparkContext
+    val words = queries.LlmOps.corpusWordFreqs(spark, Sf0001)
+    val execs = new AtomicInteger(0)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        execs.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        execs.incrementAndGet()
+    }
+    val steps = 3
+    val trainers = Seq[(String, () => Int)](
+      "trainBpeMerges" -> (() => queries.LlmOps.trainBpeMerges(words, steps).size),
+      "WordPiece.train" -> (() => graft.text.WordPiece.train(words, steps).size))
+    spark.listenerManager.register(listener)
+    try {
+      for ((name, run) <- trainers) {
+        ListenerBusDrain(sc)
+        execs.set(0)
+        val rdds0 = sc.getPersistentRDDs.size
+        assert(run() == steps)
+        ListenerBusDrain(sc)
+        assert(execs.get() == steps,
+          s"$name: ${execs.get()} SQL executions; expected one per merge step")
+        assert(sc.getPersistentRDDs.size - rdds0 <= 1,
+          s"$name may cache only its packed word table")
+        graft.operators.ScaleOps.releaseTracked()
+      }
+    } finally {
+      spark.listenerManager.unregister(listener)
+      graft.operators.ScaleOps.releaseTracked()
+    }
+  }
 }

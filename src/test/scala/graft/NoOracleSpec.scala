@@ -317,33 +317,10 @@ class NoOracleSpec extends AnyFunSuite {
     // Reference BPE: plain Scala over the collected word counts — same
     // lowercased whitespace words, '</w>' terminator, leftmost-first
     // merge, ties broken (count desc, left asc, right asc).
-    var vocab: Map[Vector[String], Long] = Tables.documents(spark, Sf0001)
-      .select(explode(split(lower(col("text")), " ")).as("w"))
-      .filter(length(col("w")) > 0)
-      .groupBy(col("w")).agg(count(lit(1)).as("n"))
-      .collect()
-      .map(r => (r.getString(0).map(_.toString).toVector :+ "</w>", r.getLong(1)))
-      .toMap
-    val expected = Seq.newBuilder[(Int, String, String, String, Long)]
-    for (step <- 1 to 10) {
-      val counts = scala.collection.mutable.Map[(String, String), Long]()
-      for ((syms, n) <- vocab; i <- 0 until syms.length - 1)
-        counts((syms(i), syms(i + 1))) =
-          counts.getOrElse((syms(i), syms(i + 1)), 0L) + n
-      val ((a, b), cnt) = counts.toSeq.minBy { case ((x, y), c) => (-c, x, y) }
-      expected += ((step, a, b, a + b, cnt))
-      vocab = vocab.toSeq.map { case (syms, n) =>
-        val out = scala.collection.mutable.ArrayBuffer[String]()
-        for (s <- syms) {
-          if (out.nonEmpty && out.last == a && s == b)
-            out(out.length - 1) = a + b
-          else out += s
-        }
-        (out.toVector, n)
-      }.groupMapReduce(_._1)(_._2)(_ + _)
-    }
-    assert(got == expected.result(),
-      s"distributed rule sequence diverges from reference BPE:\n$got\nvs\n${expected.result()}")
+    val expected = RefTokenizers.bpe(unigramWordFreqs.map { case (w, n) =>
+      (w.map(_.toString).toVector :+ "</w>", n) })
+    assert(got == expected,
+      s"distributed rule sequence diverges from reference BPE:\n$got\nvs\n$expected")
   }
 
   test("q_text_bpe_encode: per-doc trained token counts match a reference encode") {
@@ -353,19 +330,9 @@ class NoOracleSpec extends AnyFunSuite {
     // the driver (leftmost-first fold, '</w>' terminator).
     val rules = SparkEntry.queries("q_text_bpe_train")(spark, Sf0001)
       .collect().map(r => (r.getString(1), r.getString(2))).toSeq
-    def encode(w: String): Int = {
-      var syms = w.map(_.toString).toVector :+ "</w>"
-      for ((a, b) <- rules) {
-        val out = scala.collection.mutable.ArrayBuffer[String]()
-        for (s <- syms) {
-          if (out.nonEmpty && out.last == a && s == b)
-            out(out.length - 1) = a + b
-          else out += s
-        }
-        syms = out.toVector
-      }
-      syms.length
-    }
+    def encode(w: String): Int = RefTokenizers.mergeAll(
+      w.map(_.toString).toVector :+ "</w>",
+      rules.map { case (a, b) => (a, b, a + b) }).length
     val exp = Tables.documents(spark, Sf0001)
       .select(col("doc_id"), lower(col("text")).as("t"))
       .collect().map { r =>
@@ -512,42 +479,13 @@ class NoOracleSpec extends AnyFunSuite {
       .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2),
         r.getString(3), r.getDouble(4))).toSeq
     assert(got.length == 10 && got.map(_._1) == (1 to 10))
-    // Reference WordPiece: `##`-continuation symbols, likelihood-gain
-    // argmax cnt(ab)/(cnt(a)·cnt(b)) as the SAME IEEE double division on
-    // exact counts (bit-identical to the distributed argmax), ties
-    // (score desc, left asc, right asc), leftmost-first rewrite.
-    var vocab: Map[Vector[String], Long] = unigramWordFreqs.map { case (w, n) =>
-      (w.zipWithIndex.map { case (c, i) =>
-        if (i == 0) c.toString else "##" + c }.toVector, n)
-    }.groupMapReduce(_._1)(_._2)(_ + _)
-    val expected = Seq.newBuilder[(Int, String, String, String, Double)]
-    for (step <- 1 to 10) {
-      val uni = scala.collection.mutable.Map[String, Long]()
-      val pairs = scala.collection.mutable.Map[(String, String), Long]()
-      for ((syms, n) <- vocab) {
-        for (s <- syms) uni(s) = uni.getOrElse(s, 0L) + n
-        for (i <- 0 until syms.length - 1)
-          pairs((syms(i), syms(i + 1))) =
-            pairs.getOrElse((syms(i), syms(i + 1)), 0L) + n
-      }
-      val scored = pairs.toSeq.map { case ((a, b), c) =>
-        (a, b, c.toDouble / (uni(a).toDouble * uni(b).toDouble)) }
-      val (a, b, sc) = scored.minBy { case (x, y, s) => (-s, x, y) }
-      val merged = a + b.stripPrefix("##")
-      expected += ((step, a, b, merged, sc))
-      vocab = vocab.toSeq.map { case (syms, n) =>
-        val out = scala.collection.mutable.ArrayBuffer[String]()
-        for (s <- syms) {
-          if (out.nonEmpty && out.last == a && s == b)
-            out(out.length - 1) = merged
-          else out += s
-        }
-        (out.toVector, n)
-      }.groupMapReduce(_._1)(_._2)(_ + _)
-    }
-    assert(got == expected.result(),
+    // Reference WordPiece (RefTokenizers.wordPiece): `##`-continuation
+    // symbols, likelihood-gain argmax as the SAME IEEE double division on
+    // exact counts, ties (score desc, left asc, right asc).
+    val expected = RefTokenizers.wordPiece(unigramWordFreqs)
+    assert(got == expected,
       s"distributed WordPiece diverges from reference (first diff: " +
-      s"${got.zip(expected.result()).find(x => x._1 != x._2)})")
+      s"${got.zip(expected).find(x => x._1 != x._2)})")
   }
 
   test("q_text_wordpiece_encode: per-doc counts match a reference greedy longest-match walk; zero UNK") {

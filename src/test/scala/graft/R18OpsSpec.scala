@@ -50,46 +50,23 @@ class R18OpsSpec extends AnyFunSuite {
     // Independent driver-side byte BPE over the same clean-word corpus:
     // hex-pair alphabet + '</w>', leftmost-first merges, (count desc,
     // left, right) ties — must equal the distributed trainer's rules.
-    val gotRules = queries.LlmOps.trainBpeMerges(spark, Sf0001,
+    val gotRules = queries.LlmOps.trainBpeMerges(
+      queries.LlmOps.corpusWordFreqs(spark, Sf0001),
       symize = queries.LlmOps.byteSyms)
     def hexSyms(w: String): Vector[String] =
       w.getBytes("UTF-8").toVector.map(b => f"${b & 0xff}%02x") :+ "</w>"
-    var vocab: Map[Vector[String], Long] = Tables.documents(spark, Sf0001)
+    val expected = RefTokenizers.bpe(Tables.documents(spark, Sf0001)
       .select(explode(split(lower(col("text")), " ")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy(col("w")).agg(count(lit(1)).as("n"))
-      .collect().map(r => (hexSyms(r.getString(0)), r.getLong(1))).toMap
-    val expected = Seq.newBuilder[(Int, String, String, String, Long)]
-    for (step <- 1 to 10) {
-      val counts = scala.collection.mutable.Map[(String, String), Long]()
-      for ((syms, n) <- vocab; i <- 0 until syms.length - 1)
-        counts((syms(i), syms(i + 1))) =
-          counts.getOrElse((syms(i), syms(i + 1)), 0L) + n
-      val ((a, b), cnt) = counts.toSeq.minBy { case ((x, y), c) => (-c, x, y) }
-      expected += ((step, a, b, a + b, cnt))
-      vocab = vocab.toSeq.map { case (syms, n) =>
-        val out = scala.collection.mutable.ArrayBuffer[String]()
-        for (s <- syms) {
-          if (out.nonEmpty && out.last == a && s == b) out(out.length - 1) = a + b
-          else out += s
-        }
-        (out.toVector, n)
-      }.groupMapReduce(_._1)(_._2)(_ + _)
-    }
-    assert(gotRules == expected.result(),
-      s"byte-BPE rules diverge:\n$gotRules\nvs\n${expected.result()}")
+      .collect().map(r => (hexSyms(r.getString(0)), r.getLong(1))).toSeq)
+    assert(gotRules == expected,
+      s"byte-BPE rules diverge:\n$gotRules\nvs\n$expected")
     // Hex round-trip on multi-byte adversarial words: folding the learned
     // merges and re-joining the symbols reproduces the exact UTF-8 bytes.
     for (w <- Seq("héllo", "日本語", "a{\"x\":1", "é€😀")) {
-      var syms = hexSyms(w)
-      for ((_, a, b, _, _) <- gotRules) {
-        val out = scala.collection.mutable.ArrayBuffer[String]()
-        for (s <- syms) {
-          if (out.nonEmpty && out.last == a && s == b) out(out.length - 1) = a + b
-          else out += s
-        }
-        syms = out.toVector
-      }
+      val syms = RefTokenizers.mergeAll(hexSyms(w),
+        gotRules.map { case (_, a, b, m, _) => (a, b, m) })
       assert(syms.filterNot(_ == "</w>").mkString ==
         w.getBytes("UTF-8").map(b => f"${b & 0xff}%02x").mkString,
         s"round-trip broke for '$w'")

@@ -15,14 +15,80 @@ commit; the driver replaces ADVICE.md with fresh advisor output next
 round, so annotations never need to survive beyond the round that makes
 them.
 
+Second gate: every `*Spec` a `src/main` Scala comment names must be a
+`class ...Spec` under `src/test` (a comment saying "XSpec pins this" must
+name a test that exists). Names declared in `src/main` itself and Spark's
+`WindowSpec` are not test citations and are skipped. Exit 1 listing each
+false citation with its file:line.
+
 Usage: python3 tools/advice_check.py [ADVICE.md]
 """
+import pathlib
 import re
 import sys
 
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+SPEC_NAME = re.compile(r"\b([A-Z][A-Za-z0-9]*Spec)\b")
+SPEC_DECL = re.compile(r"\b(?:class|object|trait)\s+([A-Z][A-Za-z0-9]*Spec)\b")
+NOT_TESTS = {"WindowSpec"}
 
-def main():
-    path = sys.argv[1] if len(sys.argv) > 1 else "ADVICE.md"
+
+def declared(tree):
+    names = set()
+    for f in tree.rglob("*.scala"):
+        names.update(SPEC_DECL.findall(f.read_text(encoding="utf-8")))
+    return names
+
+
+def comment_lines(text):
+    """Yield (line number, comment text) for // and /* */ comments."""
+    in_block = False
+    for n, line in enumerate(text.splitlines(), 1):
+        rest, out = line, []
+        while rest:
+            if in_block:
+                end = rest.find("*/")
+                out.append(rest if end < 0 else rest[:end])
+                if end < 0:
+                    break
+                in_block, rest = False, rest[end + 2:]
+            else:
+                m = re.search(r'//|/\*|"', rest)
+                if not m:
+                    break
+                if m.group() == '"':
+                    close = rest.find('"', m.end())
+                    rest = "" if close < 0 else rest[close + 1:]
+                elif m.group() == "//":
+                    out.append(rest[m.end():])
+                    break
+                else:
+                    in_block, rest = True, rest[m.end():]
+        if out:
+            yield n, " ".join(out)
+
+
+def spec_citations():
+    main, test = ROOT / "src" / "main", ROOT / "src" / "test"
+    known = declared(test) | declared(main) | NOT_TESTS
+    bad = []
+    for f in sorted(main.rglob("*.scala")):
+        for n, c in comment_lines(f.read_text(encoding="utf-8")):
+            for name in SPEC_NAME.findall(c):
+                if name not in known:
+                    bad.append(f"{f.relative_to(ROOT)}:{n}: {name}")
+    for b in bad:
+        print(f"[advice-check] NO SUCH SPEC: {b}")
+    if bad:
+        print(f"[advice-check] {len(bad)} comment citation(s) name a *Spec "
+              "with no class under src/test — point each at the test that "
+              "pins the behaviour, or drop the claim")
+        return 1
+    print("[advice-check] every *Spec cited in src/main comments exists")
+    return 0
+
+
+def advice(path):
     try:
         text = open(path, encoding="utf-8").read()
     except FileNotFoundError:
@@ -47,6 +113,11 @@ def main():
         return 1
     print(f"[advice-check] {path}: all {len(findings)} finding(s) annotated")
     return 0
+
+
+def main():
+    path = sys.argv[1] if len(sys.argv) > 1 else str(ROOT / "ADVICE.md")
+    return max(advice(path), spec_citations())
 
 
 if __name__ == "__main__":
