@@ -1853,8 +1853,9 @@ object LlmOps {
     * substrings, Viterbi-EM over corpus likelihood with the SentencePiece
     * pruning schedule, emit the final piece table (piece, exact expected
     * count, log-prob). Vocab-routed like all tokenizer keys — the corpus
-    * pays one word-count shuffle; every EM round is a vocabulary-sized
-    * column-expression Viterbi (nested aggregate folds, no UDF). Declared
+    * pays one word-count shuffle; every EM round is one single-stage job
+    * over the cached distinct-word table (per-task piece counts from the
+    * Scala Viterbi `Unigram.segment`, summed on the driver). Declared
     * no-oracle (iterative float EM has no tractable SQL form);
     * NoOracleSpec pins the trainer against an independent driver-side
     * reference EM on a planted corpus, Viterbi against brute-force
@@ -1871,7 +1872,8 @@ object LlmOps {
     * piece table ([[stagedUnigramPieces]] — the tokenizer is a build
     * artifact, staged once per corpus snapshot, like the BPE merges):
     * each DISTINCT word Viterbi-segments once over the piece lattice
-    * (vocab-routed), the corpus pass is one explode + gated-broadcast
+    * (vocab-routed; a typed `map` through `Unigram.segment`, the
+    * trainer's Viterbi), the corpus pass is one explode + gated-broadcast
     * join + per-doc sum. Declared no-oracle like the trainer;
     * NoOracleSpec pins per-doc counts against a driver-side reference
     * Viterbi encode and full segmentation coverage (concat(segs) == w). */

@@ -1,7 +1,9 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import scala.collection.mutable
 
 /** UNIGRAM-LM TOKENIZER (r17) [pub: Kudo 2018, "Subword Regularization:
   * Improving Neural Network Translation Models with Multiple Subword
@@ -20,10 +22,14 @@ import org.apache.spark.sql.functions._
   * corpus is touched ONCE (the word-frequency shuffle); every EM round,
   * the pruning pass, and the encode all run over the DISTINCT-WORD table
   * (vocabulary-sized at any corpus size), and the piece table itself is
-  * O(hundreds) driver rows shipped back as ONE typedlit map literal per
-  * round. The Viterbi DP is a pure column expression (nested `aggregate`
-  * folds — no UDF anywhere), so the plan stays Catalyst-native like the
-  * BPE merge folds.
+  * O(hundreds) driver rows shipped to the tasks in each round's closure.
+  * An EM round is one MapReduce pass over a sufficient statistic: each
+  * task folds its words' Viterbi segmentations into a piece→count map
+  * (bounded by the piece table) and the driver sums the maps — one
+  * single-stage job, no shuffle. The Viterbi DP ([[segment]]) is plain
+  * Scala: a sequential recurrence over character positions, the shape an
+  * interpreted higher-order-function fold runs slowest (see
+  * `Layout.hilbert16` for the same trade).
   *
   * Determinism: seed selection and pruning order by (count DESC, piece
   * ASC); expected counts are exact integer sums (word frequency × integer
@@ -31,39 +37,44 @@ import org.apache.spark.sql.functions._
   * `>` with candidates scanned longest-first). NoOracleSpec pins the
   * whole trainer against an independent driver-side reference EM on a
   * planted corpus, Viterbi against brute-force enumeration, and the
-  * monotone-loss law of the final (prune-free) EM rounds. */
+  * monotone-loss law of the final (prune-free) EM rounds; UnigramSpec
+  * pins [[segment]] against the reference Viterbi on random piece tables. */
 object Unigram {
 
   case class Piece(piece: String, n: Long, logp: Double)
 
-  /** Viterbi DP over the piece lattice as one column expression: returns
-    * struct(s: best log-prob, segs: the best segmentation). dp is built
-    * left-to-right over `sequence(1, length(w))`; dp(j) holds the best
-    * state after j−1 characters (1-indexed array), each position taking
-    * the max over pieces of length ≤ maxLen ending there (scanned
-    * LONGEST-first; strict `>` keeps the first, so ties break to the
-    * longest piece — deterministic). Missing pieces (`element_at` → null)
-    * are skipped; an uncoverable word ends at the −1e18 sentinel with an
-    * empty segmentation (the trainer's never-prune-single-chars rule makes
-    * that unreachable, and `train` requires it). */
-  def viterbiBest(w: Column, logp: Column, maxLen: Int): Column = {
-    val zeroSegs = array().cast("array<string>")
-    val init = array(struct(lit(0.0).as("s"), zeroSegs.as("segs")))
-    val sentinel = struct(lit(-1e18).as("s"), zeroSegs.as("segs"))
-    val dpFull = aggregate(sequence(lit(1), length(w)), init,
-      (dp, i) => concat(dp, array(
-        aggregate(sequence(greatest(lit(1), i - lit(maxLen) + 1), i), sentinel,
-          (best, j) => {
-            val piece = w.substr(j, i - j + lit(1))
-            val lp = element_at(logp, piece)
-            val prev = element_at(dp, j)
-            val cand = prev("s") + lp
-            when(lp.isNotNull && cand > best("s"),
-                struct(cand.as("s"),
-                  concat(prev("segs"), array(piece)).as("segs")))
-              .otherwise(best)
-          }))))
-    element_at(dpFull, -1)
+  /** Viterbi over the piece lattice of `w`: the best segmentation into
+    * pieces of at most `maxLen` characters (code points, as Spark's
+    * `substr` and `length` count them) under `logp`. score(i) is the best
+    * log-prob of the first i characters; each end position takes the max
+    * over the pieces ending there, scanned LONGEST-first with a strict
+    * `>` from the −1e18 sentinel, so ties break to the longest piece
+    * (deterministic). An uncoverable word yields no pieces (the trainer's
+    * never-prune-single-chars rule makes that unreachable, and `train`
+    * requires it). The one Viterbi of the trainer and the encode. */
+  def segment(w: String, logp: Map[String, Double], maxLen: Int): Array[String] = {
+    val cps = w.codePoints().toArray
+    val score = new Array[Double](cps.length + 1)
+    // from(i): start of the best piece ending at i; -1 at the sentinel
+    val from = Array.fill(cps.length + 1)(-1)
+    for (i <- 1 to cps.length) {
+      var best = -1e18
+      for (j <- math.max(0, i - maxLen) until i)
+        logp.get(new String(cps, j, i - j)).foreach { lp =>
+          val cand = score(j) + lp
+          if (cand > best) { best = cand; from(i) = j }
+        }
+      score(i) = best
+    }
+    // Walk back until a sentinel (or the start): a piece chosen after an
+    // uncovered prefix extends that prefix's empty segmentation.
+    val segs = List.newBuilder[String]
+    var i = cps.length
+    while (from(i) >= 0) {
+      segs += new String(cps, from(i), i - from(i))
+      i = from(i)
+    }
+    segs.result().reverse.toArray
   }
 
   /** Substring candidates of `words` (`(w, n)` word frequencies) with
@@ -91,7 +102,7 @@ object Unigram {
             prunes: Seq[Int] = Seq(200, 120), finalRounds: Int = 2,
             maxLen: Int = 4): (Seq[Piece], Seq[Double]) = {
     // Persist the word-frequency table: the trainer runs one vocab-sized
-    // action per EM round plus the seed pass, and an unpersisted input
+    // job per EM round plus the seed pass, and an unpersisted input
     // re-runs the CORPUS word-count shuffle under every one of them
     // (measured at sf0.1: the re-runs cost 36 s of the key's 39 s;
     // persisted, the whole train was ~3 s). The family's law — the corpus
@@ -100,6 +111,11 @@ object Unigram {
     val words = graft.operators.ScaleOps.trackedPersist(wordsIn)
     val cand = candidateCounts(words, maxLen).collect()
       .map(r => (r.getString(0), r.getLong(1)))
+    // The EM rounds read the table the seed pass just cached as plain
+    // (w, n) pairs, through its internal-row RDD: unlike `Dataset.rdd`,
+    // deriving it is no SQL execution of its own.
+    val wordRdd = words.select(col("w"), col("n")).queryExecution.toRdd
+      .map(r => (r.getUTF8String(0).toString, r.getLong(1)))
     val singles = cand.filter(_._1.length == 1)
     val multis = cand.filter(_._1.length > 1)
       .sortBy { case (p, c) => (-c, p) }.take(seedSize)
@@ -111,22 +127,24 @@ object Unigram {
     val losses = Seq.newBuilder[Double]
     val rounds = prunes.size + finalRounds
     for (r <- 1 to rounds) {
-      // ONE Spark action per round: Viterbi-segment every distinct word
-      // under this round's log-probs and sum word frequencies per chosen
-      // piece — the E-step statistic. The round's loss needs no action of
-      // its own: a word's Viterbi score is the sum of its pieces'
-      // log-probs, so the corpus loss −Σ_w n_w·score(w) equals
-      // −Σ_p cnt(p)·logp(p) over the collected counts (summed in piece
-      // order, so it is deterministic).
+      // E-step as ONE single-stage job: each task folds its words' Viterbi
+      // segmentations into a piece→count map and the driver sums the maps
+      // (depth 1: a tree level would add a shuffle stage to save merging
+      // maps bounded by the piece table). The loss needs no job: a word's
+      // Viterbi score is the sum of its pieces' log-probs, so
+      // −Σ_w n_w·score(w) = −Σ_p cnt(p)·logp(p) over the merged counts
+      // (summed in piece order, so it is deterministic).
       val lpm = logpMap
-      val agg = words
-        .select(col("n"), explode_outer(
-          viterbiBest(col("w"), typedlit(lpm), maxLen)("segs")).as("piece"))
-        .groupBy(col("piece"))
-        .agg(sum(col("n")).as("cnt")).collect()
-        .map(rr => (rr.getString(0), rr.getLong(1)))
-      // explode_outer keeps a word with an empty segmentation (uncoverable:
-      // its DP ended at the sentinel) as a null piece.
+      val agg = wordRdd.treeAggregate(mutable.HashMap.empty[String, Long])(
+        (m, wn) => {
+          // an uncoverable word (no pieces) counts under a null piece
+          val segs = segment(wn._1, lpm, maxLen)
+          for (p <- if (segs.isEmpty) Array[String](null) else segs)
+            m(p) = m.getOrElse(p, 0L) + wn._2
+          m
+        },
+        (a, b) => { for ((p, c) <- b) a(p) = a.getOrElse(p, 0L) + c; a },
+        1).toArray
       require(!agg.exists(_._1 == null),
         "unigram trainer: a word has no segmentation under the piece table")
       losses += -agg.sortBy(_._1).map { case (p, c) => c * lpm(p) }.sum
@@ -158,10 +176,12 @@ object Unigram {
     * once, whatever the corpus size). */
   def encodeWords(vocab: DataFrame, pieces: Seq[Piece],
                   maxLen: Int = 4): DataFrame = {
-    val lp = typedlit(pieces.map(p => p.piece -> p.logp).toMap)
-    vocab.select(col("w"),
-      viterbiBest(col("w"), lp, maxLen)("segs").as("segs"))
-      .select(col("w"), size(col("segs")).cast("long").as("n_tok"),
-        col("segs"))
+    val spark = vocab.sparkSession
+    import spark.implicits._
+    val lp = pieces.map(p => p.piece -> p.logp).toMap
+    vocab.select(col("w")).as[String].map { w =>
+      val segs = segment(w, lp, maxLen)
+      (w, segs.length.toLong, segs)
+    }.toDF("w", "n_tok", "segs")
   }
 }

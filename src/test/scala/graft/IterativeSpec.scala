@@ -100,11 +100,14 @@ class IterativeSpec extends AnyFunSuite with BeforeAndAfterAll {
     df.unpersist()
   }
 
-  test("unigram trainer: one SQL execution per EM round plus the seed pass; caches only the word table") {
+  test("unigram trainer: one SQL execution (the seed pass), then one single-stage shuffle-free job per EM round; caches only the word table") {
+    import java.util.concurrent.ConcurrentLinkedQueue
     import java.util.concurrent.atomic.AtomicInteger
     import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.scheduler._
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
     val sc = spark.sparkContext
     val words = Tables.documents(spark, Sf0001)
       .select(explode(split(lower(col("text")), " ")).as("w"))
@@ -117,22 +120,51 @@ class IterativeSpec extends AnyFunSuite with BeforeAndAfterAll {
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
         execs.incrementAndGet()
     }
+    // Jobs in start order as (job id, started by a SQL execution?, stage
+    // ids); stages actually run; shuffle bytes written per stage.
+    val jobs = new ConcurrentLinkedQueue[(Int, Boolean, Seq[Int])]()
+    val ranStages = new ConcurrentLinkedQueue[Int]()
+    val shuffleWritten = new ConcurrentLinkedQueue[(Int, Long)]()
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add((e.jobId,
+          Option(e.properties).exists(_.getProperty("spark.sql.execution.id") != null),
+          e.stageIds))
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        ranStages.add(e.stageInfo.stageId)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m =>
+          shuffleWritten.add((e.stageId, m.shuffleWriteMetrics.bytesWritten)))
+    }
     val prunes = Seq(200, 120)
     val finalRounds = 2
     ListenerBusDrain(sc)
     val rdds0 = sc.getPersistentRDDs.size
     spark.listenerManager.register(listener)
+    sc.addSparkListener(jobListener)
     try {
       val (pieces, losses) = graft.text.Unigram.train(words,
         prunes = prunes, finalRounds = finalRounds)
       ListenerBusDrain(sc)
       val rounds = prunes.size + finalRounds
       assert(pieces.nonEmpty && losses.length == rounds)
-      assert(execs.get() == 1 + rounds,
-        s"${execs.get()} SQL executions; expected the seed pass + one per round")
+      assert(execs.get() == 1,
+        s"${execs.get()} SQL executions; expected only the seed pass")
+      val all = jobs.asScala.toSeq.sortBy(_._1)
+      val afterSeed = all.drop(all.lastIndexWhere(_._2) + 1)
+      assert(afterSeed.size == rounds && all.size - afterSeed.size >= 1,
+        s"${afterSeed.size} jobs after the seed pass; expected one per round (jobs: $all)")
+      val ran = ranStages.asScala.toSet
+      for ((id, _, stages) <- afterSeed) {
+        val run = stages.filter(ran)
+        assert(run.size == 1, s"round job $id ran stages $run; expected one")
+        val written = shuffleWritten.asScala.collect { case (s, b) if s == run.head => b }.sum
+        assert(written == 0L, s"round job $id wrote $written shuffle bytes")
+      }
       assert(sc.getPersistentRDDs.size - rdds0 <= 1,
         "the trainer may cache only its word table")
     } finally {
+      sc.removeSparkListener(jobListener)
       spark.listenerManager.unregister(listener)
       graft.operators.ScaleOps.releaseTracked()
     }

@@ -342,65 +342,6 @@ class NoOracleSpec extends AnyFunSuite {
     assert(got == exp, "distributed encode diverges from the reference fold")
   }
 
-  // Independent driver-side unigram-LM reference: same seeding, hard-EM,
-  // pruning schedule, and longest-piece tie-break as text/Unigram.scala,
-  // written against the plain collected word counts.
-  private def refUnigramViterbi(w: String, logp: Map[String, Double],
-                                maxLen: Int): (Double, Vector[String]) = {
-    val dp = scala.collection.mutable.ArrayBuffer(
-      (0.0, Vector.empty[String]))
-    for (i <- 1 to w.length) {
-      var best = (-1e18, Vector.empty[String])
-      for (j <- math.max(1, i - maxLen + 1) to i) {
-        val piece = w.substring(j - 1, i)
-        logp.get(piece).foreach { lp =>
-          val cand = dp(j - 1)._1 + lp
-          if (cand > best._1) best = (cand, dp(j - 1)._2 :+ piece)
-        }
-      }
-      dp += best
-    }
-    dp.last
-  }
-
-  private def refUnigramTrain(words: Seq[(String, Long)], seedSize: Int,
-                              prunes: Seq[Int], finalRounds: Int,
-                              maxLen: Int): (Seq[(String, Long, Double)], Seq[Double]) = {
-    val cand = scala.collection.mutable.Map[String, Long]()
-    for ((w, n) <- words; i <- 0 until w.length;
-         l <- 1 to math.min(maxLen, w.length - i))
-      cand(w.substring(i, i + l)) = cand.getOrElse(w.substring(i, i + l), 0L) + n
-    var counts: Seq[(String, Long)] =
-      cand.toSeq.filter(_._1.length == 1) ++
-      cand.toSeq.filter(_._1.length > 1)
-        .sortBy { case (p, c) => (-c, p) }.take(seedSize)
-    def logp = {
-      val total = counts.map(_._2).sum.toDouble
-      counts.map { case (p, c) => p -> math.log(c / total) }.toMap
-    }
-    val losses = Seq.newBuilder[Double]
-    for (r <- 1 to prunes.size + finalRounds) {
-      val lp = logp
-      val agg = scala.collection.mutable.Map[String, Long]()
-      var loss = 0.0
-      for ((w, n) <- words) {
-        val (s, segs) = refUnigramViterbi(w, lp, maxLen)
-        loss -= s * n
-        for (p <- segs) agg(p) = agg.getOrElse(p, 0L) + n
-      }
-      losses += loss
-      counts =
-        if (r <= prunes.size)
-          agg.toSeq.filter(_._1.length == 1) ++
-          agg.toSeq.filter(_._1.length > 1)
-            .sortBy { case (p, c) => (-c, p) }.take(prunes(r - 1))
-        else agg.toSeq
-    }
-    val lpF = logp
-    (counts.map { case (p, c) => (p, c, lpF(p)) }
-      .sortBy { case (p, c, _) => (-c, p) }, losses.result())
-  }
-
   private def unigramWordFreqs: Seq[(String, Long)] =
     Tables.documents(spark, Sf0001)
       .select(explode(split(lower(col("text")), " ")).as("w"))
@@ -412,7 +353,7 @@ class NoOracleSpec extends AnyFunSuite {
     val got = SparkEntry.queries("q_text_unigram_train")(spark, Sf0001)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
     val (refPieces, refLosses) =
-      refUnigramTrain(unigramWordFreqs, 300, Seq(200, 120), 2, 4)
+      RefTokenizers.unigramTrain(unigramWordFreqs, 300, Seq(200, 120), 2, 4)
     val ref = refPieces.map { case (p, c, l) =>
       (p, c, math.rint(l * 1e6) / 1e6) }
     assert(got.nonEmpty)
@@ -446,7 +387,7 @@ class NoOracleSpec extends AnyFunSuite {
       .collect().map { r =>
         val ws = r.getString(1).split(" ").filter(_.nonEmpty)
         (r.getLong(0), ws.length.toLong,
-          ws.map(w => refUnigramViterbi(w, lp, 4)._2.length.toLong).sum)
+          ws.map(w => RefTokenizers.unigramViterbi(w, lp, 4)._2.length.toLong).sum)
       }.toSeq.sortBy(_._1)
     assert(got == exp, "distributed encode diverges from the reference Viterbi")
     // Coverage: every distinct word's segmentation concatenates back to
@@ -468,7 +409,7 @@ class NoOracleSpec extends AnyFunSuite {
     val shorts = unigramWordFreqs.map(_._1).filter(_.length <= 8).take(200)
     assert(shorts.nonEmpty)
     for (w <- shorts) {
-      val dp = refUnigramViterbi(w, lp, 4)._1
+      val dp = RefTokenizers.unigramViterbi(w, lp, 4)._1
       assert(math.abs(dp - brute(w)) <= 1e-9,
         s"Viterbi suboptimal on '$w': dp=$dp brute=${brute(w)}")
     }

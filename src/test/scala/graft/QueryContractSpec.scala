@@ -52,17 +52,21 @@ class QueryContractSpec extends AnyFunSuite {
 
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
     test(s"$name runs, returns rows, and has a hashable schema (sf0.001)") {
-      val df = fn(spark, Sf0001)
-      // The driver's canonicalizer (pandas sort_values) cannot hash
-      // top-level array columns; only non-oracle keys may carry maps.
-      val complex = df.schema.fields.collect {
-        case f if f.dataType.isInstanceOf[ArrayType] => f.name
-        case f if f.dataType.isInstanceOf[MapType] => f.name
-      }
-      if (SparkEntry.oracleSql.contains(name))
-        assert(complex.isEmpty, s"oracle query $name has complex columns: ${complex.mkString(",")}")
-      assert(df.columns.nonEmpty)
-      assert(df.count() > 0, s"$name returned zero rows at sf0.001")
+      // Drop the key's tracked persists (a trainer's word table, ...) so
+      // they do not outlive its test.
+      try {
+        val df = fn(spark, Sf0001)
+        // The driver's canonicalizer (pandas sort_values) cannot hash
+        // top-level array columns; only non-oracle keys may carry maps.
+        val complex = df.schema.fields.collect {
+          case f if f.dataType.isInstanceOf[ArrayType] => f.name
+          case f if f.dataType.isInstanceOf[MapType] => f.name
+        }
+        if (SparkEntry.oracleSql.contains(name))
+          assert(complex.isEmpty, s"oracle query $name has complex columns: ${complex.mkString(",")}")
+        assert(df.columns.nonEmpty)
+        assert(df.count() > 0, s"$name returned zero rows at sf0.001")
+      } finally graft.operators.ScaleOps.releaseTracked()
     }
   }
 }

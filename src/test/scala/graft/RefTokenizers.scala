@@ -3,9 +3,9 @@ package graft
 import scala.collection.mutable
 
 /** Driver-side reference tokenizer trainers: plain Scala over collected
-  * (symbols, count) pairs — the independent twins the distributed BPE and
-  * WordPiece trainers are checked against (NoOracleSpec, R18OpsSpec,
-  * SymPackSpec). */
+  * (symbols, count) pairs — the independent twins the distributed BPE,
+  * WordPiece and unigram-LM trainers are checked against (NoOracleSpec,
+  * R18OpsSpec, SymPackSpec, UnigramSpec). */
 object RefTokenizers {
 
   /** Leftmost-first non-overlapping merge of adjacent (a, b) into `merged`
@@ -76,5 +76,70 @@ object RefTokenizers {
       vocab = rewrite(vocab, a, b, merged)
       (step, a, b, merged, sc)
     }
+  }
+
+  /** Reference unigram Viterbi: dp over prefixes holding (score, pieces),
+    * candidates scanned longest-first with a strict `>` from the −1e18
+    * sentinel, so ties keep the longest piece. Returns the best
+    * (score, segmentation); an uncoverable word ends at the sentinel with
+    * no pieces. */
+  def unigramViterbi(w: String, logp: Map[String, Double],
+                     maxLen: Int): (Double, Vector[String]) = {
+    val dp = mutable.ArrayBuffer((0.0, Vector.empty[String]))
+    for (i <- 1 to w.length) {
+      var best = (-1e18, Vector.empty[String])
+      for (j <- math.max(1, i - maxLen + 1) to i) {
+        val piece = w.substring(j - 1, i)
+        logp.get(piece).foreach { lp =>
+          val cand = dp(j - 1)._1 + lp
+          if (cand > best._1) best = (cand, dp(j - 1)._2 :+ piece)
+        }
+      }
+      dp += best
+    }
+    dp.last
+  }
+
+  /** Reference unigram-LM trainer: the same seeding, hard-EM, pruning
+    * schedule and longest-piece tie-break as text/Unigram.scala, written
+    * against the plain collected word counts. Returns (pieces as
+    * (piece, count, logp) ordered (count desc, piece asc), per-round
+    * corpus losses). */
+  def unigramTrain(words: Seq[(String, Long)], seedSize: Int,
+                   prunes: Seq[Int], finalRounds: Int,
+                   maxLen: Int): (Seq[(String, Long, Double)], Seq[Double]) = {
+    val cand = mutable.Map[String, Long]()
+    for ((w, n) <- words; i <- 0 until w.length;
+         l <- 1 to math.min(maxLen, w.length - i))
+      cand(w.substring(i, i + l)) = cand.getOrElse(w.substring(i, i + l), 0L) + n
+    var counts: Seq[(String, Long)] =
+      cand.toSeq.filter(_._1.length == 1) ++
+      cand.toSeq.filter(_._1.length > 1)
+        .sortBy { case (p, c) => (-c, p) }.take(seedSize)
+    def logp = {
+      val total = counts.map(_._2).sum.toDouble
+      counts.map { case (p, c) => p -> math.log(c / total) }.toMap
+    }
+    val losses = Seq.newBuilder[Double]
+    for (r <- 1 to prunes.size + finalRounds) {
+      val lp = logp
+      val agg = mutable.Map[String, Long]()
+      var loss = 0.0
+      for ((w, n) <- words) {
+        val (s, segs) = unigramViterbi(w, lp, maxLen)
+        loss -= s * n
+        for (p <- segs) agg(p) = agg.getOrElse(p, 0L) + n
+      }
+      losses += loss
+      counts =
+        if (r <= prunes.size)
+          agg.toSeq.filter(_._1.length == 1) ++
+          agg.toSeq.filter(_._1.length > 1)
+            .sortBy { case (p, c) => (-c, p) }.take(prunes(r - 1))
+        else agg.toSeq
+    }
+    val lpF = logp
+    (counts.map { case (p, c) => (p, c, lpF(p)) }
+      .sortBy { case (p, c, _) => (-c, p) }, losses.result())
   }
 }
