@@ -126,7 +126,7 @@ object Cbo {
       "cbo-hist-skew", dir, "v1") { d =>
       import org.apache.spark.sql.functions._
       val v = col("c_acctbal")
-      s.read.parquet(s"$dir/customer.parquet")
+      graft.Tables.customer(s, dir)
         .select(col("c_custkey").as("sk_key"),
           (v * v * v * v).as("sk_val"))
         .coalesce(1).write.mode("overwrite").parquet(s"$d/data")
@@ -362,7 +362,7 @@ object Cbo {
       "cbo-incr-skew", dir, "v1") { d =>
       import org.apache.spark.sql.functions._
       val v = col("c_acctbal")
-      val sk = s.read.parquet(s"$dir/customer.parquet")
+      val sk = graft.Tables.customer(s, dir)
         .select(col("c_custkey").as("sk_key"), (v * v * v * v).as("sk_val"))
       sk.filter(col("sk_key") % 4 =!= 1)
         .coalesce(1).write.mode("overwrite").parquet(s"$d/base")

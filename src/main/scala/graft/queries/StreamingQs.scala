@@ -520,15 +520,16 @@ object StreamingQs {
 
   /** STREAMING VIEW MAINTENANCE (Runtime.runRollupMaintain) — the
     * q_agg_view_maintain fold driven by the replayed event stream: each
-    * micro-batch appends its per-type PARTIAL aggregate (count + exact
-    * decimal partial sum) to a stored rollup table; the graded read MERGES
-    * the partials (Det.dsumMerge) and never re-reads the events. The
-    * oracle recomputes the view from scratch over the whole events table,
-    * so the hash match proves tick-partial accretion ≡ full recompute —
-    * the mergeable-aggregate law (decimal addition is exact and
-    * associative) graded through a real incremental stream. The flush
-    * sentinel is filtered in-stream: the rollup must account exactly the
-    * delivered events. */
+    * micro-batch is one shuffle-free job whose tasks append their per-type
+    * PARTIAL aggregates (count + exact decimal partial sum) to a stored
+    * rollup table; the graded read MERGES the partials (Det.dsumMerge) and
+    * never re-reads the events. The oracle recomputes the view from
+    * scratch over the whole events table, so the hash match proves
+    * partial accretion ≡ full recompute — the mergeable-aggregate law
+    * (decimal addition is exact and associative, so the task and tick
+    * boundaries cannot matter) graded through a real incremental stream.
+    * The flush sentinel is filtered in-stream: the rollup must account
+    * exactly the delivered events. */
   val qStreamViewMaintain: Q = (s, dir) => {
     import graft.streaming.{Runtime => SR}
     val rollup = Tables.stageDir(s, "stream-rollup", dir)

@@ -182,8 +182,9 @@ object Layout {
     // work, no Spark job) instead of a second full pass over the data —
     // which at 100 TB is a whole-table column scan per build. Values are
     // bit-identical for the proven footer types (ManifestSpec pins the
-    // footer path against the scan path row-for-row); anything else falls
-    // back to the original scan.
+    // footer path against the scan path row-for-row); anything else —
+    // including timestamps in Spark's default INT96 encoding — falls back
+    // to the original scan.
     import org.apache.hadoop.fs.Path
     val dataDir = new Path(s"$path/data")
     val fs = dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -247,14 +248,16 @@ object Layout {
     * the read-back aggregation. Returns None (caller falls back to the
     * scan) unless every file carries exact, decodable statistics:
     * the PROVEN set is INT64 long, INT64 TIMESTAMP(MICROS) (what Spark
-    * 4.x writes for TimestampType), INT32 int and INT32 date — numeric
-    * footer stats are exact by the format spec (no truncation, unlike
-    * binary). External values are built with the same conversions a
-    * collect() of the scan path applies, so rows match bit-for-bit. */
-  private def footerFileStats(spark: SparkSession,
-                              files: Seq[org.apache.hadoop.fs.Path],
-                              statsCol: String,
-                              dt: org.apache.spark.sql.types.DataType)
+    * writes for TimestampType under `spark.sql.parquet.outputTimestampType`
+    * = TIMESTAMP_MICROS; its default INT96 declines), INT32 int and INT32
+    * date — numeric footer stats are exact by the format spec (no
+    * truncation, unlike binary). External values are built with the same
+    * conversions a collect() of the scan path applies, so rows match
+    * bit-for-bit. */
+  private[graft] def footerFileStats(spark: SparkSession,
+                                     files: Seq[org.apache.hadoop.fs.Path],
+                                     statsCol: String,
+                                     dt: org.apache.spark.sql.types.DataType)
       : Option[Seq[(org.apache.hadoop.fs.Path, Any, Any, Long)]] = {
     import org.apache.spark.sql.types._
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -273,7 +276,7 @@ object Layout {
       case _ => throw new IllegalStateException("unreachable: gated above")
     }
     // Physical/logical footer shape the Catalyst type must have been
-    // written as — anything else (INT96 timestamps from a foreign writer,
+    // written as — anything else (INT96 timestamps, Spark's default,
     // strings, decimals) → None.
     def usable(pt: org.apache.parquet.schema.PrimitiveType): Boolean =
       (dt, pt.getPrimitiveTypeName, pt.getLogicalTypeAnnotation) match {

@@ -3,8 +3,9 @@ package graft.streaming
 import graft.Tables
 import graft.functions.Det.dsum
 import graft.sources.Layout
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{Decimal, DecimalType, LongType, StructField, StructType}
 
 /** Structured Streaming runtime — SURVEY.md §2.10's runtime half.
   *
@@ -716,47 +717,56 @@ object Runtime {
         col("n_events"), col("sum_value"))
   }
 
-  /** STATE-PARTITION SIZING for the replay streams. A stateful streaming
-    * query fixes its state-partition count from `spark.sql.shuffle.
-    * partitions` at first start (recorded in the checkpoint; AQE is
-    * disabled for streaming, so nothing re-sizes it later) — it must be
-    * sized to the stream's STATE volume, not inherited from the batch
-    * session's shuffle width. The replay fixtures carry KB–MB of state:
-    * at the session default of 32, every micro-batch commits 32 partitions
-    * × up-to-4 state stores of near-empty deltas, and those ~128 concurrent
-    * tiny fsyncs dominate the whole run (measured 44 s cumulative commit
-    * time vs 2 s at 8 partitions, same results). Default 8 here; a
-    * production deployment sets `graft.stream.shufflePartitions` to match
-    * its throughput (e.g. ≥ cores, like any shuffle width) — the knob
-    * exists precisely because this is the one width AQE can never fix.
-    * The session conf is restored after the bounded run; gate/bench
-    * streams run serially, so the temporary override leaks nowhere. */
-  private def withStreamShufflePartitions[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prov = "spark.sql.streaming.stateStore.providerClass"
-    val chlog = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prev = spark.conf.get(key)
-    val prevProv = spark.conf.getOption(prov)
-    val prevChlog = spark.conf.getOption(chlog)
-    spark.conf.set(key, spark.conf.get("graft.stream.shufflePartitions", "8"))
-    // RocksDB state store is the declared 100 TB posture (r17): the default
-    // HDFS-backed provider keeps ALL state on the executor heap, so
-    // stream-stream join and dedup state outgrows memory long before the
-    // data does; RocksDB spills to local disk and bounds the heap at the
-    // block-cache size. Changelog checkpointing uploads per-batch deltas
-    // instead of full snapshots — the commit cost stays O(batch), not
-    // O(state). Results must be backend-invisible: every q_stream_* oracle
-    // hash and the q_stream_restart checkpoint-recovery law are re-graded
-    // under this provider (StreamingEquivSpec pins the swap explicitly).
-    // The r18 A/B over the streaming keys settled the backend (SCALE.md).
-    spark.conf.set(prov,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(chlog, "true")
-    def restore(k: String, v: Option[String]): Unit =
+  /** The FOUR SESSION SETTINGS every stream runner fixes for the length of
+    * its bounded run, each restored afterwards to exactly what it was
+    * before the call (set to its old value, or unset again). Gate/bench
+    * streams run serially, so the temporary override leaks nowhere;
+    * StreamTickSpec pins the values inside every runner and the restore.
+    *
+    * 1. State-partition count (`spark.sql.shuffle.partitions`). A stateful
+    *    streaming query fixes it at first start (recorded in the
+    *    checkpoint; AQE is disabled for streaming, so nothing re-sizes it
+    *    later) — it must be sized to the stream's STATE volume, not
+    *    inherited from the batch session's shuffle width. The replay
+    *    fixtures carry KB–MB of state: at the session default of 32, every
+    *    micro-batch commits 32 partitions × up-to-4 state stores of
+    *    near-empty deltas, and those ~128 concurrent tiny fsyncs dominate
+    *    the whole run (measured 44 s cumulative commit time vs 2 s at 8
+    *    partitions, same results). Default 8 here; a production deployment
+    *    sets `graft.stream.shufflePartitions` to match its throughput (e.g.
+    *    ≥ cores, like any shuffle width) — the knob exists precisely
+    *    because this is the one width AQE can never fix.
+    * 2. RocksDB state store, the declared 100 TB posture (r17): the default
+    *    HDFS-backed provider keeps ALL state on the executor heap, so
+    *    stream-stream join and dedup state outgrows memory long before the
+    *    data does; RocksDB spills to local disk and bounds the heap at the
+    *    block-cache size. Results must be backend-invisible: every
+    *    q_stream_* oracle hash and the q_stream_restart checkpoint-recovery
+    *    law are re-graded under this provider. The r18 A/B over the
+    *    streaming keys settled the backend (SCALE.md).
+    * 3. Changelog checkpointing: RocksDB uploads per-batch deltas instead
+    *    of full snapshots — the commit cost stays O(batch), not O(state).
+    * 4. The FileSystem checkpoint file manager, for the offset WAL, the
+    *    commit log, the file-source log and the RocksDB changelog uploads.
+    *    Spark's default for `file:` paths is the FileContext manager; the
+    *    FileSystem one writes a temp file and renames it into place, which
+    *    is correct wherever `FileSystem.rename` is atomic — local FS and
+    *    HDFS. It cuts each checkpoint-log write from ~30 ms to ~8 ms (local
+    *    FS, 4 CPUs), most of a replay micro-batch's fixed cost. */
+  private def withStreamSettings[T](spark: SparkSession)(body: => T): T = {
+    val fixed = Seq(
+      "spark.sql.shuffle.partitions" ->
+        spark.conf.get("graft.stream.shufflePartitions", "8"),
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
+    val set = spark.conf.getAll // explicitly set entries only, no defaults
+    val prev = fixed.map { case (k, _) => k -> set.get(k) }
+    fixed.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach { case (k, v) =>
       v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
-    try body finally {
-      spark.conf.set(key, prev)
-      restore(prov, prevProv); restore(chlog, prevChlog)
     }
   }
 
@@ -764,7 +774,7 @@ object Runtime {
     * completion against the replayed file source — append twin of
     * [[runToCompletion]] (dedup/stateless plans reject complete mode). */
   def runToCompletionAppend(spark: SparkSession, df: DataFrame, name: String): DataFrame =
-    withStreamShufflePartitions(spark) {
+    withStreamSettings(spark) {
     val q = df.writeStream
       .format("memory")
       .queryName(name)
@@ -792,7 +802,7 @@ object Runtime {
     * the replay schedule, closing the loop. */
   def runToCompletionAppendWithDrops(spark: SparkSession, df: DataFrame,
                                      name: String): (DataFrame, Long) =
-    withStreamShufflePartitions(spark) {
+    withStreamSettings(spark) {
     val q = df.writeStream
       .format("memory")
       .queryName(name)
@@ -840,7 +850,7 @@ object Runtime {
   def runTumblingWithRestart(spark: SparkSession, dir: String,
                              interrupted: Boolean = true)
       : (DataFrame, Seq[Long], Long) =
-    withStreamShufflePartitions(spark) {
+    withStreamSettings(spark) {
     Tables.prep(spark)
     val fixture = stagedSplitDir(spark, dir)
     val names = Seq("events_0_early.parquet", "events_1_late.parquet")
@@ -915,7 +925,7 @@ object Runtime {
                               partitionCol: String, outputMode: String,
                               saveMode: SaveMode,
                               filesPerPartition: Int = 1): Unit =
-    withStreamShufflePartitions(agg.sparkSession) {
+    withStreamSettings(agg.sparkSession) {
     val q = agg.writeStream
       .outputMode(outputMode)
       .option("checkpointLocation", checkpoint)
@@ -932,42 +942,34 @@ object Runtime {
     }
   }
 
-  /** Streaming sink into a MANIFESTED layout — the per-tick composition of
-    * the q_stream_sink ingest path with Layout.appendManifested: every
-    * micro-batch commits its range-clustered files plus ONE new manifest
-    * part; nothing already on disk is re-read or rewritten, so manifest
-    * maintenance cost stays O(tick) at any table size. This is the claim
-    * a Delta/Iceberg streaming writer makes (each commit appends a
-    * snapshot's manifest), composed from the same primitives batch
-    * maintenance uses — downstream readers plan file-skipping scans from
-    * the manifest while the stream keeps appending. */
   /** Streaming INCREMENTAL VIEW MAINTENANCE sink — the q_agg_view_maintain
-    * fold driven by a stream: every micro-batch commits its tick's
-    * PARTIAL aggregate (count + exact decimal partial sum per key — the
-    * dsumPartial/dsumMerge mergeable pair) as one append to a stored
-    * rollup-delta table. The serving read merges the partials and NEVER
-    * re-reads the event corpus; per-tick cost is the batch-sized partial
-    * aggregation plus an O(keys) append — decimal addition is exact, so
-    * the merged rollup is bit-identical to a from-scratch aggregate over
-    * everything the stream delivered. This is the kappa-architecture
-    * serving-table story: at 100 TB of accumulated events the rollup
-    * table holds O(ticks × keys) tiny rows and compacts like any other
-    * layout; recomputing the view per tick is the full-scan this sink
-    * exists to delete. Returns the schema of the rollup rows, so the
-    * serving read opens the table without inferring it. */
+    * fold driven by a stream, run as a MapReduce mapper with a combiner:
+    * every micro-batch is ONE map-side Spark job whose tasks each fold
+    * their rows into key → (count, exact decimal partial sum) and append
+    * those partials straight to the stored rollup-delta table — no
+    * exchange, no coalesce ([[rollupPartials]]). The serving read is the
+    * reducer: it merges the partials with Det.dsumMerge and NEVER re-reads
+    * the event corpus. Decimal addition is exact, so the merged rollup is
+    * bit-identical to a from-scratch aggregate over everything the stream
+    * delivered, whatever the partial boundaries (tasks, ticks).
+    *
+    * A tick appends O(tasks × keys) rows instead of O(keys): the rollup is
+    * keyed by `event_type`, so this stays tiny, and the table compacts
+    * like any other layout. This is the kappa-architecture serving-table
+    * story: at 100 TB of accumulated events the rollup holds O(ticks ×
+    * tasks × keys) tiny rows; recomputing the view per tick is the
+    * full-scan this sink exists to delete. Returns the schema of the
+    * rollup rows, so the serving read opens the table without inferring
+    * it. */
   def runRollupMaintain(rows: DataFrame, rollupPath: String,
                         checkpoint: String, keyCol: String,
-                        valCol: String): org.apache.spark.sql.types.StructType =
-    withStreamShufflePartitions(rows.sparkSession) {
-    def partial(batch: DataFrame, tick: Long) = batch.groupBy(col(keyCol))
-      .agg(count(lit(1)).as("n"),
-        graft.functions.Det.dsumPartial(col(valCol)).as("s"))
-      .withColumn("tick", lit(tick))
+                        valCol: String): StructType =
+    withStreamSettings(rows.sparkSession) {
     val q = rows.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, tick: Long) =>
-        partial(batch, tick).coalesce(1)
+        rollupPartials(batch, keyCol, valCol, tick)
           .write.mode(SaveMode.Append).parquet(rollupPath)
         ()
       }
@@ -979,8 +981,49 @@ object Runtime {
       throw new IllegalStateException(
         s"rollup stream into $rollupPath did not finish within 120s")
     }
-    partial(rows, 0L).schema
+    rollupSchema(rows.schema(keyCol))
   }
+
+  /** The rollup row: key, count, exact partial sum, tick — the schema of
+    * `groupBy(key).agg(count(lit(1)) as n, Det.dsumPartial(v) as s)` plus
+    * the tick. */
+  private def rollupSchema(key: StructField): StructType = StructType(Seq(key,
+    StructField("n", LongType, nullable = false),
+    StructField("s", RollupDec, nullable = true),
+    StructField("tick", LongType, nullable = false)))
+
+  private val RollupDec = DecimalType(38, 10)
+
+  /** One tick's rollup partials without a shuffle: each task folds its rows
+    * into key → (count, exact sum) — the same rows
+    * `groupBy(keyCol).agg(count(lit(1)), Det.dsumPartial(valCol))` gives
+    * for that task's slice, so merging any task split gives the grouped
+    * aggregate. The cast to DECIMAL(38,10) stays a SQL column (Spark does
+    * the rounding); the fold adds Spark Decimals and checks precision 38
+    * after every row, as the SQL sum's buffer does, and fails with the SQL
+    * sum's own ARITHMETIC_OVERFLOW. It fails under ANSI off too, where the
+    * SQL sum would return null: a null partial would drop out of the merge
+    * unseen. Null keys form a group; a group with only null values sums to
+    * null and still counts its rows. */
+  private[graft] def rollupPartials(batch: DataFrame, keyCol: String,
+                                    valCol: String, tick: Long): DataFrame =
+    batch.select(col(keyCol), col(valCol).cast(RollupDec)).mapPartitions { rows =>
+      final class Partial { var n = 0L; var s: Decimal = null }
+      val acc = scala.collection.mutable.LinkedHashMap.empty[Any, Partial]
+      rows.foreach { r =>
+        val p = acc.getOrElseUpdate(r.get(0), new Partial)
+        p.n += 1
+        if (!r.isNullAt(1)) {
+          val v = Decimal(r.getDecimal(1))
+          p.s = if (p.s == null) v else p.s + v
+          if (!p.s.changePrecision(RollupDec.precision, RollupDec.scale))
+            throw org.apache.spark.sql.graft.SparkErrors.sumOfDecimalsOverflow()
+        }
+      }
+      acc.iterator.map { case (k, p) =>
+        Row(k, p.n, if (p.s == null) null else p.s.toJavaBigDecimal, tick)
+      }
+    }(Encoders.row(rollupSchema(batch.schema(keyCol))))
 
   /** UPDATE-MODE streaming → a latest-wins SERVING TABLE: each micro-batch
     * of an update-mode aggregation carries the NEW full aggregate for every
@@ -999,7 +1042,7 @@ object Runtime {
     * own state. Readers take [[latestServingVersion]]. */
   def runUpdateServing(agg: DataFrame, servingRoot: String, checkpoint: String,
                        keyCols: Seq[String]): Unit =
-    withStreamShufflePartitions(agg.sparkSession) {
+    withStreamSettings(agg.sparkSession) {
     val q = agg.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
@@ -1039,7 +1082,7 @@ object Runtime {
     * the fold co-locates on the key. */
   def runCdcServing(changes: DataFrame, base: DataFrame, servingRoot: String,
                     checkpoint: String, key: String): Unit =
-    withStreamShufflePartitions(changes.sparkSession) {
+    withStreamSettings(changes.sparkSession) {
     val q = changes.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -1241,9 +1284,18 @@ object Runtime {
     spark.read.parquet((0 until 3).map(i => s"$outPath/tick-$i"): _*)
   }
 
+  /** Streaming sink into a MANIFESTED layout — the per-tick composition of
+    * the q_stream_sink ingest path with Layout.appendManifested: every
+    * micro-batch commits its range-clustered files plus ONE new manifest
+    * part; nothing already on disk is re-read or rewritten, so manifest
+    * maintenance cost stays O(tick) at any table size. This is the claim
+    * a Delta/Iceberg streaming writer makes (each commit appends a
+    * snapshot's manifest), composed from the same primitives batch
+    * maintenance uses — downstream readers plan file-skipping scans from
+    * the manifest while the stream keeps appending. */
   def runToManifestedParquet(rows: DataFrame, path: String, checkpoint: String,
                              statsCol: String, numFilesPerTick: Int): Unit =
-    withStreamShufflePartitions(rows.sparkSession) {
+    withStreamSettings(rows.sparkSession) {
     val q = rows.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -1265,7 +1317,7 @@ object Runtime {
     * source and return the final result as a DataFrame (memory sink,
     * complete mode). Driver for the stream==batch equivalence tests. */
   def runToCompletion(spark: SparkSession, agg: DataFrame, name: String): DataFrame =
-    withStreamShufflePartitions(spark) {
+    withStreamSettings(spark) {
     val q = agg.writeStream
       .format("memory")
       .queryName(name)
@@ -1300,7 +1352,7 @@ object Runtime {
   def runCompleteWithSnapshot(spark: SparkSession, dir: String,
                               agg: DataFrame => DataFrame, name: String)
       : (DataFrame, Seq[org.apache.spark.sql.Row]) =
-    withStreamShufflePartitions(spark) {
+    withStreamSettings(spark) {
     Tables.prep(spark)
     val fixture = stagedSplitDir(spark, dir)
     val names = Seq("events_0_early.parquet", "events_1_late.parquet")

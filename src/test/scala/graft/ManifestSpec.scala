@@ -806,4 +806,52 @@ class ManifestSpec extends AnyFunSuite {
     }
     Tables.deleteRecursively(base)
   }
+
+  test("footer stats == scan stats row for row for Long, Int, micros Timestamp, Date; other types take the scan") {
+    import org.apache.spark.sql.types._
+    // A quarter of every column is null, so range clustering puts the
+    // nulls in files of their own: all-null footers are covered too.
+    val src = spark.range(0, 4000).select(Seq(
+        "l" -> (col("id") * 7919L % 100003L - 50000L),
+        "i" -> (col("id") * 104729L % 65537L - 30000L).cast("int"),
+        "ts" -> timestamp_micros(lit(1700000000000000L) + col("id") * 123456789L),
+        "d" -> date_add(lit("1990-01-01").cast("date"), (col("id") * 37 % 9000).cast("int")),
+        "s" -> concat(lit("k"), (col("id") * 31 % 997).cast("string")),
+        "dec" -> (col("id") / 7).cast(DecimalType(12, 4)))
+      .map { case (n, c) => when(col("id") % 4 =!= 0, c).as(n) }: _*)
+    val base = sys.props("java.io.tmpdir") + "/graft-manifest-footer-spec"
+    Tables.deleteRecursively(base)
+    val tsType = "spark.sql.parquet.outputTimestampType"
+    // (stats column, parquet timestamp type it is written with, footer path
+    // expected). Spark's default timestamp type is INT96, which has no
+    // exact footer stats, so only a TIMESTAMP_MICROS write takes the footer.
+    val cases = Seq(("l", None, true), ("i", None, true),
+      ("ts", Some("TIMESTAMP_MICROS"), true), ("d", None, true),
+      ("ts", Some("INT96"), false), ("s", None, false), ("dec", None, false))
+    for ((c, ts, footerPath) <- cases) {
+      val d = s"$base/$c-${ts.getOrElse("default")}"
+      val prevTs = spark.conf.getOption(tsType)
+      ts.foreach(spark.conf.set(tsType, _))
+      try Layout.writeManifested(src.select(col(c)), d, c, 6)
+      finally prevTs.fold(spark.conf.unset(tsType))(spark.conf.set(tsType, _))
+      val dataDir = new org.apache.hadoop.fs.Path(s"$d/data")
+      val files = dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listStatus(dataDir).map(_.getPath).filter(_.getName.endsWith(".parquet")).toSeq
+      val footer = Layout.footerFileStats(spark, files, c, src.schema(c).dataType)
+      assert(footer.isDefined == footerPath,
+        s"$c ($ts): footer path ${if (footer.isDefined) "taken" else "declined"}")
+      val manifest = spark.read.parquet(s"$d/manifest")
+        .select("file_path", "min_v", "max_v", "n_rows")
+        .collect().map(_.toSeq).sortBy(_.head.toString).toSeq
+      val scan = spark.read.parquet(s"$d/data")
+        .groupBy(input_file_name().as("file_path"))
+        .agg(min(col(c)), max(col(c)), count(lit(1)))
+        .collect().map(_.toSeq).sortBy(_.head.toString).toSeq
+      assert(manifest.length == files.length)
+      assert(manifest == scan, s"$c ($ts): manifest != scan:\n$manifest\n$scan")
+      assert(manifest.exists(_(1) == null) && manifest.exists(_(1) != null),
+        s"$c ($ts): no all-null file next to a valued one — the null leg is vacuous")
+    }
+    Tables.deleteRecursively(base)
+  }
 }
