@@ -216,8 +216,8 @@ object ScaleSoak {
     // Weighted median soaks over lineitem ×100 = 60M rows with QUANTITY
     // kept integral (the exact-decimal weight path is part of the claim);
     // prices get the cent perturbation so the distinct-price domain stays
-    // corpus-sized — the regime where the scale form's bucketed prefix
-    // must replace the 3-partition window sort.
+    // corpus-sized — the regime where the scale form's prefix scan must
+    // replace the 3-partition window sort.
     if (needs(liKeys))
       stage(spark, src, out, "lineitem", copies = 100)(df => df
         .withColumn("l_orderkey", col("l_orderkey") + col("__c") * lit(100000000L))

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import org.apache.spark.sql.types.{Decimal, DecimalType, DoubleType, LongType}
 
 /** Determinism helpers for float aggregates (SURVEY.md §2.9).
   *
@@ -48,6 +48,19 @@ object Det {
     * bit-for-bit, whatever the partial boundaries (day files, micro-batches,
     * backfill chunks). Rounding happens only at merge time. */
   def dsumPartial(c: Column): Column = sum(c.cast(Dec))
+
+  /** One step of an exact-decimal fold run outside Catalyst, taken as the
+    * SQL `sum` buffer takes it: `acc + v` (`v` itself for an empty
+    * accumulator) must fit `t`, else the fold fails with the SQL sum's own
+    * ARITHMETIC_OVERFLOW. It fails under ANSI off too, where the SQL sum
+    * would return null: a null partial would drop out of a later merge
+    * unseen. */
+  def addExact(acc: Decimal, v: Decimal, t: DecimalType): Decimal = {
+    val s = if (acc == null) v else acc + v
+    if (!s.changePrecision(t.precision, t.scale))
+      throw org.apache.spark.sql.graft.SparkErrors.sumOfDecimalsOverflow()
+    s
+  }
 
   /** Merge [[dsumPartial]] columns exactly and finish with dsum's
     * round → scale-to-integer → single-double-division dance, so the merged

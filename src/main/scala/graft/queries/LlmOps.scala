@@ -2666,63 +2666,16 @@ object LlmOps {
   }
 
   /** Scale form — the per-language k smallest (hash, doc_id) entries found
-    * WITHOUT sorting any language partition: bucket the hash space per
-    * language (approx edges), count per bucket, locate the single bucket
-    * covering rank k from the cumulative offsets, sort ONLY that bucket's
-    * rows (bounded by ~n/buckets per task) to pull the exact k-th entry,
-    * and filter the corpus against the per-language threshold triple
-    * (numeric prefix, full hash, doc_id — a total order, so the sample is
-    * EXACTLY the window form's even under hash-prefix ties). Languages
-    * with fewer than k documents have no covering bucket and pass whole. */
-  def quotaSample(docs: DataFrame, k: Int, buckets: Int = 256): DataFrame = {
-    import graft.operators.ScaleOps
-    // Numeric bucket key: the first 15 hex chars as a long. Hex chars sort
-    // lexicographically by value, so (v, h, doc_id) order == (h, doc_id).
-    val d = ScaleOps.trackedPersist(docs
-      .withColumn("h", md5(col("text")))
-      .withColumn("v", conv(substring(col("h"), 1, 15), 16, 10).cast("long")))
-    val nb = buckets
-    val edgePs = (1 until nb).map(i => i.toDouble / nb)
-    // Group-count broadcast gate for the per-language helper frames
-    // (edges/boundary/threshold are ≤1 row + one edge array per lang):
-    // estimate-gated hints never fired on these post-agg frames and the
-    // joins sort-merged the corpus on `lang` — few languages is exactly
-    // the skew case AND the safe-broadcast case (ScaleOps
-    // .perGroupBroadcastHint; counted on the persisted frame).
-    val hintTiny = ScaleOps.perGroupBroadcastHint(d, col("lang"),
-      ScaleOps.TinyPerGroupBytes * nb.toLong / 256L)
-    val edges = d.groupBy(col("lang")).agg(
-      percentile_approx(col("v"), array(edgePs.map(lit): _*), lit(10000))
-        .as("__edges"))
-    // Bucket = how many edges are ≤ v, as ONE array expression (a chained
-    // sum of nb−1 when() terms would grow the codegen'd method linearly
-    // with `buckets` and risk the 64KB/interpreted-fallback cliff).
-    val bucketExpr = size(filter(col("__edges"), e => col("v") >= e))
-    val bucketed = d.join(hintTiny(edges), "lang")
-      .withColumn("__bkt", bucketExpr).drop("__edges")
-    val bc = bucketed.groupBy(col("lang"), col("__bkt")).agg(count(lit(1)).as("__bc"))
-    val wOff = Window.partitionBy(col("lang")).orderBy(col("__bkt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val boundary = bc
-      .withColumn("__off", coalesce(sum(col("__bc")).over(wOff), lit(0L)))
-      .filter(col("__off") < k && col("__off") + col("__bc") >= k)
-      .select(col("lang"), col("__bkt"), col("__off"))
-    // Sort only the boundary bucket per language; its row at in-bucket rank
-    // (k − offset) is the exact global k-th entry.
-    val wIn = Window.partitionBy(col("lang"))
-      .orderBy(col("v"), col("h"), col("doc_id"))
-    val thr = bucketed.join(hintTiny(boundary), Seq("lang", "__bkt"))
-      .withColumn("__rn", row_number().over(wIn))
-      .filter(col("__rn") === lit(k.toLong) - col("__off"))
-      .select(col("lang"), col("v").as("__tv"), col("h").as("__th"),
-        col("doc_id").as("__tid"))
-    d.join(hintTiny(thr), Seq("lang"), "left")
-      .filter(col("__tv").isNull ||
-        col("v") < col("__tv") ||
-        (col("v") === col("__tv") && (col("h") < col("__th") ||
-          (col("h") === col("__th") && col("doc_id") <= col("__tid")))))
-      .drop("v", "__tv", "__th", "__tid")
-  }
+    * WITHOUT sorting any language partition in one task: a
+    * [[graft.operators.ScaleOps.prefixScan]] count per language over
+    * (md5(text), doc_id) gives each document its position, and the rows at
+    * position ≤ k are the sample. (hash, doc_id) is a total order, so the
+    * sample is EXACTLY the window form's even under hash ties. Languages
+    * with fewer than k documents pass whole. */
+  def quotaSample(docs: DataFrame, k: Int): DataFrame =
+    graft.operators.ScaleOps.prefixScan(docs.withColumn("h", md5(col("text"))),
+        Seq(col("lang")), Seq(col("h"), col("doc_id")), Seq("__pos" -> lit(1L)))
+      .frame.filter(col("__pos") <= k).drop("__pos")
 
   private[graft] val quotaScaleForm: Q = (s, dir) =>
     quotaSummary(quotaSample(Tables.documents(s, dir), QuotaK))
@@ -2737,8 +2690,9 @@ object LlmOps {
     * `__rn <= k` triggers Spark's WindowGroupLimit push-down, which keeps
     * only k rows per language per MAP partition before the shuffle, so the
     * final per-language task sorts ~k × numMapPartitions rows, not the
-    * corpus (measured 42× faster than the bucketed rewrite at a 1.5 GiB
-    * corpus in the r11 scale soak — SCALE.md). The scale form takes over
+    * corpus (measured 42× faster than the bucketed rewrite that preceded
+    * the prefix-scan form, at a 1.5 GiB corpus in the r11 scale soak —
+    * SCALE.md). The scale form takes over
     * where that product itself outgrows one task. Bit-identical either way
     * (ScaleOpsSpec), so routing never changes results. */
   def quotaRouted(maxOneTaskBytes: Long = graft.Conf.OneTaskSortMaxBytes * 64): Q =
@@ -2851,9 +2805,9 @@ object LlmOps {
     * layout of a packing job. */
   /** SIZE-ROUTED (the Windows-router convention): 8 fixed shards means the
     * plain running-sum window sorts ~n/8 rows per task — fine up to the
-    * gate, a single-task scale-killer past it, where the exact bucketed
-    * two-pass (ScaleOps.groupedPrefixSum — bit-identical, asserted in
-    * ScaleOpsSpec) takes over. */
+    * gate, a single-task scale-killer past it, where the exact prefix scan
+    * (ScaleOps.groupedPrefixSum — bit-identical, asserted in ScaleOpsSpec)
+    * takes over. */
   def packSequencesRouted(
       maxOneTaskBytes: Long = graft.Conf.OneTaskSortMaxBytes * 8): Q = (s, dir) => {
     val docs = Tables.documents(s, dir)

@@ -1098,7 +1098,7 @@ object MlSuffStats {
     * table and an all-integer fold ([[aucFromRuns]]): no per-row global
     * rank is ever materialized, and ties cost nothing extra. The prefix is
     * SIZE-ROUTED (the q_agg_median convention): a single-task window below
-    * Conf.OneTaskSortMaxBytes, the exact bucketed two-pass
+    * Conf.OneTaskSortMaxBytes, the exact prefix scan
     * `ScaleOps.groupedPrefixSum` above it — R14OpsSpec pins both forms
     * bit-equal, so the 100 TB story is self-executing. */
   val qMlEvalAuc: Q = (s, dir) =>

@@ -3492,12 +3492,11 @@ object Relational {
         round(expr("percentile(o_totalprice, 0.9)"), 2).as("p90_price"))
       .orderBy("o_orderstatus")
 
-  /** Scale form — EXACT bucketed two-pass quantiles
-    * (ScaleOps.groupedQuantilesExact): distinct-value histogram, approx
-    * split points, O(buckets) offsets, within-bucket positions, broadcast
-    * rank lookup + interpolation. Same values bit-for-bit (same
-    * p·(n−1) bracketing and interpolation arithmetic), bounded memory per
-    * task. */
+  /** Scale form — EXACT quantiles from a prefix scan
+    * (ScaleOps.groupedQuantilesExact): distinct-value histogram, its
+    * per-group running count as positions, rank lookup + interpolation.
+    * Same values bit-for-bit (same p·(n−1) bracketing and interpolation
+    * arithmetic), bounded memory per task. */
   private[graft] val medianScaleForm: Q = (s, dir) =>
     graft.operators.ScaleOps.groupedQuantilesExact(
         Tables.orders(s, dir), col("o_orderstatus"), col("o_totalprice"),
@@ -3531,11 +3530,11 @@ object Relational {
     * combined, one shuffle). Declared form: a running decimal sum over
     * each flag's price-ordered partials — with 3 flags that window sorts
     * ~n/3 rows in one task, the skew the router exists for. Scale form:
-    * [[graft.operators.ScaleOps.groupedPrefixSum]]'s exact bucketed
-    * two-pass prefix (each task sorts ~n/(groups·256) rows), per-flag
-    * totals as a group-count-gated broadcast join, identical crossing
-    * test. Decimal addition is associative, so both forms produce the
-    * same cum values bit-for-bit and the router never changes results. */
+    * [[graft.operators.ScaleOps.groupedPrefixSum]]'s exact prefix scan
+    * (a range exchange on (flag, price); no task sorts a whole flag),
+    * per-flag totals as a join, identical crossing test. Decimal addition
+    * is associative, so both forms produce the same cum values
+    * bit-for-bit and the router never changes results. */
   private[graft] def wmedianPartials(s: SparkSession, dir: String): DataFrame =
     Tables.lineitem(s, dir)
       .groupBy(col("l_returnflag"), col("l_extendedprice").as("price"))
@@ -3573,12 +3572,10 @@ object Relational {
 
   private[graft] val wmedianScaleForm: Q = (s, dir) => {
     val pw = graft.operators.ScaleOps.trackedPersist(wmedianPartials(s, dir))
-    val hintTiny = graft.operators.ScaleOps.perGroupBroadcastHint(
-      pw, col("l_returnflag"))
     val tot = pw.groupBy(col("l_returnflag").as("tf")).agg(sum(col("w")).as("__tw"))
     val crossed = graft.operators.ScaleOps
       .groupedPrefixSum(pw, col("l_returnflag"), col("price"), col("w"))
-      .join(hintTiny(tot), col("l_returnflag") === col("tf"))
+      .join(tot, col("l_returnflag") === col("tf"))
       .filter(col("__run") * 2 >= col("__tw"))
     wmedianFinish(crossed, pw)
   }
@@ -3600,8 +3597,8 @@ object Relational {
     * clamped mean on the exact decimal path.
     *
     * Size-routed like q_agg_median: the declared single-buffer percentile
-    * below the one-task gate, ScaleOps.groupedQuantilesExact's bucketed
-    * two-pass (bit-identical interpolation) above it. The clamp pass
+    * below the one-task gate, ScaleOps.groupedQuantilesExact's prefix
+    * scan (bit-identical interpolation) above it. The clamp pass
     * joins the O(groups) quantile table back broadcast — at 100 TB the
     * corpus flows through one narrow clamp map + one map-side-combined
     * aggregate, and the quantile machinery touches the distinct-value
@@ -3813,7 +3810,7 @@ object Relational {
     *
     * Size-routed edges (the q_agg_median pairing): single-buffer
     * `percentile` below the one-task gate, groupedQuantilesExact's
-    * bucketed two-pass (bit-identical interpolation) above it — both
+    * prefix scan (bit-identical interpolation) above it — both
     * forms score with the same 12 doubles, so routing never changes
     * results. Strict comparisons at the edges tie identically in both
     * engines. */

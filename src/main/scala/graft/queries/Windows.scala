@@ -20,8 +20,9 @@ import org.apache.spark.sql.functions._
   * distributes evenly. The two whole-table windows are ROUTED: below
   * Conf.OneTaskSortMaxBytes (Catalyst size estimate — no job runs) the
   * declared single-task-sort window form executes; above it the plan
-  * switches to the ScaleOps rewrite (exact bucketed global ranks for
-  * ntile/percent_rank, exact bin-and-join for the range frame), so the
+  * switches to the ScaleOps rewrite (exact global ranks for
+  * ntile/percent_rank, an exact prefix difference for the range frame, both
+  * on one prefix scan), so the
   * 100 TB story is self-executing, not a comment for the caller to read.
   */
 object Windows {
@@ -95,10 +96,11 @@ object Windows {
       .orderBy(col("o_orderstatus"), col("price_cents"), col("o_orderkey"))
   }
 
-  /** Scale form — EXACT bin-and-join rewrite (ScaleOps.rangeBandAgg):
-    * width-500000 bins of price_cents, each row joined to its bin±1
-    * partials. Work shuffles uniformly by (status, bin); no whole-partition
-    * sort anywhere. Same rows, same values as the window form. */
+  /** Scale form — EXACT prefix difference (ScaleOps.rangeBandAgg): each
+    * distinct price's band is F(v + 500000) − F(v − 500001), both read off
+    * one prefix scan per status over the distinct prices and their probe
+    * points. No whole-partition sort anywhere. Same rows, same values as
+    * the window form. */
   private[graft] val rangeScaleForm: Q = (s, dir) => {
     val orders = Tables.orders(s, dir)
       .withColumn("price_cents", round(col("o_totalprice") * 100).cast("long"))
@@ -137,7 +139,7 @@ object Windows {
 
   /** Scale form — EXACT, no global sort: ScaleOps.globalRanksDesc gives the
     * global position (__pos, tiebroken by c_custkey), value rank (__rnk) and
-    * total count (__n) via bucketed parallel windows; then
+    * total count (__n) from one prefix scan over a range exchange; then
     *   ntile(k)  = the positional split SQL defines (first n%k buckets get
     *               ⌈n/k⌉ rows, the rest ⌊n/k⌋ — computed from __pos alone);
     *   pct_rank  = (rank-1)/(n-1), the definition of percent_rank.

@@ -819,8 +819,8 @@ object Layout {
     (n, live.length)
   }
 
-  /** RETENTION EXPIRY — the second half of the GC story ([[
-    * vacuumManifested]] collects never-committed orphans): delete data
+  /** RETENTION EXPIRY — the second half of the GC story
+    * ([[vacuumManifested]] collects never-committed orphans): delete data
     * files whose 'remove' tombstone committed at or below `throughVer`,
     * surrendering time travel to snapshots below that horizon — exactly
     * Delta's VACUUM retention contract. Manifest rows stay (the log is the

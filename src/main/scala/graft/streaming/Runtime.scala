@@ -5,6 +5,7 @@ import graft.functions.Det.dsum
 import graft.sources.Layout
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{Decimal, DecimalType, LongType, StructField, StructType}
 
 /** Structured Streaming runtime — SURVEY.md §2.10's runtime half.
@@ -770,23 +771,30 @@ object Runtime {
     }
   }
 
+  /** Start `writer` as an AvailableNow query and wait for it to drain what
+    * has arrived. A query still running after 120 s is stopped and
+    * reported, since what it wrote would be partial. Returns the finished
+    * query for its progress reports. */
+  private def runAvailableNow(writer: DataStreamWriter[Row], what: String): StreamingQuery = {
+    val q = writer.trigger(Trigger.AvailableNow()).start()
+    if (!q.awaitTermination(120000L)) {
+      q.stop()
+      throw new IllegalStateException(
+        s"$what did not finish within 120s — its output would be partial")
+    }
+    q
+  }
+
   /** Run an APPEND-mode stream (stateless transforms, watermark dedup) to
     * completion against the replayed file source — append twin of
     * [[runToCompletion]] (dedup/stateless plans reject complete mode). */
   def runToCompletionAppend(spark: SparkSession, df: DataFrame, name: String): DataFrame =
     withStreamSettings(spark) {
-    val q = df.writeStream
+    runAvailableNow(df.writeStream
       .format("memory")
       .queryName(name)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    val finished = q.awaitTermination(120000L)
-    if (!finished) {
-      q.stop()
-      throw new IllegalStateException(
-        s"stream $name did not finish within 120s — result would be partial")
-    }
+      .outputMode("append"),
+      s"stream $name")
     spark.table(name)
   }
 
@@ -803,18 +811,11 @@ object Runtime {
   def runToCompletionAppendWithDrops(spark: SparkSession, df: DataFrame,
                                      name: String): (DataFrame, Long) =
     withStreamSettings(spark) {
-    val q = df.writeStream
+    val q = runAvailableNow(df.writeStream
       .format("memory")
       .queryName(name)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    val finished = q.awaitTermination(120000L)
-    if (!finished) {
-      q.stop()
-      throw new IllegalStateException(
-        s"stream $name did not finish within 120s — result would be partial")
-    }
+      .outputMode("append"),
+      s"stream $name")
     val dropped = q.recentProgress.iterator
       .flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
     (spark.table(name), dropped)
@@ -870,7 +871,7 @@ object Runtime {
     // AvailableNow drains the unprocessed files and stops cleanly (the
     // controlled stand-in for a crash AFTER the last batch commit).
     def runOnce(): Long = {
-      val q = tumblingCounts(Tables.decodeEventTs(spark.readStream
+      val q = runAvailableNow(tumblingCounts(Tables.decodeEventTs(spark.readStream
           .schema(schema)
           .option("maxFilesPerTrigger", 1)
           .parquet(arrivals.toString + "/events_*.parquet")))
@@ -878,15 +879,8 @@ object Runtime {
         .format("parquet")
         .option("path", sinkPath)
         .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      val finished = q.awaitTermination(120000L)
-      if (!finished) {
-        q.stop()
-        throw new IllegalStateException(
-          s"restart-recovery stream into $sinkPath did not finish within 120s")
-      }
+        .outputMode("append"),
+        s"restart-recovery stream into $sinkPath")
       q.recentProgress.iterator.map(_.numInputRows).sum
     }
     val runs =
@@ -926,20 +920,13 @@ object Runtime {
                               saveMode: SaveMode,
                               filesPerPartition: Int = 1): Unit =
     withStreamSettings(agg.sparkSession) {
-    val q = agg.writeStream
+    runAvailableNow(agg.writeStream
       .outputMode(outputMode)
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         Layout.writePartitioned(batch, path, partitionCol, filesPerPartition, saveMode)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    val finished = q.awaitTermination(120000L)
-    if (!finished) {
-      q.stop()
-      throw new IllegalStateException(
-        s"stream into $path did not finish within 120s — sink would be partial")
-    }
+      },
+      s"stream into $path")
   }
 
   /** Streaming INCREMENTAL VIEW MAINTENANCE sink — the q_agg_view_maintain
@@ -965,22 +952,15 @@ object Runtime {
                         checkpoint: String, keyCol: String,
                         valCol: String): StructType =
     withStreamSettings(rows.sparkSession) {
-    val q = rows.writeStream
+    runAvailableNow(rows.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, tick: Long) =>
         rollupPartials(batch, keyCol, valCol, tick)
           .write.mode(SaveMode.Append).parquet(rollupPath)
         ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    val finished = q.awaitTermination(120000L)
-    if (!finished) {
-      q.stop()
-      throw new IllegalStateException(
-        s"rollup stream into $rollupPath did not finish within 120s")
-    }
+      },
+      s"rollup stream into $rollupPath")
     rollupSchema(rows.schema(keyCol))
   }
 
@@ -999,12 +979,10 @@ object Runtime {
     * `groupBy(keyCol).agg(count(lit(1)), Det.dsumPartial(valCol))` gives
     * for that task's slice, so merging any task split gives the grouped
     * aggregate. The cast to DECIMAL(38,10) stays a SQL column (Spark does
-    * the rounding); the fold adds Spark Decimals and checks precision 38
-    * after every row, as the SQL sum's buffer does, and fails with the SQL
-    * sum's own ARITHMETIC_OVERFLOW. It fails under ANSI off too, where the
-    * SQL sum would return null: a null partial would drop out of the merge
-    * unseen. Null keys form a group; a group with only null values sums to
-    * null and still counts its rows. */
+    * the rounding); the fold adds Spark Decimals with Det.addExact, which
+    * checks precision 38 after every row as the SQL sum's buffer does.
+    * Null keys form a group; a group with only null values sums to null
+    * and still counts its rows. */
   private[graft] def rollupPartials(batch: DataFrame, keyCol: String,
                                     valCol: String, tick: Long): DataFrame =
     batch.select(col(keyCol), col(valCol).cast(RollupDec)).mapPartitions { rows =>
@@ -1013,12 +991,8 @@ object Runtime {
       rows.foreach { r =>
         val p = acc.getOrElseUpdate(r.get(0), new Partial)
         p.n += 1
-        if (!r.isNullAt(1)) {
-          val v = Decimal(r.getDecimal(1))
-          p.s = if (p.s == null) v else p.s + v
-          if (!p.s.changePrecision(RollupDec.precision, RollupDec.scale))
-            throw org.apache.spark.sql.graft.SparkErrors.sumOfDecimalsOverflow()
-        }
+        if (!r.isNullAt(1))
+          p.s = graft.functions.Det.addExact(p.s, Decimal(r.getDecimal(1)), RollupDec)
       }
       acc.iterator.map { case (k, p) =>
         Row(k, p.n, if (p.s == null) null else p.s.toJavaBigDecimal, tick)
@@ -1043,7 +1017,7 @@ object Runtime {
   def runUpdateServing(agg: DataFrame, servingRoot: String, checkpoint: String,
                        keyCols: Seq[String]): Unit =
     withStreamSettings(agg.sparkSession) {
-    val q = agg.writeStream
+    runAvailableNow(agg.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, tick: Long) =>
@@ -1058,15 +1032,8 @@ object Runtime {
         merged.coalesce(1).write
           .mode(SaveMode.Overwrite).parquet(f"$servingRoot/v$tick%05d")
         ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    val finished = q.awaitTermination(120000L)
-    if (!finished) {
-      q.stop()
-      throw new IllegalStateException(
-        s"serving stream into $servingRoot did not finish within 120s")
-    }
+      },
+      s"serving stream into $servingRoot")
   }
 
   /** STREAMING CDC APPLY (r16) — the consuming half of the change-data
@@ -1083,7 +1050,7 @@ object Runtime {
   def runCdcServing(changes: DataFrame, base: DataFrame, servingRoot: String,
                     checkpoint: String, key: String): Unit =
     withStreamSettings(changes.sparkSession) {
-    val q = changes.writeStream
+    runAvailableNow(changes.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, tick: Long) =>
@@ -1096,15 +1063,8 @@ object Runtime {
           .coalesce(1).write
           .mode(SaveMode.Overwrite).parquet(f"$servingRoot/v$tick%05d")
         ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    val finished = q.awaitTermination(120000L)
-    if (!finished) {
-      q.stop()
-      throw new IllegalStateException(
-        s"CDC serving stream into $servingRoot did not finish within 120s")
-    }
+      },
+      s"CDC serving stream into $servingRoot")
   }
 
   /** The deterministic merge changeset staged as a two-tick seq-ordered
@@ -1233,7 +1193,8 @@ object Runtime {
     * published marker and one index commit per micro-batch, and a
     * deliberate DUPLICATE replay of tick 0 through the same commit path
     * must short-circuit on its marker without moving the index version. */
-  def runCorpusDedup(spark: SparkSession, dir: String): DataFrame = {
+  def runCorpusDedup(spark: SparkSession, dir: String): DataFrame =
+    withStreamSettings(spark) {
     Tables.prep(spark)
     val root = Tables.stageDir(spark, "corpus-dedup", dir)
     Tables.deleteRecursively(root)
@@ -1251,12 +1212,12 @@ object Runtime {
     val arrivals = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$arrivalsDir/arrivals_*.parquet")
-    val q = arrivals.writeStream.outputMode("append")
+    runAvailableNow(arrivals.writeStream.outputMode("append")
       .option("checkpointLocation", ckpt)
       .foreachBatch { (b: DataFrame, id: Long) =>
         corpusDedupTickCommit(spark, b, id, metaPath, bktPath, outPath, txnRoot)
-      }.start()
-    try q.processAllAvailable() finally q.stop()
+      },
+      s"corpus-dedup stream into $outPath")
     // Certificate 1: one published tick marker and one index commit per
     // micro-batch (v0 build + 3 tick appends = version 3 on both layouts).
     val markers = {
@@ -1296,21 +1257,14 @@ object Runtime {
   def runToManifestedParquet(rows: DataFrame, path: String, checkpoint: String,
                              statsCol: String, numFilesPerTick: Int): Unit =
     withStreamSettings(rows.sparkSession) {
-    val q = rows.writeStream
+    runAvailableNow(rows.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         Layout.appendManifested(batch, path, statsCol, numFilesPerTick)
         ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    val finished = q.awaitTermination(120000L)
-    if (!finished) {
-      q.stop()
-      throw new IllegalStateException(
-        s"stream into $path did not finish within 120s — sink would be partial")
-    }
+      },
+      s"stream into $path")
   }
 
   /** Run a streaming aggregation to completion against the replayed file
@@ -1318,18 +1272,11 @@ object Runtime {
     * complete mode). Driver for the stream==batch equivalence tests. */
   def runToCompletion(spark: SparkSession, agg: DataFrame, name: String): DataFrame =
     withStreamSettings(spark) {
-    val q = agg.writeStream
+    runAvailableNow(agg.writeStream
       .format("memory")
       .queryName(name)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    val finished = q.awaitTermination(120000L)
-    if (!finished) {
-      q.stop()
-      throw new IllegalStateException(
-        s"stream $name did not finish within 120s — result would be partial")
-    }
+      .outputMode("complete"),
+      s"stream $name")
     spark.table(name)
   }
 

@@ -88,19 +88,20 @@ class DetPropSpec extends AnyFunSuite {
   test("groupedPrefixSum == running-sum window on random grouped data (bucket edges stressed)") {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    // Random (group, unique-ord, value) rows; tiny bucket count forces rows
-    // onto approx-edge boundaries — the construction must stay EXACT there.
+    // Random (group, unique-ord, value) rows; 16 range partitions for 4
+    // groups put group boundaries and group runs across partition edges —
+    // the carry must keep the sums EXACT there.
     val rowsGen = Gen.choose(20, 200).flatMap(n =>
       Gen.listOfN(n, for {
         g <- Gen.choose(0, 3)
         v <- Gen.choose(-1000L, 1000L)
       } yield (g, v)))
-    (1 to 5).foreach { i =>
+    (1 to 5).foreach { i => withShufflePartitions(16) {
       val rows = rowsGen.pureApply(Gen.Parameters.default, Seed(100L + i))
         .zipWithIndex.map { case ((g, v), ord) => (g, ord.toLong, v) }
       val df = rows.toDF("g", "o", "v").repartition(7)
       val got = graft.operators.ScaleOps
-        .groupedPrefixSum(df, col("g"), col("o"), col("v"), buckets = 4)
+        .groupedPrefixSum(df, col("g"), col("o"), col("v"))
         .select(col("g"), col("o"), col("__run")).collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
       val w = Window.partitionBy(col("g")).orderBy(col("o"))
@@ -110,6 +111,6 @@ class DetPropSpec extends AnyFunSuite {
         .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
       assert(got == exp,
         s"seed ${100 + i}: missing=${(exp -- got).take(3)} extra=${(got -- exp).take(3)}")
-    }
+    }}
   }
 }

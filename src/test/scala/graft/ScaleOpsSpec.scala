@@ -15,8 +15,6 @@ class ScaleOpsSpec extends AnyFunSuite {
     // globalRanksDesc plan — no global-sort ntile/percent_rank anywhere.
     val scaled = Windows.ntileRouted(maxOneTaskBytes = 0L)(spark, Sf0001)
     val scaledPlan = scaled.queryExecution.executedPlan.toString
-    // "ntile(4)" not bare "ntile": percentile_approx in the scale plan
-    // contains the latter as a substring.
     assert(!scaledPlan.contains("ntile(4)"), s"router kept the ntile window:\n$scaledPlan")
     assert(!scaledPlan.contains("percent_rank"), "router kept the percent_rank window")
     // Below it, the declared window form runs.
@@ -60,11 +58,11 @@ class ScaleOpsSpec extends AnyFunSuite {
     // (same bracketing positions, same interpolation, same rounding).
     val exact = Relational.medianAggForm(spark, Sf0001).collect().toSeq
     assert(scaled.collect().toSeq == exact,
-      "bucketed quantiles diverged from exact percentile")
-    // And again at sf0.01 (10× the distinct values, multi-bucket groups).
+      "prefix-scan quantiles diverged from exact percentile")
+    // And again at sf0.01 (10× the distinct values, groups across partitions).
     val scaled01 = Relational.medianScaleForm(spark, Sf001).collect().toSeq
     val exact01 = Relational.medianAggForm(spark, Sf001).collect().toSeq
-    assert(scaled01 == exact01, "sf0.01 bucketed quantiles diverged")
+    assert(scaled01 == exact01, "sf0.01 prefix-scan quantiles diverged")
   }
 
   test("tfidf router: scale form bit-matches the window form; threshold picks the plan") {
@@ -130,11 +128,15 @@ class ScaleOpsSpec extends AnyFunSuite {
   test("groupedQuantilesExact handles 1-row and single-value groups") {
     import spark.implicits._
     val df = Seq(("a", 10.0), ("b", 5.0), ("b", 5.0), ("b", 5.0),
-      ("c", 1.0), ("c", 2.0)).toDF("g", "v")
-    val got = graft.operators.ScaleOps
-      .groupedQuantilesExact(df, col("g"), col("v"), Seq(0.5, 0.9), buckets = 4)
-      .orderBy("g")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
+      ("c", 1.0), ("c", 2.0)).toDF("g", "v").repartition(7)
+    // More range partitions than histogram rows: every group edge is a
+    // partition edge, and some partitions are empty.
+    val got = withShufflePartitions(16) {
+      graft.operators.ScaleOps
+        .groupedQuantilesExact(df, col("g"), col("v"), Seq(0.5, 0.9))
+        .orderBy("g")
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
+    }
     assert(got(0) == (("a", 1L, 10.0, 10.0)))
     assert(got(1) == (("b", 3L, 5.0, 5.0)))
     // c: median of {1,2} = 1.5; p90 = 1 + 0.9*(2-1) = 1.9
@@ -145,15 +147,15 @@ class ScaleOpsSpec extends AnyFunSuite {
   test("pack-sequences router: groupedPrefixSum bit-matches the window form; threshold picks the plan") {
     import graft.queries.LlmOps
     // Above the gate (maxBytes = 0 forces it) the router must emit the
-    // bucketed two-pass — no running-sum window over the bare shard
-    // partitioning anywhere (the window that remains partitions by
-    // (shard, __bkt)).
+    // prefix scan — no running-sum window anywhere in the plan.
     val scaled = LlmOps.packSequencesRouted(maxOneTaskBytes = 0L)(spark, Sf0001)
     val scaledPlan = scaled.queryExecution.executedPlan.toString
-    assert(scaledPlan.contains("__bkt"), s"router kept the plain window:\n$scaledPlan")
+    assert(!scaledPlan.contains("windowspecdefinition"),
+      s"router kept the plain window:\n$scaledPlan")
     val declaredPlan = LlmOps.packSequencesRouted(maxOneTaskBytes = Long.MaxValue)(
       spark, Sf0001).queryExecution.executedPlan.toString
-    assert(!declaredPlan.contains("__bkt"), "router dropped the declared form below threshold")
+    assert(declaredPlan.contains("windowspecdefinition"),
+      "router dropped the declared form below threshold")
     // Exact integer running sums: row-for-row equality of the final stats.
     val got = scaled.collect().map(_.toSeq).toSeq
     val exp = LlmOps.packSequencesRouted(maxOneTaskBytes = Long.MaxValue)(
@@ -172,9 +174,13 @@ class ScaleOpsSpec extends AnyFunSuite {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val exp = df.withColumn("__run", sum(col("x")).over(w))
       .collect().map(_.toSeq).toSet
-    val got = ScaleOps.groupedPrefixSum(df, col("g"), col("o"), col("x"), buckets = 4)
-      .select(col("g"), col("o"), col("x"), col("__run"))
-      .collect().map(_.toSeq).toSet
+    // More range partitions than rows: the null group and each group edge
+    // sit on partition edges.
+    val got = withShufflePartitions(16) {
+      ScaleOps.groupedPrefixSum(df.repartition(7), col("g"), col("o"), col("x"))
+        .select(col("g"), col("o"), col("x"), col("__run"))
+        .collect().map(_.toSeq).toSet
+    }
     assert(got == exp, s"missing=${(exp -- got).take(3)} extra=${(got -- exp).take(3)}")
   }
 
@@ -193,10 +199,10 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("rangeBandAgg: sparse gaps, bin-start values, duplicates == window form") {
-    // Adversarial shapes for the prefix-difference fallback legs (r11):
-    // values at exact bin multiples (the lo probe lands two bins down),
-    // huge inter-bin gaps (absent candidate bins), duplicate (p, v) rows
-    // (one output row each), and a group below every other value.
+    // Adversarial shapes for the prefix difference (r11): values at exact
+    // multiples of the width, huge gaps (probes far from any anchor),
+    // duplicate (p, v) rows (one output row each), and a group below every
+    // other value.
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     val w = 100L
@@ -220,10 +226,9 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("rangeBandAgg: magnitudes above 2^53 keep exact bins (ADVICE r11)") {
-    // Spark's `/` promotes long operands to double; above ~2^53 the inexact
-    // quotient can violate bin(v+w) == bin(v)+1 and silently break the
-    // fallback legs' exhaustiveness. binOf now uses integral `div` — this
-    // pins values where double arithmetic DOES misassign bins.
+    // Above ~2^53 a double cannot hold every long: probe points v ± w must
+    // stay integer arithmetic. This pins values where double arithmetic
+    // would round them.
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     val w = 1000L
@@ -248,8 +253,8 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("property: rangeBandAgg == window form on seeded random value sets") {
-    // Random shapes hunt fallback-leg edge cases the hand-picked set can't:
-    // clustered values, empty bins between clusters, values at negative
+    // Random shapes hunt edge cases the hand-picked set can't: clustered
+    // values, empty stretches between clusters, values at negative
     // multiples, repeated (p, v) pairs. Seeded — failures reproduce.
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window

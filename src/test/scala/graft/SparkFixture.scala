@@ -25,6 +25,14 @@ object SparkFixture {
     s
   }
 
+  /** Run `body` with `n` shuffle partitions, then put back what was set. */
+  def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, n.toString)
+    try body finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   val Sf0001 = "/root/testdata/sf0.001"
   val Sf001 = "/root/testdata/sf0.01"
 

@@ -202,7 +202,7 @@ class StreamTickSpec extends AnyFunSuite {
   private val runners: Seq[(String, () => Unit)] =
     Seq("q_stream_tumbling", "q_stream_late", "q_stream_restart", "q_stream_sink",
       "q_stream_view_maintain", "q_stream_update_topk", "q_stream_cdc_apply",
-      "q_stream_sink_manifest", "q_stream_complete").map { k =>
+      "q_stream_sink_manifest", "q_stream_complete", "q_stream_dedup_corpus").map { k =>
       k -> (() => { SparkEntry.queries(k)(spark, Sf0001); () })
     } :+ ("runToCompletion" -> (() => {
       SRuntime.runToCompletion(spark,

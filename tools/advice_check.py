@@ -21,6 +21,13 @@ name a test that exists). Names declared in `src/main` itself and Spark's
 `WindowSpec` are not test citations and are skipped. Exit 1 listing each
 false citation with its file:line.
 
+Third gate: a `src/main` comment that names `Obj.member`, where `Obj` is
+an object declared in `src/main`, must name a member declared in a file
+that declares `Obj` (a comment still naming a deleted method fails), and
+every scaladoc `[[...]]` link must resolve to a declaration in `src/main`.
+`.scala` file names, `*` globs and names outside the `graft` packages are
+not citations and are skipped. Exit 1 listing each with its file:line.
+
 Usage: python3 tools/advice_check.py [ADVICE.md]
 """
 import pathlib
@@ -88,6 +95,60 @@ def spec_citations():
     return 0
 
 
+DECL = re.compile(r"\b(?:def|val|var|object|class|trait|type)\s+"
+                  r"([A-Za-z_][A-Za-z0-9_]*)")
+OBJ_DECL = re.compile(r"\bobject\s+([A-Z][A-Za-z0-9_]*)")
+# Obj.member, optionally package-qualified; not a glob, not a file name.
+MEMBER_REF = re.compile(r"(?<![\w.])((?:[a-z][a-z0-9_]*\.)*)"
+                        r"([A-Z][A-Za-z0-9_]*)\.([A-Za-z_][A-Za-z0-9_]*)(?![\w*])")
+LINK = re.compile(r"\[\[([^\]\s|]*)")
+
+
+def main_declarations():
+    """(names declared per object, names declared anywhere) in src/main."""
+    per_object, anywhere = {}, set()
+    for f in (ROOT / "src" / "main").rglob("*.scala"):
+        text = f.read_text(encoding="utf-8")
+        names = set(DECL.findall(text))
+        anywhere |= names
+        for obj in OBJ_DECL.findall(text):
+            per_object.setdefault(obj, set()).update(names)
+    return per_object, anywhere
+
+
+def member_citations():
+    per_object, anywhere = main_declarations()
+    bad = []
+    for f in sorted((ROOT / "src" / "main").rglob("*.scala")):
+        lines = list(comment_lines(f.read_text(encoding="utf-8")))
+        for (n, c), (_, nxt) in zip(lines, lines[1:] + [(0, "")]):
+            if nxt.lstrip().startswith("."):  # a citation wrapped before ".member"
+                c = c.rstrip() + nxt.split()[0]
+            for pkg, obj, member in MEMBER_REF.findall(c):
+                ours = not pkg or pkg.startswith("graft.")
+                if (ours and member != "scala" and obj in per_object
+                        and member not in per_object[obj]):
+                    bad.append(f"{f.relative_to(ROOT)}:{n}: {pkg}{obj}.{member}")
+            for target in LINK.findall(c):
+                # Obj.member links were checked above; a link into another
+                # project's package is not ours to resolve.
+                if "://" in target or MEMBER_REF.search(target) or (
+                        target[:1].islower() and "." in target
+                        and not target.startswith("graft.")):
+                    continue
+                if target.rstrip("()#").split(".")[-1] not in anywhere:
+                    bad.append(f"{f.relative_to(ROOT)}:{n}: [[{target}]]")
+    for b in bad:
+        print(f"[advice-check] NO SUCH MEMBER: {b}")
+    if bad:
+        print(f"[advice-check] {len(bad)} comment citation(s) name a member "
+              "or link target that src/main does not declare — point each "
+              "at what exists, or drop the claim")
+        return 1
+    print("[advice-check] every Obj.member and [[link]] in src/main comments resolves")
+    return 0
+
+
 def advice(path):
     try:
         text = open(path, encoding="utf-8").read()
@@ -117,7 +178,7 @@ def advice(path):
 
 def main():
     path = sys.argv[1] if len(sys.argv) > 1 else str(ROOT / "ADVICE.md")
-    return max(advice(path), spec_citations())
+    return max(advice(path), spec_citations(), member_citations())
 
 
 if __name__ == "__main__":
