@@ -23,10 +23,13 @@ object Conf {
     * while covering every legitimately-small dimension/refine side. */
   val BroadcastMaxBytes: Long = 256L << 20
 
-  /** Largest estimated input for which the declared single-task-sort window
-    * forms (global ntile / few-valued-partition range frames) are acceptable.
-    * Past ~1 GiB one sort task becomes the whole job's critical path, so the
-    * Windows routers switch to the ScaleOps rewrites. */
+  /** Largest estimated input for which the declared single-task-sort forms
+    * (global ntile, few-valued-partition running sums, single-buffer
+    * percentiles, per-key count windows) are acceptable. Past ~1 GiB one
+    * sort task becomes the whole job's critical path, so the size routers
+    * (ScaleOps.routeBySize and q_pack_sequences' inline gate) switch to
+    * their prefix-scan or join-back forms; ScaleOps.persistIfBig and the
+    * Components driver gate read it too. */
   val OneTaskSortMaxBytes: Long = 1L << 30
 
   /** Recommended `spark.sql.shuffle.partitions` for a job shuffling

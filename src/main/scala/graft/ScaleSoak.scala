@@ -68,10 +68,10 @@ object ScaleSoak {
   }
 
   /** Per-form wall budget. A window form that cannot finish inside it IS
-    * the router's reason to exist (observed: the range window form's three
-    * 25M-row single-task frames ran >30 min) — record the blow-through and
-    * move on instead of stalling the whole soak behind one degenerate
-    * plan. */
+    * the router's reason to exist (observed: the since-deleted range
+    * window form's three 25M-row single-task frames ran >30 min) — record
+    * the blow-through and move on instead of stalling the whole soak
+    * behind one degenerate plan. */
   private val BudgetSec = 420L
 
   private def timed(spark: SparkSession, label: String,
@@ -135,7 +135,7 @@ object ScaleSoak {
       "perplexity", "collocations")
     val evKeys = Set("sessionize", "funnel", "retention", "anomaly", "outliers",
       "windistinct", "rfm")
-    val ordKeys = Set("median", "range", "bloom", "winsor")
+    val ordKeys = Set("median", "bloom", "winsor")
     val liKeys = Set("wmedian")
     val custKeys = Set("ntile", "bloom")
     def needs(ks: Set[String]) = wanted.isEmpty || (wanted & ks).nonEmpty
@@ -232,8 +232,6 @@ object ScaleSoak {
     val pairs: Seq[(String, () => DataFrame, Q, Q, Long)] = Seq(
       ("median", () => Tables.orders(spark, out),
         Relational.medianAggForm, Relational.medianScaleForm, gate),
-      ("range", () => Tables.orders(spark, out),
-        Windows.rangeWindowForm, Windows.rangeScaleForm, gate),
       ("ntile", () => Tables.customer(spark, out),
         Windows.ntileWindowForm, Windows.ntileScaleForm, gate),
       // quota's production gate is 64x (WindowGroupLimit bounds the rank

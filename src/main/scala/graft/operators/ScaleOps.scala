@@ -41,11 +41,18 @@ object ScaleOps {
                              maxBytes: Long = graft.Conf.BroadcastMaxBytes / 4): DataFrame =
     if (estimatedBytes(source) <= BigInt(maxBytes)) broadcast(df) else df
 
-  /** The SIZE-ROUTER convention shared by every routed query (median,
-    * range-frame, ntile, tfidf, boilerplate, quota): the declared one-task
-    * form while `gate`'s Catalyst estimate fits a single sort task, the
-    * scale rewrite past it. Route forms are bit-identical (ScaleOpsSpec),
-    * so routing never changes results — only the plan shape. */
+  /** The SIZE-ROUTER convention shared by the routed queries (ntile,
+    * median, weighted median, winsorize, RFM, tfidf, boilerplate, quota,
+    * AUC): the declared one-task form while `gate`'s Catalyst estimate fits
+    * a single sort task, the scale rewrite past it. Route forms are
+    * bit-identical (ScaleOpsSpec), so routing never changes results — only
+    * the plan shape. Each router states its crossover from one probe
+    * (2026-10: one JVM, 4 CPUs, noop-forced, median of 3 after a warm-up;
+    * the scale form's time over the window form's, median over four JVM
+    * runs, or ten with the interquartile range for q_text_tfidf and the
+    * five other keys within 0.25 at sf0.01).
+    * A key whose scale form is within 0.25 of its window form at sf0.01
+    * and no slower at sf0.1 runs the scale form alone (q_window_range). */
   def routeBySize(gate: DataFrame, maxOneTaskBytes: Long)
                  (below: => DataFrame)(above: => DataFrame): DataFrame =
     if (estimatedBytes(gate) <= BigInt(maxOneTaskBytes)) below else above
@@ -160,9 +167,13 @@ object ScaleOps {
 
   /** What [[prefixScan]] returns: the input rows with their running sums
     * appended, and each sum's total over all rows as a Long or a
-    * java.math.BigDecimal, null when there is no value (folded on the
-    * driver from the carry job's partials, so it costs no job). */
-  final case class PrefixScan(frame: DataFrame, totals: IndexedSeq[Any])
+    * java.math.BigDecimal, null when there is no value. The totals are
+    * folded on the driver from the carry job's partials; a one-partition
+    * scan runs no carry job, so it runs that job when `totals` is first
+    * read. */
+  final class PrefixScan(val frame: DataFrame, totalsOf: () => IndexedSeq[Any]) {
+    lazy val totals: IndexedSeq[Any] = totalsOf()
+  }
 
   /** EXACT grouped running totals without a one-task window: the one
     * primitive under every scale form below. It has the MapReduce shape
@@ -178,11 +189,20 @@ object ScaleOps {
     * first m order columns. Rows tied on those columns are one peer run,
     * so `name_before` of a count is `rank() - 1` over them.
     *
-    *  1. One range exchange on (group ++ order) with the session's shuffle
-    *     partition count, sorted within partitions. Its sampled bounds only
-    *     balance the partitions; exactness never depends on them. Equal
-    *     full keys land in one partition, so only a group or a peer run can
-    *     span partitions.
+    *  1. One range exchange on (group ++ order), sorted within partitions.
+    *     It takes one partition per input split (the input's Catalyst
+    *     estimate over `spark.sql.files.maxPartitionBytes`, the signal
+    *     [[parallelizeSmall]] reads), up to the session's shuffle partition
+    *     count. That estimate is the source scans' file bytes carried
+    *     through the plan, not the rows this scan sorts: an aggregated
+    *     input is sized by its pre-aggregation bytes, and an exploded one
+    *     is undercounted (q_events_rfm's three stacked metrics, about 3×).
+    *     Under one split, one task sorts every group, where a window
+    *     partitioned by a few groups sorts them in parallel
+    *     (q_agg_weighted_median's three flags at sf0.1). The sampled
+    *     bounds only balance the partitions; exactness never depends on
+    *     them. Equal full keys land in one partition, so only a group or a
+    *     peer run can span partitions.
     *  2. One job reads the shuffle output and returns each partition's
     *     boundary partials: its first and last key and the sums of its last
     *     group's rows, all of them and those before its last peer run. The
@@ -191,13 +211,16 @@ object ScaleOps {
     *     the output through `queryExecution.toRdd`, so the shuffle is not
     *     run again.
     *
-    * Steps 1 and 2 run when this is called; the returned frame's plan is
-    * the map of step 3. Sums are exact: integral values sum as Long, and
-    * decimals as Spark Decimal of the window form's result type
-    * (precision + 10, capped at 38). An overflow fails with the SQL sum's
-    * ARITHMETIC_OVERFLOW. Null values are skipped, as SQL sum skips them,
-    * and a run of nulls alone is null. Null group keys form one group.
-    * Output types equal the window form's. */
+    * An input that fits one split takes one range partition: Spark's
+    * range partitioner takes no sample for it, and its carry is empty, so
+    * step 2 does not run and the scan is one shuffle, one sort and one
+    * map, the window form's shape. Steps 1 and 2 run when this is called;
+    * the returned frame's plan is the map of step 3. Sums are exact:
+    * integral values sum as Long, and decimals as Spark Decimal of the
+    * window form's result type (precision + 10, capped at 38). An overflow
+    * fails with the SQL sum's ARITHMETIC_OVERFLOW. Null values are skipped,
+    * as SQL sum skips them, and a run of nulls alone is null. Null group
+    * keys form one group. Output types equal the window form's. */
   def prefixScan(df: DataFrame, group: Seq[Column], order: Seq[Column],
                  sums: Seq[(String, Column)], peers: Int = 0): PrefixScan = {
     require(peers >= 0 && peers <= order.size, s"peers must be in 0..${order.size}")
@@ -231,36 +254,38 @@ object ScaleOps {
       width until width + keyFields.length,
       width + keys.size until width + keys.size + sums.size, sumTypes)
     val sortBy = keys.zip(kNames).map { case ((_, byName), n) => byName(n) }
+    val split = BigInt(spark.sessionState.conf.filesMaxPartitionBytes)
+    val parts = ((estimatedBytes(df) + split - 1) / split)
+      .min(spark.sessionState.conf.numShufflePartitions).max(1).toInt
     val rows = base
-      .repartitionByRange(spark.sessionState.conf.numShufflePartitions, sortBy: _*)
+      .repartitionByRange(parts, sortBy: _*)
       .sortWithinPartitions(sortBy: _*)
       .queryExecution.toRdd
 
     // Step 2: the boundary partials, then the carries in partition order.
     val none = new Array[Any](sums.size)
-    val bounds = rows.mapPartitions { it =>
+    lazy val bounds = rows.mapPartitions { it =>
       val s = new Scanner(spec, none, none, totals = true)
       var first: InternalRow = null
       it.foreach { r => s.step(r); if (first == null) first = s.key.copy() }
       Iterator(Option(first).map(f => Boundary(f, s.key.copy(), s.run, s.before, s.all)))
     }.collect()
-    val carries = new Array[(Array[Any], Array[Any])](bounds.length)
+    val carries = new Array[(Array[Any], Array[Any])](parts)
     var last: Option[(InternalRow, Array[Any], Array[Any])] = None
-    var totals = none
-    for ((b, p) <- bounds.zipWithIndex; Boundary(first, end, lastRun, lastBefore, all) <- b) {
-      val (run, before) = last match {
-        case Some((k, r, bf)) if spec.sameGroup.equiv(k, first) =>
-          (r, if (spec.sameKey.equiv(k, first)) bf else r)
-        case _ => (none, none)
+    if (parts > 1)
+      for ((b, p) <- bounds.zipWithIndex; Boundary(first, end, lastRun, lastBefore, _) <- b) {
+        val (run, before) = last match {
+          case Some((k, r, bf)) if spec.sameGroup.equiv(k, first) =>
+            (r, if (spec.sameKey.equiv(k, first)) bf else r)
+          case _ => (none, none)
+        }
+        carries(p) = (run, before)
+        val oneGroup = spec.sameGroup.equiv(first, end)
+        last = Some((end,
+          if (oneGroup) spec.plus(run, lastRun) else lastRun,
+          if (spec.sameKey.equiv(first, end)) before
+          else if (oneGroup) spec.plus(run, lastBefore) else lastBefore))
       }
-      carries(p) = (run, before)
-      val oneGroup = spec.sameGroup.equiv(first, end)
-      last = Some((end,
-        if (oneGroup) spec.plus(run, lastRun) else lastRun,
-        if (spec.sameKey.equiv(first, end)) before
-        else if (oneGroup) spec.plus(run, lastBefore) else lastBefore))
-      totals = spec.plus(totals, all)
-    }
 
     // Step 3: the running sums with the carries applied.
     val applied = rows.mapPartitionsWithIndex[InternalRow] { (p, it) =>
@@ -275,10 +300,10 @@ object ScaleOps {
     val outFields = sums.map(_._1).zip(sumTypes).map { case (n, t) => StructField(n, t) } ++
       (if (peers > 0) sums.map(_._1).zip(sumTypes)
         .map { case (n, t) => StructField(s"${n}_before", t) } else Nil)
-    PrefixScan(
+    new PrefixScan(
       InternalFrames.create(spark, applied, StructType(base.schema.fields ++ outFields))
         .drop(kNames ++ vNames: _*),
-      totals.toIndexedSeq.map {
+      () => bounds.flatten.foldLeft(none)((t, b) => spec.plus(t, b.all)).toIndexedSeq.map {
         case d: Decimal => d.toJavaBigDecimal
         case x => x
       })
@@ -382,7 +407,8 @@ object ScaleOps {
     *  1. the distinct-value histogram (g, v, c) — one (g, v) shuffle; every
     *     later pass touches only its rows;
     *  2. a [[prefixScan]] of c over (g; v): a distinct value covers the
-    *     1-based positions (cum − c, cum] of its group's sorted multiset;
+    *     1-based positions (cum − c, cum] of its group's sorted multiset,
+    *     and the group's size n is its last cum;
     *  3. each quantile's two bracketing positions (k = ⌊p·(n−1)⌋ + 1 and
     *     k+1, Spark's own 0-based-position formula) pick their covering
     *     values, interpolated x₁ + frac·(x₂ − x₁).
@@ -393,12 +419,10 @@ object ScaleOps {
     */
   def groupedQuantilesExact(df: DataFrame, part: Column, v: Column,
                             ps: Seq[Double]): DataFrame = {
-    // Read by the scan and by the group sizes: persisted, so the input is
-    // scanned and shuffled once.
-    val dist = trackedPersist(df.select(part.as("g"), v.as("v"))
-      .groupBy(col("g"), col("v")).agg(count(lit(1)).as("c")))
+    val dist = df.select(part.as("g"), v.as("v"))
+      .groupBy(col("g"), col("v")).agg(count(lit(1)).as("c"))
     val pos = prefixScan(dist, Seq(col("g")), Seq(col("v")), Seq("__cum" -> col("c"))).frame
-    val gn = dist.groupBy(col("g")).agg(sum(col("c")).as("__n"))
+    val gn = pos.groupBy(col("g")).agg(max(col("__cum")).as("__n"))
     // Bracketing ranks per (group, quantile): Spark's Percentile formula —
     // 0-based position p·(n−1), lower index ⌊·⌋, interpolation fraction the
     // remainder — converted to 1-based multiset positions k1, k2.

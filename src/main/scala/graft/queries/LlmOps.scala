@@ -1107,9 +1107,13 @@ object LlmOps {
   private[graft] val tfidfWindowForm: Q = (s, dir) => tfidfPlan(s, dir, scaleForm = false)
   private[graft] val tfidfScaleForm: Q = (s, dir) => tfidfPlan(s, dir, scaleForm = true)
 
-  /** Size-routed q_text_tfidf — same contract as Windows.rangeRouted: both
+  /** Size-routed q_text_tfidf — same contract as Windows.ntileRouted: both
     * forms produce identical rows, so routing never changes results, only
-    * the plan shape. */
+    * the plan shape. Crossover ([[graft.operators.ScaleOps.routeBySize]]'s
+    * probe, ten runs): the scale form takes 1.35× the window form's time at
+    * sf0.01 (1.27–1.37) and 1.18× at sf0.1 (1.06–1.27, slower in 9 of 10);
+    * the r11 soak above the gate measured 0.72×, so it crosses between
+    * sf0.1 and the gate. */
   def tfidfRouted(maxOneTaskBytes: Long = graft.Conf.OneTaskSortMaxBytes): Q = (s, dir) =>
     graft.operators.ScaleOps.routeBySize(Tables.documents(s, dir), maxOneTaskBytes)(
       tfidfWindowForm(s, dir))(tfidfScaleForm(s, dir))
@@ -1522,7 +1526,11 @@ object LlmOps {
   private[graft] val boilerplateWindowForm: Q = (s, dir) => boilerplatePlan(s, dir, scaleForm = false)
   private[graft] val boilerplateScaleForm: Q = (s, dir) => boilerplatePlan(s, dir, scaleForm = true)
 
-  /** Size-routed q_text_boilerplate — same contract as tfidfRouted. */
+  /** Size-routed q_text_boilerplate — same contract as tfidfRouted.
+    * Crossover ([[graft.operators.ScaleOps.routeBySize]]'s probe, ten
+    * runs): the scale form takes 1.16× the window form's time at sf0.01 and
+    * 1.31× at sf0.1 (1.26–1.34, slower in 9 of 10); the r11 soak above the
+    * gate measured 0.58×. */
   def boilerplateRouted(maxOneTaskBytes: Long = graft.Conf.OneTaskSortMaxBytes): Q = (s, dir) =>
     graft.operators.ScaleOps.routeBySize(Tables.documents(s, dir), maxOneTaskBytes)(
       boilerplateWindowForm(s, dir))(boilerplateScaleForm(s, dir))
@@ -2694,7 +2702,10 @@ object LlmOps {
     * the prefix-scan form, at a 1.5 GiB corpus in the r11 scale soak —
     * SCALE.md). The scale form takes over
     * where that product itself outgrows one task. Bit-identical either way
-    * (ScaleOpsSpec), so routing never changes results. */
+    * (ScaleOpsSpec), so routing never changes results. Crossover
+    * ([[graft.operators.ScaleOps.routeBySize]]'s probe, ten runs): the scale
+    * form takes 1.05× the window form's time at sf0.01 and 1.11× at sf0.1
+    * (1.09–1.13, slower in 8 of 10), so the router stays. */
   def quotaRouted(maxOneTaskBytes: Long = graft.Conf.OneTaskSortMaxBytes * 64): Q =
     (s, dir) =>
       graft.operators.ScaleOps.routeBySize(Tables.documents(s, dir), maxOneTaskBytes)(
@@ -2807,7 +2818,10 @@ object LlmOps {
     * plain running-sum window sorts ~n/8 rows per task — fine up to the
     * gate, a single-task scale-killer past it, where the exact prefix scan
     * (ScaleOps.groupedPrefixSum — bit-identical, asserted in ScaleOpsSpec)
-    * takes over. */
+    * takes over. Crossover ([[graft.operators.ScaleOps.routeBySize]]'s
+    * probe, ten runs): the scale form takes 1.10× the window form's time at
+    * sf0.01 and 1.12× at sf0.1 (1.04–1.16, slower in 9 of 10), so the
+    * router stays. */
   def packSequencesRouted(
       maxOneTaskBytes: Long = graft.Conf.OneTaskSortMaxBytes * 8): Q = (s, dir) => {
     val docs = Tables.documents(s, dir)

@@ -3506,10 +3506,14 @@ object Relational {
         round(col("q_1"), 2).as("p90_price"))
       .orderBy("o_orderstatus")
 
-  /** Size-routed q_agg_median — same contract as the Windows routers: the
+  /** Size-routed q_agg_median — same contract as Windows.ntileRouted: the
     * declared single-buffer form while the input's Catalyst estimate fits
     * one task, the exact ScaleOps rewrite past it. Identical output either
-    * way, so routing never changes results — only the plan shape. */
+    * way, so routing never changes results — only the plan shape.
+    * Crossover ([[graft.operators.ScaleOps.routeBySize]]'s probe): the scale
+    * form takes 2.20× the window form's time at sf0.01 and 1.00× at sf0.1; it
+    * crosses at about sf0.1, too late for the one-form rule (within 0.25 at
+    * sf0.01). */
   def medianRouted(maxOneTaskBytes: Long = graft.Conf.OneTaskSortMaxBytes): Q =
     (s, dir) =>
       graft.operators.ScaleOps.routeBySize(Tables.orders(s, dir), maxOneTaskBytes)(
@@ -3580,6 +3584,12 @@ object Relational {
     wmedianFinish(crossed, pw)
   }
 
+  /** Crossover ([[graft.operators.ScaleOps.routeBySize]]'s probe, ten
+    * runs): the scale form takes 0.96× the window form's time at sf0.01 but
+    * 1.28× at sf0.1 (1.20–1.31, slower in 10 of 10): below one split the
+    * prefix scan sorts every partial in one task, where the window sorts
+    * the three flags in parallel. The r16 soak (60M rows) measured 1.06×,
+    * so the router stays. */
   def wmedianRouted(maxOneTaskBytes: Long = graft.Conf.OneTaskSortMaxBytes): Q =
     (s, dir) =>
       graft.operators.ScaleOps.routeBySize(Tables.lineitem(s, dir), maxOneTaskBytes)(
@@ -3631,6 +3641,9 @@ object Relational {
     winsorFinish(src, q)
   }
 
+  /** Crossover ([[graft.operators.ScaleOps.routeBySize]]'s probe): the scale
+    * form takes 1.94× the window form's time at sf0.01 and 1.22× at sf0.1; the
+    * r16 soak (7.5M orders) measured 1.09×, so the router stays. */
   def winsorRouted(maxOneTaskBytes: Long = graft.Conf.OneTaskSortMaxBytes): Q =
     (s, dir) =>
       graft.operators.ScaleOps.routeBySize(Tables.orders(s, dir), maxOneTaskBytes)(
@@ -3856,14 +3869,21 @@ object Relational {
 
   private[graft] val rfmScaleForm: Q = (s, dir) => {
     val users = graft.operators.ScaleOps.trackedPersist(rfmUsers(s, dir))
-    def edges(v: String): Seq[Double] = {
-      val r = graft.operators.ScaleOps
-        .groupedQuantilesExact(users, lit(1), col(v), ps = rfmPs).head()
-      rfmPs.indices.map(i => r.getAs[Number](s"q_$i").doubleValue())
-    }
-    rfmFinish(users, edges("rec_hours"), edges("freq"), edges("monetary"))
+    // The three metrics stacked as three groups, each cast to double as
+    // `percentile` casts it: one quantile scan for all twelve edges.
+    val stacked = users.select(explode(array(
+        Seq("rec_hours", "freq", "monetary").zipWithIndex.map { case (m, i) =>
+          struct(lit(i).as("m"), col(m).cast("double").as("v")) }: _*)).as("e"))
+      .select(col("e.m"), col("e.v"))
+    val edges = graft.operators.ScaleOps
+      .groupedQuantilesExact(stacked, col("m"), col("v"), ps = rfmPs).collect()
+      .map(r => r.getInt(0) -> rfmPs.indices.map(i => r.getDouble(2 + i))).toMap
+    rfmFinish(users, edges(0), edges(1), edges(2))
   }
 
+  /** Crossover ([[graft.operators.ScaleOps.routeBySize]]'s probe): the scale
+    * form takes 1.75× the window form's time at sf0.01 and 1.58× at sf0.1;
+    * the r16 soak (1.5M users) measured 1.25×, so the router stays. */
   def rfmRouted(maxOneTaskBytes: Long = graft.Conf.OneTaskSortMaxBytes): Q =
     (s, dir) =>
       graft.operators.ScaleOps.routeBySize(Tables.events(s, dir), maxOneTaskBytes)(

@@ -17,13 +17,13 @@ import org.apache.spark.sql.functions._
   *
   * Scale posture: all per-entity windows partition by a key (customer/user),
   * so at 100 TB each partition is small and the single shuffle hash-
-  * distributes evenly. The two whole-table windows are ROUTED: below
+  * distributes evenly. The few-valued range frame (q_window_range) runs as
+  * an exact prefix difference on ScaleOps' prefix scan, with no window at
+  * all. The one whole-table window, q_window_ntile, is ROUTED: below
   * Conf.OneTaskSortMaxBytes (Catalyst size estimate — no job runs) the
   * declared single-task-sort window form executes; above it the plan
-  * switches to the ScaleOps rewrite (exact global ranks for
-  * ntile/percent_rank, an exact prefix difference for the range frame, both
-  * on one prefix scan), so the
-  * 100 TB story is self-executing, not a comment for the caller to read.
+  * switches to exact global ranks on the prefix scan, so the 100 TB story
+  * is self-executing, not a comment for the caller to read.
   */
 object Windows {
 
@@ -74,34 +74,18 @@ object Windows {
       .orderBy("event_id")
   }
 
-  // ------------------------------------------------- q_window_range (routed)
+  // ------------------------------------------------------- q_window_range
 
-  /** Declared form — value-range frame per status: sum/count of orders
-    * priced within ±5000. Frame over integer cents: Spark's
-    * rangeBetween(Long) needs an integral ordering column, and integer band
-    * edges are engine-portable (no double boundary comparisons). A 3-way
-    * partition key sorts ~⅓ of the table per task — fine below the one-task
-    * threshold, a skew-killer above it. */
-  private[graft] val rangeWindowForm: Q = (s, dir) => {
-    val cents = round(col("o_totalprice") * 100).cast("long")
-    val w = Window.partitionBy(col("o_orderstatus"))
-      .orderBy(col("price_cents"))
-      .rangeBetween(-500000L, 500000L)
-    Tables.orders(s, dir)
-      .withColumn("price_cents", cents)
-      .select(
-        col("o_orderstatus"), col("o_orderkey"), col("price_cents"),
-        count(lit(1)).over(w).as("n_band"),
-        dsumOver(col("o_totalprice"), w).as("band_spend"))
-      .orderBy(col("o_orderstatus"), col("price_cents"), col("o_orderkey"))
-  }
-
-  /** Scale form — EXACT prefix difference (ScaleOps.rangeBandAgg): each
-    * distinct price's band is F(v + 500000) − F(v − 500001), both read off
-    * one prefix scan per status over the distinct prices and their probe
-    * points. No whole-partition sort anywhere. Same rows, same values as
-    * the window form. */
-  private[graft] val rangeScaleForm: Q = (s, dir) => {
+  /** Value-range frame per status: sum/count of orders priced within
+    * ±5000, over integer cents (integer band edges are engine-portable: no
+    * double boundary comparisons). Computed as an EXACT prefix difference
+    * (ScaleOps.rangeBandAgg): each distinct price's band is
+    * F(v + 500000) − F(v − 500001), both read off one prefix scan per
+    * status over the distinct prices and their probe points, so no task
+    * sorts a whole status (the declared `rangeBetween` window sorts a third
+    * of the table per task). The same rows and values as that window,
+    * which ScaleOpsSpec keeps as the equality reference. */
+  val qWindowRange: Q = (s, dir) => {
     val orders = Tables.orders(s, dir)
       .withColumn("price_cents", round(col("o_totalprice") * 100).cast("long"))
     ScaleOps.rangeBandAgg(orders,
@@ -111,16 +95,6 @@ object Windows {
         col("v").as("price_cents"), col("n_band"), col("band_sum").as("band_spend"))
       .orderBy(col("o_orderstatus"), col("price_cents"), col("o_orderkey"))
   }
-
-  /** Size-routed q_window_range: the declared window form while the input's
-    * Catalyst estimate fits a single sort task, the exact ScaleOps rewrite
-    * past it. Both forms produce identical rows, so routing never changes
-    * results — only the plan shape. */
-  def rangeRouted(maxOneTaskBytes: Long = Conf.OneTaskSortMaxBytes): Q = (s, dir) =>
-    ScaleOps.routeBySize(Tables.orders(s, dir), maxOneTaskBytes)(
-      rangeWindowForm(s, dir))(rangeScaleForm(s, dir))
-
-  val qWindowRange: Q = rangeRouted()
 
   // ------------------------------------------------- q_window_ntile (routed)
 
@@ -169,7 +143,14 @@ object Windows {
       .orderBy("c_custkey")
   }
 
-  /** Size-routed q_window_ntile — same contract as rangeRouted. */
+  /** Size-routed q_window_ntile: the declared window form while the
+    * input's Catalyst estimate fits a single sort task, the exact ScaleOps
+    * rewrite past it. Both forms produce identical rows, so routing never
+    * changes results, only the plan shape. Crossover
+    * ([[graft.operators.ScaleOps.routeBySize]]'s probe): the scale form takes
+    * 1.94× the window form's time at sf0.01 and 1.68× at sf0.1 (the customer
+    * table is tiny, so the scan's jobs are the whole cost), and it did not
+    * cross below 0.44 GiB in the r11 soak (SCALE.md), so the router stays. */
   def ntileRouted(maxOneTaskBytes: Long = Conf.OneTaskSortMaxBytes): Q = (s, dir) =>
     ScaleOps.routeBySize(Tables.customer(s, dir), maxOneTaskBytes)(
       ntileWindowForm(s, dir))(ntileScaleForm(s, dir))

@@ -90,13 +90,15 @@ class DetPropSpec extends AnyFunSuite {
     import org.apache.spark.sql.expressions.Window
     // Random (group, unique-ord, value) rows; 16 range partitions for 4
     // groups put group boundaries and group runs across partition edges —
-    // the carry must keep the sums EXACT there.
+    // the carry must keep the sums EXACT there. The scan takes one range
+    // partition per input split, so a one-byte split lets these few rows
+    // take all 16.
     val rowsGen = Gen.choose(20, 200).flatMap(n =>
       Gen.listOfN(n, for {
         g <- Gen.choose(0, 3)
         v <- Gen.choose(-1000L, 1000L)
       } yield (g, v)))
-    (1 to 5).foreach { i => withShufflePartitions(16) {
+    (1 to 5).foreach { i => withShufflePartitions(16)(withMaxPartitionBytes(1) {
       val rows = rowsGen.pureApply(Gen.Parameters.default, Seed(100L + i))
         .zipWithIndex.map { case ((g, v), ord) => (g, ord.toLong, v) }
       val df = rows.toDF("g", "o", "v").repartition(7)
@@ -111,6 +113,6 @@ class DetPropSpec extends AnyFunSuite {
         .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
       assert(got == exp,
         s"seed ${100 + i}: missing=${(exp -- got).take(3)} extra=${(got -- exp).take(3)}")
-    }}
+    })}
   }
 }

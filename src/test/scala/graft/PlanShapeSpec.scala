@@ -369,13 +369,12 @@ class PlanShapeSpec extends AnyFunSuite {
     // which is also the plan shape of the streaming aggregation itself.
     ("q_stream_tumbling batch form",
       () => graft.queries.StreamingQs.tumblingBatchForm(spark, Sf0001), 2),
-    // The threshold subplans (edges/bucket counts/offsets/boundary rank)
-    // partly materialize inside broadcast stages at this size; the rest —
-    // summary agg, sort, and the gated joins that degrade to shuffles when
-    // their side outgrows the broadcast budget — re-pinned at 7 when the
-    // r12 counter fix started counting stage-wrapped exchanges for real.
+    // summary agg (1) + sort (1). The prefix scan's own range exchange
+    // runs when the form's frame is built, so the plan counted here holds
+    // only the scan's output, not that exchange; PrefixScanSpec's
+    // job-shape test pins the scan's jobs and shuffle instead.
     ("q_sample_quota scale form",
-      () => graft.queries.LlmOps.quotaScaleForm(spark, Sf0001), 7)
+      () => graft.queries.LlmOps.quotaScaleForm(spark, Sf0001), 2)
   )
 
   for ((label, mk, budget) <- scaleFormBudgets)

@@ -60,6 +60,12 @@ class PrefixScanSpec extends AnyFunSuite {
 
   private val outCols = Seq("k", "rv", "rd", "rn", "rv_before", "rd_before", "rn_before")
 
+  /** Run `body` with `parts` shuffle partitions and a one-byte split, so
+    * the scan takes all `parts` range partitions whatever its input's
+    * size. */
+  private def atWidth[T](parts: Int)(body: => T): T =
+    withShufflePartitions(parts)(withMaxPartitionBytes(1)(body))
+
   test("property: prefixScan == window form (nulls, both directions, ties across partitions, 1 to 64 partitions)") {
     for (i <- 1 to 30) {
       val rows = rowsGen.pureApply(Gen.Parameters.default, Seed(9000L + i))
@@ -68,7 +74,7 @@ class PrefixScanSpec extends AnyFunSuite {
       val df = frame(rows, 1 + i % 4)
       val o = if (desc) col("o").desc else col("o")
       val exp = windowForm(df, desc)
-      val (got, totals) = withShufflePartitions(parts) {
+      val (got, totals) = atWidth(parts) {
         val s = ScaleOps.prefixScan(df, Seq(col("g")), Seq(o, col("k")), sums, peers = 1)
         (s.frame.select(outCols.map(col): _*), s.totals)
       }
@@ -100,7 +106,7 @@ class PrefixScanSpec extends AnyFunSuite {
         rank().over(Window.orderBy(col("o").desc)).cast("long").as("__rnk"),
         count(lit(1)).over(Window.partitionBy()).as("__n"))
         .collect().map(_.toSeq).toSet
-      val got = withShufflePartitions(Seq(1, 7, 32)(i % 3)) {
+      val got = atWidth(Seq(1, 7, 32)(i % 3)) {
         ScaleOps.globalRanksDesc(df, col("o"), Seq(col("k")))
           .select(col("k"), col("__pos"), col("__rnk"), col("__n"))
           .collect().map(_.toSeq).toSet
@@ -135,7 +141,7 @@ class PrefixScanSpec extends AnyFunSuite {
       assert(condition(df.select(sum(value).over(w)).collect()).isDefined,
         s"$name: the window form accepted the overflow")
       for (parts <- Seq(1, 16))
-        assert(condition(withShufflePartitions(parts) {
+        assert(condition(atWidth(parts) {
           ScaleOps.prefixScan(df, Seq(col("g")), Seq(col("o")), Seq("r" -> value)).frame.collect()
         }).contains("ARITHMETIC_OVERFLOW"), s"$name ($parts partitions): prefixScan accepted the overflow")
     }
@@ -147,31 +153,48 @@ class PrefixScanSpec extends AnyFunSuite {
     import org.apache.spark.scheduler._
     import scala.jdk.CollectionConverters._
     val sc = spark.sparkContext
-    val df = frame((0 until 200).map(k =>
-      Row(k.toLong, Seq("a", "b", null)(k % 3), (k % 7).toLong, k.toLong, null)), 3)
-    // Jobs by their stages, and the stages that ran.
-    val jobs = new ConcurrentLinkedQueue[Seq[StageInfo]]()
-    val ran = new ConcurrentLinkedQueue[StageInfo]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e.stageInfos)
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = ran.add(e.stageInfo)
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      withShufflePartitions(8) {
-        ScaleOps.prefixScan(df, Seq(col("g")), Seq(col("o"), col("k")), sums).frame.collect()
+    val rows = (0 until 200).map(k =>
+      Row(k.toLong, Seq("a", "b", null)(k % 3), (k % 7).toLong, k.toLong, null))
+    /** The jobs a scan of `df` runs, each by its stages; the shuffles whose
+      * map stages ran; and the jobs that read one of those without writing
+      * it again (they hold a skipped stage of it). */
+    def shape(df: => DataFrame): (Seq[Seq[StageInfo]], Seq[Int], Seq[Seq[StageInfo]]) = {
+      val jobs = new ConcurrentLinkedQueue[Seq[StageInfo]]()
+      val ran = new ConcurrentLinkedQueue[StageInfo]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e.stageInfos)
+        override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = ran.add(e.stageInfo)
       }
       ListenerBusDrain(sc)
-    } finally sc.removeSparkListener(listener)
-    val written = ran.asScala.toSeq.flatMap(StageShuffle(_))
+      sc.addSparkListener(listener)
+      try {
+        ScaleOps.prefixScan(df, Seq(col("g")), Seq(col("o"), col("k")), sums).frame.collect()
+        ListenerBusDrain(sc)
+      } finally sc.removeSparkListener(listener)
+      val written = ran.asScala.toSeq.flatMap(StageShuffle(_))
+      val ranIds = ran.asScala.map(_.stageId).toSet
+      val readers = jobs.asScala.toSeq.filter(_.exists(s =>
+        StageShuffle(s).exists(written.contains) && !ranIds(s.stageId)))
+      (jobs.asScala.toSeq, written, readers)
+    }
+
+    // Wider than one split: one map stage, read by the carry job and the
+    // apply job.
+    val (_, written, readers) = atWidth(8)(shape(frame(rows, 3)))
     assert(written.size == 1, s"map stages ran for shuffles $written; expected one, once")
-    // A job that reads the shuffle without writing it again holds a
-    // skipped stage of that shuffle.
-    val ranIds = ran.asScala.map(_.stageId).toSet
-    val readers = jobs.asScala.toSeq.filter(_.exists(s =>
-      StageShuffle(s) == written.headOption && !ranIds(s.stageId)))
     assert(readers.size == 2,
       s"${readers.size} jobs read shuffle ${written.head}; expected the carry job and the apply job")
+
+    // One split: one range partition, so no bounds sample and no carry job.
+    // What runs is the exchange's map stage and the apply job that reads
+    // it; every job touches the scan's shuffle, so none is a sample.
+    val (jobs1, written1, readers1) = withShufflePartitions(8)(
+      shape(spark.createDataFrame(rows.asJava, schema)))
+    assert(written1.size == 1, s"map stages ran for shuffles $written1; expected one, once")
+    assert(readers1.size == 1, s"${readers1.size} jobs read shuffle ${written1.head}; " +
+      "expected the apply job alone")
+    assert(jobs1.forall(_.exists(s => StageShuffle(s).exists(written1.contains))),
+      s"a job that touches no scan shuffle ran (a bounds sample): ${jobs1.map(_.map(_.name))}")
+    assert(jobs1.size == 2, s"${jobs1.size} jobs ran; expected the map stage and the apply job")
   }
 }

@@ -13,7 +13,9 @@ class ScaleOpsSpec extends AnyFunSuite {
     import graft.queries.Windows
     // Above the threshold (maxBytes = 0 forces it) the router must emit the
     // globalRanksDesc plan — no global-sort ntile/percent_rank anywhere.
-    val scaled = Windows.ntileRouted(maxOneTaskBytes = 0L)(spark, Sf0001)
+    // Under withSplitScans its scan spans several range partitions, as it
+    // would above the gate, so the carries are compared too.
+    val scaled = withSplitScans(Windows.ntileRouted(maxOneTaskBytes = 0L)(spark, Sf0001))
     val scaledPlan = scaled.queryExecution.executedPlan.toString
     assert(!scaledPlan.contains("ntile(4)"), s"router kept the ntile window:\n$scaledPlan")
     assert(!scaledPlan.contains("percent_rank"), "router kept the percent_rank window")
@@ -24,20 +26,21 @@ class ScaleOpsSpec extends AnyFunSuite {
     // The scale form is EXACT (positional ntile + (rnk-1)/(n-1)): row-for-row
     // equality with the declared window form, not approximate agreement.
     val exact = Windows.ntileWindowForm(spark, Sf0001).collect().toSeq
-    assert(scaled.collect().toSeq == exact, "scale ntile form diverged from window form")
+    assert(withSplitScans(scaled.collect().toSeq) == exact,
+      "scale ntile form diverged from window form")
   }
 
   test("range router: scale form row-matches the window form; threshold picks the plan") {
     import graft.queries.Windows
-    val scaled = Windows.rangeRouted(maxOneTaskBytes = 0L)(spark, Sf0001)
+    // One form: the key's plan holds no range window (the prefix scan's
+    // range exchange replaces the per-status sort).
+    val scaled = Windows.qWindowRange(spark, Sf0001)
     val scaledPlan = scaled.queryExecution.executedPlan.toString
-    assert(!scaledPlan.contains("RangeFrame"), s"router kept the range window:\n$scaledPlan")
-    val declaredPlan = Windows.rangeRouted(maxOneTaskBytes = Long.MaxValue)(spark, Sf0001)
-      .queryExecution.executedPlan.toString
-    assert(declaredPlan.contains("RangeFrame"), "router dropped the declared form below threshold")
+    assert(!scaledPlan.contains("RangeFrame"), s"the key kept the range window:\n$scaledPlan")
+    assert(!scaledPlan.contains("windowspecdefinition"), s"the key kept a window:\n$scaledPlan")
     val got = scaled.collect().map(r =>
       (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4))).toSet
-    val exp = Windows.rangeWindowForm(spark, Sf0001).collect().map(r =>
+    val exp = ScaleOpsSpec.rangeWindowForm(spark, Sf0001).collect().map(r =>
       (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4))).toSet
     assert(got == exp, s"missing=${(exp -- got).take(3)} extra=${(got -- exp).take(3)}")
   }
@@ -45,8 +48,9 @@ class ScaleOpsSpec extends AnyFunSuite {
   test("median router: bucketed two-pass bit-matches exact percentile; threshold picks the plan") {
     import graft.queries.Relational
     // Above the threshold the router must emit the groupedQuantilesExact
-    // plan — no single-buffer percentile aggregate anywhere.
-    val scaled = Relational.medianRouted(maxOneTaskBytes = 0L)(spark, Sf0001)
+    // plan — no single-buffer percentile aggregate anywhere (its scan
+    // across several range partitions, as above the gate).
+    val scaled = withSplitScans(Relational.medianRouted(maxOneTaskBytes = 0L)(spark, Sf0001))
     val scaledPlan = scaled.queryExecution.executedPlan.toString
     assert(!scaledPlan.contains("percentile("),
       s"router kept the exact-percentile buffer:\n$scaledPlan")
@@ -57,10 +61,10 @@ class ScaleOpsSpec extends AnyFunSuite {
     // The scale form is EXACT: row-for-row equality with the declared form
     // (same bracketing positions, same interpolation, same rounding).
     val exact = Relational.medianAggForm(spark, Sf0001).collect().toSeq
-    assert(scaled.collect().toSeq == exact,
+    assert(withSplitScans(scaled.collect().toSeq) == exact,
       "prefix-scan quantiles diverged from exact percentile")
     // And again at sf0.01 (10× the distinct values, groups across partitions).
-    val scaled01 = Relational.medianScaleForm(spark, Sf001).collect().toSeq
+    val scaled01 = withSplitScans(Relational.medianScaleForm(spark, Sf001).collect().toSeq)
     val exact01 = Relational.medianAggForm(spark, Sf001).collect().toSeq
     assert(scaled01 == exact01, "sf0.01 prefix-scan quantiles diverged")
   }
@@ -104,12 +108,13 @@ class ScaleOpsSpec extends AnyFunSuite {
   test("quota router: bucketed-threshold scale form bit-matches the window form") {
     import graft.queries.LlmOps
     // sf0.001: ~10 docs/lang < k — every language takes the no-threshold
-    // path; sf0.01: ~100 docs/lang — the quota binds everywhere.
-    val scaled = LlmOps.quotaRouted(maxOneTaskBytes = 0L)(spark, Sf0001)
+    // path; sf0.01: ~100 docs/lang — the quota binds everywhere. Each
+    // scale form's scan spans several range partitions (withSplitScans).
+    val scaled = withSplitScans(LlmOps.quotaRouted(maxOneTaskBytes = 0L)(spark, Sf0001))
     val declared = LlmOps.quotaRouted(maxOneTaskBytes = Long.MaxValue)(spark, Sf0001)
-    assert(scaled.collect().toSeq == declared.collect().toSeq,
+    assert(withSplitScans(scaled.collect().toSeq) == declared.collect().toSeq,
       "scale quota form diverged from window form at sf0.001")
-    val s01 = LlmOps.quotaScaleForm(spark, Sf001).collect().toSeq
+    val s01 = withSplitScans(LlmOps.quotaScaleForm(spark, Sf001).collect().toSeq)
     val w01 = LlmOps.quotaWindowForm(spark, Sf001).collect().toSeq
     assert(s01 == w01, "scale quota form diverged from window form at sf0.01")
     // Exact sample cardinality: min(k, n_lang) rows per language.
@@ -129,14 +134,15 @@ class ScaleOpsSpec extends AnyFunSuite {
     import spark.implicits._
     val df = Seq(("a", 10.0), ("b", 5.0), ("b", 5.0), ("b", 5.0),
       ("c", 1.0), ("c", 2.0)).toDF("g", "v").repartition(7)
-    // More range partitions than histogram rows: every group edge is a
-    // partition edge, and some partitions are empty.
-    val got = withShufflePartitions(16) {
+    // More range partitions than histogram rows (a one-byte split lets
+    // this tiny input take all 16): every group edge is a partition edge,
+    // and some partitions are empty.
+    val got = withShufflePartitions(16)(withMaxPartitionBytes(1) {
       graft.operators.ScaleOps
         .groupedQuantilesExact(df, col("g"), col("v"), Seq(0.5, 0.9))
         .orderBy("g")
         .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
-    }
+    })
     assert(got(0) == (("a", 1L, 10.0, 10.0)))
     assert(got(1) == (("b", 3L, 5.0, 5.0)))
     // c: median of {1,2} = 1.5; p90 = 1 + 0.9*(2-1) = 1.9
@@ -147,8 +153,9 @@ class ScaleOpsSpec extends AnyFunSuite {
   test("pack-sequences router: groupedPrefixSum bit-matches the window form; threshold picks the plan") {
     import graft.queries.LlmOps
     // Above the gate (maxBytes = 0 forces it) the router must emit the
-    // prefix scan — no running-sum window anywhere in the plan.
-    val scaled = LlmOps.packSequencesRouted(maxOneTaskBytes = 0L)(spark, Sf0001)
+    // prefix scan — no running-sum window anywhere in the plan (the scan
+    // across several range partitions, as above the gate).
+    val scaled = withSplitScans(LlmOps.packSequencesRouted(maxOneTaskBytes = 0L)(spark, Sf0001))
     val scaledPlan = scaled.queryExecution.executedPlan.toString
     assert(!scaledPlan.contains("windowspecdefinition"),
       s"router kept the plain window:\n$scaledPlan")
@@ -157,7 +164,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert(declaredPlan.contains("windowspecdefinition"),
       "router dropped the declared form below threshold")
     // Exact integer running sums: row-for-row equality of the final stats.
-    val got = scaled.collect().map(_.toSeq).toSeq
+    val got = withSplitScans(scaled.collect().map(_.toSeq).toSeq)
     val exp = LlmOps.packSequencesRouted(maxOneTaskBytes = Long.MaxValue)(
       spark, Sf0001).collect().map(_.toSeq).toSeq
     assert(got == exp, s"scale prefix-sum form diverged: got=${got.take(3)} exp=${exp.take(3)}")
@@ -174,13 +181,14 @@ class ScaleOpsSpec extends AnyFunSuite {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val exp = df.withColumn("__run", sum(col("x")).over(w))
       .collect().map(_.toSeq).toSet
-    // More range partitions than rows: the null group and each group edge
-    // sit on partition edges.
-    val got = withShufflePartitions(16) {
+    // More range partitions than rows (a one-byte split lets this tiny
+    // input take all 16): the null group and each group edge sit on
+    // partition edges.
+    val got = withShufflePartitions(16)(withMaxPartitionBytes(1) {
       ScaleOps.groupedPrefixSum(df.repartition(7), col("g"), col("o"), col("x"))
         .select(col("g"), col("o"), col("x"), col("__run"))
         .collect().map(_.toSeq).toSet
-    }
+    })
     assert(got == exp, s"missing=${(exp -- got).take(3)} extra=${(got -- exp).take(3)}")
   }
 
@@ -217,10 +225,10 @@ class ScaleOpsSpec extends AnyFunSuite {
     val exp = rows.select(col("k"), count(lit(1)).over(win).as("n_band"),
         graft.functions.Det.dsumOver(col("x0"), win).as("band_sum"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val got = ScaleOps.rangeBandAgg(rows, part = col("p0"), v = col("v0"),
-        x = col("x0"), width = w, keys = Seq(col("k")))
+    val got = withMaxPartitionBytes(1)(ScaleOps.rangeBandAgg(rows, part = col("p0"),
+        v = col("v0"), x = col("x0"), width = w, keys = Seq(col("k")))
       .select(col("k"), col("n_band"), col("band_sum"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
     graft.operators.ScaleOps.releaseTracked()
     assert(got == exp, s"missing=${(exp -- got).take(5)} extra=${(got -- exp).take(5)}")
   }
@@ -244,10 +252,10 @@ class ScaleOpsSpec extends AnyFunSuite {
     val exp = rows.select(col("k"), count(lit(1)).over(win).as("n_band"),
         graft.functions.Det.dsumOver(col("x0"), win).as("band_sum"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val got = ScaleOps.rangeBandAgg(rows, part = col("p0"), v = col("v0"),
-        x = col("x0"), width = w, keys = Seq(col("k")))
+    val got = withMaxPartitionBytes(1)(ScaleOps.rangeBandAgg(rows, part = col("p0"),
+        v = col("v0"), x = col("x0"), width = w, keys = Seq(col("k")))
       .select(col("k"), col("n_band"), col("band_sum"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
     graft.operators.ScaleOps.releaseTracked()
     assert(got == exp, s"missing=${(exp -- got).take(5)} extra=${(got -- exp).take(5)}")
   }
@@ -276,10 +284,10 @@ class ScaleOpsSpec extends AnyFunSuite {
       val exp = rows.select(col("k"), count(lit(1)).over(win).as("n"),
           graft.functions.Det.dsumOver(col("x0"), win).as("s"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val got = ScaleOps.rangeBandAgg(rows, part = col("p0"), v = col("v0"),
-          x = col("x0"), width = w, keys = Seq(col("k")))
+      val got = withMaxPartitionBytes(1)(ScaleOps.rangeBandAgg(rows, part = col("p0"),
+          v = col("v0"), x = col("x0"), width = w, keys = Seq(col("k")))
         .select(col("k"), col("n_band"), col("band_sum"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
       graft.operators.ScaleOps.releaseTracked()
       assert(got == exp,
         s"seed ${7000 + i}: missing=${(exp -- got).take(5)} extra=${(got -- exp).take(5)}")
@@ -287,17 +295,45 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("rangeBandAgg == exact range-frame window (prefix-difference is exact)") {
+    // The range router test runs the key as it runs in production (one
+    // range partition); this one spans several, so the carries are used.
     val orders = Tables.orders(spark, Sf0001)
       .withColumn("price_cents", round(col("o_totalprice") * 100).cast("long"))
-    val scaled = ScaleOps.rangeBandAgg(orders,
+    val scaled = withSplitScans(ScaleOps.rangeBandAgg(orders,
       part = col("o_orderstatus"), v = col("price_cents"), x = col("o_totalprice"),
       width = 500000L, keys = Seq(col("o_orderkey")))
-      .select(col("o_orderkey"), col("n_band"), col("band_sum"))
-    val exact = SparkEntry.queries("q_window_range")(spark, Sf0001)
+      .select(col("o_orderkey"), col("n_band"), col("band_sum")))
+    val exact = ScaleOpsSpec.rangeWindowForm(spark, Sf0001)
       .select(col("o_orderkey"), col("n_band"), col("band_spend"))
-    val got = scaled.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val got = withSplitScans(
+      scaled.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
     val exp = exact.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(got == exp,
       s"missing=${(exp -- got).take(3)} extra=${(got -- exp).take(3)}")
+  }
+}
+
+/** The declared window form of q_window_range, which now runs one
+  * prefix-scan form: the key's bit-equality reference, next to the DuckDB
+  * oracle. */
+object ScaleOpsSpec {
+  import org.apache.spark.sql.{DataFrame, SparkSession}
+  import org.apache.spark.sql.expressions.Window
+
+  /** q_window_range as the value-range frame per status it computes:
+    * sum/count of orders priced within ±5000, over integer cents. Each
+    * status sorts in one task. */
+  val rangeWindowForm: (SparkSession, String) => DataFrame = (s, dir) => {
+    val cents = round(col("o_totalprice") * 100).cast("long")
+    val w = Window.partitionBy(col("o_orderstatus"))
+      .orderBy(col("price_cents"))
+      .rangeBetween(-500000L, 500000L)
+    Tables.orders(s, dir)
+      .withColumn("price_cents", cents)
+      .select(
+        col("o_orderstatus"), col("o_orderkey"), col("price_cents"),
+        count(lit(1)).over(w).as("n_band"),
+        graft.functions.Det.dsumOver(col("o_totalprice"), w).as("band_spend"))
+      .orderBy(col("o_orderstatus"), col("price_cents"), col("o_orderkey"))
   }
 }

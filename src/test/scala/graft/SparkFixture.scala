@@ -26,10 +26,27 @@ object SparkFixture {
   }
 
   /** Run `body` with `n` shuffle partitions, then put back what was set. */
-  def withShufflePartitions[T](n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
+  def withShufflePartitions[T](n: Int)(body: => T): T =
+    withConf("spark.sql.shuffle.partitions", n.toString)(body)
+
+  /** Run `body` with a split size of `n` bytes, then put back what was set.
+    * ScaleOps.prefixScan takes one range partition per split of its input,
+    * so a tiny split lets a small test input span the session's whole
+    * shuffle width. */
+  def withMaxPartitionBytes[T](n: Long)(body: => T): T =
+    withConf("spark.sql.files.maxPartitionBytes", n.toString)(body)
+
+  /** Run `body` with 8 shuffle partitions and 1 KiB splits, so that a
+    * ScaleOps.prefixScan over a sf0.001 table spans several range
+    * partitions and its carries are exercised (the scans of every forced
+    * scale form in the router tests take 3 to 8); a one-byte split would
+    * also cut every parquet scan into one task per byte. */
+  def withSplitScans[T](body: => T): T =
+    withShufflePartitions(8)(withMaxPartitionBytes(1L << 10)(body))
+
+  private def withConf[T](key: String, value: String)(body: => T): T = {
     val before = spark.conf.getOption(key)
-    spark.conf.set(key, n.toString)
+    spark.conf.set(key, value)
     try body finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
