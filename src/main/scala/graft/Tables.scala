@@ -41,11 +41,11 @@ object Tables {
   /** Opens `dir/name.parquet` with a known schema. `spark.read.parquet`
     * infers the schema with a one-task Spark job on every open; here it is
     * inferred once per (path, fingerprint) and reused. The fingerprint
-    * covers every file's name, size and mtime plus the session's explicitly
-    * set parquet confs (which steer type mapping, e.g. `nanosAsLong`), so a
-    * rewritten table or a changed mapping infers again — a cached schema
-    * is never stale. A missing path opens uncached, raising Spark's own
-    * error. */
+    * covers every file's name, size and mtime plus the session's parquet
+    * confs set away from their defaults (which steer type mapping, e.g.
+    * `nanosAsLong`), so a rewritten table or a changed mapping infers
+    * again — a cached schema is never stale. A missing path opens
+    * uncached, raising Spark's own error. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     prep(spark)
     val path = s"$dir/$name.parquet"
@@ -66,20 +66,28 @@ object Tables {
   private val schemas =
     new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]()
 
+  /** A conf with nothing set: each key reads back its registered default. */
+  private lazy val sqlDefaults = new org.apache.spark.sql.internal.SQLConf
+
   private def fingerprint(spark: SparkSession, path: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // listStatus, not listFiles: a located status reads each file's owner
+    // and permissions, which the local filesystem forks a process for
+    // (about 5 ms a file).
+    def walk(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq
+      .flatMap(f => if (f.isDirectory) walk(f.getPath) else Seq(f))
     if (!fs.exists(p)) None
     else {
-      val it = fs.listFiles(p, true)
-      val files = Seq.newBuilder[String]
-      while (it.hasNext) {
-        val f = it.next()
-        files += s"${f.getPath}:${f.getLen}:${f.getModificationTime}"
-      }
-      val confs = spark.conf.getAll.toSeq
-        .filter(_._1.matches("spark\\.sql\\.(legacy\\.)?parquet\\..*")).sorted
-      Some((files.result().sorted ++ confs.map { case (k, v) => s"$k=$v" })
+      val files = walk(p).map(f => s"${f.getPath}:${f.getLen}:${f.getModificationTime}")
+      // A conf set explicitly to its default steers nothing; counting it
+      // would restage every fixture after a caller restores a conf that way.
+      val confs = spark.conf.getAll.toSeq.filter { case (k, v) =>
+        k.matches("spark\\.sql\\.(legacy\\.)?parquet\\..*") &&
+          !scala.util.Try(sqlDefaults.getConfString(k)).toOption.contains(v)
+      }.sorted
+      Some((files.sorted ++ confs.map { case (k, v) => s"$k=$v" })
         .mkString("\n"))
     }
   }
@@ -153,12 +161,13 @@ object Tables {
     * arrival files, the incremental-agg's day-partitioned source). Unlike
     * [[stageDir]]'s run-scoped root, this one is SHARED and stable across
     * JVMs (conf `graft.replay.dir`, default java.io.tmpdir/graft-replay):
-    * a fixture here is a pure function of its source table, validated by a
-    * `.staged` signature marker, so a fresh process REUSES the staged files
-    * instead of re-running the staging jobs — per-JVM restaging is what
-    * made q_stream_join's bench cost vary 3× between runs. Disk use is
-    * bounded: one fixture set per (kind, table), cleared and rewritten when
-    * the source (or fixture version) changes. */
+    * a fixture here is a pure function of its data directory and the
+    * program build, validated by a `.staged` signature marker, so a fresh
+    * process REUSES the staged files instead of re-running the staging
+    * jobs — per-JVM restaging is what made q_stream_join's bench cost vary
+    * 3× between runs. Disk use is bounded: one fixture set per (kind, data
+    * directory), cleared and rewritten when the data or the build
+    * changes. */
   def replayDir(spark: SparkSession, prefix: String, rawKey: String): String = {
     val root = spark.conf.get("graft.replay.dir",
       java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft-replay").toString)
@@ -183,40 +192,45 @@ object Tables {
     p.toString
   }
 
-  /** Idempotent staging driver for [[replayDir]] fixtures: `write` runs only
-    * when the signature marker (source size + mtime + fixture version) is
-    * stale. Stale contents are CLEARED first — the shared root outlives
-    * fixture-version changes, and a leftover file from an older layout would
-    * otherwise still match a file-source glob and replay as a spurious
-    * micro-batch. The marker is written LAST, so a crash mid-staging leaves
-    * no marker and the next call restages. Concurrent stagings of the same
-    * fixture from two JVMs are serialized by an exclusive sibling lock file
-    * (`createFile` is atomic O_EXCL on every filesystem we stage to): the
-    * loser waits, re-checks the marker, and usually returns the winner's
-    * fixture without staging at all. A crashed winner's stale lock (>15 min
-    * old) is taken over; a wait past 10 min fails loudly rather than
-    * certifying a fixture someone may still be writing. Returns the
-    * fixture directory. */
-  def stagedFixture(spark: SparkSession, src: String, prefix: String,
-                    rawKey: String, version: String)
+  /** Idempotent stager for [[replayDir]] fixtures derived from the
+    * tables in `dir`: `write` runs only when the signature marker is stale.
+    * The signature is the [[table]] fingerprint of the whole data directory
+    * (every table file's name, size and mtime plus the session's parquet
+    * confs) and of the program build ([[buildFingerprint]]), so a fixture
+    * restages when any table it may read or any code that may produce it
+    * changes. Stale contents are CLEARED first — the shared root outlives
+    * builds, and a leftover file from an older layout would otherwise still
+    * match a file-source glob and replay as a spurious micro-batch. The marker is written LAST, so a crash
+    * mid-staging leaves no marker and the next call restages. Concurrent
+    * stagings of the same fixture from two JVMs are serialized by an
+    * exclusive sibling lock file (`createFile` is atomic O_EXCL on every
+    * filesystem we stage to): the loser waits, re-checks the marker, and
+    * usually returns the winner's fixture without staging at all. A crashed
+    * winner's stale lock (>15 min old) is taken over; a wait past 10 min
+    * fails loudly rather than certifying a fixture someone may still be
+    * writing. Returns the fixture directory. */
+  def stagedFixture(spark: SparkSession, dir: String, prefix: String)
                    (write: String => Unit): String = {
     import java.nio.file.{Files, Paths, FileAlreadyExistsException}
-    val dir = replayDir(spark, prefix, rawKey)
-    val attrs = Files.readAttributes(
-      Paths.get(src),
-      classOf[java.nio.file.attribute.BasicFileAttributes])
-    val sig = s"${attrs.size}:${attrs.lastModifiedTime.toMillis}:$version"
-    val marker = Paths.get(dir, ".staged")
+    // The confs prep sets are part of the fingerprint: sign after them, or
+    // the first call in a fresh session signs a conf set no later call sees.
+    prep(spark)
+    val data = fingerprint(spark, dir).getOrElse(
+      sys.error(s"stagedFixture: data directory $dir does not exist"))
+    val sig = hex(java.security.MessageDigest.getInstance("SHA-256")
+      .digest(data.getBytes("UTF-8"))) + " " + buildFingerprint
+    val staged = replayDir(spark, prefix, dir)
+    val marker = Paths.get(staged, ".staged")
     def fresh = // a concurrent restage can delete the marker mid-read
       try Files.exists(marker) && Files.readString(marker) == sig
       catch { case _: java.io.IOException => false }
-    if (fresh) return dir
-    val lock = Paths.get(dir + ".lock")
+    if (fresh) return staged
+    val lock = Paths.get(staged + ".lock")
     val deadline = System.nanoTime() + 600L * 1000L * 1000L * 1000L
     var locked = false
     try {
       while (!locked) {
-        if (fresh) return dir // the lock holder staged exactly what we need
+        if (fresh) return staged // the lock holder staged exactly what we need
         try { Files.createFile(lock); locked = true }
         catch {
           case _: FileAlreadyExistsException =>
@@ -233,15 +247,42 @@ object Tables {
       if (!fresh) { // double-checked: winner may have finished as we locked
         // A rollup spec pinned to (or sourced from) this artifact must not
         // serve the restage query — or anything after — from stale data.
-        graft.plans.RollupRewrite.invalidate(dir)
-        deleteRecursively(dir)
-        Files.createDirectories(Paths.get(dir))
-        write(dir)
+        graft.plans.RollupRewrite.invalidate(staged)
+        deleteRecursively(staged)
+        Files.createDirectories(Paths.get(staged))
+        write(staged)
         Files.writeString(marker, sig)
       }
-      dir
+      staged
     } finally if (locked) Files.deleteIfExists(lock)
   }
+
+  /** SHA-256 of the program's compiled classes — every file under the
+    * directory at this object's code source, by relative name and content,
+    * or the bytes of the jar there — computed once per JVM. An unchanged
+    * build hashes the same in every process, so it never restages a
+    * fixture; any rebuilt byte restages each fixture once per replay
+    * root. */
+  private lazy val buildFingerprint: String = {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val src = Paths.get(getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    if (Files.isDirectory(src)) {
+      val walk = Files.walk(src)
+      val files = try walk.iterator().asScala.filter(Files.isRegularFile(_)).toSeq
+        finally walk.close()
+      for ((name, f) <- files.map(f => src.relativize(f).toString -> f).sortBy(_._1)) {
+        val bytes = Files.readAllBytes(f)
+        md.update(s"$name\n${bytes.length}\n".getBytes("UTF-8"))
+        md.update(bytes)
+      }
+    } else if (Files.isRegularFile(src)) md.update(Files.readAllBytes(src))
+    else sys.error(s"Tables: code source $src is neither a directory nor a file")
+    hex(md.digest())
+  }
+
+  private def hex(digest: Array[Byte]): String = digest.map(b => f"$b%02x").mkString
 
   /** Best-effort recursive delete for a staging root (harness epilogue). */
   def deleteRecursively(root: String): Unit = {

@@ -122,8 +122,7 @@ object Cbo {
 
   /** Stage (once, content-keyed) the skewed projection of customer. */
   private def stagedSkew(s: SparkSession, dir: String): String =
-    graft.Tables.stagedFixture(s, s"$dir/customer.parquet",
-      "cbo-hist-skew", dir, "v1") { d =>
+    graft.Tables.stagedFixture(s, dir, "cbo-hist-skew") { d =>
       import org.apache.spark.sql.functions._
       val v = col("c_acctbal")
       graft.Tables.customer(s, dir)
@@ -358,8 +357,7 @@ object Cbo {
     * the rest — same skewed sk_val = c_acctbal^4 column as the r18
     * histogram fixture. */
   private def stagedIncrParts(s: SparkSession, dir: String): String =
-    graft.Tables.stagedFixture(s, s"$dir/customer.parquet",
-      "cbo-incr-skew", dir, "v1") { d =>
+    graft.Tables.stagedFixture(s, dir, "cbo-incr-skew") { d =>
       import org.apache.spark.sql.functions._
       val v = col("c_acctbal")
       val sk = graft.Tables.customer(s, dir)

@@ -240,8 +240,7 @@ object LlmOps {
     * q_dedup_components still grades the LIVE loop — this fixture serves
     * the downstream-policy keys. */
   def stagedFullLabels(s: SparkSession, dir: String): DataFrame = {
-    val staged = Tables.stagedFixture(s, s"$dir/documents.parquet",
-      "full-labels", dir, "v1") { d =>
+    val staged = Tables.stagedFixture(s, dir, "full-labels") { d =>
       graft.operators.Components.connectedComponents(
           stagedMinhashPairs(s, dir), "doc_a", "doc_b")
         .coalesce(1)
@@ -255,8 +254,7 @@ object LlmOps {
   def stagedCorpusLabels(s: SparkSession, dir: String): DataFrame = {
     val key = dir.replaceAll("[^A-Za-z0-9]", "_")
     val tbl = s"graft_corpus_labels_$key"
-    val staged = Tables.stagedFixture(s, s"$dir/documents.parquet",
-      "corpus-labels", dir, LabelsVersion) { d =>
+    val staged = Tables.stagedFixture(s, dir, "corpus-labels") { d =>
       val corpusPairs = stagedMinhashPairs(s, dir)
         .filter(col("doc_a") % 10 =!= 3 && col("doc_b") % 10 =!= 3)
       graft.sources.Layout.writeBucketed(
@@ -270,32 +268,23 @@ object LlmOps {
     s.table(tbl)
   }
 
-  /** Bump to invalidate staged corpus-label artifacts when the labeling
-    * pipeline (or the batch/corpus split) changes. */
-  private val LabelsVersion = "v1"
-
   /** The near-dup pair ARTIFACT: [[minhashPairs]] materialized ONCE per
-    * (documents source, pipeline version) via Tables.stagedFixture and
+    * (data directory, build) via Tables.stagedFixture and
     * shared by every consumer — q_dedup_minhash reads it back sorted,
     * q_dedup_components clusters it. At 100 TB the pair set is a stored
     * pipeline artifact (produced once per corpus snapshot, consumed many
     * times — dedup report, cluster resolution, canonical selection);
     * recomputing the full LSH pipeline per consumer paid the gate's two
     * most expensive non-streaming keys twice (VERDICT r12 #4). Content
-    * keyed on the source's size+mtime, cross-JVM lock-guarded, restaged
-    * when the corpus (or PairsVersion) changes. */
+    * keyed on the data directory and the build, cross-JVM lock-guarded,
+    * restaged when the corpus or the pair pipeline changes. */
   def stagedMinhashPairs(s: SparkSession, dir: String): DataFrame = {
-    val staged = Tables.stagedFixture(s, s"$dir/documents.parquet",
-      "minhash-pairs", dir, PairsVersion) { d =>
+    val staged = Tables.stagedFixture(s, dir, "minhash-pairs") { d =>
       minhashPairsRaw(Tables.documents(s, dir))
         .write.mode("overwrite").parquet(s"$d/pairs")
     }
     s.read.parquet(s"$staged/pairs")
   }
-
-  /** Bump to invalidate staged pair artifacts when the pair PIPELINE
-    * changes (the content key only tracks the source corpus). */
-  private val PairsVersion = "v1"
 
   /** Near-duplicate pairs for any (doc_id, text) DataFrame — the full
     * shingle→minhash→band→bucket→exact-refine pipeline, factored out so
@@ -465,8 +454,7 @@ object LlmOps {
     val key = dir.replaceAll("[^A-Za-z0-9]", "_")
     val metaTbl = s"graft_mhidx_meta_$key"
     val bktTbl = s"graft_mhidx_buckets_$key"
-    val staged = Tables.stagedFixture(s, s"$dir/documents.parquet",
-      "minhash-index", dir, IndexVersion) { d =>
+    val staged = Tables.stagedFixture(s, dir, "minhash-index") { d =>
       val corpus = Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 3)
       // Both stored artifacts are laid out BUCKETED BY THEIR PROBE KEY —
       // the plan property the incremental claim rests on: `buckets` by the
@@ -491,11 +479,6 @@ object LlmOps {
       s, bktTbl, s"$staged/buckets", Seq("band", "x", "y"), IndexBuckets)
     (s.table(metaTbl), s.table(bktTbl))
   }
-
-  /** Bump to invalidate staged index artifacts when the index layout or
-    * the batch/corpus split changes. v2: bucketed layout (meta by doc_id,
-    * buckets by the band key) replacing plain parquet. */
-  private val IndexVersion = "v2"
 
   /** Bucket count for the stored minhash index — at the graded scale one
     * file per bucket; at 100 TB this is the knob that sizes probe-join
@@ -1953,8 +1936,7 @@ object LlmOps {
     * Returns (symbol set, max raw piece length — the greedy walk's scan
     * bound). */
   def stagedWordpieceVocab(s: SparkSession, dir: String): (Set[String], Int) = {
-    val staged = Tables.stagedFixture(s, s"$dir/documents.parquet",
-      "wordpiece-vocab", dir, "v1") { d =>
+    val staged = Tables.stagedFixture(s, dir, "wordpiece-vocab") { d =>
       import s.implicits._
       val words = corpusWordFreqs(s, dir)
       val merges = graft.text.WordPiece.train(words)
@@ -1981,8 +1963,7 @@ object LlmOps {
   /** The trained unigram piece table staged once per corpus snapshot
     * ([[qTextUnigramTrain]] still grades the LIVE trainer). */
   def stagedUnigramPieces(s: SparkSession, dir: String): Seq[graft.text.Unigram.Piece] = {
-    val staged = Tables.stagedFixture(s, s"$dir/documents.parquet",
-      "unigram-pieces", dir, "v1") { d =>
+    val staged = Tables.stagedFixture(s, dir, "unigram-pieces") { d =>
       import s.implicits._
       val (pieces, _) = graft.text.Unigram.train(corpusWordFreqs(s, dir))
       pieces.map(p => (p.piece, p.n, p.logp))
@@ -2000,8 +1981,7 @@ object LlmOps {
     * tokenizer artifact every encode consumer shares ([[qTextBpeTrain]]
     * still grades the LIVE training loop). */
   def stagedBpeMerges(s: SparkSession, dir: String): Seq[(String, String)] = {
-    val staged = Tables.stagedFixture(s, s"$dir/documents.parquet",
-      "bpe-merges", dir, "v1") { d =>
+    val staged = Tables.stagedFixture(s, dir, "bpe-merges") { d =>
       import s.implicits._
       trainBpeMerges(corpusWordFreqs(s, dir))
         .toDF("step", "left", "right", "merged", "n_occurrences")
@@ -2416,8 +2396,7 @@ object LlmOps {
     * brute force over survivors, and search identity across compaction. */
   val qSimIvfDelete: Q = (s, dir) => {
     val e = Tables.embeddings(s, dir)
-    val path = Tables.stagedFixture(s, s"$dir/embeddings.parquet",
-      "ivf-delete", dir, "v1") { d =>
+    val path = Tables.stagedFixture(s, dir, "ivf-delete") { d =>
       val idx = graft.ml.Ivf.buildPartitioned(
         e.filter(col("vec_id") =!= 0), "embedding", nCells = 16, path = d)
       idx.model.write.overwrite().save(s"$d/_quantizer")

@@ -1148,8 +1148,7 @@ object Relational {
   def stagedCustOrderRollup(s: SparkSession, dir: String): DataFrame = {
     val key = dir.replaceAll("[^A-Za-z0-9]", "_")
     val tbl = s"graft_cust_order_rollup_$key"
-    val staged = Tables.stagedFixture(s, s"$dir/orders.parquet",
-      "cust-order-rollup", dir, "v1") { d =>
+    val staged = Tables.stagedFixture(s, dir, "cust-order-rollup") { d =>
       graft.sources.Layout.writeBucketed(
         Tables.orders(s, dir).filter(col("o_orderkey") % 10 =!= 7)
           .groupBy(col("o_custkey").as("cust"))
@@ -1166,16 +1165,7 @@ object Relational {
     * order count + exact decimal revenue partial), staged once per corpus
     * snapshot — the artifact q_join_view_maintain folds deltas into. */
   def stagedSegOrderView(s: SparkSession, dir: String): DataFrame = {
-    // The view joins TWO sources; stagedFixture's signature covers only the
-    // primary (orders), so customer's size+mtime is folded into the version
-    // string — regenerating customer alone now restages instead of silently
-    // serving a stale base view (ADVICE r14).
-    val custAttrs = java.nio.file.Files.readAttributes(
-      java.nio.file.Paths.get(s"$dir/customer.parquet"),
-      classOf[java.nio.file.attribute.BasicFileAttributes])
-    val ver = s"v2-${custAttrs.size}-${custAttrs.lastModifiedTime.toMillis}"
-    val staged = Tables.stagedFixture(s, s"$dir/orders.parquet",
-      "seg-order-view", dir, ver) { d =>
+    val staged = Tables.stagedFixture(s, dir, "seg-order-view") { d =>
       Tables.orders(s, dir).filter(col("o_orderkey") % 10 =!= 7)
         .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_mktsegment").as("seg"))
@@ -1367,15 +1357,9 @@ object Relational {
     * serves from (unlike [[stagedSegOrderView]]'s base-subset view, this
     * covers the whole fact table — it is what the maintenance tick keeps
     * current): one (seg, n, rev) row per segment with the exact decimal
-    * revenue partial. Signature covers BOTH sources (the ADVICE r14
-    * dual-source rule). */
-  def stagedSegOrderViewFull(s: SparkSession, dir: String): String = {
-    val custAttrs = java.nio.file.Files.readAttributes(
-      java.nio.file.Paths.get(s"$dir/customer.parquet"),
-      classOf[java.nio.file.attribute.BasicFileAttributes])
-    val ver = s"v1-${custAttrs.size}-${custAttrs.lastModifiedTime.toMillis}"
-    Tables.stagedFixture(s, s"$dir/orders.parquet",
-      "seg-order-view-full", dir, ver) { d =>
+    * revenue partial. */
+  def stagedSegOrderViewFull(s: SparkSession, dir: String): String =
+    Tables.stagedFixture(s, dir, "seg-order-view-full") { d =>
       Tables.orders(s, dir)
         .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_mktsegment").as("seg"))
@@ -1385,7 +1369,6 @@ object Relational {
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$d/view")
     } + "/view"
-  }
 
   /** The maintained DAY-GRAINED partial rollup q_agg_rollup_filter serves
     * from — one (event_type, day) row with exact decimal partials, staged
@@ -1395,8 +1378,7 @@ object Relational {
     * type-check against the scan's. */
   def stagedEventsDayRollup(s: SparkSession, dir: String): String = {
     val part = stagedEventsByDay(s, dir)
-    Tables.stagedFixture(s, s"$dir/events.parquet",
-      "events-day-rollup", dir, "v1") { d =>
+    Tables.stagedFixture(s, dir, "events-day-rollup") { d =>
       graft.sources.Layout.readPartitioned(s, part)
         .groupBy(col("event_type"), col("day"))
         .agg(count(lit(1)).as("n"),
@@ -1412,8 +1394,7 @@ object Relational {
     * snapshot (in production it is the table q_agg_view_maintain /
     * q_stream_view_maintain keep current per tick). */
   def stagedSegRollup(s: SparkSession, dir: String): String = {
-    val staged = Tables.stagedFixture(s, s"$dir/customer.parquet",
-      "customer-seg-rollup", dir, "v1") { d =>
+    val staged = Tables.stagedFixture(s, dir, "customer-seg-rollup") { d =>
       Tables.customer(s, dir)
         .groupBy(col("c_mktsegment").as("seg"))
         .agg(count(lit(1)).as("n"),
@@ -4142,8 +4123,7 @@ object Relational {
     * warmup can pre-build it UNTIMED — it is fixture setup (the table's
     * storage posture), not part of the graded read. */
   def stagedManifestLayout(s: SparkSession, dir: String): String =
-    Tables.stagedFixture(s, s"$dir/lineitem.parquet",
-      "lineitem-manifest", dir, "v3") { d => // v3: commit_ver + op log columns
+    Tables.stagedFixture(s, dir, "lineitem-manifest") { d =>
       graft.sources.Layout.writeManifested(
         Tables.lineitem(s, dir), d, "l_shipdate", numFiles = 16)
     }
@@ -4153,8 +4133,7 @@ object Relational {
     * snapshot. The build-then-append sequence is the fixture; the graded op
     * is the manifest-planned read over the result. */
   def stagedManifestAppendLayout(s: SparkSession, dir: String): String =
-    Tables.stagedFixture(s, s"$dir/lineitem.parquet",
-      "lineitem-manifest-append", dir, "v3") { d => // v3: commit_ver + op log columns
+    Tables.stagedFixture(s, dir, "lineitem-manifest-append") { d =>
       val li = Tables.lineitem(s, dir)
       graft.sources.Layout.writeManifested(
         li.filter(col("l_orderkey") % 7 =!= 3), d, "l_shipdate", numFiles = 12)
@@ -4177,8 +4156,7 @@ object Relational {
     * layout see base ∪ A and nothing of B or C. Staged once per corpus
     * snapshot; the graded op is the joined read over the result. */
   def stagedTxnLayouts(s: SparkSession, dir: String): String =
-    Tables.stagedFixture(s, s"$dir/documents.parquet",
-      "txn-layouts", dir, "v1") { d =>
+    Tables.stagedFixture(s, dir, "txn-layouts") { d =>
       import graft.sources.Layout
       val docs = Tables.documents(s, dir)
       val vecs = Tables.embeddings(s, dir)
@@ -4213,8 +4191,7 @@ object Relational {
     * delete is table maintenance; the graded op is the post-delete
     * planned read. */
   def stagedManifestDeleteLayout(s: SparkSession, dir: String): String =
-    Tables.stagedFixture(s, s"$dir/lineitem.parquet",
-      "lineitem-manifest-delete", dir, "v1") { d =>
+    Tables.stagedFixture(s, dir, "lineitem-manifest-delete") { d =>
       graft.sources.Layout.writeManifested(
         Tables.lineitem(s, dir), d, "l_shipdate", numFiles = 12)
       graft.sources.Layout.deleteManifested(s, d, "l_shipdate",
@@ -4227,8 +4204,7 @@ object Relational {
     * lineitem built at v0, then a copy-on-write UPDATE restating H2 1998
     * prices (×1.1) commits rewrites + tombstones at v1. */
   def stagedManifestUpdateLayout(s: SparkSession, dir: String): String =
-    Tables.stagedFixture(s, s"$dir/lineitem.parquet",
-      "lineitem-manifest-update", dir, "v1") { d =>
+    Tables.stagedFixture(s, dir, "lineitem-manifest-update") { d =>
       graft.sources.Layout.writeManifested(
         Tables.lineitem(s, dir), d, "l_shipdate", numFiles = 12)
       graft.sources.Layout.updateManifested(s, d, "l_shipdate",
@@ -4242,8 +4218,7 @@ object Relational {
     * accumulation shape of a streaming sink) then ONE compaction commit
     * rewriting the live set into 8 clustered files. */
   def stagedManifestOptimizeLayout(s: SparkSession, dir: String): String =
-    Tables.stagedFixture(s, s"$dir/lineitem.parquet",
-      "lineitem-manifest-optimize", dir, "v1") { d =>
+    Tables.stagedFixture(s, dir, "lineitem-manifest-optimize") { d =>
       val li = Tables.lineitem(s, dir)
       for (m <- 0 to 3)
         graft.sources.Layout.appendManifested(
@@ -4257,8 +4232,7 @@ object Relational {
     * orphan in data/ (crashed-append residue), then both GC passes with
     * the certificate q_layout_vacuum's contract documents. */
   def stagedManifestVacuumLayout(s: SparkSession, dir: String): String =
-    Tables.stagedFixture(s, s"$dir/lineitem.parquet",
-      "lineitem-manifest-vacuum", dir, "v1") { d =>
+    Tables.stagedFixture(s, dir, "lineitem-manifest-vacuum") { d =>
       import org.apache.hadoop.fs.Path
       val li = Tables.lineitem(s, dir)
       graft.sources.Layout.writeManifested(li, d, "l_shipdate", numFiles = 12)
@@ -4296,8 +4270,7 @@ object Relational {
     * Certificate: source file set + version untouched; clone data dir
     * holds exactly the rewrite outputs. Returns the CLONE directory. */
   def stagedManifestCloneLayout(s: SparkSession, dir: String): String = {
-    val d = Tables.stagedFixture(s, s"$dir/lineitem.parquet",
-      "lineitem-manifest-clone", dir, "v1") { d =>
+    val d = Tables.stagedFixture(s, dir, "lineitem-manifest-clone") { d =>
       import org.apache.hadoop.fs.Path
       val fs = new Path(d).getFileSystem(s.sparkContext.hadoopConfiguration)
       graft.sources.Layout.writeManifested(
@@ -4357,8 +4330,7 @@ object Relational {
     * the first thing a multi-team lakehouse hits: two maintenance jobs on
     * one table, correctness decided at the version rename. */
   def stagedManifestConcurrentLayout(s: SparkSession, dir: String): String =
-    Tables.stagedFixture(s, s"$dir/lineitem.parquet",
-      "lineitem-manifest-concurrent", dir, "v1") { d =>
+    Tables.stagedFixture(s, dir, "lineitem-manifest-concurrent") { d =>
       import graft.sources.Layout
       def ts(x: String) = lit(x).cast("timestamp")
       Layout.writeManifested(Tables.lineitem(s, dir), d, "l_shipdate",
@@ -4408,8 +4380,7 @@ object Relational {
     * mtime)-IDENTICAL across the rename — a rename that touched any byte
     * fails loudly — and the manifest gained exactly one 'rename' row. */
   def stagedManifestRenameLayout(s: SparkSession, dir: String): String =
-    Tables.stagedFixture(s, s"$dir/lineitem.parquet",
-      "lineitem-manifest-rename", dir, "v1") { d =>
+    Tables.stagedFixture(s, dir, "lineitem-manifest-rename") { d =>
       import org.apache.hadoop.fs.Path
       val fs = new Path(d).getFileSystem(s.sparkContext.hadoopConfiguration)
       graft.sources.Layout.writeManifested(
@@ -4436,8 +4407,7 @@ object Relational {
     * artifact exists, and its position count equals the predicate's
     * matching rows exactly. */
   def stagedManifestDvLayout(s: SparkSession, dir: String): String =
-    Tables.stagedFixture(s, s"$dir/lineitem.parquet",
-      "lineitem-manifest-dv", dir, "v1") { d =>
+    Tables.stagedFixture(s, dir, "lineitem-manifest-dv") { d =>
       import org.apache.hadoop.fs.Path
       val fs = new Path(d).getFileSystem(s.sparkContext.hadoopConfiguration)
       val li = Tables.lineitem(s, dir)
@@ -4468,8 +4438,7 @@ object Relational {
     * commits normally. Final table = everything except the rejected
     * batch, provable by the oracle's predicate. */
   def stagedManifestConstraintLayout(s: SparkSession, dir: String): String =
-    Tables.stagedFixture(s, s"$dir/lineitem.parquet",
-      "lineitem-manifest-constraint", dir, "v1") { d =>
+    Tables.stagedFixture(s, dir, "lineitem-manifest-constraint") { d =>
       import graft.sources.Layout
       val li = Tables.lineitem(s, dir)
       val check = col("l_quantity") > 0
@@ -4499,8 +4468,7 @@ object Relational {
   /** The 2-D-manifested hilbert-clustered layout q_layout_skipping plans
     * from (r17), staged once per lineitem snapshot. */
   def staged2DManifestLayout(s: SparkSession, dir: String): String =
-    Tables.stagedFixture(s, s"$dir/lineitem.parquet",
-      "lineitem-manifest-2d", dir, "v1") { d =>
+    Tables.stagedFixture(s, dir, "lineitem-manifest-2d") { d =>
       graft.sources.Layout.writeManifested2D(
         Tables.lineitem(s, dir), d, "l_partkey", "l_suppkey", numFiles = 16)
     }
@@ -4511,8 +4479,7 @@ object Relational {
     * in one pass. Certificate: the sidecar covers every live file and no
     * file exceeds the 2048-word geometry. */
   def stagedBloomLayout(s: SparkSession, dir: String): String =
-    Tables.stagedFixture(s, s"$dir/lineitem.parquet",
-      "lineitem-manifest-bloom", dir, "v3") { d => // v3: geometry + coverage markers
+    Tables.stagedFixture(s, dir, "lineitem-manifest-bloom") { d =>
       import graft.sources.Layout
       Layout.writeManifested(Tables.lineitem(s, dir), d, "l_shipdate",
         numFiles = 12)
@@ -4539,8 +4506,7 @@ object Relational {
     * the branch — passes audit, publishes at exactly version+1, and the
     * refs dir is empty after. Final table = full lineitem. */
   def stagedWapLayout(s: SparkSession, dir: String): String =
-    Tables.stagedFixture(s, s"$dir/lineitem.parquet",
-      "lineitem-manifest-wap", dir, "v1") { d =>
+    Tables.stagedFixture(s, dir, "lineitem-manifest-wap") { d =>
       import graft.sources.Layout
       val li = Tables.lineitem(s, dir)
       val lo = lit("1900-01-01").cast("timestamp")
@@ -4598,8 +4564,7 @@ object Relational {
     * prunes strictly in BOTH epochs and skipped directories hold zero
     * in-range rows. */
   def stagedSpecEvolveLayout(s: SparkSession, dir: String): String =
-    Tables.stagedFixture(s, s"$dir/orders.parquet",
-      "orders-spec-evolve", dir, "v1") { d =>
+    Tables.stagedFixture(s, dir, "orders-spec-evolve") { d =>
       import graft.sources.Layout
       val o = Tables.orders(s, dir)
       val cut = lit("1997-01-01").cast("timestamp")
@@ -4639,8 +4604,7 @@ object Relational {
     val ev = Tables.events(s, dir)
       .select(col("event_type"), col("value"),
         date_format(col("ts"), "yyyy-MM-dd").as("day"))
-    Tables.stagedFixture(s, s"$dir/events.parquet",
-      "events-by-day", dir, "v1") { d =>
+    Tables.stagedFixture(s, dir, "events-by-day") { d =>
       graft.sources.Layout.writePartitioned(ev, d, "day")
     }
   }

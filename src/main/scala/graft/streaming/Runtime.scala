@@ -35,8 +35,7 @@ object Runtime {
     // Content-keyed shared staging (Tables.stagedFixture): the signature
     // marker guards against a stale copy silently diverging from the batch
     // side if the testdata were regenerated.
-    val streamDir = stageReplay(spark, dir, "stream", "v2",
-      Seq("events.parquet")) { d =>
+    val streamDir = stageReplay(spark, dir, "stream", Seq("events.parquet")) { d =>
       java.nio.file.Files.copy(src, d.resolve("events.parquet"),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
@@ -127,7 +126,7 @@ object Runtime {
   def eventsStreamWithRedelivery(spark: SparkSession, dir: String): DataFrame = {
     Tables.prep(spark)
     val src = java.nio.file.Paths.get(s"$dir/events.parquet")
-    val streamDir = stageReplay(spark, dir, "stream-redeliver", "v2",
+    val streamDir = stageReplay(spark, dir, "stream-redeliver",
       Seq("events_a.parquet", "events_b.parquet")) { d =>
       for (name <- Seq("events_a.parquet", "events_b.parquet"))
         java.nio.file.Files.copy(src, d.resolve(name),
@@ -172,17 +171,15 @@ object Runtime {
 
   /** Replay-fixture staging: Tables.stagedFixture (content-keyed marker
     * under the SHARED replay root, so a fresh JVM skips the staging jobs —
-    * the fixtures are pure functions of the source file) plus the
-    * replay-specific twist: after `write`, strictly increasing mtimes are
-    * stamped in `names` order — the file source replays oldest-mtime first,
-    * so flush batches always FOLLOW the data batches regardless of copy
-    * timing. Returns the staged directory. */
+    * the fixtures are pure functions of the data directory and the build)
+    * plus the replay-specific twist: after `write`, strictly increasing
+    * mtimes are stamped in `names` order — the file source replays
+    * oldest-mtime first, so flush batches always FOLLOW the data batches
+    * regardless of copy timing. Returns the staged directory. */
   private def stageReplay(spark: SparkSession, dir: String, kind: String,
-                          version: String, names: Seq[String],
-                          srcName: String = "events.parquet")
+                          names: Seq[String])
                          (write: java.nio.file.Path => Unit): java.nio.file.Path = {
-    val src = s"$dir/$srcName"
-    val staged = Tables.stagedFixture(spark, src, kind, dir, version) { d =>
+    val staged = Tables.stagedFixture(spark, dir, kind) { d =>
       val p = java.nio.file.Paths.get(d)
       write(p)
       for ((name, i) <- names.zipWithIndex)
@@ -211,9 +208,8 @@ object Runtime {
     Tables.prep(spark)
     val names = Seq("events_0_flush.parquet")
     // The fixture stages the DECODED frame (ts normalized to TimestampType
-    // micros) so the sentinel arithmetic below is representation-agnostic;
-    // v6 marks the decoded layout (v5 staged raw nanos).
-    val streamDir = stageReplay(spark, dir, "stream-flush", "v6", names) { d =>
+    // micros) so the sentinel arithmetic below is representation-agnostic.
+    val streamDir = stageReplay(spark, dir, "stream-flush", names) { d =>
       val batch = Tables.events(spark, dir)
       val maxTsUs = batch.agg(max(unix_micros(col("ts")))).head().getLong(0)
       stageOne(batch.unionByName(
@@ -232,7 +228,7 @@ object Runtime {
     * whole directory) and [[runTumblingWithRestart]] (which copies the
     * files into a run-scoped arrivals directory one at a time).
     *
-    * v6: the flush sentinel sits at max + 4h, not max + 2h. The outer
+    * The flush sentinel sits at max + 4h, not max + 2h. The outer
     * stream-stream join emits a left row's null proof only when the final
     * watermark (sentinel − 1h delay) STRICTLY passes c_ts + 60min window;
     * a 2h margin gave exactly zero headroom, so an unmatched click AT the
@@ -244,7 +240,7 @@ object Runtime {
     val names = Seq("events_0_early.parquet", "events_1_late.parquet")
     // Decoded-layout fixture (see eventsStreamWithFlush); the median split
     // runs over epoch-micros of the normalized ts.
-    stageReplay(spark, dir, "stream-split", "v6", names) { d =>
+    stageReplay(spark, dir, "stream-split", names) { d =>
       val batch = Tables.events(spark, dir)
       val bounds = batch.select(
         expr("approx_percentile(unix_micros(ts), 0.5)").as("mid"),
@@ -302,7 +298,7 @@ object Runtime {
     // commits the on-time watermark, so the late file's batch is filtered
     // against max(on-time ts) − 1 h — the production shape, where the
     // stream has been running long before a straggler arrives.
-    val streamDir = stageReplay(spark, dir, "stream-late", "v2", names) { d =>
+    val streamDir = stageReplay(spark, dir, "stream-late", names) { d =>
       val batch = Tables.events(spark, dir)
       val onTime = batch.filter(col("event_id") % 5 =!= 2)
       val maxOnTimeUs = onTime.agg(max(unix_micros(col("ts")))).head().getLong(0)
@@ -359,8 +355,7 @@ object Runtime {
     Tables.prep(spark)
     val src = java.nio.file.Paths.get(s"$dir/documents.parquet")
     val names = Seq("documents_a.parquet", "documents_b.parquet")
-    val streamDir = stageReplay(spark, dir, "docs-redeliver", "v1", names,
-      srcName = "documents.parquet") { d =>
+    val streamDir = stageReplay(spark, dir, "docs-redeliver", names) { d =>
       for (name <- names)
         java.nio.file.Files.copy(src, d.resolve(name),
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
@@ -1069,12 +1064,12 @@ object Runtime {
 
   /** The deterministic merge changeset staged as a two-tick seq-ordered
     * replay (seq 1 then seq 2 — the per-key delivery order a CDC log
-    * guarantees) for [[runCdcServing]]. Content-keyed on customer.parquet. */
+    * guarantees) for [[runCdcServing]]. `changes` must derive from `dir`'s
+    * tables alone: the fixture is keyed on that directory. */
   def stageCdcReplay(spark: SparkSession, dir: String,
                      changes: DataFrame): java.nio.file.Path =
-    stageReplay(spark, dir, "cdc-replay", "v1",
-      Seq("changes_0.parquet", "changes_1.parquet"),
-      srcName = "customer.parquet") { d =>
+    stageReplay(spark, dir, "cdc-replay",
+      Seq("changes_0.parquet", "changes_1.parquet")) { d =>
       stageOne(changes.filter(col("seq") === 1), d, "changes_0.parquet")
       stageOne(changes.filter(col("seq") === 2), d, "changes_1.parquet")
     }
@@ -1121,8 +1116,7 @@ object Runtime {
   private def corpusArrivalsDir(spark: SparkSession,
                                 dir: String): java.nio.file.Path = {
     val names = (0 until 3).map(i => s"arrivals_$i.parquet")
-    stageReplay(spark, dir, "docs-corpus-dedup", "v1", names,
-      srcName = "documents.parquet") { d =>
+    stageReplay(spark, dir, "docs-corpus-dedup", names) { d =>
       val batch = Tables.documents(spark, dir)
         .filter(col("doc_id") % 10 === 3)
         .select(col("doc_id"), col("text"), col("source"))

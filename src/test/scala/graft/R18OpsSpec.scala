@@ -122,8 +122,8 @@ class R18OpsSpec extends AnyFunSuite {
     assert(recall >= 0.7, s"recall $recall vs survivor brute force")
     // Compaction folds the tombstones in: the physical files lose every
     // deleted id, the sidecar is gone, and the search answer is identical.
-    val path = Tables.stagedFixture(spark, s"$Sf0001/embeddings.parquet",
-      "ivf-delete", Sf0001, "v1")(_ => fail("fixture must already be staged"))
+    val path = Tables.stagedFixture(spark, Sf0001, "ivf-delete")(
+      _ => fail("fixture must already be staged"))
     val index = ml.Ivf.DiskIndex(path,
       org.apache.spark.ml.clustering.KMeansModel.load(s"$path/_quantizer"),
       "embedding", "vec_id", ml.Ivf.storedNProbe(path))

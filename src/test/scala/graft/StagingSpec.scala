@@ -4,14 +4,16 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
-/** Tables.stagedFixture contract: content-keyed reuse across calls, version
-  * invalidation, and — the ADVICE r11 finding — cross-process exclusion: the
-  * clear+write+marker sequence must never interleave between two stagers of
-  * the same fixture. The lock is a filesystem file, so same-JVM threads
-  * exercise exactly the code path two JVMs would. */
+/** Tables.stagedFixture contract: reuse while the data directory and the
+  * build are unchanged, restaging when either changes (including a table
+  * the fixture reads beside its main one), and — the ADVICE r11 finding —
+  * cross-process exclusion: the clear+write+marker sequence must never
+  * interleave between two stagers of the same fixture. The lock is a
+  * filesystem file, so same-JVM threads exercise exactly the code path two
+  * JVMs would. */
 class StagingSpec extends AnyFunSuite {
   private val spark = SparkFixture.spark
-  private val Src = s"${SparkFixture.Sf0001}/events.parquet"
+  private val Data = SparkFixture.Sf0001
 
   /** Runs `body` with graft.replay.dir pointed at a throwaway root, then
     * restores the previous conf (the session is shared across suites). */
@@ -29,21 +31,96 @@ class StagingSpec extends AnyFunSuite {
     }
   }
 
-  test("stagedFixture stages once, reuses by signature, restages on version bump") {
+  /** Runs `body` on a writable copy of the sf0.001 data directory. */
+  private def withDataCopy[A](body: String => A): A = {
+    val copy = Files.createTempDirectory("graft-staging-data")
+    try {
+      val listing = Files.list(Paths.get(Data))
+      try listing.forEach(f => Files.copy(f, copy.resolve(f.getFileName)))
+      finally listing.close()
+      body(copy.toString)
+    } finally Tables.deleteRecursively(copy.toString)
+  }
+
+  private def marker(prefix: String, dir: String) =
+    Paths.get(Tables.replayDir(spark, prefix, dir), ".staged")
+
+  test("stagedFixture stages once per data directory and build, restages when a table changes") {
+    withReplayRoot { _ =>
+      withDataCopy { dir =>
+        val writes = new AtomicInteger(0)
+        def stage() =
+          Tables.stagedFixture(spark, dir, "spec") { d =>
+            Files.writeString(Paths.get(d, "data.txt"), s"w${writes.incrementAndGet()}")
+          }
+        val d1 = stage()
+        val d2 = stage()
+        assert(d1 == d2 && writes.get() == 1, "fresh marker must skip the write")
+        assert(Files.readString(Paths.get(d1, "data.txt")) == "w1")
+        Files.delete(Paths.get(dir, "region.parquet")) // the copy is read-only
+        Files.writeString(Paths.get(dir, "region.parquet"), "rewritten")
+        stage()
+        assert(writes.get() == 2, "a changed table must invalidate the marker")
+        assert(Files.readString(Paths.get(d1, "data.txt")) == "w2")
+      }
+    }
+  }
+
+  test("stagedFixture restages a fixture whose marker another build wrote") {
     withReplayRoot { _ =>
       val writes = new AtomicInteger(0)
-      def stage(version: String) =
-        Tables.stagedFixture(spark, Src, "spec", "fix", version) { d =>
-          writes.incrementAndGet()
-          Files.writeString(Paths.get(d, "data.txt"), version)
-        }
-      val d1 = stage("v1")
-      val d2 = stage("v1")
-      assert(d1 == d2 && writes.get() == 1, "fresh marker must skip the write")
-      assert(Files.readString(Paths.get(d1, "data.txt")) == "v1")
-      stage("v2")
-      assert(writes.get() == 2, "version bump must invalidate the marker")
-      assert(Files.readString(Paths.get(d1, "data.txt")) == "v2")
+      def stage() = Tables.stagedFixture(spark, Data, "spec-build") { _ =>
+        writes.incrementAndGet()
+      }
+      stage()
+      val m = marker("spec-build", Data)
+      val Array(data, build) = Files.readString(m).split(" ")
+      Files.writeString(m, s"$data ${"0" * build.length}")
+      stage()
+      assert(writes.get() == 2, "a marker from another build must restage")
+      assert(Files.readString(m) == s"$data $build")
+      stage()
+      assert(writes.get() == 2, "the restaged marker must be reused")
+    }
+  }
+
+  test("stagedFixture signs parquet confs set away from their defaults, not ones set to them") {
+    withReplayRoot { _ =>
+      val writes = new AtomicInteger(0)
+      def stage() = Tables.stagedFixture(spark, Data, "spec-conf") { _ =>
+        writes.incrementAndGet()
+      }
+      val key = "spark.sql.parquet.outputTimestampType"
+      val prev = spark.conf.getAll.get(key) // getOption would return the default
+      try {
+        spark.conf.unset(key)
+        stage()
+        spark.conf.set(key, "INT96") // the default, set explicitly
+        stage()
+        assert(writes.get() == 1, "a conf set to its default must not restage")
+        spark.conf.set(key, "TIMESTAMP_MICROS")
+        stage()
+        assert(writes.get() == 2, "a changed parquet conf must restage")
+      } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+  }
+
+  test("stagedTxnLayouts restages when only embeddings.parquet changes") {
+    withReplayRoot { _ =>
+      withDataCopy { dir =>
+        queries.Relational.stagedTxnLayouts(spark, dir)
+        val m = marker("txn-layouts", dir)
+        val before = Files.readString(m)
+        // Rewrite the sibling table the fixture reads beside documents.
+        val fresh = s"$dir/embeddings.new"
+        Tables.embeddings(spark, dir).filter("vec_id % 2 = 0")
+          .coalesce(1).write.parquet(fresh)
+        Tables.deleteRecursively(s"$dir/embeddings.parquet")
+        Files.move(Paths.get(fresh), Paths.get(s"$dir/embeddings.parquet"))
+        queries.Relational.stagedTxnLayouts(spark, dir)
+        assert(Files.readString(m) != before,
+          "a rewritten embeddings table must restage the txn layouts")
+      }
     }
   }
 
@@ -53,7 +130,7 @@ class StagingSpec extends AnyFunSuite {
       val inWrite = new AtomicInteger(0)
       val overlaps = new AtomicInteger(0)
       def stage() =
-        Tables.stagedFixture(spark, Src, "spec", "race", "v1") { d =>
+        Tables.stagedFixture(spark, Data, "race") { d =>
           if (inWrite.incrementAndGet() > 1) overlaps.incrementAndGet()
           writes.incrementAndGet()
           Thread.sleep(300) // widen the window a racing stager would hit
