@@ -45,7 +45,7 @@ class StagingSpec extends AnyFunSuite {
   private def marker(prefix: String, dir: String) =
     Paths.get(Tables.replayDir(spark, prefix, dir), ".staged")
 
-  test("stagedFixture stages once per data directory and build, restages when a table changes") {
+  test("stagedFixture stages once per data dir and build, restages when a table changes") {
     withReplayRoot { _ =>
       withDataCopy { dir =>
         val writes = new AtomicInteger(0)
