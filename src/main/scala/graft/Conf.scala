@@ -27,7 +27,7 @@ object Conf {
     * (global ntile, few-valued-partition running sums, single-buffer
     * percentiles, per-key count windows) are acceptable. Past ~1 GiB one
     * sort task becomes the whole job's critical path, so the size routers
-    * (ScaleOps.routeBySize and q_pack_sequences' inline gate) switch to
+    * (ScaleOps.routeBySize and q_ml_eval_auc's inline gate) switch to
     * their prefix-scan or join-back forms; ScaleOps.persistIfBig and the
     * Components driver gate read it too. */
   val OneTaskSortMaxBytes: Long = 1L << 30

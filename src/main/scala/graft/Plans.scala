@@ -3,61 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
-/** Physical-plan snapshot tool: dumps `explain("formatted")` for the
-  * headline queries into PLANS.md — the plan-shape audit trail (pushdown,
+/** Physical-plan snapshot tool: dumps `explain("formatted")` for every
+  * query key into PLANS.md — the plan-shape audit trail (pushdown,
   * broadcast choices, codegen spans, shuffle count) that the per-operator
   * scale comments claim. Regenerate after plan-affecting changes:
-  * `sbt "runMain graft.Plans"`. */
+  * `sbt "runMain graft.Plans"`; `sbt "runMain graft.Plans <dir> <outDir>
+  * <key>..."` writes one `<key>.txt` per named key instead. */
 object Plans {
-
-  val headline = Seq(
-    "q_agg_pricing", "q_join_multiway", "q_join_theta", "q_join_asof",
-    "q_window_rank", "q_dedup_minhash", "q_dedup_ngram", "q_sim_cosine_topk",
-    "q_knn_bruteforce", "q_text_tfidf", "q_stream_session", "q_stream_join",
-    "q_split_contamination", "q_pack_sequences", "q_join_bloom",
-    "q_merge_upsert", "q_scd2_snapshot",
-    "q_sessionize_gap", "q_text_perplexity", "q_text_collocations",
-    "q_stats_outliers", "q_join_full", "q_events_anomaly",
-    "q_quality_constraints", "q_layout_evolve",
-    "q_dedup_incremental", "q_dedup_components_incr",
-    "q_layout_manifest_append",
-    "q_merge_cdf", "q_agg_view_maintain", "q_dedup_canonical",
-    "q_ml_tree_split", "q_ml_gbdt_round", "q_ml_eval_auc",
-    "q_window_distinct", "q_text_dup_spans", "q_join_view_maintain",
-    "q_graph_triangles", "q_sql_tpch", "q_sql_correlated",
-    "q_sql_recursive", "q_sql_lateral", "q_agg_corr",
-    "q_agg_rollup_filter", "q_ml_pipeline",
-    "q_agg_rollup_join", "q_agg_heavyhitters",
-    "q_agg_rollup_grain", "q_agg_quantile_sketch", "q_text_dup_excise",
-    "q_join_skewed",
-    "q_text_bm25", "q_sim_hybrid_rrf", "q_ml_als_step", "q_quality_drift",
-    "q_sample_weighted", "q_graph_sssp", "q_layout_vacuum", "q_sql_ctas",
-    "q_sql_pivot", "q_dedup_semantic", "q_events_pattern",
-    "q_layout_clone", "q_ml_eval_roc", "q_ml_kfold", "q_agg_bitmap",
-    "q_window_decay", "q_events_markov", "q_events_densify",
-    "q_layout_analyze",
-    "q_join_range", "q_agg_weighted_median", "q_window_median",
-    "q_events_attribution", "q_agg_argmax", "q_dedup_media",
-    "q_stats_winsorize", "q_agg_moments", "q_events_rfm",
-    "q_join_asof_nearest", "q_source_xml", "q_set_except_all",
-    "q_funnel_latency", "q_text_ngram_lm", "q_agg_topk_group",
-    "q_stream_anomaly", "q_ml_isotonic",
-    "q_join_interval_overlap", "q_window_cume", "q_set_intersect_all",
-    "q_layout_concurrent", "q_layout_cbo", "q_layout_rename",
-    "q_layout_dv", "q_layout_hilbert", "q_text_unigram_encode",
-    "q_text_wordpiece_encode", "q_layout_skipping", "q_layout_constraint",
-    "q_layout_bloom_index", "q_layout_wap", "q_agg_mode", "q_ml_svm_step",
-    "q_events_sequence", "q_graph_label_prop", "q_text_gopher", "q_sim_sq8",
-    "q_stats_ttest", "q_stats_chisq", "q_graph_cooccur", "q_text_flesch",
-    "q_ml_adaboost_round", "q_layout_partition_evolve",
-    "q_ml_target_encode", "q_ml_woe_iv", "q_ml_chi2_select",
-    "q_layout_stats_merge", "q_events_forecast",
-    "q_ml_kmeanspp", "q_dedup_containment", "q_events_changepoint",
-    "q_layout_cbo_hist", "q_ml_gbdt_converged", "q_sim_ivf_delete",
-    "q_text_bpe_bytes",
-    "q_layout_txn", "q_layout_cbo_incr", "q_stream_dedup_corpus",
-    "q_media_quarantine", "q_sim_ivf_rebuild",
-    "q_ml_eval_ranking", "q_quality_drift_embed")
 
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
@@ -91,14 +43,15 @@ object Plans {
     sb ++= "look for `PushedFilters`/pruned `ReadSchema` at scans, `BroadcastHashJoin`\n"
     sb ++= "on dimension joins, and partial→final `HashAggregate` pairs around single\n"
     sb ++= "`Exchange`s.\n"
-    headline.foreach { name =>
+    val keys = SparkEntry.queries.keys.toSeq.sorted
+    keys.foreach { name =>
       val df = SparkEntry.queries(name)(spark, dir)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       sb ++= s"\n## $name\n\n```\n$plan```\n"
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
-    println(s"[plans] wrote PLANS.md (${headline.size} queries)")
+    println(s"[plans] wrote PLANS.md (${keys.size} queries)")
     spark.stop()
   }
 }

@@ -234,21 +234,10 @@ object ScaleSoak {
         Relational.medianAggForm, Relational.medianScaleForm, gate),
       ("ntile", () => Tables.customer(spark, out),
         Windows.ntileWindowForm, Windows.ntileScaleForm, gate),
-      // quota's production gate is 64x (WindowGroupLimit bounds the rank
-      // window's single-task volume to ~k x mapPartitions rows — see
-      // quotaRouted); the soak table sits legitimately below it.
-      ("quota", () => Tables.documents(spark, out),
-        LlmOps.quotaWindowForm, LlmOps.quotaScaleForm, gate * 64),
       ("tfidf", () => Tables.documents(spark, out),
         LlmOps.tfidfWindowForm, LlmOps.tfidfScaleForm, gate),
       ("boilerplate", () => Tables.documents(spark, out),
         LlmOps.boilerplateWindowForm, LlmOps.boilerplateScaleForm, gate),
-      // pack's own gate is 8x (fixed 8 shards sort n/8 per task), so the
-      // soak table sits legitimately BELOW it; forms forced via the router
-      // parameter for the timing/equality comparison.
-      ("pack", () => Tables.documents(spark, out),
-        LlmOps.packSequencesRouted(Long.MaxValue),
-        LlmOps.packSequencesRouted(0L), gate * 8),
       // bloom is an A/B pair, not a size-routed form: "window" = the plain
       // fact⋈dim join, "scale" = the same join behind BloomJoin.prefilter.
       // Bit-equal by construction (the probe is semantically invisible);
@@ -273,6 +262,10 @@ object ScaleSoak {
     // twin checksum (correctness stays covered by the oracle gate at test
     // SFs; the checksum here just forces full materialization).
     val solos: Seq[(String, () => DataFrame, Q)] = Seq(
+      // One-form keys on the prefix scan (their window forms are test-side
+      // references only).
+      ("quota", () => Tables.documents(spark, out), LlmOps.qSampleQuota),
+      ("pack", () => Tables.documents(spark, out), LlmOps.qPackSequences),
       ("perplexity", () => Tables.documents(spark, out), LlmOps.qTextPerplexity),
       // BM25 over its own prefixed-vocabulary staging (see the staging
       // comment above): ONE corpus explode+agg (persisted) serves the

@@ -248,6 +248,7 @@ object Tables {
         // A rollup spec pinned to (or sourced from) this artifact must not
         // serve the restage query — or anything after — from stale data.
         graft.plans.RollupRewrite.invalidate(staged)
+        dropTablesUnder(spark, staged)
         deleteRecursively(staged)
         Files.createDirectories(Paths.get(staged))
         write(staged)
@@ -255,6 +256,18 @@ object Tables {
       }
       staged
     } finally if (locked) Files.deleteIfExists(lock)
+  }
+
+  /** Drop every catalog table stored under `path`, a fixture about to
+    * restage, so that no table listing its old files outlives the restage:
+    * the fixture's readers register their tables again. */
+  private def dropTablesUnder(spark: SparkSession, path: String): Unit = {
+    val catalog = spark.sharedState.externalCatalog
+    val root = java.nio.file.Paths.get(path)
+    for (db <- catalog.listDatabases(); t <- catalog.listTables(db);
+         loc <- catalog.getTable(db, t).storage.locationUri
+         if java.nio.file.Paths.get(loc.getPath).startsWith(root))
+      spark.sql(s"DROP TABLE IF EXISTS `$db`.`$t`")
   }
 
   /** SHA-256 of the program's compiled classes — every file under the

@@ -1,13 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow,
-  UnsafeProjection}
-import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
-import org.apache.spark.sql.catalyst.util.MathUtils
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference}
+import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{ColumnBridge, InternalFrames}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Cluster-scale rewrites of operators whose naive form has a scale-killer
@@ -42,17 +39,17 @@ object ScaleOps {
     if (estimatedBytes(source) <= BigInt(maxBytes)) broadcast(df) else df
 
   /** The SIZE-ROUTER convention shared by the routed queries (ntile,
-    * median, weighted median, winsorize, RFM, tfidf, boilerplate, quota,
-    * AUC): the declared one-task form while `gate`'s Catalyst estimate fits
-    * a single sort task, the scale rewrite past it. Route forms are
+    * median, weighted median, winsorize, RFM, tfidf, boilerplate, AUC):
+    * the declared one-task form while `gate`'s Catalyst estimate fits a
+    * single sort task, the scale rewrite past it. Route forms are
     * bit-identical (ScaleOpsSpec), so routing never changes results — only
     * the plan shape. Each router states its crossover from one probe
-    * (2026-10: one JVM, 4 CPUs, noop-forced, median of 3 after a warm-up;
-    * the scale form's time over the window form's, median over four JVM
-    * runs, or ten with the interquartile range for q_text_tfidf and the
-    * five other keys within 0.25 at sf0.01).
-    * A key whose scale form is within 0.25 of its window form at sf0.01
-    * and no slower at sf0.1 runs the scale form alone (q_window_range). */
+    * (2026-10: one JVM per run, 4 CPUs, 4 shuffle partitions, noop-forced,
+    * median of 3 after a warm-up; the scale form's time over the window
+    * form's in the same JVM, median over ten JVM runs at sf0.01 and at
+    * sf0.1). A key whose scale form is within 0.25 of its window form at
+    * sf0.01 and no slower at sf0.1 runs the scale form alone
+    * (q_window_range, q_sample_quota, q_pack_sequences). */
   def routeBySize(gate: DataFrame, maxOneTaskBytes: Long)
                  (below: => DataFrame)(above: => DataFrame): DataFrame =
     if (estimatedBytes(gate) <= BigInt(maxOneTaskBytes)) below else above
@@ -165,16 +162,6 @@ object ScaleOps {
     else df
   }
 
-  /** What [[prefixScan]] returns: the input rows with their running sums
-    * appended, and each sum's total over all rows as a Long or a
-    * java.math.BigDecimal, null when there is no value. The totals are
-    * folded on the driver from the carry job's partials; a one-partition
-    * scan runs no carry job, so it runs that job when `totals` is first
-    * read. */
-  final class PrefixScan(val frame: DataFrame, totalsOf: () => IndexedSeq[Any]) {
-    lazy val totals: IndexedSeq[Any] = totalsOf()
-  }
-
   /** EXACT grouped running totals without a one-task window: the one
     * primitive under every scale form below. It has the MapReduce shape
     * with a combiner: per-split partials, a driver prefix over them, then
@@ -189,6 +176,9 @@ object ScaleOps {
     * first m order columns. Rows tied on those columns are one peer run,
     * so `name_before` of a count is `rank() - 1` over them.
     *
+    * The returned frame is lazy: building it runs no job. Its plan is one
+    * [[PrefixScan]] node (planned by [[PrefixScanStrategy]], which this
+    * attaches to the frame's session) over:
     *  1. One range exchange on (group ++ order), sorted within partitions.
     *     It takes one partition per input split (the input's Catalyst
     *     estimate over `spark.sql.files.maxPartitionBytes`, the signal
@@ -203,182 +193,51 @@ object ScaleOps {
     *     bounds only balance the partitions; exactness never depends on
     *     them. Equal full keys land in one partition, so only a group or a
     *     peer run can span partitions.
-    *  2. One job reads the shuffle output and returns each partition's
-    *     boundary partials: its first and last key and the sums of its last
-    *     group's rows, all of them and those before its last peer run. The
-    *     driver folds them, in partition order, into each partition's carry.
-    *  3. One map over the same shuffle output adds the carries. It reads
-    *     the output through `queryExecution.toRdd`, so the shuffle is not
-    *     run again.
+    *  2. When the exchange is wider than one partition, one job over its
+    *     output returns each partition's boundary partials: its first and
+    *     last key and the sums of its last group's rows, all of them and
+    *     those before its last peer run. The driver folds them, in
+    *     partition order, into each partition's carry.
+    *  3. One map over the same output adds the carries.
     *
-    * An input that fits one split takes one range partition: Spark's
-    * range partitioner takes no sample for it, and its carry is empty, so
-    * step 2 does not run and the scan is one shuffle, one sort and one
-    * map, the window form's shape. Steps 1 and 2 run when this is called;
-    * the returned frame's plan is the map of step 3. Sums are exact:
-    * integral values sum as Long, and decimals as Spark Decimal of the
-    * window form's result type (precision + 10, capped at 38). An overflow
-    * fails with the SQL sum's ARITHMETIC_OVERFLOW. Null values are skipped,
-    * as SQL sum skips them, and a run of nulls alone is null. Null group
-    * keys form one group. Output types equal the window form's. */
+    * Both run inside the caller's query, when it runs. An input that fits
+    * one split takes one range partition: Spark's range partitioner takes
+    * no sample for it and there is no carry, so the scan is one shuffle,
+    * one sort and one map, the window form's shape, and an aggregate or a
+    * sort above it adds no exchange. Sums are exact: integral values sum as
+    * Long, and decimals as Spark Decimal of the window form's result type
+    * (precision + 10, capped at 38). An overflow fails with the SQL sum's
+    * ARITHMETIC_OVERFLOW. Null values are skipped, as SQL sum skips them,
+    * and a run of nulls alone is null. Null group keys form one group.
+    * Output types equal the window form's. A key column may not be an
+    * integer literal: a sort reads one as a column position. */
   def prefixScan(df: DataFrame, group: Seq[Column], order: Seq[Column],
-                 sums: Seq[(String, Column)], peers: Int = 0): PrefixScan = {
+                 sums: Seq[(String, Column)], peers: Int = 0): DataFrame = {
     require(peers >= 0 && peers <= order.size, s"peers must be in 0..${order.size}")
     val spark = df.sparkSession
-    // Key columns without their direction, and each key's sort column by
-    // name (group keys ascending, order keys as given).
-    val keys = group.map(c => (c, (n: String) => col(n).asc)) ++ order.map { c =>
-      val (key, asc, nullsFirst) = ColumnBridge.sortKey(c)
-      (key, (n: String) => (asc, nullsFirst) match {
-        case (true, true) => col(n).asc_nulls_first
-        case (true, false) => col(n).asc_nulls_last
-        case (false, true) => col(n).desc_nulls_first
-        case (false, false) => col(n).desc_nulls_last
-      })
-    }
-    val sumTypes: IndexedSeq[DataType] =
-      df.select(sums.map(_._2): _*).schema.map(_.dataType match {
-        case ByteType | ShortType | IntegerType | LongType => LongType
-        case d: DecimalType => DecimalType(math.min(d.precision + 10, 38), d.scale)
-        case t => throw new IllegalArgumentException(
-          s"prefixScan sums integral or decimal values, not $t")
-      }).toIndexedSeq
-    val kNames = keys.indices.map(i => s"__px_k$i")
-    val vNames = sums.indices.map(i => s"__px_v$i")
-    val base = df.select(col("*") +:
-      (keys.zip(kNames).map { case ((c, _), n) => c.as(n) } ++
-        sums.zip(vNames).zip(sumTypes).map { case (((_, c), n), t) => c.cast(t).as(n) }): _*)
-    val width = df.columns.length
-    val keyFields = base.schema.fields.slice(width, width + group.size + peers)
-    val spec = ScanSpec(StructType(keyFields), group.size,
-      width until width + keyFields.length,
-      width + keys.size until width + keys.size + sums.size, sumTypes)
-    val sortBy = keys.zip(kNames).map { case ((_, byName), n) => byName(n) }
+    val sumTypes = df.select(sums.map(_._2): _*).schema.map(_.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => LongType
+      case d: DecimalType => DecimalType(math.min(d.precision + 10, 38), d.scale)
+      case t => throw new IllegalArgumentException(
+        s"prefixScan sums integral or decimal values, not $t")
+    })
+    val values = df.select(sums.zip(sumTypes).map { case ((_, c), t) => c.cast(t) }: _*)
+      .queryExecution.analyzed.expressions.map {
+        case a: Alias => a.child
+        case e => e
+      }
     val split = BigInt(spark.sessionState.conf.filesMaxPartitionBytes)
     val parts = ((estimatedBytes(df) + split - 1) / split)
       .min(spark.sessionState.conf.numShufflePartitions).max(1).toInt
-    val rows = base
-      .repartitionByRange(parts, sortBy: _*)
-      .sortWithinPartitions(sortBy: _*)
-      .queryExecution.toRdd
-
-    // Step 2: the boundary partials, then the carries in partition order.
-    val none = new Array[Any](sums.size)
-    lazy val bounds = rows.mapPartitions { it =>
-      val s = new Scanner(spec, none, none, totals = true)
-      var first: InternalRow = null
-      it.foreach { r => s.step(r); if (first == null) first = s.key.copy() }
-      Iterator(Option(first).map(f => Boundary(f, s.key.copy(), s.run, s.before, s.all)))
-    }.collect()
-    val carries = new Array[(Array[Any], Array[Any])](parts)
-    var last: Option[(InternalRow, Array[Any], Array[Any])] = None
-    if (parts > 1)
-      for ((b, p) <- bounds.zipWithIndex; Boundary(first, end, lastRun, lastBefore, _) <- b) {
-        val (run, before) = last match {
-          case Some((k, r, bf)) if spec.sameGroup.equiv(k, first) =>
-            (r, if (spec.sameKey.equiv(k, first)) bf else r)
-          case _ => (none, none)
-        }
-        carries(p) = (run, before)
-        val oneGroup = spec.sameGroup.equiv(first, end)
-        last = Some((end,
-          if (oneGroup) spec.plus(run, lastRun) else lastRun,
-          if (spec.sameKey.equiv(first, end)) before
-          else if (oneGroup) spec.plus(run, lastBefore) else lastBefore))
-      }
-
-    // Step 3: the running sums with the carries applied.
-    val applied = rows.mapPartitionsWithIndex[InternalRow] { (p, it) =>
-      val (run, before) = Option(carries(p)).getOrElse((none, none))
-      val s = new Scanner(spec, run, before, totals = false)
-      it.map { r =>
-        s.step(r)
-        new JoinedRow(r, new GenericInternalRow(
-          if (peers > 0) s.run ++ s.before else s.run.clone()))
-      }
-    }
-    val outFields = sums.map(_._1).zip(sumTypes).map { case (n, t) => StructField(n, t) } ++
-      (if (peers > 0) sums.map(_._1).zip(sumTypes)
-        .map { case (n, t) => StructField(s"${n}_before", t) } else Nil)
-    new PrefixScan(
-      InternalFrames.create(spark, applied, StructType(base.schema.fields ++ outFields))
-        .drop(kNames ++ vNames: _*),
-      () => bounds.flatten.foldLeft(none)((t, b) => spec.plus(t, b.all)).toIndexedSeq.map {
-        case d: Decimal => d.toJavaBigDecimal
-        case x => x
-      })
-  }
-
-  /** A non-empty partition's partials for [[prefixScan]]'s carry: its first
-    * and last key, and its scan state after the last row — the sums of the
-    * last group's rows, of those before the last peer run, and of all rows
-    * (each scanned from an empty carry). */
-  private final case class Boundary(first: InternalRow, last: InternalRow,
-      run: Array[Any], before: Array[Any], all: Array[Any])
-
-  /** Where [[prefixScan]]'s scan finds its key (group ++ peer columns) and
-    * sum columns in a row, and how it compares keys and adds sums. */
-  private final case class ScanSpec(keys: StructType, nGroup: Int,
-      keyAt: IndexedSeq[Int], sumAt: IndexedSeq[Int], sumTypes: IndexedSeq[DataType]) {
-    @transient lazy val sameGroup: Ordering[InternalRow] =
-      LazilyGeneratedOrdering.forSchema(StructType(keys.take(nGroup)))
-    @transient lazy val sameKey: Ordering[InternalRow] =
-      LazilyGeneratedOrdering.forSchema(keys)
-
-    def keyOf(): UnsafeProjection = UnsafeProjection.create(
-      keyAt.zip(keys).map { case (i, f) => BoundReference(i, f.dataType, nullable = true) })
-
-    def read(r: InternalRow, i: Int): Any =
-      if (r.isNullAt(sumAt(i))) null
-      else sumTypes(i) match {
-        case d: DecimalType => r.getDecimal(sumAt(i), d.precision, d.scale)
-        case _ => r.getLong(sumAt(i))
-      }
-
-    /** Sum `a + b` of one column, exact; null is the empty sum. */
-    def add(i: Int, a: Any, b: Any): Any =
-      if (a == null) b else if (b == null) a else sumTypes(i) match {
-        case d: DecimalType =>
-          graft.functions.Det.addExact(a.asInstanceOf[Decimal], b.asInstanceOf[Decimal], d)
-        case _ => MathUtils.addExact(a.asInstanceOf[Long], b.asInstanceOf[Long])
-      }
-
-    def plus(a: Array[Any], b: Array[Any]): Array[Any] =
-      Array.tabulate[Any](a.length)(i => add(i, a(i), b(i)))
-  }
-
-  /** One partition's scan in (group ++ order) order, from a carry: `run`
-    * holds the sums through the current row, `before` those before its
-    * peer run, `all` (when `totals`) those of every row scanned. */
-  private final class Scanner(spec: ScanSpec, runIn: Array[Any], beforeIn: Array[Any],
-                              totals: Boolean) {
-    // Two projections used in turn, so the previous key stays valid
-    // without a copy per row.
-    private val proj = Array.fill(2)(spec.keyOf())
-    private var turn = 0
-    var key: InternalRow = null
-    var run: Array[Any] = runIn.clone()
-    var before: Array[Any] = beforeIn.clone()
-    val all = new Array[Any](runIn.length)
-
-    def step(r: InternalRow): Unit = {
-      turn ^= 1
-      val k = proj(turn)(r)
-      if (key != null) {
-        if (!spec.sameGroup.equiv(key, k)) {
-          run = new Array[Any](run.length)
-          before = new Array[Any](run.length)
-        } else if (!spec.sameKey.equiv(key, k)) before = run.clone()
-      }
-      key = k
-      var i = 0
-      while (i < run.length) {
-        val v = spec.read(r, i)
-        run(i) = spec.add(i, run(i), v)
-        if (totals) all(i) = spec.add(i, all(i), v)
-        i += 1
-      }
-    }
+    val sortBy = group.map(_.asc) ++ order
+    val sorted = df.repartitionByRange(parts, sortBy: _*).sortWithinPartitions(sortBy: _*)
+      .queryExecution.analyzed
+    val keys = sorted.asInstanceOf[Sort].order.take(group.size + peers).map(_.child)
+    def attrs(suffix: String) = sums.map(_._1).zip(sumTypes).map { case (n, t) =>
+      AttributeReference(n + suffix, t)() }
+    PrefixScanStrategy.attach(spark)
+    ColumnBridge.frame(spark, PrefixScan(keys, group.size, values,
+      attrs("") ++ (if (peers > 0) attrs("_before") else Nil), sorted))
   }
 
   /** EXACT global row_number / rank WITHOUT a one-task whole-table window:
@@ -386,15 +245,13 @@ object ScaleOps {
     * the peer key. Appends `__pos` (row_number over `value DESC,
     * tiebreaks`), `__rnk` (rank over `value DESC` alone — one more than the
     * rows of strictly greater value, which a value tie spanning range
-    * partitions takes from the carry) and `__n` (total rows, from the
-    * scan's totals). Requires non-null `value`; positions are longs. */
-  def globalRanksDesc(df: DataFrame, value: Column, tiebreaks: Seq[Column]): DataFrame = {
-    val s = prefixScan(df, Nil, value.desc +: tiebreaks, Seq("__pos" -> lit(1L)), peers = 1)
-    s.frame
+    * partitions takes from the carry) and `__n` (total rows, a one-row
+    * count joined back). Requires non-null `value`; positions are longs. */
+  def globalRanksDesc(df: DataFrame, value: Column, tiebreaks: Seq[Column]): DataFrame =
+    prefixScan(df, Nil, value.desc +: tiebreaks, Seq("__pos" -> lit(1L)), peers = 1)
       .withColumn("__rnk", coalesce(col("__pos_before"), lit(0L)) + 1L)
-      .withColumn("__n", lit(Option(s.totals.head).getOrElse(0L)))
       .drop("__pos_before")
-  }
+      .crossJoin(broadcast(df.agg(count(lit(1)).as("__n"))))
 
   /** EXACT grouped interpolated percentiles WITHOUT a per-group
     * whole-distribution aggregation buffer.
@@ -421,7 +278,7 @@ object ScaleOps {
                             ps: Seq[Double]): DataFrame = {
     val dist = df.select(part.as("g"), v.as("v"))
       .groupBy(col("g"), col("v")).agg(count(lit(1)).as("c"))
-    val pos = prefixScan(dist, Seq(col("g")), Seq(col("v")), Seq("__cum" -> col("c"))).frame
+    val pos = prefixScan(dist, Seq(col("g")), Seq(col("v")), Seq("__cum" -> col("c")))
     val gn = pos.groupBy(col("g")).agg(max(col("__cum")).as("__n"))
     // Bracketing ranks per (group, quantile): Spark's Percentile formula —
     // 0-based position p·(n−1), lower index ⌊·⌋, interpolation fraction the
@@ -462,7 +319,7 @@ object ScaleOps {
     * running sum order-ambiguous); a null group key is one group, as the
     * window form treats it. Appends `__run`. */
   def groupedPrefixSum(df: DataFrame, part: Column, ord: Column, value: Column): DataFrame =
-    prefixScan(df, Seq(part), Seq(ord), Seq("__run" -> value)).frame
+    prefixScan(df, Seq(part), Seq(ord), Seq("__run" -> value))
 
   /** Value-range frame aggregation WITHOUT sorting giant partitions.
     *
@@ -511,7 +368,7 @@ object ScaleOps {
         .as("e"))
       .select(col("p"), col("v0"), col("e.*"))
     val resolved = prefixScan(points, Seq(col("p")), Seq(col("pt"), col("t")),
-        Seq("qc" -> col("c"), "qs" -> col("s"))).frame
+        Seq("qc" -> col("c"), "qs" -> col("s")))
       .filter(col("t") === 1)
 
     // Band per distinct value = upper prefix − lower prefix; finish the

@@ -1093,8 +1093,8 @@ object LlmOps {
   /** Size-routed q_text_tfidf — same contract as Windows.ntileRouted: both
     * forms produce identical rows, so routing never changes results, only
     * the plan shape. Crossover ([[graft.operators.ScaleOps.routeBySize]]'s
-    * probe, ten runs): the scale form takes 1.35× the window form's time at
-    * sf0.01 (1.27–1.37) and 1.18× at sf0.1 (1.06–1.27, slower in 9 of 10);
+    * probe, ten runs): the scale form takes 1.43× the window form's time at
+    * sf0.01 (1.37–1.46) and 1.17× at sf0.1 (1.09–1.23, slower in 9 of 10);
     * the r11 soak above the gate measured 0.72×, so it crosses between
     * sf0.1 and the gate. */
   def tfidfRouted(maxOneTaskBytes: Long = graft.Conf.OneTaskSortMaxBytes): Q = (s, dir) =>
@@ -1511,8 +1511,8 @@ object LlmOps {
 
   /** Size-routed q_text_boilerplate — same contract as tfidfRouted.
     * Crossover ([[graft.operators.ScaleOps.routeBySize]]'s probe, ten
-    * runs): the scale form takes 1.16× the window form's time at sf0.01 and
-    * 1.31× at sf0.1 (1.26–1.34, slower in 9 of 10); the r11 soak above the
+    * runs): the scale form takes 1.32× the window form's time at sf0.01 and
+    * 1.36× at sf0.1 (1.32–1.43, slower in 10 of 10); the r11 soak above the
     * gate measured 0.58×. */
   def boilerplateRouted(maxOneTaskBytes: Long = graft.Conf.OneTaskSortMaxBytes): Q = (s, dir) =>
     graft.operators.ScaleOps.routeBySize(Tables.documents(s, dir), maxOneTaskBytes)(
@@ -2632,65 +2632,39 @@ object LlmOps {
       .orderBy("source")
   }
 
-  /** Quota size shared by both route forms and the spec. */
+  /** Quota size shared by the key, its oracle and the spec. */
   val QuotaK = 20
 
-  private def quotaSummary(sample: DataFrame): DataFrame =
+  private[graft] def quotaSummary(sample: DataFrame): DataFrame =
     sample.groupBy(col("lang"))
       .agg(count(lit(1)).as("n_sampled"), sum(col("n_chars")).as("sum_chars"),
         min(col("doc_id")).as("min_doc"), max(col("doc_id")).as("max_doc"))
       .orderBy("lang")
 
-  /** Declared form — per-language rank window over the content-hash order.
-    * A language's partition is the whole language at 100 TB (the hot-key
-    * single-task sort), so this form holds only below the one-task gate. */
-  private[graft] val quotaWindowForm: Q = (s, dir) => {
-    val w = Window.partitionBy(col("lang")).orderBy(col("h"), col("doc_id"))
-    quotaSummary(Tables.documents(s, dir)
-      .withColumn("h", md5(col("text")))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= QuotaK))
-  }
-
-  /** Scale form — the per-language k smallest (hash, doc_id) entries found
-    * WITHOUT sorting any language partition in one task: a
+  /** The per-language k smallest (hash, doc_id) entries, found WITHOUT
+    * sorting any language partition in one task: a
     * [[graft.operators.ScaleOps.prefixScan]] count per language over
     * (md5(text), doc_id) gives each document its position, and the rows at
     * position ≤ k are the sample. (hash, doc_id) is a total order, so the
-    * sample is EXACTLY the window form's even under hash ties. Languages
-    * with fewer than k documents pass whole. */
+    * sample is EXACTLY a rank window's (`row_number() <= k`) even under
+    * hash ties. Languages with fewer than k documents pass whole. */
   def quotaSample(docs: DataFrame, k: Int): DataFrame =
     graft.operators.ScaleOps.prefixScan(docs.withColumn("h", md5(col("text"))),
         Seq(col("lang")), Seq(col("h"), col("doc_id")), Seq("__pos" -> lit(1L)))
-      .frame.filter(col("__pos") <= k).drop("__pos")
-
-  private[graft] val quotaScaleForm: Q = (s, dir) =>
-    quotaSummary(quotaSample(Tables.documents(s, dir), QuotaK))
+      .filter(col("__pos") <= k).drop("__pos")
 
   /** Per-language QUOTA SAMPLING — the per-language cap every corpus
     * pipeline applies (balance languages, bound a crawl's share): the first
     * `QuotaK` documents per language in CONTENT-HASH order (md5(text),
     * doc_id tiebreak) — content-addressed like q_sample_split, so the
     * sample is reproducible across runs/engines, carries no RNG state, and
-    * is immune to input order. SIZE-ROUTED like q_agg_median — but with a
-    * 64× gate (the pack-sequences convention): the rank window's filter
-    * `__rn <= k` triggers Spark's WindowGroupLimit push-down, which keeps
-    * only k rows per language per MAP partition before the shuffle, so the
-    * final per-language task sorts ~k × numMapPartitions rows, not the
-    * corpus (measured 42× faster than the bucketed rewrite that preceded
-    * the prefix-scan form, at a 1.5 GiB corpus in the r11 scale soak —
-    * SCALE.md). The scale form takes over
-    * where that product itself outgrows one task. Bit-identical either way
-    * (ScaleOpsSpec), so routing never changes results. Crossover
-    * ([[graft.operators.ScaleOps.routeBySize]]'s probe, ten runs): the scale
-    * form takes 1.05× the window form's time at sf0.01 and 1.11× at sf0.1
-    * (1.09–1.13, slower in 8 of 10), so the router stays. */
-  def quotaRouted(maxOneTaskBytes: Long = graft.Conf.OneTaskSortMaxBytes * 64): Q =
-    (s, dir) =>
-      graft.operators.ScaleOps.routeBySize(Tables.documents(s, dir), maxOneTaskBytes)(
-        quotaWindowForm(s, dir))(quotaScaleForm(s, dir))
-
-  val qSampleQuota: Q = quotaRouted()
+    * is immune to input order. One form: [[quotaSample]]'s prefix scan.
+    * It takes 0.74× the time of the rank window it replaced
+    * (ScaleOpsSpec.quotaWindowForm, the test reference) at sf0.01 and at
+    * sf0.1 in the ten-run probe (ROADMAP item 4): at one split the
+    * summary aggregate and sort above the scan add no exchange. */
+  val qSampleQuota: Q = (s, dir) =>
+    quotaSummary(quotaSample(Tables.documents(s, dir), QuotaK))
 
   /** WEIGHTED RESERVOIR SAMPLE (r16) — the Efraimidis-Spirakis A-Res
     * scheme (public: Efraimidis & Spirakis 2006, "Weighted random sampling
@@ -2788,44 +2762,30 @@ object LlmOps {
     * documents are concatenated in deterministic doc_id order within
     * hash-assigned shards; a document starts sequence `(running − own) div
     * budget` of its shard (greedy concatenation, 2048-token budget,
-    * whitespace tokens). Per-shard running totals are an ordinary
-    * partitioned window — shard count scales with the cluster, so no
-    * global sort ever forms. Emits per-(shard, seq) doc counts and token
-    * sums; the same expressions tagged onto a write ARE the shard/sequence
-    * layout of a packing job. */
-  /** SIZE-ROUTED (the Windows-router convention): 8 fixed shards means the
-    * plain running-sum window sorts ~n/8 rows per task — fine up to the
-    * gate, a single-task scale-killer past it, where the exact prefix scan
-    * (ScaleOps.groupedPrefixSum — bit-identical, asserted in ScaleOpsSpec)
-    * takes over. Crossover ([[graft.operators.ScaleOps.routeBySize]]'s
-    * probe, ten runs): the scale form takes 1.10× the window form's time at
-    * sf0.01 and 1.12× at sf0.1 (1.04–1.16, slower in 9 of 10), so the
-    * router stays. */
-  def packSequencesRouted(
-      maxOneTaskBytes: Long = graft.Conf.OneTaskSortMaxBytes * 8): Q = (s, dir) => {
-    val docs = Tables.documents(s, dir)
-    val toks = docs
+    * whitespace tokens). Emits per-(shard, seq) doc counts and token sums;
+    * the same expressions tagged onto a write ARE the shard/sequence
+    * layout of a packing job. The per-shard running totals are an exact
+    * prefix scan ([[graft.operators.ScaleOps.prefixScan]]), so no task
+    * sorts a whole shard, where a running-sum window over 8 fixed shards
+    * sorts ~n/8 rows per task (ScaleOpsSpec.packWindowForm, the test
+    * reference). The scan takes 0.72× the window's time at sf0.01 and
+    * 0.76× at sf0.1 in the ten-run probe (ROADMAP item 4). */
+  val qPackSequences: Q = (s, dir) => {
+    val toks = Tables.documents(s, dir)
       .select(col("doc_id"), (col("doc_id") % 8).as("shard"),
         size(split(col("text"), " ")).cast("long").as("tokens"))
-    val run =
-      if (graft.operators.ScaleOps.estimatedBytes(docs) <= BigInt(maxOneTaskBytes)) {
-        val w = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        toks.withColumn("running", sum(col("tokens")).over(w))
-      } else {
-        graft.operators.ScaleOps
-          .groupedPrefixSum(toks, col("shard"), col("doc_id"), col("tokens"))
-          .withColumnRenamed("__run", "running")
-      }
+    packStats(graft.operators.ScaleOps.prefixScan(
+      toks, Seq(col("shard")), Seq(col("doc_id")), Seq("running" -> col("tokens"))))
+  }
+
+  /** q_pack_sequences' stats from per-document running token totals. */
+  private[graft] def packStats(run: DataFrame): DataFrame =
     run
       .withColumn("seq_id", expr("(running - tokens) div 2048"))
       .groupBy(col("shard"), col("seq_id"))
       .agg(count(lit(1)).as("n_docs"), sum(col("tokens")).as("sum_tokens"),
         min(col("doc_id")).as("first_doc"), max(col("doc_id")).as("last_doc"))
       .orderBy("shard", "seq_id")
-  }
-
-  val qPackSequences: Q = packSequencesRouted()
 
   /** The END-TO-END curation pipeline as ONE declared plan — the composed
     * story every stage above tells separately: quality-filter (drop the

@@ -1086,9 +1086,8 @@ object MlSuffStats {
   }
 
   private[graft] val aucScaleForm: Q = (s, dir) =>
-    aucFromRuns(graft.operators.ScaleOps.groupedPrefixSum(
-        aucGroups(s, dir), lit(0), col("score"), col("n_g"))
-      .withColumnRenamed("__run", "run"))
+    aucFromRuns(graft.operators.ScaleOps.prefixScan(
+      aucGroups(s, dir), Nil, Seq(col("score")), Seq("run" -> col("n_g"))))
 
   /** RANKING-QUALITY EVALUATION — exact AUC (the Mann-Whitney U statistic
     * with average-rank tie handling) of a deterministic scorer
@@ -1099,11 +1098,11 @@ object MlSuffStats {
     * rank is ever materialized, and ties cost nothing extra. The prefix is
     * SIZE-ROUTED (the q_agg_median convention): a single-task window below
     * Conf.OneTaskSortMaxBytes, the exact prefix scan
-    * `ScaleOps.groupedPrefixSum` above it — R14OpsSpec pins both forms
+    * `ScaleOps.prefixScan` above it — R14OpsSpec pins both forms
     * bit-equal, so the 100 TB story is self-executing. Crossover
     * ([[graft.operators.ScaleOps.routeBySize]]'s probe, ten runs): the scale
-    * form takes 1.12× the window form's time at sf0.01 and 1.17× at sf0.1
-    * (1.10–1.24, slower in 10 of 10), so the router stays. */
+    * form takes 1.14× the window form's time at sf0.01 and 1.16× at sf0.1
+    * (1.07–1.34, slower in 9 of 10), so the router stays. */
   val qMlEvalAuc: Q = (s, dir) =>
     graft.operators.ScaleOps.routeBySize(
       Tables.embeddings(s, dir), graft.Conf.OneTaskSortMaxBytes)(

@@ -3491,10 +3491,10 @@ object Relational {
     * declared single-buffer form while the input's Catalyst estimate fits
     * one task, the exact ScaleOps rewrite past it. Identical output either
     * way, so routing never changes results — only the plan shape.
-    * Crossover ([[graft.operators.ScaleOps.routeBySize]]'s probe): the scale
-    * form takes 2.20× the window form's time at sf0.01 and 1.00× at sf0.1; it
-    * crosses at about sf0.1, too late for the one-form rule (within 0.25 at
-    * sf0.01). */
+    * Crossover ([[graft.operators.ScaleOps.routeBySize]]'s probe, ten
+    * runs): the scale form takes 1.93× the window form's time at sf0.01
+    * (1.74–2.23) and 0.97× at sf0.1 (0.91–1.06); it crosses at about sf0.1,
+    * too late for the one-form rule (within 0.25 at sf0.01). */
   def medianRouted(maxOneTaskBytes: Long = graft.Conf.OneTaskSortMaxBytes): Q =
     (s, dir) =>
       graft.operators.ScaleOps.routeBySize(Tables.orders(s, dir), maxOneTaskBytes)(
@@ -3566,11 +3566,12 @@ object Relational {
   }
 
   /** Crossover ([[graft.operators.ScaleOps.routeBySize]]'s probe, ten
-    * runs): the scale form takes 0.96× the window form's time at sf0.01 but
-    * 1.28× at sf0.1 (1.20–1.31, slower in 10 of 10): below one split the
+    * runs): the scale form takes 0.90× the window form's time at sf0.01 but
+    * 1.12× at sf0.1 (1.02–1.19, slower in 7 of 10): below one split the
     * prefix scan sorts every partial in one task, where the window sorts
-    * the three flags in parallel. The r16 soak (60M rows) measured 1.06×,
-    * so the router stays. */
+    * the three flags in parallel, and forcing the scan to four partitions
+    * gained nothing (0.99×, 0.93–1.04). The r16 soak (60M rows) measured
+    * 1.06×, so the router stays. */
   def wmedianRouted(maxOneTaskBytes: Long = graft.Conf.OneTaskSortMaxBytes): Q =
     (s, dir) =>
       graft.operators.ScaleOps.routeBySize(Tables.lineitem(s, dir), maxOneTaskBytes)(
@@ -3622,9 +3623,10 @@ object Relational {
     winsorFinish(src, q)
   }
 
-  /** Crossover ([[graft.operators.ScaleOps.routeBySize]]'s probe): the scale
-    * form takes 1.94× the window form's time at sf0.01 and 1.22× at sf0.1; the
-    * r16 soak (7.5M orders) measured 1.09×, so the router stays. */
+  /** Crossover ([[graft.operators.ScaleOps.routeBySize]]'s probe, ten
+    * runs): the scale form takes 1.84× the window form's time at sf0.01 and
+    * 1.41× at sf0.1 (1.36–1.43); the r16 soak (7.5M orders) measured 1.09×,
+    * so the router stays. */
   def winsorRouted(maxOneTaskBytes: Long = graft.Conf.OneTaskSortMaxBytes): Q =
     (s, dir) =>
       graft.operators.ScaleOps.routeBySize(Tables.orders(s, dir), maxOneTaskBytes)(
@@ -3862,9 +3864,10 @@ object Relational {
     rfmFinish(users, edges(0), edges(1), edges(2))
   }
 
-  /** Crossover ([[graft.operators.ScaleOps.routeBySize]]'s probe): the scale
-    * form takes 1.75× the window form's time at sf0.01 and 1.58× at sf0.1;
-    * the r16 soak (1.5M users) measured 1.25×, so the router stays. */
+  /** Crossover ([[graft.operators.ScaleOps.routeBySize]]'s probe, ten
+    * runs): the scale form takes 1.80× the window form's time at sf0.01 and
+    * 1.78× at sf0.1 (1.70–1.85); the r16 soak (1.5M users) measured 1.25×,
+    * so the router stays. */
   def rfmRouted(maxOneTaskBytes: Long = graft.Conf.OneTaskSortMaxBytes): Q =
     (s, dir) =>
       graft.operators.ScaleOps.routeBySize(Tables.events(s, dir), maxOneTaskBytes)(

@@ -147,10 +147,12 @@ object Windows {
     * input's Catalyst estimate fits a single sort task, the exact ScaleOps
     * rewrite past it. Both forms produce identical rows, so routing never
     * changes results, only the plan shape. Crossover
-    * ([[graft.operators.ScaleOps.routeBySize]]'s probe): the scale form takes
-    * 1.94× the window form's time at sf0.01 and 1.68× at sf0.1 (the customer
-    * table is tiny, so the scan's jobs are the whole cost), and it did not
-    * cross below 0.44 GiB in the r11 soak (SCALE.md), so the router stays. */
+    * ([[graft.operators.ScaleOps.routeBySize]]'s probe, ten runs): the scale
+    * form takes 1.69× the window form's time at sf0.01 and 1.51× at sf0.1
+    * (1.46–1.61, slower in 10 of 10; the customer table is tiny, so the
+    * scan's exchange and the joined-back count are the whole cost), and it
+    * did not cross below 0.44 GiB in the r11 soak (SCALE.md), so the router
+    * stays. */
   def ntileRouted(maxOneTaskBytes: Long = Conf.OneTaskSortMaxBytes): Q = (s, dir) =>
     ScaleOps.routeBySize(Tables.customer(s, dir), maxOneTaskBytes)(
       ntileWindowForm(s, dir))(ntileScaleForm(s, dir))

@@ -1,7 +1,8 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{internal, Column}
+import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Expression ↔ Column bridge for graft's native Catalyst kernels.
@@ -12,19 +13,14 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * access, the standard extension-library technique) re-exposes exactly the
   * two conversions graft needs, so kernels like SimHash64 can be applied to
   * arbitrary computed Columns without a SQL-parser round trip or a
-  * function-registry side effect. It also reads a sort column's direction,
-  * which Spark 4 keeps on the Column's node until analysis.
+  * function-registry side effect. It also re-exposes `Dataset.ofRows`, so a
+  * graft plan node (the prefix scan) can be handed back as a DataFrame.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** A sort column's key and direction as (key, ascending, nullsFirst). A
-    * plain column sorts ascending with nulls first, as `orderBy` sorts it. */
-  def sortKey(c: Column): (Column, Boolean, Boolean) = c.node match {
-    case s: internal.SortOrder =>
-      (new Column(s.child), s.sortDirection == internal.SortOrder.Ascending,
-        s.nullOrdering == internal.SortOrder.NullsFirst)
-    case _ => (c, true, true)
-  }
+  /** A DataFrame over `plan` in `spark`. */
+  def frame(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 }

@@ -51,7 +51,7 @@ class PlanShapeSpec extends AnyFunSuite {
     "q_topk" -> 0,              // TakeOrderedAndProject — no shuffle at all
     "q_knn_bruteforce" -> 2,    // per-query window (1) + sort (1); dims broadcast
     "q_sample_split" -> 3,
-    "q_sample_quota" -> 3,      // lang rank window (1) + agg (1) + sort (1)
+    "q_sample_quota" -> 3,      // scan's range exchange (1); agg + sort add none at one split
     "q_text_langid" -> 10,      // shared-explode gram table, profile join, argmax
     "q_ml_gmm_converged" -> 1,  // one partial+final agg per EM pass (same cached scan)
     "q_ml_wls" -> 1,            // one partial+final agg, single grouped row out
@@ -369,12 +369,12 @@ class PlanShapeSpec extends AnyFunSuite {
     // which is also the plan shape of the streaming aggregation itself.
     ("q_stream_tumbling batch form",
       () => graft.queries.StreamingQs.tumblingBatchForm(spark, Sf0001), 2),
-    // summary agg (1) + sort (1). The prefix scan's own range exchange
-    // runs when the form's frame is built, so the plan counted here holds
-    // only the scan's output, not that exchange; PrefixScanSpec's
-    // job-shape test pins the scan's jobs and shuffle instead.
+    // The key is its scale form. The prefix scan's range exchange (1) is
+    // part of the plan counted here; at one split the scan is one
+    // partition, so the summary agg and the sort above it add none
+    // (measured 1).
     ("q_sample_quota scale form",
-      () => graft.queries.LlmOps.quotaScaleForm(spark, Sf0001), 2)
+      () => graft.queries.LlmOps.qSampleQuota(spark, Sf0001), 2)
   )
 
   for ((label, mk, budget) <- scaleFormBudgets)

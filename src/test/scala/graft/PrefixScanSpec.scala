@@ -11,8 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** ScaleOps.prefixScan, the exact running-total primitive under every scale
   * form: equal to the window form on seeded random inputs at every range
-  * partition count, failing on overflow as the SQL sum does, and one
-  * shuffle that a carry job and an apply job both read. */
+  * partition count, failing on overflow as the SQL sum does, and lazy: it
+  * runs inside the caller's query, adding only the carry job, and only when
+  * its exchange is wider than one partition. */
 class PrefixScanSpec extends AnyFunSuite {
   import SparkFixture._
 
@@ -74,9 +75,9 @@ class PrefixScanSpec extends AnyFunSuite {
       val df = frame(rows, 1 + i % 4)
       val o = if (desc) col("o").desc else col("o")
       val exp = windowForm(df, desc)
-      val (got, totals) = atWidth(parts) {
-        val s = ScaleOps.prefixScan(df, Seq(col("g")), Seq(o, col("k")), sums, peers = 1)
-        (s.frame.select(outCols.map(col): _*), s.totals)
+      val got = atWidth(parts) {
+        ScaleOps.prefixScan(df, Seq(col("g")), Seq(o, col("k")), sums, peers = 1)
+          .select(outCols.map(col): _*)
       }
       assert(got.schema.map(_.dataType) == exp.schema.map(_.dataType),
         s"case $i: output types ${got.schema} != window form's ${exp.schema}")
@@ -84,17 +85,15 @@ class PrefixScanSpec extends AnyFunSuite {
       val e = exp.collect().map(_.toSeq).toSet
       assert(g == e, s"case $i ($parts partitions, desc=$desc, ${rows.size} rows): " +
         s"missing=${(e -- g).take(3)} extra=${(g -- e).take(3)}")
-      val all = df.agg(sum(col("v")), sum(col("d")), sum(lit(1L))).head().toSeq
-      assert(totals == all, s"case $i: totals $totals != $all")
     }
   }
 
-  test("empty input: no rows, null totals") {
-    val s = withShufflePartitions(8) {
-      ScaleOps.prefixScan(frame(Nil, 2), Seq(col("g")), Seq(col("o"), col("k")), sums, peers = 1)
+  test("empty input: no rows from the scan or from globalRanksDesc") {
+    withShufflePartitions(8) {
+      assert(ScaleOps.prefixScan(frame(Nil, 2), Seq(col("g")), Seq(col("o"), col("k")), sums,
+        peers = 1).collect().isEmpty)
+      assert(ScaleOps.globalRanksDesc(frame(Nil, 2), col("o"), Seq(col("k"))).collect().isEmpty)
     }
-    assert(s.frame.collect().isEmpty)
-    assert(s.totals == Seq(null, null, null))
   }
 
   test("globalRanksDesc == row_number / rank / count windows with value ties across partitions") {
@@ -142,59 +141,98 @@ class PrefixScanSpec extends AnyFunSuite {
         s"$name: the window form accepted the overflow")
       for (parts <- Seq(1, 16))
         assert(condition(atWidth(parts) {
-          ScaleOps.prefixScan(df, Seq(col("g")), Seq(col("o")), Seq("r" -> value)).frame.collect()
+          ScaleOps.prefixScan(df, Seq(col("g")), Seq(col("o")), Seq("r" -> value)).collect()
         }).contains("ARITHMETIC_OVERFLOW"), s"$name ($parts partitions): prefixScan accepted the overflow")
     }
   }
 
-  test("job shape: one shuffle map stage, read by a carry job and an apply job") {
+  /** The jobs `body` runs, each as its stages and the SQL execution it
+    * ran in (null outside one), and the ids of the stages that ran (a job
+    * that reads a shuffle written before holds a skipped stage of it). */
+  private def jobsOf(body: => Any)
+      : (Seq[(Seq[org.apache.spark.scheduler.StageInfo], String)], Set[Int]) = {
     import java.util.concurrent.ConcurrentLinkedQueue
-    import org.apache.spark.{ListenerBusDrain, StageShuffle}
+    import org.apache.spark.ListenerBusDrain
     import org.apache.spark.scheduler._
     import scala.jdk.CollectionConverters._
     val sc = spark.sparkContext
+    val jobs = new ConcurrentLinkedQueue[(Seq[StageInfo], String)]()
+    val ran = new ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add((e.stageInfos, Option(e.properties)
+          .map(_.getProperty("spark.sql.execution.id")).orNull))
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        ran.add(e.stageInfo.stageId)
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try { body; ListenerBusDrain(sc) } finally sc.removeSparkListener(listener)
+    (jobs.asScala.toSeq, ran.asScala.toSet)
+  }
+
+  test("job shape: lazy to build; one split adds no job; wider adds one carry job") {
+    import org.apache.spark.StageShuffle
+    import scala.jdk.CollectionConverters._
     val rows = (0 until 200).map(k =>
       Row(k.toLong, Seq("a", "b", null)(k % 3), (k % 7).toLong, k.toLong, null))
-    /** The jobs a scan of `df` runs, each by its stages; the shuffles whose
-      * map stages ran; and the jobs that read one of those without writing
-      * it again (they hold a skipped stage of it). */
-    def shape(df: => DataFrame): (Seq[Seq[StageInfo]], Seq[Int], Seq[Seq[StageInfo]]) = {
-      val jobs = new ConcurrentLinkedQueue[Seq[StageInfo]]()
-      val ran = new ConcurrentLinkedQueue[StageInfo]()
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e.stageInfos)
-        override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = ran.add(e.stageInfo)
-      }
-      ListenerBusDrain(sc)
-      sc.addSparkListener(listener)
-      try {
-        ScaleOps.prefixScan(df, Seq(col("g")), Seq(col("o"), col("k")), sums).frame.collect()
-        ListenerBusDrain(sc)
-      } finally sc.removeSparkListener(listener)
-      val written = ran.asScala.toSeq.flatMap(StageShuffle(_))
-      val ranIds = ran.asScala.map(_.stageId).toSet
-      val readers = jobs.asScala.toSeq.filter(_.exists(s =>
-        StageShuffle(s).exists(written.contains) && !ranIds(s.stageId)))
-      (jobs.asScala.toSeq, written, readers)
+    val by = Seq(col("g").asc, col("o"), col("k"))
+    def scan(df: DataFrame) = ScaleOps.prefixScan(df, Seq(col("g")), Seq(col("o"), col("k")), sums)
+    /** The same range exchange and sort as the scan's, alone. */
+    def exchange(df: DataFrame, parts: Int) =
+      df.repartitionByRange(parts, by: _*).sortWithinPartitions(by: _*)
+
+    // One split: one range partition, no carry. The scan's query runs the
+    // jobs of its exchange and sort alone, all in one SQL execution.
+    withShufflePartitions(8) {
+      val df = spark.createDataFrame(rows.asJava, schema)
+      assert(jobsOf(scan(df))._1.isEmpty, "building a one-split scan ran a job")
+      val (jobs, _) = jobsOf(scan(df).collect())
+      val (own, _) = jobsOf(exchange(df, 1).collect())
+      assert(jobs.size == own.size, s"${jobs.size} jobs ran; the exchange and sort alone run ${own.size}")
+      assert(jobs.map(_._2).distinct.size == 1 && jobs.head._2 != null,
+        s"the scan's jobs ran outside one SQL execution: ${jobs.map(_._2)}")
     }
 
-    // Wider than one split: one map stage, read by the carry job and the
-    // apply job.
-    val (_, written, readers) = atWidth(8)(shape(frame(rows, 3)))
-    assert(written.size == 1, s"map stages ran for shuffles $written; expected one, once")
-    assert(readers.size == 2,
-      s"${readers.size} jobs read shuffle ${written.head}; expected the carry job and the apply job")
+    // Wider than one split: one more job than the exchange and sort alone,
+    // the carry job, which reads the exchange's output as the apply does;
+    // every job runs in the caller's SQL execution.
+    atWidth(8) {
+      val df = frame(rows, 3)
+      assert(jobsOf(scan(df))._1.isEmpty, "building a wide scan ran a job")
+      val (jobs, ran) = jobsOf(scan(df).collect())
+      val (own, _) = jobsOf(exchange(df, 8).collect())
+      assert(jobs.size == own.size + 1,
+        s"${jobs.size} jobs ran; expected the ${own.size} of the exchange and sort, and the carry job")
+      assert(jobs.map(_._2).distinct.size == 1 && jobs.head._2 != null,
+        s"the scan's jobs ran outside one SQL execution: ${jobs.map(_._2)}")
+      val written = jobs.flatMap(_._1).filter(s => ran(s.stageId)).flatMap(StageShuffle(_))
+      assert(written.size == 1, s"map stages ran for shuffles $written; expected one, once")
+      val readers = jobs.filter(_._1.exists(s =>
+        StageShuffle(s).exists(written.contains) && !ran(s.stageId)))
+      assert(readers.size == 2,
+        s"${readers.size} jobs read the range exchange; expected the carry job and the apply job")
+    }
+  }
 
-    // One split: one range partition, so no bounds sample and no carry job.
-    // What runs is the exchange's map stage and the apply job that reads
-    // it; every job touches the scan's shuffle, so none is a sample.
-    val (jobs1, written1, readers1) = withShufflePartitions(8)(
-      shape(spark.createDataFrame(rows.asJava, schema)))
-    assert(written1.size == 1, s"map stages ran for shuffles $written1; expected one, once")
-    assert(readers1.size == 1, s"${readers1.size} jobs read shuffle ${written1.head}; " +
-      "expected the apply job alone")
-    assert(jobs1.forall(_.exists(s => StageShuffle(s).exists(written1.contains))),
-      s"a job that touches no scan shuffle ran (a bounds sample): ${jobs1.map(_.map(_.name))}")
-    assert(jobs1.size == 2, s"${jobs1.size} jobs ran; expected the map stage and the apply job")
+  test("building q_window_range or a scan-backed scale form runs no job") {
+    import graft.queries.{LlmOps, MlSuffStats, Relational, Windows}
+    // q_events_rfm's scale form is left out: it collects its edges when
+    // built, by design.
+    val forms = Seq[(String, Windows.Q)](
+      "q_window_range" -> Windows.qWindowRange,
+      "q_window_ntile" -> Windows.ntileScaleForm,
+      "q_agg_median" -> Relational.medianScaleForm,
+      "q_agg_weighted_median" -> Relational.wmedianScaleForm,
+      "q_stats_winsorize" -> Relational.winsorScaleForm,
+      "q_sample_quota" -> LlmOps.qSampleQuota,
+      "q_pack_sequences" -> LlmOps.qPackSequences,
+      "q_ml_eval_auc" -> MlSuffStats.aucScaleForm)
+    for ((name, q) <- forms) {
+      q(spark, Sf0001) // opens and signs the tables once
+      val (jobs, _) = withSplitScans(jobsOf(q(spark, Sf0001)))
+      ScaleOps.releaseTracked()
+      assert(jobs.isEmpty, s"building $name ran ${jobs.size} jobs")
+    }
   }
 }

@@ -107,16 +107,15 @@ class ScaleOpsSpec extends AnyFunSuite {
 
   test("quota router: bucketed-threshold scale form bit-matches the window form") {
     import graft.queries.LlmOps
-    // sf0.001: ~10 docs/lang < k — every language takes the no-threshold
-    // path; sf0.01: ~100 docs/lang — the quota binds everywhere. Each
-    // scale form's scan spans several range partitions (withSplitScans).
-    val scaled = withSplitScans(LlmOps.quotaRouted(maxOneTaskBytes = 0L)(spark, Sf0001))
-    val declared = LlmOps.quotaRouted(maxOneTaskBytes = Long.MaxValue)(spark, Sf0001)
-    assert(withSplitScans(scaled.collect().toSeq) == declared.collect().toSeq,
-      "scale quota form diverged from window form at sf0.001")
-    val s01 = withSplitScans(LlmOps.quotaScaleForm(spark, Sf001).collect().toSeq)
-    val w01 = LlmOps.quotaWindowForm(spark, Sf001).collect().toSeq
-    assert(s01 == w01, "scale quota form diverged from window form at sf0.01")
+    // One form: the key is the prefix-scan sample; the rank window is the
+    // test-side reference. sf0.001: ~10 docs/lang < k — every language
+    // passes whole; sf0.01: ~100 docs/lang — the quota binds everywhere.
+    // Each scan spans several range partitions (withSplitScans).
+    for (dir <- Seq(Sf0001, Sf001)) {
+      val got = withSplitScans(LlmOps.qSampleQuota(spark, dir).collect().toSeq)
+      val exp = ScaleOpsSpec.quotaWindowForm(spark, dir).collect().toSeq
+      assert(got == exp, s"the quota sample diverged from the window form at $dir")
+    }
     // Exact sample cardinality: min(k, n_lang) rows per language.
     val perLang = Tables.documents(spark, Sf001).groupBy("lang").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -152,21 +151,16 @@ class ScaleOpsSpec extends AnyFunSuite {
 
   test("pack-sequences router: groupedPrefixSum bit-matches the window form; threshold picks the plan") {
     import graft.queries.LlmOps
-    // Above the gate (maxBytes = 0 forces it) the router must emit the
-    // prefix scan — no running-sum window anywhere in the plan (the scan
-    // across several range partitions, as above the gate).
-    val scaled = withSplitScans(LlmOps.packSequencesRouted(maxOneTaskBytes = 0L)(spark, Sf0001))
+    // One form: the key's plan holds the prefix scan and no running-sum
+    // window (the scan across several range partitions); the window form
+    // is the test-side reference.
+    val scaled = withSplitScans(LlmOps.qPackSequences(spark, Sf0001))
     val scaledPlan = scaled.queryExecution.executedPlan.toString
     assert(!scaledPlan.contains("windowspecdefinition"),
-      s"router kept the plain window:\n$scaledPlan")
-    val declaredPlan = LlmOps.packSequencesRouted(maxOneTaskBytes = Long.MaxValue)(
-      spark, Sf0001).queryExecution.executedPlan.toString
-    assert(declaredPlan.contains("windowspecdefinition"),
-      "router dropped the declared form below threshold")
+      s"the key kept the plain window:\n$scaledPlan")
     // Exact integer running sums: row-for-row equality of the final stats.
     val got = withSplitScans(scaled.collect().map(_.toSeq).toSeq)
-    val exp = LlmOps.packSequencesRouted(maxOneTaskBytes = Long.MaxValue)(
-      spark, Sf0001).collect().map(_.toSeq).toSeq
+    val exp = ScaleOpsSpec.packWindowForm(spark, Sf0001).collect().map(_.toSeq).toSeq
     assert(got == exp, s"scale prefix-sum form diverged: got=${got.take(3)} exp=${exp.take(3)}")
   }
 
@@ -335,5 +329,27 @@ object ScaleOpsSpec {
         count(lit(1)).over(w).as("n_band"),
         graft.functions.Det.dsumOver(col("o_totalprice"), w).as("band_spend"))
       .orderBy(col("o_orderstatus"), col("price_cents"), col("o_orderkey"))
+  }
+
+  /** q_sample_quota as a per-language rank window over the content-hash
+    * order. Each language sorts in one task. */
+  val quotaWindowForm: (SparkSession, String) => DataFrame = (s, dir) => {
+    import graft.queries.LlmOps
+    val w = Window.partitionBy(col("lang")).orderBy(col("h"), col("doc_id"))
+    LlmOps.quotaSummary(Tables.documents(s, dir)
+      .withColumn("h", md5(col("text")))
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") <= LlmOps.QuotaK))
+  }
+
+  /** q_pack_sequences with its running totals as a window per shard. Each
+    * shard sorts in one task. */
+  val packWindowForm: (SparkSession, String) => DataFrame = (s, dir) => {
+    val w = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    graft.queries.LlmOps.packStats(Tables.documents(s, dir)
+      .select(col("doc_id"), (col("doc_id") % 8).as("shard"),
+        size(split(col("text"), " ")).cast("long").as("tokens"))
+      .withColumn("running", sum(col("tokens")).over(w)))
   }
 }

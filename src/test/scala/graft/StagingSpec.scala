@@ -105,6 +105,17 @@ class StagingSpec extends AnyFunSuite {
     }
   }
 
+  test("a fixture's catalog tables are registered again after it restages") {
+    // The default replay root, where every other suite's cbo-hist-skew
+    // tables point: the restage deletes the files those tables listed.
+    val q = SparkEntry.queries("q_layout_cbo_hist")
+    val before = q(spark, Data).collect().toSeq
+    Files.writeString(marker("cbo-hist-skew", Data), "restage")
+    val after = q(spark, Data).collect().toSeq
+    assert(Files.readString(marker("cbo-hist-skew", Data)) != "restage", "the fixture did not restage")
+    assert(after == before, "q_layout_cbo_hist changed across a restage of its fixture")
+  }
+
   test("stagedTxnLayouts restages when only embeddings.parquet changes") {
     withReplayRoot { _ =>
       withDataCopy { dir =>
