@@ -28,8 +28,8 @@ object Conf {
     * percentiles, per-key count windows) are acceptable. Past ~1 GiB one
     * sort task becomes the whole job's critical path, so the size routers
     * (ScaleOps.routeBySize and q_ml_eval_auc's inline gate) switch to
-    * their prefix-scan or join-back forms; ScaleOps.persistIfBig and the
-    * Components driver gate read it too. */
+    * their prefix-scan or join-back forms; ScaleOps.persistIfBig reads it
+    * too. */
   val OneTaskSortMaxBytes: Long = 1L << 30
 
   /** Recommended `spark.sql.shuffle.partitions` for a job shuffling

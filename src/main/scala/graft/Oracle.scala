@@ -3081,9 +3081,9 @@ object Oracle {
     // Transitive closure over the SAME exact near-dup pair set as
     // q_dedup_minhash (bigram Jaccard dist <= 0.5), walked with a recursive
     // CTE: each node's component id is the minimum reachable doc_id. The
-    // Spark side computes the identical closure with distributed min-label
-    // propagation, so the hash match proves the loop's fixpoint equals the
-    // textbook closure.
+    // Spark side computes the identical closure with distributed
+    // large-star/small-star contraction, so the hash match proves the
+    // loop's fixpoint equals the textbook closure.
     "q_dedup_components" ->
       """WITH RECURSIVE
               w AS (SELECT doc_id, string_split(lower(text), ' ') AS w FROM documents

@@ -8,29 +8,41 @@ import org.apache.spark.sql.functions._
   * (A~B, B~C), so choosing one canonical document per duplicate CLUSTER
   * requires the transitive closure, not the pair list.
   *
-  * Algorithm: iterated min-label propagation. Every node starts labeled
-  * with its own id; each round, a node adopts the minimum label among
-  * itself and its neighbors (one equi-join on the symmetrized edge list +
-  * one min-aggregate — both hash-partitioned, no driver data). Labels are
-  * monotonically non-increasing and reach the component minimum in
-  * O(diameter) rounds; convergence is detected by COUNTING changed labels
-  * (zero changes = fixpoint) — one scalar to the driver per round, the
-  * P2-loop pattern. A count cannot alias: the earlier label-SUM fixpoint
-  * could in principle declare a moving round converged when its total
-  * label decrease is ≡ 0 mod 2⁶⁴ (billions of large 64-bit ids at 100 TB
-  * make sum wraparound a real, silent-wrong-answer hazard).
+  * Algorithm: alternating LARGE-STAR / SMALL-STAR contraction, re-derived
+  * from the published two-operation scheme (Kiveris et al., "Connected
+  * Components in MapReduce and Beyond", SoCC 2014). Each round,
+  * large-star points every larger neighbor of a node at the node's
+  * neighborhood minimum, and small-star contracts each node and its
+  * smaller neighbors onto their minimum. Chain depth halves per round:
+  * O(log d) rounds where min-label propagation needs O(d) (ComponentsSpec
+  * runs a 96-link chain within 10 rounds).
   *
-  * 100 TB posture: each round is two shuffles on (id, long) rows — tiny
-  * beside the pair-generation stage feeding it — and dup-cluster diameters
-  * are small in practice (near-dup graphs are dense cliques plus short
-  * chains), so the loop converges in a handful of rounds. For adversarial
-  * long-chain graphs the classic large-star/small-star variant halves the
-  * round count; min-propagation is the right default at this fan-in.
+  * Combiner: before the first round every task runs a union-find over its
+  * own pairs and emits (node, local minimum) — the reference's in-mapper
+  * combining (PAPER.md). A local component becomes a depth-1 star, which
+  * has the same closure, so a near-dup clique that lands in one task is
+  * already contracted. The union-find holds one map entry per distinct
+  * node of the task's pairs.
+  *
+  * Fixpoint: the down-pointing edge set is the answer exactly when it is a
+  * forest of depth-1 stars — every node has at most one distinct smaller
+  * neighbor, and a node that has one has no larger neighbor; each star's
+  * center is then its component's minimum. The loop COUNTS the nodes that
+  * break that shape (zero = done): one scalar to the driver per round, the
+  * P2-loop pattern. A count cannot alias: a label-SUM fixpoint could in
+  * principle declare a moving round converged when its total label
+  * decrease is ≡ 0 mod 2⁶⁴ (billions of large 64-bit ids at 100 TB make
+  * sum wraparound a real, silent-wrong-answer hazard).
+  *
+  * 100 TB posture: each round is two grouped aggregates on (long, long)
+  * edges, both hash-partitioned and map-side combined, and nothing on the
+  * driver but the per-round count. A node's row carries its set of larger
+  * neighbors, so a star center's row grows with its cluster.
   */
 object Components {
 
   // Each round's frame is LINEAGE-TRUNCATED (eager checkpoint): without
-  // it the logical plan nests one join deeper per round and analysis cost
+  // it the logical plan nests one round deeper per round and analysis cost
   // grows without bound — the classic iterative-lineage explosion. When a
   // checkpoint dir is configured (any cluster deployment: HDFS/object
   // store), the truncation is a RELIABLE checkpoint, so a lost executor
@@ -41,89 +53,90 @@ object Components {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
     else df.localCheckpoint()
 
-  // Symmetrize in ONE pass over `pairs` (explode of the two orientations),
-  // not a union of two selects — a union would reference the pair plan
-  // twice and recompute the (expensive) pair-generation pipeline per side.
-  private def symmetrized(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
-    ScaleOps.trackedPersist(
-      pairs.select(explode(array(
-          struct(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst")),
-          struct(col(bCol).cast("long").as("src"), col(aCol).cast("long").as("dst"))))
-        .as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-        .distinct())
-
-  /** The min-propagation loop over a symmetrized edge set. `escalateAfter`
-    * is the [[connectedComponentsAuto]] probe: once that many rounds have
-    * run, a round whose changed-label count fails to HALVE the previous
-    * round's (a shallow graph collapses geometrically; a chain's count
-    * stays ~flat — each round moves ~one link) returns None so the caller
-    * can switch algorithms; Int.MaxValue disables the probe. */
-  private def propagate(edges: DataFrame, maxIters: Int,
-                        escalateAfter: Int): Option[DataFrame] = {
-    var labels = truncate(edges.select(col("src").as("id")).distinct()
-      .withColumn("comp", col("id")))
-    var round = 0
-    var done = labels.isEmpty // empty pair set: fixpoint by definition
-    var prevChanged = Long.MaxValue
-    while (!done && round < maxIters) {
-      val nbrMin = edges.join(labels, edges("dst") === labels("id"))
-        .groupBy(edges("src").as("id"))
-        .agg(min(col("comp")).as("nbr"))
-      // Carry the previous label through the checkpoint so the convergence
-      // probe is a plain changed-row COUNT over the materialized frame (no
-      // recompute, no overflow-aliasing); labels are non-increasing, so
-      // "changed" is exactly comp < prev.
-      val next = truncate(labels.as("L")
-        .join(nbrMin.as("N"), col("L.id") === col("N.id"), "left")
-        .select(col("L.id").as("id"), col("L.comp").as("prev"),
-          least(col("L.comp"), coalesce(col("N.nbr"), col("L.comp"))).as("comp")))
-      val changed = next.filter(col("comp") < col("prev")).count()
-      done = changed == 0L
-      labels = next.select(col("id"), col("comp"))
-      round += 1
-      if (!done && round >= escalateAfter && changed * 2 > prevChanged)
-        return None // trajectory says high diameter — let the caller escalate
-      prevChanged = changed
+  /** The combiner: (node, minimum of its component among this task's
+    * pairs) for every node of the task's pairs; a self-pair (a, a) emits
+    * (a, a), so a node whose only pair is a self-pair still labels itself. */
+  private def localStars(pairs: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = parent.getOrElseUpdate(x, x)
+      while (parent(r) != r) r = parent(r)
+      var y = x
+      while (y != r) { val up = parent(y); parent(y) = r; y = up }
+      r
     }
-    // Exhausting the round budget without reaching the fixpoint means the
-    // labels are NOT the transitive closure (a >maxIters-diameter chain) —
-    // fail loudly rather than return silently wrong components.
+    for ((a, b) <- pairs) {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keysIterator.map(k => (k, find(k)))
+  }
+
+  /** Per node x of the undirected edges (u, v): m = min(Γ(x) ∪ {x}), its
+    * larger neighbors `up`, and `bad` when x breaks the star-forest shape
+    * (two distinct smaller neighbors, or a smaller and a larger one).
+    * Self-pairs keep their node with m = x. One grouped aggregate. */
+  private def adjacency(edges: DataFrame): DataFrame = {
+    val smaller = when(col("w") < col("x"), col("w"))
+    edges.select(explode(array(
+        struct(col("u").as("x"), col("v").as("w")),
+        struct(col("v").as("x"), col("u").as("w")))).as("p"))
+      .select(col("p.x").as("x"), col("p.w").as("w"))
+      .groupBy(col("x"))
+      .agg(min(col("w")).as("mn"),
+        collect_set(when(col("w") > col("x"), col("w"))).as("up"),
+        min(smaller).as("lo"), max(smaller).as("hi"))
+      .select(col("x"), least(col("mn"), col("x")).as("m"), col("up"),
+        (col("lo").isNotNull && (col("lo") < col("hi") || size(col("up")) > 0))
+          .as("bad"))
+  }
+
+  /** One round: large-star rewires each larger neighbor w of x to
+    * (w, m(x)); small-star then rewires each node u and every target of u
+    * onto the smallest target. Output edges point strictly down. */
+  private def starRound(adj: DataFrame): DataFrame =
+    adj.select(explode(col("up")).as("u"), col("m").as("v"))
+      .groupBy(col("u"))
+      .agg(min(col("v")).as("m"), collect_set(col("v")).as("vs"))
+      .select(explode(array_union(array(col("u")), col("vs"))).as("u"),
+        col("m").as("v"))
+      .filter(col("u") =!= col("v"))
+
+  /** (id, comp) for every node that appears in `pairs`; comp is the
+    * minimum node id reachable from the node (including itself).
+    * `maxIters` bounds the star rounds. Rounds grow with log d, so 25 is
+    * far past what a dedup graph or ComponentsSpec's 96-link chain (under
+    * 10) needs; running out throws rather than return labels that are not
+    * the closure. */
+  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
+                          maxIters: Int = 25): DataFrame = {
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    val local = pairs
+      .select(col(aCol).cast("long"), col(bCol).cast("long")).as[(Long, Long)]
+      .mapPartitions(localStars).toDF("u", "v")
+    val first = truncate(adjacency(local))
+    var adj = first
+    def converged = adj.filter(col("bad")).count() == 0L
+    var round = 0
+    var done = converged
+    while (!done && round < maxIters) {
+      adj = truncate(adjacency(starRound(adj)))
+      round += 1
+      done = converged
+    }
     if (!done)
       throw new IllegalStateException(
         s"connectedComponents did not converge within $maxIters rounds — " +
-          "the graph's diameter exceeds the budget; raise maxIters " +
-          "(or use connectedComponentsStars / connectedComponentsAuto " +
-          "for high-diameter graphs)")
-    Some(labels)
+          "the graph's diameter exceeds the budget; raise maxIters")
+    // At the fixpoint a star leaf's m is its center and a center's m is
+    // itself. A round keeps every node that has an edge, so only the nodes
+    // isolated from the start (self-pairs) come back from the first frame.
+    val labels =
+      if (round == 0) adj
+      else adj.unionByName(first.filter(size(col("up")) === 0 && col("m") === col("x")))
+    labels.select(col("x").as("id"), col("m").as("comp"))
   }
-
-  /** (id, comp) for every node that appears in `pairs`; comp is the
-    * minimum node id reachable from the node (including itself). */
-  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxIters: Int = 50): DataFrame =
-    propagate(symmetrized(pairs, aCol, bCol), maxIters, Int.MaxValue).get
-
-  /** DIAMETER-ROUTED components (r15) — the routing twin of the size
-    * routers: min-label propagation is the right default for dedup graphs
-    * (dense shallow cliques — two light shuffles per round, a handful of
-    * rounds), but an adversarial long chain makes it O(diameter). Rather
-    * than guess the diameter up front (unknowable without a closure), run
-    * the propagation and watch its OWN convergence trajectory: after
-    * `probeRounds` rounds, a changed-label count that stops halving is the
-    * long-chain signature (geometric collapse is the shallow-graph one) —
-    * escalate to the alternating large-star/small-star contraction
-    * (O(log d) rounds, Kiveris et al.). Both algorithms land on the same
-    * contract (comp = minimum reachable id — ComponentsSpec pins equality
-    * on every shape incl. the escalating chain), so routing never changes
-    * results; the discarded probe work is bounded by `probeRounds` cheap
-    * rounds and the common case pays only the per-round count it already
-    * ran. */
-  def connectedComponentsAuto(pairs: DataFrame, aCol: String, bCol: String,
-                              probeRounds: Int = 4,
-                              maxIters: Int = 50): DataFrame =
-    propagate(symmetrized(pairs, aCol, bCol), maxIters, probeRounds)
-      .getOrElse(connectedComponentsStars(pairs, aCol, bCol))
 
   /** INCREMENTAL component maintenance — fold a batch of NEW pairs into a
     * STANDING (id, comp) labeling without recomputing the global closure:
@@ -139,18 +152,16 @@ object Components {
     * Corpus-side work is exactly two joins: the endpoint probe against the
     * standing labels (batch side moves; a labels table stored bucketed by
     * id never does) and the remap join-back of the old→new label mapping
-    * (touched-components sized, broadcast under the source-gated rule —
-    * above the gate it degrades to a co-partitioned shuffle, never an
-    * OOM). Labels of untouched components pass through bit-identical.
+    * (touched-components sized; AQE converts it to a broadcast at runtime
+    * when the mapping is small). Labels of untouched components pass
+    * through bit-identical.
     *
     * Output contract matches the backfill: (id, comp = minimum reachable
     * node id) for every node of old pairs ∪ new pairs — asserted
     * incremental ≡ backfill on every ComponentsSpec shape, and graded
     * end-to-end by q_dedup_components_incr's recursive-CTE oracle. */
   def incrementalComponents(labels: DataFrame, newPairs: DataFrame,
-                            aCol: String, bCol: String,
-                            driverGateBytes: Long =
-                              graft.Conf.OneTaskSortMaxBytes): DataFrame = {
+                            aCol: String, bCol: String): DataFrame = {
     // The new-pair frame is typically an EXPENSIVE pipeline (an index
     // probe + a batch LSH pass in the dedup ingest) consumed by three
     // structurally different subtrees (endpoint set, contracted edges,
@@ -171,35 +182,11 @@ object Components {
       .join(endComp.toDF("a", "ca"), Seq("a"))
       .join(endComp.toDF("b", "cb"), Seq("b"))
       .select(col("ca"), col("cb"))
-    // The closure runs over the CONTRACTED graph only — and is SIZE-ROUTED
-    // on the BATCH (the standard router convention): the contracted graph
-    // has at most one edge per new pair, so while the batch fits the
-    // driver gate a union-find over the collected edges replaces the
-    // iterative loop (whose per-round join + checkpoint overhead dominates
-    // batch-sized ingests); past the gate the distributed propagation loop
-    // runs. Both routes land on comp = minimum reachable id
-    // (ComponentsSpec pins route equality on random splits).
-    val merged = ScaleOps.routeBySize(np, driverGateBytes) {
-      val spark = newPairs.sparkSession
-      import spark.implicits._
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(x: Long): Long = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      for (r <- cedges.collect()) {
-        val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      parent.keys.toSeq.map(k => (k, find(k))).toDF("id", "comp")
-    } {
-      connectedComponents(cedges, "ca", "cb")
-    }
+    val merged = connectedComponents(cedges, "ca", "cb")
     val mapping = merged.select(col("id").as("old_comp"), col("comp").as("new_comp"))
       .filter(col("old_comp") =!= col("new_comp"))
     val updated = labels
-      .join(ScaleOps.broadcastIfSourceSmall(mapping, np),
-        labels("comp") === col("old_comp"), "left")
+      .join(mapping, labels("comp") === col("old_comp"), "left")
       .select(labels("id").as("id"),
         coalesce(col("new_comp"), labels("comp")).as("comp"))
     val newLabels = ends
@@ -207,94 +194,5 @@ object Components {
       .join(merged.withColumnRenamed("id", "node"), Seq("node"), "left")
       .select(col("node").as("id"), coalesce(col("comp"), col("node")).as("comp"))
     updated.unionByName(newLabels)
-  }
-
-  /** Alternating LARGE-STAR / SMALL-STAR contraction — the HIGH-DIAMETER
-    * alternative to [[connectedComponents]], re-derived from the published
-    * two-operation scheme (Kiveris et al., "Connected Components in
-    * MapReduce and Beyond", SoCC 2014): each round rewires every node to
-    * its neighborhood minimum (large-star points all larger neighbors at
-    * it, small-star contracts the smaller ones onto it), halving chain
-    * depth per round — O(log d) rounds where min-propagation needs O(d).
-    * Min-propagation stays the DEFAULT: near-dup graphs are dense shallow
-    * cliques where its two lighter shuffles per round win; this variant is
-    * for adversarial long-chain shapes. Identical output contract:
-    * (id, comp = minimum reachable node id), asserted equal on every
-    * ComponentsSpec shape.
-    *
-    * 100 TB posture: each round is two grouped mins + two joins on
-    * (long, long) edges, all hash-partitioned, nothing on the driver but
-    * the per-round convergence scalar; lineage truncated per round like
-    * the propagation loop (reliable checkpoint on clusters). */
-  def connectedComponentsStars(pairs: DataFrame, aCol: String, bCol: String,
-                               maxIters: Int = 25): DataFrame = {
-    val spark = pairs.sparkSession
-    def truncate(df: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
-    val rawAll = pairs.select(col(aCol).cast("long").as("u"),
-      col(bCol).cast("long").as("v"))
-    // Every node of the ORIGINAL graph (self-pairs included — a node whose
-    // only pair is (a, a) still labels itself, matching the propagation
-    // variant): star centers drop out of the edge set's left side as the
-    // contraction proceeds, so the final labeling joins against this
-    // frame, not the surviving edges.
-    val nodes = truncate(
-      rawAll.select(explode(array(col("u"), col("v"))).as("id")).distinct())
-    val raw = rawAll.filter(col("u") =!= col("v"))
-
-    // large-star: per node u, m = min(Γ(u) ∪ {u}); every LARGER neighbor
-    // v > u is rewired to (v, m). Output edges always point strictly down.
-    def largeStar(e: DataFrame): DataFrame = {
-      val sym = e.select(explode(array(
-          struct(col("u"), col("v")),
-          struct(col("v").as("u"), col("u").as("v")))).as("p"))
-        .select(col("p.u").as("u"), col("p.v").as("v"))
-      val m = sym.groupBy(col("u")).agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("mn"), col("u")).as("m"))
-      sym.join(m, "u")
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-    }
-    // small-star (edges already point down, u > v): per node u,
-    // m = min of its smaller neighbors; u and every smaller neighbor are
-    // rewired onto m.
-    def smallStar(e: DataFrame): DataFrame = {
-      val m = e.groupBy(col("u")).agg(min(col("v")).as("m"))
-      e.join(m, "u")
-        .select(explode(array(
-          struct(col("u").as("a"), col("m").as("b")),
-          struct(col("v").as("a"), col("m").as("b")))).as("p"))
-        .select(col("p.a").as("u"), col("p.b").as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-    }
-
-    var edges = truncate(raw
-      .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
-      .distinct())
-    var round = 0
-    var done = edges.isEmpty
-    while (!done && round < maxIters) {
-      val next = truncate(smallStar(largeStar(edges)))
-      // Set equality on distinct frames: no new edges and same cardinality.
-      // Counts, not sums — the connectedComponents overflow argument.
-      done = next.count() == edges.count() &&
-        next.except(edges).isEmpty
-      edges = next
-      round += 1
-    }
-    if (!done)
-      throw new IllegalStateException(
-        s"connectedComponentsStars did not converge within $maxIters rounds")
-    // At the fixpoint the edge set is a union of depth-1 stars centered on
-    // each component's minimum: non-center nodes appear exactly once on the
-    // left. Centers (and isolated self-pair nodes) label themselves.
-    nodes.as("N")
-      .join(edges.as("E"), col("N.id") === col("E.u"), "left")
-      .select(col("N.id").as("id"),
-        coalesce(col("E.v"), col("N.id")).as("comp"))
   }
 }

@@ -116,22 +116,18 @@ object LlmOps {
     stagedMinhashPairs(s, dir).orderBy("doc_a", "doc_b")
 
   /** DUPLICATE-CLUSTER resolution — connected components over the minhash
-    * near-dup pairs (operators/Components.scala: iterated min-label
-    * propagation, label-sum fixpoint): near-dup pairs chain (A~B, B~C), so
-    * canonical-document selection needs the transitive closure, not the
-    * pair list. Output per cluster: the canonical (minimum) doc_id, member
+    * near-dup pairs (operators/Components.scala: large-star/small-star
+    * contraction until a count of the nodes off the star-forest shape is
+    * zero): near-dup pairs chain (A~B, B~C), so canonical-document
+    * selection needs the transitive closure, not the pair list. Output per cluster: the canonical (minimum) doc_id, member
     * count, and the max member id. The oracle walks the same closure with
     * a recursive CTE over the identical exact pair set — so the hash match
-    * proves the distributed propagation loop lands on the same components
+    * proves the distributed contraction loop lands on the same components
     * as a textbook transitive closure. Reads the SAME staged pair artifact
     * q_dedup_minhash reads — the LSH pipeline runs once per corpus
     * snapshot, not once per consumer. */
   val qDedupComponents: Q = (s, dir) =>
-    // DIAMETER-ROUTED (r15): propagation by default, escalating to the
-    // large-star/small-star contraction when the probe's change trajectory
-    // says long-chain — both routes land on the identical min-label
-    // contract, so the recursive-CTE oracle is route-blind.
-    graft.operators.Components.connectedComponentsAuto(
+    graft.operators.Components.connectedComponents(
         stagedMinhashPairs(s, dir), "doc_a", "doc_b")
       .groupBy(col("comp").as("comp_id"))
       .agg(count(lit(1)).as("n_docs"), max(col("id")).as("max_doc"))
@@ -224,19 +220,12 @@ object LlmOps {
       .orderBy("comp_id")
   }
 
-  /** The STANDING corpus labeling the incremental fold maintains: connected
-    * components over the corpus-internal near-dup pairs (the staged
-    * all-pairs artifact filtered to corpus endpoints — the LSH refine is
-    * exact, so the filtered artifact IS the corpus-only pair set), staged
-    * once per corpus snapshot and stored BUCKETED BY id so the ingest's
-    * endpoint probe never shuffles it ([[stagedCorpusIndex]]'s layout
-    * argument applied to the labels table). */
   /** The FULL-corpus cluster labeling (closure over the staged pair
     * artifact, all documents) materialized once per corpus snapshot —
     * the q_dedup_minhash staging argument applied to the closure: cluster
     * resolution is a stored pipeline artifact consumed by many policies
     * (canonical selection here; dedup reports, drop lists), so the
-    * propagation loop runs once per snapshot, not once per consumer.
+    * closure loop runs once per snapshot, not once per consumer.
     * q_dedup_components still grades the LIVE loop — this fixture serves
     * the downstream-policy keys. */
   def stagedFullLabels(s: SparkSession, dir: String): DataFrame = {
@@ -251,6 +240,13 @@ object LlmOps {
     s.read.parquet(s"$staged/labels")
   }
 
+  /** The STANDING corpus labeling the incremental fold maintains: connected
+    * components over the corpus-internal near-dup pairs (the staged
+    * all-pairs artifact filtered to corpus endpoints — the LSH refine is
+    * exact, so the filtered artifact IS the corpus-only pair set), staged
+    * once per corpus snapshot and stored BUCKETED BY id so the ingest's
+    * endpoint probe never shuffles it ([[stagedCorpusIndex]]'s layout
+    * argument applied to the labels table). */
   def stagedCorpusLabels(s: SparkSession, dir: String): DataFrame = {
     val key = dir.replaceAll("[^A-Za-z0-9]", "_")
     val tbl = s"graft_corpus_labels_$key"
@@ -2151,10 +2147,9 @@ object LlmOps {
   /** The pre-distinct candidate join at θ: each doc's rarest-PREFIX
     * postings against full postings, with the length and position prunes.
     * Frequency-1 shingles leave both sides losslessly: a shingle in
-    * exactly one doc never joins two docs. Shared by the graded query and
-    * the ScaleSoak volume measurement. */
-  private[graft] def containmentCandidates(docSets: DataFrame,
-                                           theta: Double): DataFrame = {
+    * exactly one doc never joins two docs. */
+  private def containmentCandidates(docSets: DataFrame,
+                                    theta: Double): DataFrame = {
     val floorInter = containmentFloor(theta) _
     val full = docSets
       .select(col("doc_id"), col("ns"), posexplode(col("fh")).as(Seq("p0", "x")))
@@ -2173,33 +2168,6 @@ object LlmOps {
         col("nb") >= floorInter(col("na")) &&
         least(col("na") - col("pa"), col("nb") - col("pb")) + 1 >=
           floorInter(col("na")))
-  }
-
-  /** ScaleSoak instrumentation: (distinct shingles, unpruned ordered join
-    * rows Σf·(f−1) — the shape the r17 implementation paid, computed from
-    * the freq table without running it, and the pruned candidate rows at
-    * θ, or −1 when `countCandidates` is off — the 12.5M-doc soak takes
-    * the freq-table totals only and measures candidates on a
-    * cohort-disjoint slice). */
-  private[graft] def containmentPruneStats(docs: DataFrame, theta: Double,
-                                           countCandidates: Boolean = true)
-      : (Long, Long, Long) = {
-    // Unpruned volume Σ_sh f·(f−1) straight from the posting frequencies —
-    // ONE map-side-combined shuffle of distinct-shingle partials; the
-    // rarest-first docSets build (collect_list + sort over every posting)
-    // is paid only when candidates are actually counted.
-    val f = shingleHashes(docs)
-      .select(explode_outer(array_distinct(col("sh"))).as("h"))
-      .filter(col("h").isNotNull)
-      .groupBy(col("h")).agg(count(lit(1)).as("f"))
-      .agg(count(lit(1)).as("nsh"),
-        sum(col("f") * (col("f") - 1)).as("unpruned"))
-      .head()
-    val cand =
-      if (countCandidates)
-        containmentCandidates(containmentDocSets(docs), theta).count()
-      else -1L
-    (f.getLong(0), f.getLong(1), cand)
   }
 
   def containmentTop50(s: org.apache.spark.sql.SparkSession, docs: DataFrame,

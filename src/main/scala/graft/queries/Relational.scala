@@ -2069,38 +2069,6 @@ object Relational {
       .orderBy("l_returnflag")
   }
 
-  /** Bloom A/B forms for the scale soak (ScaleSoak's `bloom` pair): the
-    * q_join_bloom reduction shape over the soak's staged orders (fact, 500
-    * copies) and customer (dim), with a dim slice selective enough
-    * (BUILDING ∩ acctbal > 9000 ≈ 2% → ~1.5M distinct keys at soak scale)
-    * to clear the 4M-key build gate. Identity twin vs bloom-prefiltered
-    * twin — outputs must be bit-equal; only the fact-side exchange volume
-    * differs, which is the measurement. */
-  private def soakBloomDim(s: SparkSession, dir: String): DataFrame =
-    Tables.customer(s, dir)
-      .filter(col("c_mktsegment") === "BUILDING" && col("c_acctbal") > 9000.0)
-      .select(col("c_custkey"))
-
-  private def soakBloomAgg(fact: DataFrame, dim: DataFrame): DataFrame =
-    fact.join(dim, col("o_custkey") === col("c_custkey"))
-      .groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("spend"))
-      .orderBy("o_orderstatus")
-
-  private[graft] val bloomPlainForm: Q = (s, dir) =>
-    soakBloomAgg(
-      Tables.orders(s, dir)
-        .select(col("o_custkey"), col("o_orderstatus"), col("o_totalprice")),
-      soakBloomDim(s, dir))
-
-  private[graft] val bloomFilteredForm: Q = (s, dir) => {
-    val dim = soakBloomDim(s, dir)
-    val fact = Tables.orders(s, dir)
-      .select(col("o_custkey"), col("o_orderstatus"), col("o_totalprice"))
-    soakBloomAgg(
-      graft.operators.BloomJoin.prefilter(fact, "o_custkey", dim), dim)
-  }
-
   // ----------------------------------------------------------- aggregates
 
   /** Flagship: TPC-H Q1-style 7-aggregate group-by (REF-P1: partial

@@ -1224,15 +1224,15 @@ object Layout {
 
   // ------------------------------------------ per-file BLOOM index (r17)
 
-  /** Default bloom sidecar geometry: m = 131072 bits (2048 64-bit words)
-    * per file, k = 4 hash functions. At ~15k distinct keys per clustered
-    * file that is ~8.7 bits/key → ~2% false-positive rate; the sidecar
-    * stores only NONZERO words, so its size is min(set bits, words) rows
-    * per file — O(files), never O(rows). The geometry is a BUILD
-    * parameter (persisted in the sidecar, read back at probe time): at
-    * 100 TB, files hold more distinct keys, and bits-per-key — not a
-    * constant word count — is what holds the false-positive rate; the
-    * ScaleSoak sizes 8192 words for 256-file/60M-row layouts. */
+  /** Bloom sidecar geometry: m = 131072 bits (2048 64-bit words) per
+    * file, k = 4 hash functions. At ~15k distinct keys per clustered file
+    * that is ~8.7 bits/key → ~2% false-positive rate; the sidecar stores
+    * only NONZERO words, so its size is min(set bits, words) rows per
+    * file — O(files), never O(rows). The word count is persisted in the
+    * sidecar and read back at probe time, so a sidecar built under another
+    * geometry still probes correctly: at 100 TB, files hold more distinct
+    * keys, and bits-per-key — not a constant word count — is what holds
+    * the false-positive rate. */
   val BloomWords = 2048
   val BloomHashes = 4
 
@@ -1255,14 +1255,13 @@ object Layout {
     * build are simply absent from the sidecar and [[bloomPrunedRead]]
     * reads them unconditionally — staleness degrades pruning, never
     * correctness. Returns the sidecar row count. */
-  def buildBloomIndex(spark: SparkSession, path: String, keyCol: String,
-                      words: Int = BloomWords): Long = {
+  def buildBloomIndex(spark: SparkSession, path: String, keyCol: String): Long = {
     val live = liveManifestRows(spark, path, Long.MaxValue)
       .select(col("file_path")).collect().map(_.getString(0))
     val bits = spark.read.parquet(live.toIndexedSeq: _*)
       .select(input_file_name().as("file_path"), col(keyCol).as("k"))
       .select(col("file_path"), explode(array(
-        (1 to BloomHashes).map(i => bloomBitpos(col("k"), i, words)): _*)).as("bitpos"))
+        (1 to BloomHashes).map(i => bloomBitpos(col("k"), i, BloomWords)): _*)).as("bitpos"))
       .select(col("file_path"), expr("bitpos div 64").as("word_idx"),
         expr("shiftleft(1L, cast(bitpos % 64 as int))").as("mask"))
       .groupBy(col("file_path"), col("word_idx"))
@@ -1270,12 +1269,12 @@ object Layout {
     // Coverage markers (word_idx = -1, one per indexed file) ride the
     // sidecar: planning then needs only PUSHED point reads (the marker
     // rows + the ≤ keys×k probed word indexes) instead of a full-sidecar
-    // distinct — at soak geometry that is 256+16 rows out of 8.4M.
+    // distinct.
     val markers = live.toIndexedSeq
       .map(f => (f, -1L, 0L))
     val markerDf = spark.createDataFrame(markers).toDF("file_path", "word_idx", "word")
     bits.unionByName(markerDf)
-      .withColumn("m_words", lit(words.toLong)) // geometry rides the sidecar
+      .withColumn("m_words", lit(BloomWords.toLong)) // geometry rides the sidecar
       .coalesce(1)
       .sortWithinPartitions(col("word_idx"))    // row-group stats serve the
                                                 // planning point filters
