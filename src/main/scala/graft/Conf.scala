@@ -27,9 +27,8 @@ object Conf {
     * (global ntile, few-valued-partition running sums, single-buffer
     * percentiles, per-key count windows) are acceptable. Past ~1 GiB one
     * sort task becomes the whole job's critical path, so the size routers
-    * (ScaleOps.routeBySize and q_ml_eval_auc's inline gate) switch to
-    * their prefix-scan or join-back forms; ScaleOps.persistIfBig reads it
-    * too. */
+    * (ScaleOps.routeBySize) switch to their scale forms past it;
+    * ScaleOps.persistIfBig reads it too. */
   val OneTaskSortMaxBytes: Long = 1L << 30
 
   /** Recommended `spark.sql.shuffle.partitions` for a job shuffling

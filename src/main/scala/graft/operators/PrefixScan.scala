@@ -17,11 +17,14 @@ import org.apache.spark.sql.types._
   * columns followed by the peer columns, the first `nGroup` of them the
   * group. `values` are the summed columns, already cast to their sum types.
   * The output is the child's rows with `sums` appended: one running sum per
-  * value, then, with peer columns, one sum before the peer run per value. */
+  * value, then, with peer columns, one sum before the peer run per value.
+  * `totals`, for a scan with no group, are one more column per value: its
+  * sum over every row. */
 case class PrefixScan(keys: Seq[Expression], nGroup: Int, values: Seq[Expression],
-                      sums: Seq[Attribute], child: LogicalPlan) extends UnaryNode {
-  override def output: Seq[Attribute] = child.output ++ sums
-  override def producedAttributes: AttributeSet = AttributeSet(sums)
+                      sums: Seq[Attribute], totals: Seq[Attribute],
+                      child: LogicalPlan) extends UnaryNode {
+  override def output: Seq[Attribute] = child.output ++ sums ++ totals
+  override def producedAttributes: AttributeSet = AttributeSet(sums ++ totals)
   override protected def withNewChildInternal(c: LogicalPlan): PrefixScan = copy(child = c)
 }
 
@@ -29,13 +32,16 @@ case class PrefixScan(keys: Seq[Expression], nGroup: Int, values: Seq[Expression
   * child. Wider, it first runs one job over the child's output that returns
   * each partition's boundary partials, folds them on the driver, in
   * partition order, into each partition's carry, then maps the same output
-  * with the carries applied; the exchange below is not run again. It keeps
-  * its child's order and partitioning, so an operator above that the range
+  * with the carries applied; the exchange below is not run again. Totals
+  * are the fold of that job's partials (each partition is one group), so a
+  * scan with totals runs the job at one partition too. It keeps its
+  * child's order and partitioning, so an operator above that the range
   * partitioning already satisfies (any at one partition) adds no exchange. */
 case class PrefixScanExec(keys: Seq[Expression], nGroup: Int, values: Seq[Expression],
-                          sums: Seq[Attribute], child: SparkPlan) extends UnaryExecNode {
-  override def output: Seq[Attribute] = child.output ++ sums
-  override def producedAttributes: AttributeSet = AttributeSet(sums)
+                          sums: Seq[Attribute], totals: Seq[Attribute],
+                          child: SparkPlan) extends UnaryExecNode {
+  override def output: Seq[Attribute] = child.output ++ sums ++ totals
+  override def producedAttributes: AttributeSet = AttributeSet(sums ++ totals)
   override def outputPartitioning: Partitioning =
     if (child.outputPartitioning.numPartitions == 1) SinglePartition
     else child.outputPartitioning
@@ -48,15 +54,18 @@ case class PrefixScanExec(keys: Seq[Expression], nGroup: Int, values: Seq[Expres
     val types = output.map(_.dataType).toArray
     val rows = child.execute()
     val none = new Array[Any](values.size)
-    val carries = if (rows.getNumPartitions <= 1) Array.empty[(Array[Any], Array[Any])] else {
-      val bounds = rows.mapPartitions { it =>
-        val s = new Scanner(spec, none, none)
-        var first: InternalRow = null
-        it.foreach { r => s.step(r); if (first == null) first = s.key.copy() }
-        Iterator(Option(first).map(f => Boundary(f, s.key.copy(), s.run, s.before)))
-      }.collect()
-      spec.carries(bounds, none)
-    }
+    val (carries, total) =
+      if (rows.getNumPartitions <= 1 && totals.isEmpty) (Array.empty[(Array[Any], Array[Any])], none)
+      else {
+        val bounds = rows.mapPartitions { it =>
+          val s = new Scanner(spec, none, none)
+          var first: InternalRow = null
+          it.foreach { r => s.step(r); if (first == null) first = s.key.copy() }
+          Iterator(Option(first).map(f => Boundary(f, s.key.copy(), s.run, s.before)))
+        }.collect()
+        (spec.carries(bounds, none), bounds.flatten.map(_.run).foldLeft(none)(spec.plus))
+      }
+    val tail = if (totals.isEmpty) Array.empty[Any] else total
     rows.mapPartitionsWithIndex { (p, it) =>
       val (run, before) = carries.lift(p).getOrElse((none, none))
       val s = new Scanner(spec, run, before)
@@ -64,7 +73,8 @@ case class PrefixScanExec(keys: Seq[Expression], nGroup: Int, values: Seq[Expres
       val joined = new JoinedRow()
       it.map { r =>
         s.step(r)
-        toUnsafe(joined(r, new GenericInternalRow(if (withBefore) s.run ++ s.before else s.run)))
+        toUnsafe(joined(r, new GenericInternalRow(
+          (if (withBefore) s.run ++ s.before else s.run) ++ tail)))
       }
     }
   }
@@ -74,7 +84,7 @@ case class PrefixScanExec(keys: Seq[Expression], nGroup: Int, values: Seq[Expres
 object PrefixScanStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: PrefixScan =>
-      PrefixScanExec(p.keys, p.nGroup, p.values, p.sums, planLater(p.child)) :: Nil
+      PrefixScanExec(p.keys, p.nGroup, p.values, p.sums, p.totals, planLater(p.child)) :: Nil
     case _ => Nil
   }
 

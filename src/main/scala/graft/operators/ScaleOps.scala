@@ -39,17 +39,17 @@ object ScaleOps {
     if (estimatedBytes(source) <= BigInt(maxBytes)) broadcast(df) else df
 
   /** The SIZE-ROUTER convention shared by the routed queries (ntile,
-    * median, weighted median, winsorize, RFM, tfidf, boilerplate, AUC):
-    * the declared one-task form while `gate`'s Catalyst estimate fits a
-    * single sort task, the scale rewrite past it. Route forms are
-    * bit-identical (ScaleOpsSpec), so routing never changes results — only
-    * the plan shape. Each router states its crossover from one probe
-    * (2026-10: one JVM per run, 4 CPUs, 4 shuffle partitions, noop-forced,
-    * median of 3 after a warm-up; the scale form's time over the window
-    * form's in the same JVM, median over ten JVM runs at sf0.01 and at
-    * sf0.1). A key whose scale form is within 0.25 of its window form at
-    * sf0.01 and no slower at sf0.1 runs the scale form alone
-    * (q_window_range, q_sample_quota, q_pack_sequences). */
+    * median, weighted median, winsorize, RFM, tfidf, boilerplate): the
+    * declared one-task form while `gate`'s Catalyst estimate fits a single
+    * sort task, the scale rewrite past it. Route forms are bit-identical
+    * (ScaleOpsSpec), so routing never changes results — only the plan
+    * shape. Each router states its crossover from one probe (the test-side
+    * `graft.RouterProbe`: one JVM per run, 4 CPUs, 4 shuffle partitions,
+    * noop-forced, median of 3 after a warm-up; the scale form's time over
+    * the window form's in the same JVM, median over ten JVM runs at sf0.01
+    * and at sf0.1). A key whose scale form is within 0.25 of its window
+    * form at sf0.01 and no slower at sf0.1 runs the scale form alone
+    * (q_window_range, q_sample_quota, q_pack_sequences, q_ml_eval_auc). */
   def routeBySize(gate: DataFrame, maxOneTaskBytes: Long)
                  (below: => DataFrame)(above: => DataFrame): DataFrame =
     if (estimatedBytes(gate) <= BigInt(maxOneTaskBytes)) below else above
@@ -174,7 +174,9 @@ object ScaleOps {
     * gives. With `peers = m > 0` it also appends `name_before`: the same sum
     * over the rows of the group that sort strictly before the row on the
     * first m order columns. Rows tied on those columns are one peer run,
-    * so `name_before` of a count is `rank() - 1` over them.
+    * so `name_before` of a count is `rank() - 1` over them. With `total`,
+    * which needs an empty `group`, it also appends `name_total`: the sum of
+    * `value` over every row, what `sum(value) OVER ()` gives.
     *
     * The returned frame is lazy: building it runs no job. Its plan is one
     * [[PrefixScan]] node (planned by [[PrefixScanStrategy]], which this
@@ -212,8 +214,10 @@ object ScaleOps {
     * Output types equal the window form's. A key column may not be an
     * integer literal: a sort reads one as a column position. */
   def prefixScan(df: DataFrame, group: Seq[Column], order: Seq[Column],
-                 sums: Seq[(String, Column)], peers: Int = 0): DataFrame = {
+                 sums: Seq[(String, Column)], peers: Int = 0,
+                 total: Boolean = false): DataFrame = {
     require(peers >= 0 && peers <= order.size, s"peers must be in 0..${order.size}")
+    require(!total || group.isEmpty, "total needs an empty group")
     val spark = df.sparkSession
     val sumTypes = df.select(sums.map(_._2): _*).schema.map(_.dataType match {
       case ByteType | ShortType | IntegerType | LongType => LongType
@@ -226,18 +230,27 @@ object ScaleOps {
         case a: Alias => a.child
         case e => e
       }
-    val split = BigInt(spark.sessionState.conf.filesMaxPartitionBytes)
-    val parts = ((estimatedBytes(df) + split - 1) / split)
-      .min(spark.sessionState.conf.numShufflePartitions).max(1).toInt
-    val sortBy = group.map(_.asc) ++ order
-    val sorted = df.repartitionByRange(parts, sortBy: _*).sortWithinPartitions(sortBy: _*)
-      .queryExecution.analyzed
+    val sorted = rangeSorted(df, group, order).queryExecution.analyzed
     val keys = sorted.asInstanceOf[Sort].order.take(group.size + peers).map(_.child)
     def attrs(suffix: String) = sums.map(_._1).zip(sumTypes).map { case (n, t) =>
       AttributeReference(n + suffix, t)() }
     PrefixScanStrategy.attach(spark)
     ColumnBridge.frame(spark, PrefixScan(keys, group.size, values,
-      attrs("") ++ (if (peers > 0) attrs("_before") else Nil), sorted))
+      attrs("") ++ (if (peers > 0) attrs("_before") else Nil),
+      if (total) attrs("_total") else Nil, sorted))
+  }
+
+  /** [[prefixScan]]'s input: `df` range-partitioned on (group ++ order),
+    * one partition per input split, and sorted within partitions. An
+    * aggregate over it reuses the scan's exchange, and at one partition
+    * adds none. */
+  private def rangeSorted(df: DataFrame, group: Seq[Column], order: Seq[Column]): DataFrame = {
+    val conf = df.sparkSession.sessionState.conf
+    val split = BigInt(conf.filesMaxPartitionBytes)
+    val parts = ((estimatedBytes(df) + split - 1) / split)
+      .min(conf.numShufflePartitions).max(1).toInt
+    val sortBy = group.map(_.asc) ++ order
+    df.repartitionByRange(parts, sortBy: _*).sortWithinPartitions(sortBy: _*)
   }
 
   /** EXACT global row_number / rank WITHOUT a one-task whole-table window:
@@ -245,13 +258,14 @@ object ScaleOps {
     * the peer key. Appends `__pos` (row_number over `value DESC,
     * tiebreaks`), `__rnk` (rank over `value DESC` alone — one more than the
     * rows of strictly greater value, which a value tie spanning range
-    * partitions takes from the carry) and `__n` (total rows, a one-row
-    * count joined back). Requires non-null `value`; positions are longs. */
+    * partitions takes from the carry) and `__n` (total rows, the scan's
+    * own total, so `df` is read once). Requires non-null `value`;
+    * positions are longs. */
   def globalRanksDesc(df: DataFrame, value: Column, tiebreaks: Seq[Column]): DataFrame =
-    prefixScan(df, Nil, value.desc +: tiebreaks, Seq("__pos" -> lit(1L)), peers = 1)
+    prefixScan(df, Nil, value.desc +: tiebreaks, Seq("__pos" -> lit(1L)), peers = 1, total = true)
       .withColumn("__rnk", coalesce(col("__pos_before"), lit(0L)) + 1L)
+      .withColumnRenamed("__pos_total", "__n")
       .drop("__pos_before")
-      .crossJoin(broadcast(df.agg(count(lit(1)).as("__n"))))
 
   /** EXACT grouped interpolated percentiles WITHOUT a per-group
     * whole-distribution aggregation buffer.
@@ -264,11 +278,12 @@ object ScaleOps {
     *  1. the distinct-value histogram (g, v, c) — one (g, v) shuffle; every
     *     later pass touches only its rows;
     *  2. a [[prefixScan]] of c over (g; v): a distinct value covers the
-    *     1-based positions (cum − c, cum] of its group's sorted multiset,
-    *     and the group's size n is its last cum;
-    *  3. each quantile's two bracketing positions (k = ⌊p·(n−1)⌋ + 1 and
-    *     k+1, Spark's own 0-based-position formula) pick their covering
-    *     values, interpolated x₁ + frac·(x₂ − x₁).
+    *     1-based positions (cum − c, cum] of its group's sorted multiset;
+    *  3. each group's size n, the sum of its c (O(groups) rows), gives each
+    *     quantile's two bracketing positions (k = ⌊p·(n−1)⌋ + 1 and k+1,
+    *     Spark's own 0-based-position formula), joined to the scan's output
+    *     to pick their covering values, interpolated x₁ + frac·(x₂ − x₁).
+    *     The scan runs once: its output is read by that join alone.
     *
     * Returns one row per group: (g, __n, q_0 … q_{ps.size-1}), quantiles in
     * `ps` order, un-rounded (callers own output rounding). Requires
@@ -279,35 +294,31 @@ object ScaleOps {
     val dist = df.select(part.as("g"), v.as("v"))
       .groupBy(col("g"), col("v")).agg(count(lit(1)).as("c"))
     val pos = prefixScan(dist, Seq(col("g")), Seq(col("v")), Seq("__cum" -> col("c")))
-    val gn = pos.groupBy(col("g")).agg(max(col("__cum")).as("__n"))
+    // n from the histogram as the scan reads it (its exchange, reused), not
+    // from the scan's output, so the scan has one consumer: a group's last
+    // running count is its size either way.
+    val gn = rangeSorted(dist, Seq(col("g")), Seq(col("v")))
+      .groupBy(col("g")).agg(sum(col("c")).as("__n"))
     // Bracketing ranks per (group, quantile): Spark's Percentile formula —
     // 0-based position p·(n−1), lower index ⌊·⌋, interpolation fraction the
     // remainder — converted to 1-based multiset positions k1, k2.
-    val ranks = gn.select(col("g"), col("__n"), explode(array(
-        ps.zipWithIndex.map { case (p, i) =>
-          struct(lit(i).as("pi"), lit(p).as("p")) }: _*)).as("__q"))
-      .select(col("g"), col("__n"), col("__q.pi").as("__pi"),
-        (col("__q.p") * (col("__n") - 1L).cast("double")).as("__pos0"))
-      .withColumn("__k1", floor(col("__pos0")).cast("long") + 1L)
-      .withColumn("__frac", col("__pos0") - floor(col("__pos0")))
-      .withColumn("__k2", least(col("__k1") + 1L, col("__n")))
-      .select(col("g"), col("__n"), col("__pi"), col("__frac"),
-        col("__k1"), col("__k2"))
+    def pos0(p: Double): Column = lit(p) * (col("__n") - 1L).cast("double")
+    def k1(p: Double): Column = floor(pos0(p)).cast("long") + 1L
+    def k2(p: Double): Column = least(k1(p) + 1L, col("__n"))
     // A distinct value covers positions (cum − c, cum]; pick the coverers
     // of k1 and k2 (possibly the same row) and interpolate.
     def covers(k: Column): Column =
       k > col("__cum") - col("c") && k <= col("__cum")
-    val hits = pos.join(ranks, Seq("g"))
-      .filter(covers(col("__k1")) || covers(col("__k2")))
-      .groupBy(col("g"), col("__n"), col("__pi"), col("__frac"))
-      .agg(
-        max(when(covers(col("__k1")), col("v"))).as("__x1"),
-        max(when(covers(col("__k2")), col("v"))).as("__x2"))
-      .withColumn("__qv",
-        col("__x1") + col("__frac") * (col("__x2") - col("__x1")))
-    val qCols = ps.indices.map(i =>
-      max(when(col("__pi") === i, col("__qv"))).as(s"q_$i"))
-    hits.groupBy(col("g"), col("__n")).agg(qCols.head, qCols.tail: _*)
+    val x = ps.zipWithIndex.flatMap { case (p, i) => Seq(
+      max(when(covers(k1(p)), col("v"))).as(s"__x1_$i"),
+      max(when(covers(k2(p)), col("v"))).as(s"__x2_$i")) }
+    pos.join(gn.withColumnRenamed("g", "__g"),
+        col("g") <=> col("__g") && ps.map(p => covers(k1(p)) || covers(k2(p))).reduce(_ || _))
+      .groupBy(col("g"), col("__n")).agg(x.head, x.tail: _*)
+      .select(col("g") +: col("__n") +: ps.zipWithIndex.map { case (p, i) =>
+        val frac = pos0(p) - floor(pos0(p))
+        (col(s"__x1_$i") + frac * (col(s"__x2_$i") - col(s"__x1_$i"))).as(s"q_$i")
+      }: _*)
   }
 
   /** EXACT per-group running (prefix) sums WITHOUT sorting each whole

@@ -1089,8 +1089,8 @@ object LlmOps {
   /** Size-routed q_text_tfidf — same contract as Windows.ntileRouted: both
     * forms produce identical rows, so routing never changes results, only
     * the plan shape. Crossover ([[graft.operators.ScaleOps.routeBySize]]'s
-    * probe, ten runs): the scale form takes 1.43× the window form's time at
-    * sf0.01 (1.37–1.46) and 1.17× at sf0.1 (1.09–1.23, slower in 9 of 10);
+    * probe, ten runs): the scale form takes 1.26× the window form's time at
+    * sf0.01 (1.18–1.39) and 1.16× at sf0.1 (1.10–1.18, slower in 9 of 10);
     * the r11 soak above the gate measured 0.72×, so it crosses between
     * sf0.1 and the gate. */
   def tfidfRouted(maxOneTaskBytes: Long = graft.Conf.OneTaskSortMaxBytes): Q = (s, dir) =>
@@ -1507,9 +1507,9 @@ object LlmOps {
 
   /** Size-routed q_text_boilerplate — same contract as tfidfRouted.
     * Crossover ([[graft.operators.ScaleOps.routeBySize]]'s probe, ten
-    * runs): the scale form takes 1.32× the window form's time at sf0.01 and
-    * 1.36× at sf0.1 (1.32–1.43, slower in 10 of 10); the r11 soak above the
-    * gate measured 0.58×. */
+    * runs): the scale form takes 1.33× the window form's time at sf0.01
+    * (1.17–1.38) and 1.33× at sf0.1 (1.30–1.36, slower in 10 of 10); the
+    * r11 soak above the gate measured 0.58×. */
   def boilerplateRouted(maxOneTaskBytes: Long = graft.Conf.OneTaskSortMaxBytes): Q = (s, dir) =>
     graft.operators.ScaleOps.routeBySize(Tables.documents(s, dir), maxOneTaskBytes)(
       boilerplateWindowForm(s, dir))(boilerplateScaleForm(s, dir))
@@ -2196,14 +2196,18 @@ object LlmOps {
     val ord: DataFrame => DataFrame =
       _.orderBy(col("containment").desc, col("src_doc"), col("dst_doc"))
     val ladder = if (thetas.lastOption.contains(0.0)) thetas else thetas :+ 0.0
-    ladder.iterator.map { th =>
+    // A rejected rung is released before the next is tried; the accepted
+    // one is cached whole, so the result no longer reads docSets either.
+    val accepted = ladder.iterator.map { th =>
       val captured = graft.operators.ScaleOps.trackedPersist(capturedAt(th))
-      (th, captured, ord(captured).limit(50).collect())
-    }.collectFirst { case (th, captured, top)
-        if th == 0.0 ||
-          (top.length >= 50 && top(49).getAs[Double]("containment") >= th + 1e-6) =>
-      ord(captured).limit(50)
-    }.get
+      val top = ord(captured).limit(50).collect()
+      val ok = th == 0.0 ||
+        (top.length >= 50 && top(49).getAs[Double]("containment") >= th + 1e-6)
+      if (!ok) captured.unpersist(blocking = false)
+      (ok, captured)
+    }.collectFirst { case (true, captured) => captured }.get
+    docSets.unpersist(blocking = false)
+    ord(accepted).limit(50)
   }
 
   /** SimHash near-dup pairs (Hamming ≤ 3) via the pigeonhole 4-band bucket

@@ -762,8 +762,10 @@ object MlSuffStats {
     * and the loss chain are driver arithmetic on the collected O(bins)
     * histogram, mirroring the oracle's fin/round dance digit for digit
     * (decimal sums → round-6 → 1e6-long → double; gains rounded 4 dp;
-    * argmax tie-broken (gain DESC, split_bin)). Residual frames chain
-    * through per-round persists released by the runner. */
+    * argmax tie-broken (gain DESC, split_bin)). Each round's residual frame
+    * is persisted and released once the next round's histogram has
+    * materialized its successor, so the loop holds at most two; the answer
+    * is driver arithmetic, so the last is released too. */
   val qMlGbdtConverged: Q = (s, dir) => {
     import s.implicits._
     val dec = (c: Column) => c.cast("decimal(38,10)")
@@ -787,6 +789,7 @@ object MlSuffStats {
         floor(col("l_extendedprice") / 4096.0).cast("long").as("bin1"),
         floor(col("l_discount") * 100.0).cast("long").as("bin2"),
         col("l_quantity").cast("double").as("r")))
+    var input: DataFrame = null
     var loss6 = 0L
     val out = scala.collection.mutable.ArrayBuffer
       .empty[(Long, String, Long, Double, Double, Double, Double)]
@@ -797,6 +800,7 @@ object MlSuffStats {
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDecimal(2), r.getDecimal(3)))
         .sortBy(_._1)
+      if (input != null) input.unpersist(blocking = false)
       val nTot = bins.map(_._2).sum
       val sTot = bins.map(_._3).reduce(_ add _)
       val qTot = bins.map(_._4).reduce(_ add _)
@@ -823,11 +827,14 @@ object MlSuffStats {
       val (gain4, sb, muL, muR) = best
       loss6 -= 100L * gain4
       out += ((i + 1L, f, sb, muL, muR, gain4 / 10000.0, loss6 / 1000000.0))
-      resid = graft.operators.ScaleOps.trackedPersist(
-        resid.select(col("bin1"), col("bin2"),
-          (col("r") - when(col(f) <= lit(sb), lit(muL)).otherwise(lit(muR)))
-            .as("r")))
+      input = resid
+      if (i + 1 < gbdtConvRounds.size)
+        resid = graft.operators.ScaleOps.trackedPersist(
+          resid.select(col("bin1"), col("bin2"),
+            (col("r") - when(col(f) <= lit(sb), lit(muL)).otherwise(lit(muR)))
+              .as("r")))
     }
+    input.unpersist(blocking = false)
     out.toSeq
       .toDF("round", "feature", "split_bin", "mu_left", "mu_right", "gain", "loss")
       .select(col("round"), col("feature"), col("split_bin"),
@@ -1049,9 +1056,8 @@ object MlSuffStats {
     * ANY n (r15: this closes the old ≲9e7-row envelope where
     * round-after-double-division left the 2^53 mantissa; the decimal
     * identity is unconditional, and R14OpsSpec pins it equal to the
-    * brute-force double-division epilogue at testable scale, both
-    * routes). */
-  private def aucFromRuns(withRun: DataFrame): DataFrame = {
+    * brute-force double-division epilogue at testable scale). */
+  private[graft] def aucFromRuns(withRun: DataFrame): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(38,0)")
     withRun
       .agg(
@@ -1070,7 +1076,7 @@ object MlSuffStats {
           "DIV (4 * np * nn) AS BIGINT) END").cast("double") / lit(1e6)).as("auc"))
   }
 
-  private def aucGroups(s: SparkSession, dir: String): DataFrame =
+  private[graft] def aucGroups(s: SparkSession, dir: String): DataFrame =
     Tables.embeddings(s, dir)
       .select((col("embedding")(0).cast("double") + col("embedding")(1).cast("double"))
         .as("score"),
@@ -1078,35 +1084,21 @@ object MlSuffStats {
       .groupBy(col("score"))
       .agg(count(lit(1)).as("n_g"), sum(col("pos")).as("p_g"))
 
-  private[graft] val aucWindowForm: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.orderBy(col("score"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    aucFromRuns(aucGroups(s, dir).withColumn("run", sum(col("n_g")).over(w)))
-  }
-
-  private[graft] val aucScaleForm: Q = (s, dir) =>
-    aucFromRuns(graft.operators.ScaleOps.prefixScan(
-      aucGroups(s, dir), Nil, Seq(col("score")), Seq("run" -> col("n_g"))))
-
   /** RANKING-QUALITY EVALUATION — exact AUC (the Mann-Whitney U statistic
     * with average-rank tie handling) of a deterministic scorer
     * (score = e₀+e₁, positive = odd label). The scalable decomposition:
     * ONE corpus aggregation to per-DISTINCT-SCORE groups (n, n_pos) — the
     * only shuffle that touches rows — then a prefix count over the group
     * table and an all-integer fold ([[aucFromRuns]]): no per-row global
-    * rank is ever materialized, and ties cost nothing extra. The prefix is
-    * SIZE-ROUTED (the q_agg_median convention): a single-task window below
-    * Conf.OneTaskSortMaxBytes, the exact prefix scan
-    * `ScaleOps.prefixScan` above it — R14OpsSpec pins both forms
-    * bit-equal, so the 100 TB story is self-executing. Crossover
-    * ([[graft.operators.ScaleOps.routeBySize]]'s probe, ten runs): the scale
-    * form takes 1.14× the window form's time at sf0.01 and 1.16× at sf0.1
-    * (1.07–1.34, slower in 9 of 10), so the router stays. */
+    * rank is ever materialized, and ties cost nothing extra. The prefix
+    * count is the exact `ScaleOps.prefixScan`, not a one-task window, at
+    * every size: the router probe (ten runs) measured it at 1.06× the
+    * window form's time at sf0.01 (0.98–1.09) and 0.99× at sf0.1
+    * (0.92–1.00, slower in 3 of 10). R14OpsSpec pins
+    * it bit-equal to the window form, kept there as the reference. */
   val qMlEvalAuc: Q = (s, dir) =>
-    graft.operators.ScaleOps.routeBySize(
-      Tables.embeddings(s, dir), graft.Conf.OneTaskSortMaxBytes)(
-      aucWindowForm(s, dir))(aucScaleForm(s, dir))
+    aucFromRuns(graft.operators.ScaleOps.prefixScan(
+      aucGroups(s, dir), Nil, Seq(col("score")), Seq("run" -> col("n_g"))))
 
   /** RANKED-RETRIEVAL EVALUATION (r19) — recall@10 / MRR@10 / nDCG@10 per
     * query of the deterministic brute-force retrieval run (the

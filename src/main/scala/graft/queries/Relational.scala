@@ -3460,9 +3460,10 @@ object Relational {
     * one task, the exact ScaleOps rewrite past it. Identical output either
     * way, so routing never changes results — only the plan shape.
     * Crossover ([[graft.operators.ScaleOps.routeBySize]]'s probe, ten
-    * runs): the scale form takes 1.93× the window form's time at sf0.01
-    * (1.74–2.23) and 0.97× at sf0.1 (0.91–1.06); it crosses at about sf0.1,
-    * too late for the one-form rule (within 0.25 at sf0.01). */
+    * runs): the scale form takes 1.85× the window form's time at sf0.01
+    * (1.79–1.97) and 0.82× at sf0.1 (0.77–0.87, faster in 10 of 10); it
+    * crosses below sf0.1, too late for the one-form rule (within 0.25 at
+    * sf0.01): at sf0.01 its fixed planning and stage costs dominate. */
   def medianRouted(maxOneTaskBytes: Long = graft.Conf.OneTaskSortMaxBytes): Q =
     (s, dir) =>
       graft.operators.ScaleOps.routeBySize(Tables.orders(s, dir), maxOneTaskBytes)(
@@ -3524,6 +3525,9 @@ object Relational {
   }
 
   private[graft] val wmedianScaleForm: Q = (s, dir) => {
+    // pw feeds three consumers here. In the router probe (ten runs) this
+    // persist cost 1.11× at sf0.01 but saved time at sf0.1 (0.93×, slower
+    // in 2 of 10), the size nearer the gate where this form runs.
     val pw = graft.operators.ScaleOps.trackedPersist(wmedianPartials(s, dir))
     val tot = pw.groupBy(col("l_returnflag").as("tf")).agg(sum(col("w")).as("__tw"))
     val crossed = graft.operators.ScaleOps
@@ -3534,12 +3538,12 @@ object Relational {
   }
 
   /** Crossover ([[graft.operators.ScaleOps.routeBySize]]'s probe, ten
-    * runs): the scale form takes 0.90× the window form's time at sf0.01 but
-    * 1.12× at sf0.1 (1.02–1.19, slower in 7 of 10): below one split the
-    * prefix scan sorts every partial in one task, where the window sorts
-    * the three flags in parallel, and forcing the scan to four partitions
-    * gained nothing (0.99×, 0.93–1.04). The r16 soak (60M rows) measured
-    * 1.06×, so the router stays. */
+    * runs): the scale form takes 0.85× the window form's time at sf0.01
+    * (0.81–0.88) but 1.10× at sf0.1 (1.05–1.15, slower in 9 of 10): below
+    * one split the prefix scan sorts every partial in one task, where the
+    * window sorts the three flags in parallel, and forcing the scan to four
+    * partitions gained nothing (0.99×, 0.93–1.04). The r16 soak (60M rows)
+    * measured 1.06×, so the router stays. */
   def wmedianRouted(maxOneTaskBytes: Long = graft.Conf.OneTaskSortMaxBytes): Q =
     (s, dir) =>
       graft.operators.ScaleOps.routeBySize(Tables.lineitem(s, dir), maxOneTaskBytes)(
@@ -3592,9 +3596,13 @@ object Relational {
   }
 
   /** Crossover ([[graft.operators.ScaleOps.routeBySize]]'s probe, ten
-    * runs): the scale form takes 1.84× the window form's time at sf0.01 and
-    * 1.41× at sf0.1 (1.36–1.43); the r16 soak (7.5M orders) measured 1.09×,
-    * so the router stays. */
+    * runs): the scale form takes 1.81× the window form's time at sf0.01
+    * (1.70–1.85) and 1.17× at sf0.1 (1.16–1.26, slower in 10 of 10); the
+    * r16 soak (7.5M orders) measured 1.09×, so the router stays. The scale
+    * form also runs 4 shuffles at sf0.001, over the key's PlanShapeSpec
+    * budget of 3 (the histogram's exchange and the scan's range exchange
+    * stand where the percentile aggregate has one), so it could not run
+    * alone whatever the probe said. */
   def winsorRouted(maxOneTaskBytes: Long = graft.Conf.OneTaskSortMaxBytes): Q =
     (s, dir) =>
       graft.operators.ScaleOps.routeBySize(Tables.orders(s, dir), maxOneTaskBytes)(
@@ -3833,9 +3841,9 @@ object Relational {
   }
 
   /** Crossover ([[graft.operators.ScaleOps.routeBySize]]'s probe, ten
-    * runs): the scale form takes 1.80× the window form's time at sf0.01 and
-    * 1.78× at sf0.1 (1.70–1.85); the r16 soak (1.5M users) measured 1.25×,
-    * so the router stays. */
+    * runs): the scale form takes 1.86× the window form's time at sf0.01
+    * (1.77–1.95) and 1.65× at sf0.1 (1.58–1.68, slower in 10 of 10); the
+    * r16 soak (1.5M users) measured 1.25×, so the router stays. */
   def rfmRouted(maxOneTaskBytes: Long = graft.Conf.OneTaskSortMaxBytes): Q =
     (s, dir) =>
       graft.operators.ScaleOps.routeBySize(Tables.events(s, dir), maxOneTaskBytes)(

@@ -113,7 +113,8 @@ object Windows {
 
   /** Scale form — EXACT, no global sort: ScaleOps.globalRanksDesc gives the
     * global position (__pos, tiebroken by c_custkey), value rank (__rnk) and
-    * total count (__n) from one prefix scan over a range exchange; then
+    * total count (__n) from one prefix scan over a range exchange, which
+    * reads customer once; then
     *   ntile(k)  = the positional split SQL defines (first n%k buckets get
     *               ⌈n/k⌉ rows, the rest ⌊n/k⌋ — computed from __pos alone);
     *   pct_rank  = (rank-1)/(n-1), the definition of percent_rank.
@@ -148,11 +149,11 @@ object Windows {
     * rewrite past it. Both forms produce identical rows, so routing never
     * changes results, only the plan shape. Crossover
     * ([[graft.operators.ScaleOps.routeBySize]]'s probe, ten runs): the scale
-    * form takes 1.69× the window form's time at sf0.01 and 1.51× at sf0.1
-    * (1.46–1.61, slower in 10 of 10; the customer table is tiny, so the
-    * scan's exchange and the joined-back count are the whole cost), and it
-    * did not cross below 0.44 GiB in the r11 soak (SCALE.md), so the router
-    * stays. */
+    * form takes 1.52× the window form's time at sf0.01 (1.39–1.59) and
+    * 1.46× at sf0.1 (1.36–1.46, slower in 10 of 10; the customer table is
+    * tiny, so the scan's fixed costs, its carry job among them, are most of
+    * its time), and it did not cross below 0.44 GiB in the r11 soak
+    * (SCALE.md), so the router stays. */
   def ntileRouted(maxOneTaskBytes: Long = Conf.OneTaskSortMaxBytes): Q = (s, dir) =>
     ScaleOps.routeBySize(Tables.customer(s, dir), maxOneTaskBytes)(
       ntileWindowForm(s, dir))(ntileScaleForm(s, dir))

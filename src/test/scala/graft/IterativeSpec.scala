@@ -100,6 +100,16 @@ class IterativeSpec extends AnyFunSuite with BeforeAndAfterAll {
     df.unpersist()
   }
 
+  test("GBDT driver loop: once built, at most one more cached frame") {
+    val sc = spark.sparkContext
+    val rdds0 = sc.getPersistentRDDs.size
+    try {
+      graft.queries.MlSuffStats.qMlGbdtConverged(spark, Sf0001)
+      val grown = sc.getPersistentRDDs.size - rdds0
+      assert(grown <= 1, s"the boosting loop left $grown cached frames")
+    } finally graft.operators.ScaleOps.releaseTracked()
+  }
+
   test("unigram trainer: one SQL execution (the seed pass), then one single-stage shuffle-free job per EM round; caches only the word table") {
     import java.util.concurrent.ConcurrentLinkedQueue
     import java.util.concurrent.atomic.AtomicInteger

@@ -215,6 +215,32 @@ class PrefixScanSpec extends AnyFunSuite {
     }
   }
 
+  test("scan once: one PrefixScan under each quantile form; ntile reads customer once") {
+    import graft.operators.PrefixScanExec
+    import graft.queries.{Relational, Windows}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    def nodes(df: DataFrame) =
+      try PlanCheck.flatten(PlanCheck.finalPlan(df)) finally ScaleOps.releaseTracked()
+    // q_events_rfm runs groupedQuantilesExact while it is built, so the
+    // operator itself stands in for it.
+    val quantiles = Seq(
+      "q_agg_median" -> (() => Relational.medianScaleForm(spark, Sf0001)),
+      "q_stats_winsorize" -> (() => Relational.winsorScaleForm(spark, Sf0001)),
+      "groupedQuantilesExact" -> (() => ScaleOps.groupedQuantilesExact(
+        Tables.orders(spark, Sf0001), col("o_orderstatus"), col("o_totalprice"),
+        Seq(0.2, 0.4, 0.6, 0.8))))
+    for ((name, q) <- quantiles; wide <- Seq(false, true)) {
+      val scans = (if (wide) withSplitScans(nodes(q())) else nodes(q()))
+        .count(_.isInstanceOf[PrefixScanExec])
+      assert(scans == 1, s"$name (split scans: $wide) runs $scans prefix scans")
+    }
+    val reads = nodes(Windows.ntileScaleForm(spark, Sf0001)).count {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.exists(_.getName.startsWith("customer"))
+      case _ => false
+    }
+    assert(reads == 1, s"q_window_ntile reads customer $reads times")
+  }
+
   test("building q_window_range or a scan-backed scale form runs no job") {
     import graft.queries.{LlmOps, MlSuffStats, Relational, Windows}
     // q_events_rfm's scale form is left out: it collects its edges when
@@ -227,7 +253,7 @@ class PrefixScanSpec extends AnyFunSuite {
       "q_stats_winsorize" -> Relational.winsorScaleForm,
       "q_sample_quota" -> LlmOps.qSampleQuota,
       "q_pack_sequences" -> LlmOps.qPackSequences,
-      "q_ml_eval_auc" -> MlSuffStats.aucScaleForm)
+      "q_ml_eval_auc" -> MlSuffStats.qMlEvalAuc)
     for ((name, q) <- forms) {
       q(spark, Sf0001) // opens and signs the tables once
       val (jobs, _) = withSplitScans(jobsOf(q(spark, Sf0001)))

@@ -231,13 +231,11 @@ class R14OpsSpec extends AnyFunSuite {
     assert(got.getLong(0) === nPos)
     assert(got.getLong(1) === nNeg)
     assert(got.getDouble(2) === expected)
-    // The routed forms must be bit-equal (the 100 TB story is the SAME
-    // answer from the bucketed two-pass prefix).
-    import graft.queries.MlSuffStats
-    val w = MlSuffStats.aucWindowForm(spark, Sf0001).collect().head
-    // The scale form's scan spans several range partitions, as it would
-    // above the gate (withSplitScans), so the carries are compared too.
-    val sc = withSplitScans(MlSuffStats.aucScaleForm(spark, Sf0001).collect().head)
+    // The key's prefix scan must equal the window form bit for bit. Under
+    // withSplitScans the scan spans several range partitions, as it does at
+    // scale, so the carries are compared too.
+    val w = ScaleOpsSpec.aucWindowForm(spark, Sf0001).collect().head
+    val sc = withSplitScans(SparkEntry.queries("q_ml_eval_auc")(spark, Sf0001).collect().head)
     assert(w.toSeq === sc.toSeq)
     assert(w.toSeq === got.toSeq)
   }

@@ -563,6 +563,22 @@ class R17OpsSpec extends AnyFunSuite {
     assert(cs.head >= 0.5, s"top containment ${cs.head} — corpus has planted near-supersets")
   }
 
+  test("containmentTop50: a rejected ladder rung is released; at most one more cached frame") {
+    val sc = spark.sparkContext
+    val rdds0 = sc.getPersistentRDDs.size
+    try {
+      // A 50th containment cannot clear 1.0 by a rounding step, so the
+      // first rung is always rejected (a θ above 1 is no valid rung: its
+      // prefix length goes negative).
+      val top = queries.LlmOps.containmentTop50(spark, Tables.documents(spark, Sf0001),
+        thetas = Seq(1.0, 0.0))
+      val grown = sc.getPersistentRDDs.size - rdds0
+      assert(grown <= 1, s"the threshold ladder left $grown cached frames")
+      assert(top.collect().toSeq ==
+        SparkEntry.queries("q_dedup_containment")(spark, Sf0001).collect().toSeq)
+    } finally graft.operators.ScaleOps.releaseTracked()
+  }
+
   test("q_events_changepoint: exact deviation, one flagged argmax day") {
     val got = SparkEntry.queries("q_events_changepoint")(spark, Sf0001).collect()
     assert(got.nonEmpty)

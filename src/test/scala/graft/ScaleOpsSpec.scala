@@ -307,9 +307,8 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 }
 
-/** The declared window form of q_window_range, which now runs one
-  * prefix-scan form: the key's bit-equality reference, next to the DuckDB
-  * oracle. */
+/** The declared window forms of the keys that now run one prefix-scan
+  * form: each key's bit-equality reference, next to the DuckDB oracle. */
 object ScaleOpsSpec {
   import org.apache.spark.sql.{DataFrame, SparkSession}
   import org.apache.spark.sql.expressions.Window
@@ -351,5 +350,15 @@ object ScaleOpsSpec {
       .select(col("doc_id"), (col("doc_id") % 8).as("shard"),
         size(split(col("text"), " ")).cast("long").as("tokens"))
       .withColumn("running", sum(col("tokens")).over(w)))
+  }
+
+  /** q_ml_eval_auc with its running count as a whole-table window. One
+    * task sorts every score group. */
+  val aucWindowForm: (SparkSession, String) => DataFrame = (s, dir) => {
+    import graft.queries.MlSuffStats
+    val w = Window.orderBy(col("score"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    MlSuffStats.aucFromRuns(
+      MlSuffStats.aucGroups(s, dir).withColumn("run", sum(col("n_g")).over(w)))
   }
 }
