@@ -7,15 +7,23 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
   * (SURVEY §4): enable with
   * `spark.sql.extensions=graft.GraftExtensions` (or
   * `SparkSession.builder().withExtensions(new GraftExtensions)`), which
-  * registers `vec_dot`/`minhash_sig` at session build time — the deployment-grade
-  * alternative to the runtime registration in Tables.prep (kept for the
-  * driver-owned sessions whose builders this library does not control).
+  * at session build time injects the optimizer rules
+  *  - `plans.RollupRewriteRule` (materialized-rollup rewrite),
+  *  - `plans.FooterAggregate` (ungrouped MIN/MAX/COUNT from parquet
+  *    footers) and
+  *  - `plans.LocalSort` (a sort of local rows, done on the driver),
+  * and registers `vec_dot`, `minhash_sig`, `bigram_hashes`, `sig_matches`
+  * and `hilbert_idx` — the deployment-grade alternative to the runtime
+  * registration in Tables.prep (kept for the driver-owned sessions whose
+  * builders this library does not control).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     // Transparent materialized-rollup rewrite (plans/RollupRewrite): a
     // no-op until a rollup is registered, so injection is always safe.
     ext.injectOptimizerRule(sp => new graft.plans.RollupRewriteRule(sp))
+    // Zero-job answers for what the driver already holds (plans/DriverAnswers).
+    graft.plans.DriverAnswers.rules.foreach(r => ext.injectOptimizerRule(_ => r))
     ext.injectFunction((
       new FunctionIdentifier("vec_dot"),
       graft.functions.VecDot.info,

@@ -36,6 +36,9 @@ object Tables {
     graft.functions.SimHash64.register(spark)
     graft.functions.HilbertIndex.register(spark)
     graft.functions.CharNgrams.register(spark)
+    // Zero-job answers for what the driver already holds (footer
+    // MIN/MAX/COUNT, sorts of local rows); attaching is idempotent.
+    graft.plans.DriverAnswers.attach(spark)
   }
 
   /** Opens `dir/name.parquet` with a known schema. `spark.read.parquet`

@@ -2172,6 +2172,10 @@ object LlmOps {
 
   def containmentTop50(s: org.apache.spark.sql.SparkSession, docs: DataFrame,
                        thetas: Seq[Double] = Seq(0.98, 0.9, 0.7, 0.4, 0.0)): DataFrame = {
+    // A containment is in [0, 1]; above 1 the prefix slice gets a negative
+    // length, so a rung outside it is a caller error, not a rejected rung.
+    for (th <- thetas)
+      require(th >= 0.0 && th <= 1.0, s"containmentTop50: theta $th is outside [0, 1]")
     val docSets = containmentDocSets(docs)
 
     def capturedAt(theta: Double): DataFrame = {

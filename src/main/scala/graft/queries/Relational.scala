@@ -287,7 +287,9 @@ object Relational {
   /** Z-ORDER CLUSTERING round trip — Layout.zorderWrite graded through the
     * correctness gate: lineitem's (l_partkey, l_suppkey) pairs are min-max
     * scaled to 16 bits (exact BIGINT arithmetic — `div`, never `/` — so the
-    * oracle reproduces every code bit-for-bit), Morton-interleaved, written
+    * oracle reproduces every code bit-for-bit) with the bounds inlined as
+    * literals (Layout.boundLiterals: one `head()` the footers answer, no
+    * broadcast bounds join), Morton-interleaved, written
     * range-clustered by the z code, read back, and summarized per coarse
     * z-range (z >> 26, i.e. 64 buckets): row count plus the min/max
     * envelope of BOTH source columns. Tight per-bucket envelopes in both
@@ -301,10 +303,7 @@ object Relational {
     val li = Tables.lineitem(s, dir).select(
       col("l_partkey").cast("long").as("pk"),
       col("l_suppkey").cast("long").as("sk"))
-    val bounds = li.agg(
-      min(col("pk")).as("pk_min"), max(col("pk")).as("pk_max"),
-      min(col("sk")).as("sk_min"), max(col("sk")).as("sk_max"))
-    val scaled = li.crossJoin(broadcast(bounds))
+    val scaled = li.withColumns(graft.sources.Layout.boundLiterals(li, "pk", "sk"))
       .withColumn("px", expr("((pk - pk_min) * 65535) div greatest(pk_max - pk_min, 1)"))
       .withColumn("sx", expr("((sk - sk_min) * 65535) div greatest(sk_max - sk_min, 1)"))
       .select(col("pk"), col("sk"),
@@ -324,7 +323,9 @@ object Relational {
     * indexes are always grid-adjacent (no Z-seam jumps), so the same
     * range-clustered write yields strictly bounded per-file (pk, sk)
     * envelopes — the tighter data-skipping boxes a 100 TB two-column
-    * filter workload prunes on. Clustering is PLACEMENT-ONLY, so the
+    * filter workload prunes on. The grid scaling is q_layout_zorder's, with
+    * the same literal bounds (no broadcast bounds join). Clustering is
+    * PLACEMENT-ONLY, so the
     * graded read is the lossless round trip (count + decimal revenue +
     * exact key sums through the clustered layout); the curve itself is
     * pinned by LayoutSkewSpec: bijection + unit-step adjacency against an
@@ -335,10 +336,7 @@ object Relational {
       col("l_partkey").cast("long").as("pk"),
       col("l_suppkey").cast("long").as("sk"),
       col("l_extendedprice").as("price"))
-    val bounds = li.agg(
-      min(col("pk")).as("pk_min"), max(col("pk")).as("pk_max"),
-      min(col("sk")).as("sk_min"), max(col("sk")).as("sk_max"))
-    val scaled = li.crossJoin(broadcast(bounds))
+    val scaled = li.withColumns(graft.sources.Layout.boundLiterals(li, "pk", "sk"))
       .withColumn("px", expr("((pk - pk_min) * 65535) div greatest(pk_max - pk_min, 1)"))
       .withColumn("sx", expr("((sk - sk_min) * 65535) div greatest(sk_max - sk_min, 1)"))
       .select(col("pk"), col("sk"), col("price"),
@@ -2945,7 +2943,7 @@ object Relational {
       }
       k += 1
     }
-    s.createDataFrame(core.toSeq.sortBy(_._1))
+    s.createDataFrame(core.toSeq)
       .toDF("nationkey", "coreness")
       .orderBy("nationkey")
   }
@@ -3005,8 +3003,7 @@ object Relational {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val label = labelPropagate(sym, rounds = 4)
     val sizes = label.values.groupBy(identity).map { case (l, ls) => (l, ls.size.toLong) }
-    s.createDataFrame(label.toSeq.sortBy(_._1)
-        .map { case (n, l) => (n, l, sizes(l)) })
+    s.createDataFrame(label.toSeq.map { case (n, l) => (n, l, sizes(l)) })
       .toDF("nationkey", "community", "community_size")
       .orderBy("nationkey")
   }

@@ -126,6 +126,22 @@ object Layout {
       .drop("__z")
       .write.mode(SaveMode.Overwrite).parquet(path)
 
+  /** The min and max of each of `cols` over `df` as literals of the
+    * column's type, keyed `<c>_min` / `<c>_max`, from one `head()` — which
+    * reads only the parquet footers when `df` is a plain parquet scan
+    * (`graft.plans.FooterAggregate`). A write plan that inlines them reads
+    * `df` once; a cross join with the broadcast bounds aggregate ran that
+    * aggregate and its broadcast as two more jobs. */
+  private[graft] def boundLiterals(df: DataFrame, cols: String*): Map[String, Column] = {
+    val aggs = cols.flatMap(c => Seq(min(col(c)), max(col(c))))
+    val b = df.agg(aggs.head, aggs.tail: _*).head()
+    cols.zipWithIndex.flatMap { case (c, i) =>
+      val dt = df.schema(c).dataType
+      Seq(s"${c}_min" -> lit(b.get(2 * i)).cast(dt),
+        s"${c}_max" -> lit(b.get(2 * i + 1)).cast(dt))
+    }.toMap
+  }
+
   /** Compact a directory of small files into ~targetBytes outputs — the
     * table-maintenance pass every long-lived 100 TB layout needs: streaming
     * and incremental writers accrete small files, and file-count growth
@@ -191,13 +207,15 @@ object Layout {
     val parts = fs.listStatus(dataDir)
       .filter(_.getPath.getName.endsWith(".parquet")).toIndexedSeq
     val dt = df.schema(statsCol).dataType
-    footerFileStats(spark, parts.map(_.getPath), statsCol, dt) match {
+    footerFileStats(spark.sparkContext.hadoopConfiguration,
+        parts.map(_.getPath), Seq(statsCol -> dt)) match {
       case Some(stats) =>
         // file_path exactly as input_file_name() renders it (the scan
         // path's key): URI form with an empty authority on local FS.
-        val rows = stats.map { case (p, mn, mx, n) =>
-          org.apache.spark.sql.Row(inputFileNameString(fs, p), mn, mx, n,
-            0L, "add")
+        val rows = stats.map { f =>
+          org.apache.spark.sql.Row(inputFileNameString(fs, f.path),
+            footerValue(dt, f.cols(0).min), footerValue(dt, f.cols(0).max),
+            f.rows, 0L, "add")
         }.sortBy(_.getString(0))
         val schema = manifestSchema(dt, filePathNullable = false)
         spark.createDataFrame(
@@ -243,42 +261,51 @@ object Layout {
     if (uri.getScheme == "file") "file://" + uri.getRawPath else uri.toString
   }
 
-  /** Exact per-file (min, max, n_rows) of the stats column read from the
-    * parquet FOOTERS the write pass already produced — the zero-job twin of
-    * the read-back aggregation. Returns None (caller falls back to the
-    * scan) unless every file carries exact, decodable statistics:
-    * the PROVEN set is INT64 long, INT64 TIMESTAMP(MICROS) (what Spark
-    * writes for TimestampType under `spark.sql.parquet.outputTimestampType`
-    * = TIMESTAMP_MICROS; its default INT96 declines), INT32 int and INT32
-    * date — numeric footer stats are exact by the format spec (no
-    * truncation, unlike binary). External values are built with the same
-    * conversions a collect() of the scan path applies, so rows match
-    * bit-for-bit. */
-  private[graft] def footerFileStats(spark: SparkSession,
+  /** One column of one file's footer summary: the exact min and max (None
+    * when every value is null) as the column's physical integer (DATE in
+    * days, TIMESTAMP in microseconds), and the null count. */
+  private[graft] case class FooterColumn(min: Option[Long], max: Option[Long],
+                                         nulls: Long)
+
+  /** One data file's footer summary: its row count and a [[FooterColumn]]
+    * per requested column, in the order requested. */
+  private[graft] case class FooterStats(path: org.apache.hadoop.fs.Path,
+                                        rows: Long,
+                                        cols: IndexedSeq[FooterColumn])
+
+  /** Exact per-file row count and, for each of `cols`, (min, max, null
+    * count) read from the parquet FOOTERS in one pass per file — no Spark
+    * job. Shared by the manifest writers ([[writeManifested]],
+    * [[writeManifested2D]], appends) and by the optimizer rule that answers
+    * an ungrouped MIN/MAX/COUNT over a parquet scan
+    * (`graft.plans.FooterAggregate`). Returns None (callers fall back to the
+    * scan) unless every file carries exact, decodable statistics for every
+    * column: the PROVEN set is INT64 long, INT64 TIMESTAMP(MICROS) (what
+    * Spark writes for TimestampType under
+    * `spark.sql.parquet.outputTimestampType` = TIMESTAMP_MICROS; its default
+    * INT96 declines), INT32 int and INT32 date — numeric footer stats are
+    * exact by the format spec (no truncation, unlike binary). Each chunk
+    * must carry a null count, and a min/max unless it is all-null. A DATE
+    * or TIMESTAMP column also needs the scan to return the stored integer
+    * unchanged: a file in the legacy hybrid calendar, or one from another
+    * writer under a session that does not read CORRECTED, declines. */
+  private[graft] def footerFileStats(conf: org.apache.hadoop.conf.Configuration,
                                      files: Seq[org.apache.hadoop.fs.Path],
-                                     statsCol: String,
-                                     dt: org.apache.spark.sql.types.DataType)
-      : Option[Seq[(org.apache.hadoop.fs.Path, Any, Any, Long)]] = {
+                                     cols: Seq[(String, org.apache.spark.sql.types.DataType)])
+      : Option[Seq[FooterStats]] = {
     import org.apache.spark.sql.types._
+    import org.apache.spark.sql.internal.{LegacyBehaviorPolicy, SQLConf}
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import scala.jdk.CollectionConverters._
-    if (!Seq(LongType, IntegerType, TimestampType, DateType).contains(dt))
+    if (!cols.forall(c => Seq(LongType, IntegerType, TimestampType, DateType).contains(c._2)))
       return None
-    val conf = spark.sparkContext.hadoopConfiguration
-    def decode(v: Long): Any = dt match {
-      case LongType => java.lang.Long.valueOf(v)
-      case IntegerType => java.lang.Integer.valueOf(v.toInt)
-      case TimestampType =>
-        org.apache.spark.sql.catalyst.util.DateTimeUtils.toJavaTimestamp(v)
-      case DateType =>
-        org.apache.spark.sql.catalyst.util.DateTimeUtils.toJavaDate(v.toInt)
-      case _ => throw new IllegalStateException("unreachable: gated above")
-    }
+    val datetime = cols.exists(c => c._2 == TimestampType || c._2 == DateType)
+    val rebaseMode = SQLConf.get.getConf(SQLConf.PARQUET_REBASE_MODE_IN_READ).toString
     // Physical/logical footer shape the Catalyst type must have been
     // written as — anything else (INT96 timestamps, Spark's default,
-    // strings, decimals) → None.
-    def usable(pt: org.apache.parquet.schema.PrimitiveType): Boolean =
+    // strings, decimals, an INT32 read as long) → None.
+    def usable(dt: DataType, pt: org.apache.parquet.schema.PrimitiveType): Boolean =
       (dt, pt.getPrimitiveTypeName, pt.getLogicalTypeAnnotation) match {
         case (LongType, PrimitiveTypeName.INT64, null) => true
         case (IntegerType, PrimitiveTypeName.INT32, null) => true
@@ -291,44 +318,66 @@ object Layout {
               _: LogicalTypeAnnotation.DateLogicalTypeAnnotation) => true
         case _ => false
       }
-    val out = Seq.newBuilder[(org.apache.hadoop.fs.Path, Any, Any, Long)]
+    val out = Seq.newBuilder[FooterStats]
     for (f <- files) {
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
       try {
-        var nRows = 0L
-        var mn = Option.empty[Long]
-        var mx = Option.empty[Long]
-        for (b <- reader.getFooter.getBlocks.asScala) {
-          nRows += b.getRowCount
-          val chunk = b.getColumns.asScala.find(c =>
-            c.getPath.size == 1 && c.getPath.toDotString == statsCol)
-          chunk match {
-            case Some(c) if usable(c.getPrimitiveType) =>
-              val st = c.getStatistics
-              // Exactness gate: statistics must exist and carry real
-              // min/max unless the block is all-null for this column.
-              if (st == null || (!st.hasNonNullValue &&
-                  !(st.isNumNullsSet && st.getNumNulls == b.getRowCount)))
-                return None
-              if (st.hasNonNullValue) {
-                val (lo, hi) = st match {
-                  case s: org.apache.parquet.column.statistics.LongStatistics =>
-                    (s.getMin, s.getMax)
-                  case s: org.apache.parquet.column.statistics.IntStatistics =>
-                    (s.getMin.toLong, s.getMax.toLong)
-                  case _ => return None
-                }
-                mn = Some(mn.fold(lo)(math.min(_, lo)))
-                mx = Some(mx.fold(hi)(math.max(_, hi)))
-              }
+        val footer = reader.getFooter
+        val kv = footer.getFileMetaData.getKeyValueMetaData
+        if (datetime && org.apache.spark.sql.execution.datasources.DataSourceUtils
+              .datetimeRebaseSpec(kv.get(_), rebaseMode).mode != LegacyBehaviorPolicy.CORRECTED)
+          return None
+        var rows = 0L
+        val mn = Array.fill(cols.length)(Option.empty[Long])
+        val mx = Array.fill(cols.length)(Option.empty[Long])
+        val nulls = new Array[Long](cols.length)
+        for (b <- footer.getBlocks.asScala) rows += b.getRowCount
+        for (b <- footer.getBlocks.asScala; ((name, dt), i) <- cols.zipWithIndex) {
+          val st = b.getColumns.asScala.find(c =>
+            c.getPath.size == 1 && c.getPath.toDotString == name) match {
+            case Some(c) if usable(dt, c.getPrimitiveType) => c.getStatistics
             case _ => return None
           }
+          // Exactness gate: statistics must exist with a null count, and
+          // carry real min/max unless the block is all-null for this column.
+          if (st == null || !st.isNumNullsSet ||
+              (!st.hasNonNullValue && st.getNumNulls != b.getRowCount))
+            return None
+          nulls(i) += st.getNumNulls
+          if (st.hasNonNullValue) {
+            val (lo, hi) = st match {
+              case s: org.apache.parquet.column.statistics.LongStatistics =>
+                (s.getMin, s.getMax)
+              case s: org.apache.parquet.column.statistics.IntStatistics =>
+                (s.getMin.toLong, s.getMax.toLong)
+              case _ => return None
+            }
+            mn(i) = Some(mn(i).fold(lo)(math.min(_, lo)))
+            mx(i) = Some(mx(i).fold(hi)(math.max(_, hi)))
+          }
         }
-        out += ((f, mn.map(decode).orNull, mx.map(decode).orNull, nRows))
+        out += FooterStats(f, rows,
+          cols.indices.map(i => FooterColumn(mn(i), mx(i), nulls(i))))
       } finally reader.close()
     }
     Some(out.result())
+  }
+
+  /** A footer min or max as the external value a collect() of the scan
+    * returns for a column of type `dt` (null when absent), so footer rows
+    * match scan rows bit-for-bit. */
+  private def footerValue(dt: org.apache.spark.sql.types.DataType,
+                          v: Option[Long]): Any = {
+    import org.apache.spark.sql.types._
+    import org.apache.spark.sql.catalyst.util.DateTimeUtils
+    v.map[Any] { x => dt match {
+      case LongType => java.lang.Long.valueOf(x)
+      case IntegerType => java.lang.Integer.valueOf(x.toInt)
+      case TimestampType => DateTimeUtils.toJavaTimestamp(x)
+      case DateType => DateTimeUtils.toJavaDate(x.toInt)
+      case _ => throw new IllegalStateException(s"no footer value for $dt")
+    }}.orNull
   }
 
   // --------------------------------- CROSS-LAYOUT ATOMIC COMMIT (r19)
@@ -516,10 +565,11 @@ object Layout {
     val dt = df.schema(statsCol).dataType
     // Materialize the stats BEFORE the renames invalidate the tmp paths.
     val staged: IndexedSeq[org.apache.spark.sql.Row] =
-      footerFileStats(spark, parts0.map(_.getPath), statsCol, dt) match {
-        case Some(stats) => stats.map { case (p, mn, mx, n) =>
-            org.apache.spark.sql.Row(
-              s"$qualified/${p.getName}", mn, mx, n, ver, "add")
+      footerFileStats(conf, parts0.map(_.getPath), Seq(statsCol -> dt)) match {
+        case Some(stats) => stats.map { f =>
+            org.apache.spark.sql.Row(s"$qualified/${f.path.getName}",
+              footerValue(dt, f.cols(0).min), footerValue(dt, f.cols(0).max),
+              f.rows, ver, "add")
           }.sortBy(_.getString(0)).toIndexedSeq
         case None => spark.read.parquet(tmp.toString)
           .select(col(statsCol))
@@ -1081,28 +1131,53 @@ object Layout {
   def writeManifested2D(df: DataFrame, path: String,
                         colA: String, colB: String, numFiles: Int): Unit = {
     val spark = df.sparkSession
-    val bounds = df.agg(
-      min(col(colA)).as("a_min"), max(col(colA)).as("a_max"),
-      min(col(colB)).as("b_min"), max(col(colB)).as("b_max"))
-    val scaled = df.crossJoin(broadcast(bounds))
-      .withColumn("__ha", (col(colA) - col("a_min")).cast("long") * 65535L /
-        greatest(col("a_max") - col("a_min"), lit(1)).cast("long"))
-      .withColumn("__hb", (col(colB) - col("b_min")).cast("long") * 65535L /
-        greatest(col("b_max") - col("b_min"), lit(1)).cast("long"))
+    val bounds = boundLiterals(df, colA, colB)
+    val (aMin, aMax) = (bounds(s"${colA}_min"), bounds(s"${colA}_max"))
+    val (bMin, bMax) = (bounds(s"${colB}_min"), bounds(s"${colB}_max"))
+    df.withColumn("__ha", (col(colA) - aMin).cast("long") * 65535L /
+        greatest(aMax - aMin, lit(1)).cast("long"))
+      .withColumn("__hb", (col(colB) - bMin).cast("long") * 65535L /
+        greatest(bMax - bMin, lit(1)).cast("long"))
       .withColumn("__h", hilbert16(col("__ha"), col("__hb")))
-      .drop("__ha", "__hb", "a_min", "a_max", "b_min", "b_max")
-    scaled
+      .drop("__ha", "__hb")
       .repartitionByRange(numFiles, col("__h"))
       .sortWithinPartitions("__h")
       .drop("__h")
       .write.mode(SaveMode.Overwrite).parquet(s"$path/data")
-    spark.read.parquet(s"$path/data")
-      .select(col(colA), col(colB))
-      .groupBy(input_file_name().as("file_path"))
-      .agg(min(col(colA)).as("min_a"), max(col(colA)).as("max_a"),
-        min(col(colB)).as("min_b"), max(col(colB)).as("max_b"),
-        count(lit(1)).as("n_rows"))
-      .coalesce(1)
+    // The envelopes come from the footers the write just produced, as in
+    // writeManifested; the scan below runs only where the footer gate
+    // declines (ManifestSpec pins the two row for row).
+    import org.apache.hadoop.fs.Path
+    val dataDir = new Path(s"$path/data")
+    val fs = dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = fs.listStatus(dataDir).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet")).toIndexedSeq
+    val (dtA, dtB) = (df.schema(colA).dataType, df.schema(colB).dataType)
+    val manifest = footerFileStats(spark.sparkContext.hadoopConfiguration,
+        files, Seq(colA -> dtA, colB -> dtB)) match {
+      case Some(stats) =>
+        val rows = stats.map { f =>
+          val Seq(a, b) = f.cols
+          org.apache.spark.sql.Row(inputFileNameString(fs, f.path),
+            footerValue(dtA, a.min), footerValue(dtA, a.max),
+            footerValue(dtB, b.min), footerValue(dtB, b.max), f.rows)
+        }.sortBy(_.getString(0))
+        import org.apache.spark.sql.types._
+        val schema = StructType(Seq(
+          StructField("file_path", StringType, nullable = false),
+          StructField("min_a", dtA), StructField("max_a", dtA),
+          StructField("min_b", dtB), StructField("max_b", dtB),
+          StructField("n_rows", LongType, nullable = false)))
+        spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+      case None =>
+        spark.read.parquet(s"$path/data")
+          .select(col(colA), col(colB))
+          .groupBy(input_file_name().as("file_path"))
+          .agg(min(col(colA)).as("min_a"), max(col(colA)).as("max_a"),
+            min(col(colB)).as("min_b"), max(col(colB)).as("max_b"),
+            count(lit(1)).as("n_rows"))
+    }
+    manifest.coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(s"$path/manifest2d")
   }
 

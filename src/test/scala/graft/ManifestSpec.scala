@@ -837,7 +837,8 @@ class ManifestSpec extends AnyFunSuite {
       val dataDir = new org.apache.hadoop.fs.Path(s"$d/data")
       val files = dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .listStatus(dataDir).map(_.getPath).filter(_.getName.endsWith(".parquet")).toSeq
-      val footer = Layout.footerFileStats(spark, files, c, src.schema(c).dataType)
+      val footer = Layout.footerFileStats(spark.sparkContext.hadoopConfiguration, files,
+        Seq(c -> src.schema(c).dataType))
       assert(footer.isDefined == footerPath,
         s"$c ($ts): footer path ${if (footer.isDefined) "taken" else "declined"}")
       val manifest = spark.read.parquet(s"$d/manifest")
@@ -851,6 +852,43 @@ class ManifestSpec extends AnyFunSuite {
       assert(manifest == scan, s"$c ($ts): manifest != scan:\n$manifest\n$scan")
       assert(manifest.exists(_(1) == null) && manifest.exists(_(1) != null),
         s"$c ($ts): no all-null file next to a valued one — the null leg is vacuous")
+    }
+    Tables.deleteRecursively(base)
+  }
+  test("2-D manifest: footer envelopes == scan envelopes row for row; other types take the scan") {
+    import org.apache.spark.sql.types._
+    // A quarter of each column is null, on different rows, so some files
+    // hold nulls in one column only.
+    val src = spark.range(0, 4000).select(
+      when(col("id") % 4 =!= 0, col("id") * 7919L % 100003L).as("a"),
+      when(col("id") % 4 =!= 1, (col("id") * 104729L % 65537L).cast("int")).as("b"),
+      when(col("id") % 4 =!= 2, (col("id") / 7).cast(DecimalType(12, 4))).as("dec"))
+    val base = sys.props("java.io.tmpdir") + "/graft-manifest-2d-footer-spec"
+    Tables.deleteRecursively(base)
+    // (column pair, footer path expected): a decimal column has no exact
+    // footer stats, so its manifest is the scan's.
+    for (((ca, cb), footerPath) <- Seq((("a", "b"), true), (("a", "dec"), false))) {
+      val d = s"$base/$ca-$cb"
+      Layout.writeManifested2D(src.select(col(ca), col(cb)), d, ca, cb, 6)
+      val dataDir = new org.apache.hadoop.fs.Path(s"$d/data")
+      val files = dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listStatus(dataDir).map(_.getPath).filter(_.getName.endsWith(".parquet")).toSeq
+      val footer = Layout.footerFileStats(spark.sparkContext.hadoopConfiguration, files,
+        Seq(ca -> src.schema(ca).dataType, cb -> src.schema(cb).dataType))
+      assert(footer.isDefined == footerPath,
+        s"$ca, $cb: footer path ${if (footer.isDefined) "taken" else "declined"}")
+      val cols = Seq("file_path", "min_a", "max_a", "min_b", "max_b", "n_rows")
+      val manifest = spark.read.parquet(s"$d/manifest2d").select(cols.map(col): _*)
+      val scan = spark.read.parquet(s"$d/data")
+        .groupBy(input_file_name().as("file_path"))
+        .agg(min(col(ca)), max(col(ca)), min(col(cb)), max(col(cb)), count(lit(1)))
+        .toDF(cols: _*)
+      assert(manifest.schema.map(f => f.name -> f.dataType) ==
+        scan.schema.map(f => f.name -> f.dataType), s"$ca, $cb: manifest types != scan types")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toSeq).sortBy(_.head.toString).toSeq
+      assert(rows(manifest).length == files.length)
+      assert(rows(manifest) == rows(scan), s"$ca, $cb: manifest != scan")
     }
     Tables.deleteRecursively(base)
   }

@@ -579,6 +579,16 @@ class R17OpsSpec extends AnyFunSuite {
     } finally graft.operators.ScaleOps.releaseTracked()
   }
 
+  test("containmentTop50: a theta outside [0, 1] fails fast, naming the value") {
+    for (bad <- Seq(2.0, -0.1)) {
+      val e = intercept[IllegalArgumentException] {
+        queries.LlmOps.containmentTop50(spark, Tables.documents(spark, Sf0001),
+          thetas = Seq(bad, 0.0))
+      }
+      assert(e.getMessage.contains(s"theta $bad is outside [0, 1]"), e.getMessage)
+    }
+  }
+
   test("q_events_changepoint: exact deviation, one flagged argmax day") {
     val got = SparkEntry.queries("q_events_changepoint")(spark, Sf0001).collect()
     assert(got.nonEmpty)

@@ -44,7 +44,8 @@ object SparkFixture {
   def withSplitScans[T](body: => T): T =
     withShufflePartitions(8)(withMaxPartitionBytes(1L << 10)(body))
 
-  private def withConf[T](key: String, value: String)(body: => T): T = {
+  /** Run `body` with `key` set to `value`, then put back what was set. */
+  def withConf[T](key: String, value: String)(body: => T): T = {
     val before = spark.conf.getOption(key)
     spark.conf.set(key, value)
     try body finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
