@@ -26,9 +26,9 @@ import org.apache.spark.sql.types.{DateType, IntegerType}
   * `spark.sql.sources.parallelPartitionDiscovery.threshold` files (Spark's
   * own cut between driver-side and distributed file metadata work). The
   * columns must pass `Layout.footerFileStats`' type and exactness gate
-  * (INT32/INT64 integral, DATE, TIMESTAMP(MICROS)); a footer that cannot
-  * be read declines too, so the scan raises Spark's own error. Anything
-  * else runs as before. Empty input gives (null, …, 0), as Spark's
+  * (INT32/INT64 integral, DATE, TIMESTAMP and TIMESTAMP_NTZ in MICROS); a
+  * footer that cannot be read declines too, so the scan raises Spark's own
+  * error. Anything else runs as before. Empty input gives (null, …, 0), as Spark's
   * aggregate does. */
 object FooterAggregate extends Rule[LogicalPlan] {
 
@@ -105,7 +105,8 @@ object FooterAggregate extends Rule[LogicalPlan] {
     stats.map { perFile =>
       val rows = perFile.map(_.rows).sum
       def merged(c: AttributeReference) = perFile.map(_.cols(cols.indexOf(c)))
-      // Internal values: DATE and INT are Int, LONG and TIMESTAMP Long.
+      // Internal values: DATE and INT are Int; LONG, TIMESTAMP and
+      // TIMESTAMP_NTZ are Long.
       def internal(c: AttributeReference, v: Option[Long]): Any = v.map[Any] { x =>
         if (c.dataType == IntegerType || c.dataType == DateType) x.toInt else x
       }.orNull

@@ -497,7 +497,10 @@ object StreamingQs {
     * filtered aggregate over the source — a row lost, duplicated, or
     * mis-manifested by ANY tick breaks the hash. Flush sentinel rows ride
     * the replay but sit hours past the range (and are filtered by type
-    * defensively). */
+    * defensively). The sink stores `ts` as TIMESTAMP_NTZ, which parquet
+    * holds with exact footer stats, so each tick's manifest rows come from
+    * its files' footers; the session is UTC, so the values and the graded
+    * rows are those of the TIMESTAMP column. */
   val qStreamSinkManifest: Q = (s, dir) => {
     import graft.streaming.{Runtime => SR}
     val sink = Tables.stageDir(s, "stream-manifest", dir)
@@ -506,10 +509,11 @@ object StreamingQs {
     Tables.deleteRecursively(ckpt)
     SR.runToManifestedParquet(
       SR.eventsStreamSplitByTime(s, dir)
-        .select(col("event_id"), col("ts"), col("event_type"), col("value")),
+        .select(col("event_id"), col("ts").cast("timestamp_ntz").as("ts"),
+          col("event_type"), col("value")),
       sink, ckpt, statsCol = "ts", numFilesPerTick = 8)
-    val lo = lit("2024-01-10").cast("timestamp")
-    val hi = lit("2024-01-20").cast("timestamp")
+    val lo = lit("2024-01-10").cast("timestamp_ntz")
+    val hi = lit("2024-01-20").cast("timestamp_ntz")
     graft.sources.Layout.manifestPrunedRead(s, sink, lo, hi)
       .filter(col("ts") >= lo && col("ts") < hi &&
         col("event_type") =!= "flush")

@@ -182,69 +182,38 @@ object Layout {
     * [min,max] envelopes disjoint enough to skip most of them.
     *
     * Shuffle shape of the maintenance pass: one range exchange (plus
-    * Spark's range-bounds sampling) for the clustered write; the manifest
-    * build re-reads ONLY `statsCol` (column pruning reaches the scan) and
-    * aggregates per input file — a map-side-combined shuffle of one row
-    * per (task, file). */
+    * Spark's range-bounds sampling) for the clustered write. The manifest
+    * rows come from the parquet FOOTERS that write just produced
+    * ([[manifestStats]]: O(files) driver reads, no Spark job, never a
+    * second pass over the data); the one remaining job writes the
+    * manifest part. `statsCol` must have a type whose footer stats are
+    * exact ([[requireFooterStats]]), checked before anything is written. */
   def writeManifested(df: DataFrame, path: String, statsCol: String,
                       numFiles: Int): Unit = {
     val spark = df.sparkSession
+    val dt = df.schema(statsCol).dataType
+    requireFooterStats(spark, Seq(statsCol -> dt))
     df.repartitionByRange(numFiles, col(statsCol))
       .sortWithinPartitions(statsCol)
       .write.mode(SaveMode.Overwrite).parquet(s"$path/data")
-    // Manifest stats WITHOUT re-scanning the table (r20 — guide §6, VERDICT
-    // r19 Next #3): the write pass already recorded exact per-file
-    // min/max/rowcount in the parquet FOOTERS; read those (O(files) driver
-    // work, no Spark job) instead of a second full pass over the data —
-    // which at 100 TB is a whole-table column scan per build. Values are
-    // bit-identical for the proven footer types (ManifestSpec pins the
-    // footer path against the scan path row-for-row); anything else —
-    // including timestamps in Spark's default INT96 encoding — falls back
-    // to the original scan.
-    import org.apache.hadoop.fs.Path
-    val dataDir = new Path(s"$path/data")
+    val dataDir = new org.apache.hadoop.fs.Path(s"$path/data")
     val fs = dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = fs.listStatus(dataDir)
-      .filter(_.getPath.getName.endsWith(".parquet")).toIndexedSeq
-    val dt = df.schema(statsCol).dataType
-    footerFileStats(spark.sparkContext.hadoopConfiguration,
-        parts.map(_.getPath), Seq(statsCol -> dt)) match {
-      case Some(stats) =>
-        // file_path exactly as input_file_name() renders it (the scan
-        // path's key): URI form with an empty authority on local FS.
-        val rows = stats.map { f =>
-          org.apache.spark.sql.Row(inputFileNameString(fs, f.path),
-            footerValue(dt, f.cols(0).min), footerValue(dt, f.cols(0).max),
-            f.rows, 0L, "add")
-        }.sortBy(_.getString(0))
-        val schema = manifestSchema(dt, filePathNullable = false)
-        spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, 1), schema)
-          .coalesce(1)
-          .write.mode(SaveMode.Overwrite).parquet(s"$path/manifest")
-      case None =>
-        spark.read.parquet(s"$path/data")
-          .select(col(statsCol))
-          .groupBy(input_file_name().as("file_path"))
-          .agg(min(col(statsCol)).as("min_v"), max(col(statsCol)).as("max_v"),
-            count(lit(1)).as("n_rows"))
-          .withColumn("commit_ver", lit(0L))
-          .withColumn("op", lit("add"))
-          .coalesce(1)
-          .write.mode(SaveMode.Overwrite).parquet(s"$path/manifest")
-    }
+    val rows = manifestStats(spark, dataDir, Seq(statsCol -> dt)).map { f =>
+      org.apache.spark.sql.Row(inputFileNameString(fs, f.path),
+        footerValue(dt, f.cols(0).min), footerValue(dt, f.cols(0).max),
+        f.rows, 0L, "add")
+    }.sortBy(_.getString(0))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), manifestSchema(dt))
+      .write.mode(SaveMode.Overwrite).parquet(s"$path/manifest")
   }
 
-  /** The manifest row schema both stats paths produce ([[writeManifested]]'s
-    * aggregation derives exactly this; the footer path must match it so the
-    * committed manifest parts are byte-compatible): min/max nullable (an
-    * all-null stats column yields null envelopes), counts/version/op not. */
-  private def manifestSchema(dt: org.apache.spark.sql.types.DataType,
-                             filePathNullable: Boolean)
+  /** The manifest row schema: min/max nullable (an all-null stats column
+    * yields null envelopes), path, counts, version and op not. */
+  private def manifestSchema(dt: org.apache.spark.sql.types.DataType)
       : org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
     StructType(Seq(
-      StructField("file_path", StringType, nullable = filePathNullable),
+      StructField("file_path", StringType, nullable = false),
       StructField("min_v", dt, nullable = true),
       StructField("max_v", dt, nullable = true),
       StructField("n_rows", LongType, nullable = false),
@@ -254,16 +223,53 @@ object Layout {
 
   /** Render a file path the way `input_file_name()` does on the scan side
     * (URI with an empty authority on the local scheme — "file:///..."), so
-    * footer-derived manifest rows join/compare against scan-derived ones. */
+    * manifest rows join and compare against what a scan of the files
+    * reports. */
   private def inputFileNameString(fs: org.apache.hadoop.fs.FileSystem,
                                   p: org.apache.hadoop.fs.Path): String = {
     val uri = fs.makeQualified(p).toUri
     if (uri.getScheme == "file") "file://" + uri.getRawPath else uri.toString
   }
 
+  /** Reject, before any data file is written, a manifest stats column
+    * whose footers would not carry exact statistics: the column must be
+    * BIGINT, INT, DATE or TIMESTAMP_NTZ, or a TIMESTAMP that the session
+    * writes as TIMESTAMP_MICROS (`spark.sql.parquet.outputTimestampType`;
+    * Spark's default, INT96, has no usable footer stats). The error names
+    * the column and its type. */
+  private def requireFooterStats(spark: SparkSession,
+                                 cols: Seq[(String, org.apache.spark.sql.types.DataType)])
+      : Unit = {
+    import org.apache.spark.sql.types._
+    val tsOut = spark.conf.get("spark.sql.parquet.outputTimestampType")
+    for ((name, dt) <- cols) {
+      val written = if (dt == TimestampType) s" written as $tsOut" else ""
+      require(footerTypes.contains(dt) && (dt != TimestampType || tsOut == "TIMESTAMP_MICROS"),
+        s"manifest stats column `$name` has type ${dt.sql}$written, whose parquet " +
+        "footers carry no exact min/max; use BIGINT, INT, DATE, TIMESTAMP_NTZ, or " +
+        "TIMESTAMP with spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS")
+    }
+  }
+
+  /** [[footerFileStats]] of each parquet file directly under `dir`, which
+    * a manifest writer has just written: a file whose footer lacks exact
+    * statistics for `cols` fails naming the file. */
+  private def manifestStats(spark: SparkSession, dir: org.apache.hadoop.fs.Path,
+                            cols: Seq[(String, org.apache.spark.sql.types.DataType)])
+      : IndexedSeq[FooterStats] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    dir.getFileSystem(conf).listStatus(dir).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet")).toIndexedSeq.map { f =>
+        footerFileStats(conf, Seq(f), cols).getOrElse(throw new IllegalStateException(
+          s"$f has no exact footer min/max/null count for ${cols.map(_._1).mkString(", ")} " +
+          "that a scan would return unchanged")).head
+      }
+  }
+
   /** One column of one file's footer summary: the exact min and max (None
     * when every value is null) as the column's physical integer (DATE in
-    * days, TIMESTAMP in microseconds), and the null count. */
+    * days, TIMESTAMP and TIMESTAMP_NTZ in microseconds), and the null
+    * count. */
   private[graft] case class FooterColumn(min: Option[Long], max: Option[Long],
                                          nulls: Long)
 
@@ -273,22 +279,33 @@ object Layout {
                                         rows: Long,
                                         cols: IndexedSeq[FooterColumn])
 
+  /** The Catalyst types [[footerFileStats]] can answer. */
+  private val footerTypes: Set[org.apache.spark.sql.types.DataType] = {
+    import org.apache.spark.sql.types._
+    Set(LongType, IntegerType, TimestampType, TimestampNTZType, DateType)
+  }
+
   /** Exact per-file row count and, for each of `cols`, (min, max, null
     * count) read from the parquet FOOTERS in one pass per file — no Spark
     * job. Shared by the manifest writers ([[writeManifested]],
-    * [[writeManifested2D]], appends) and by the optimizer rule that answers
-    * an ungrouped MIN/MAX/COUNT over a parquet scan
-    * (`graft.plans.FooterAggregate`). Returns None (callers fall back to the
-    * scan) unless every file carries exact, decodable statistics for every
-    * column: the PROVEN set is INT64 long, INT64 TIMESTAMP(MICROS) (what
-    * Spark writes for TimestampType under
-    * `spark.sql.parquet.outputTimestampType` = TIMESTAMP_MICROS; its default
-    * INT96 declines), INT32 int and INT32 date — numeric footer stats are
-    * exact by the format spec (no truncation, unlike binary). Each chunk
-    * must carry a null count, and a min/max unless it is all-null. A DATE
-    * or TIMESTAMP column also needs the scan to return the stored integer
-    * unchanged: a file in the legacy hybrid calendar, or one from another
-    * writer under a session that does not read CORRECTED, declines. */
+    * [[writeManifested2D]], appends), which fail on None, and by the
+    * optimizer rule that answers an ungrouped MIN/MAX/COUNT over a parquet
+    * scan (`graft.plans.FooterAggregate`), which declines on None. Returns
+    * None unless every file carries exact, decodable statistics for every
+    * column: the PROVEN set is INT64 long, INT64 TIMESTAMP(MICROS,
+    * isAdjustedToUTC = true) read as TIMESTAMP (what Spark writes for it
+    * under `spark.sql.parquet.outputTimestampType` = TIMESTAMP_MICROS; the
+    * default INT96 declines), INT64 TIMESTAMP(MICROS, isAdjustedToUTC =
+    * false) read as TIMESTAMP_NTZ (how Spark always writes that type),
+    * INT32 int and INT32 date — numeric footer stats are exact by the
+    * format spec (no truncation, unlike binary). Each chunk must carry a
+    * null count, and a min/max unless it is all-null. A DATE or TIMESTAMP
+    * column also needs the scan to return the stored integer unchanged: a
+    * file in the legacy hybrid calendar, or one from another writer under
+    * a session that does not read CORRECTED, declines. TIMESTAMP_NTZ is
+    * never rebased, on write or on read, so it needs no calendar check
+    * (ManifestSpec writes a pre-1582 value under the LEGACY write mode and
+    * compares with the scan). */
   private[graft] def footerFileStats(conf: org.apache.hadoop.conf.Configuration,
                                      files: Seq[org.apache.hadoop.fs.Path],
                                      cols: Seq[(String, org.apache.spark.sql.types.DataType)])
@@ -298,8 +315,7 @@ object Layout {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import scala.jdk.CollectionConverters._
-    if (!cols.forall(c => Seq(LongType, IntegerType, TimestampType, DateType).contains(c._2)))
-      return None
+    if (!cols.forall(c => footerTypes.contains(c._2))) return None
     val datetime = cols.exists(c => c._2 == TimestampType || c._2 == DateType)
     val rebaseMode = SQLConf.get.getConf(SQLConf.PARQUET_REBASE_MODE_IN_READ).toString
     // Physical/logical footer shape the Catalyst type must have been
@@ -311,9 +327,10 @@ object Layout {
         case (IntegerType, PrimitiveTypeName.INT32, null) => true
         case (IntegerType, PrimitiveTypeName.INT32,
               _: LogicalTypeAnnotation.IntLogicalTypeAnnotation) => true
-        case (TimestampType, PrimitiveTypeName.INT64,
-              t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation)
-          if t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS => true
+        case (TimestampType | TimestampNTZType, PrimitiveTypeName.INT64,
+              t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation) =>
+          t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS &&
+            t.isAdjustedToUTC == (dt == TimestampType)
         case (DateType, PrimitiveTypeName.INT32,
               _: LogicalTypeAnnotation.DateLogicalTypeAnnotation) => true
         case _ => false
@@ -375,6 +392,7 @@ object Layout {
       case LongType => java.lang.Long.valueOf(x)
       case IntegerType => java.lang.Integer.valueOf(x.toInt)
       case TimestampType => DateTimeUtils.toJavaTimestamp(x)
+      case TimestampNTZType => DateTimeUtils.microsToLocalDateTime(x)
       case DateType => DateTimeUtils.toJavaDate(x.toInt)
       case _ => throw new IllegalStateException(s"no footer value for $dt")
     }}.orNull
@@ -505,14 +523,14 @@ object Layout {
     * existing is re-read, rewritten, or re-listed. A real Delta/Iceberg
     * commit is exactly this shape (a snapshot adds a manifest listing the
     * new files), and it is what keeps ingest cost O(batch) — rebuilding
-    * the manifest per tick would re-scan stats over O(table) files and
+    * the manifest per tick would re-read stats of O(table) files and
     * turn a streaming sink's every commit into a full maintenance pass.
     *
     * Mechanics: the batch is range-clustered on `statsCol` into its own
     * temp dir (same posture as the base, so per-file envelopes stay
-    * tight), its per-file stats aggregate over ONLY those files (one
-    * map-side-combined pass; the collect is O(batch files) — the same
-    * driver-side planning scale as [[manifestPrunedRead]]), the files are
+    * tight), its per-file stats come from ONLY those files' footers
+    * (O(batch files) driver reads and no Spark job — the same driver-side
+    * planning scale as [[manifestPrunedRead]]), the files are
     * RENAMED into `data/` (task-UUID part names — collision-free, no byte
     * copy on any sane filesystem), and the stats rows append as one new
     * manifest part. Ordering is crash-safe the Iceberg way: data files
@@ -533,7 +551,7 @@ object Layout {
 
   /** Shared commit machinery of [[appendManifested]] / [[deleteManifested]]
     * / [[compactManifested]]: cluster `df` on `statsCol` into a temp dir,
-    * aggregate per-file stats over ONLY those files, RENAME them into
+    * read per-file stats from ONLY those files' footers, RENAME them into
     * `data/` (task-UUID part names — collision-free, no byte copy on a
     * sane filesystem), and return the staged 'add' manifest rows — NOT yet
     * committed; the caller appends them (plus any 'remove' rows) as one
@@ -544,9 +562,10 @@ object Layout {
          org.apache.spark.sql.types.StructType) = {
     val spark = df.sparkSession
     import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
     val dataDir = new Path(s"$path/data")
-    val fs = dataDir.getFileSystem(conf)
+    val fs = dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dt = df.schema(statsCol).dataType
+    requireFooterStats(spark, Seq(statsCol -> dt))
     // No leading dot: readers only ever target data/ and manifest/, and a
     // dot-prefixed dir trips Spark's hidden-path filter with a spurious
     // "All paths were ignored" warning when the batch writes back to it.
@@ -554,50 +573,29 @@ object Layout {
     df.repartitionByRange(numFiles, col(statsCol))
       .sortWithinPartitions(statsCol)
       .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    // Stats over ONLY the new files, keyed by their final (post-rename)
-    // location so the manifest row format matches writeManifested's.
-    // r20: read them from the parquet FOOTERS the write just produced
-    // (zero Spark jobs — guide §6; the scan fallback below remains for
-    // unproven stats types, and ManifestSpec pins both paths identical).
+    // Stats over ONLY the new files, read from the footers the write just
+    // produced (no Spark job) BEFORE the renames invalidate the tmp paths,
+    // and keyed by each file's final (post-rename) location.
     val qualified = fs.makeQualified(dataDir).toString
-    val parts0 = fs.listStatus(tmp)
-      .filter(_.getPath.getName.endsWith(".parquet")).toIndexedSeq
-    val dt = df.schema(statsCol).dataType
-    // Materialize the stats BEFORE the renames invalidate the tmp paths.
-    val staged: IndexedSeq[org.apache.spark.sql.Row] =
-      footerFileStats(conf, parts0.map(_.getPath), Seq(statsCol -> dt)) match {
-        case Some(stats) => stats.map { f =>
-            org.apache.spark.sql.Row(s"$qualified/${f.path.getName}",
-              footerValue(dt, f.cols(0).min), footerValue(dt, f.cols(0).max),
-              f.rows, ver, "add")
-          }.sortBy(_.getString(0)).toIndexedSeq
-        case None => spark.read.parquet(tmp.toString)
-          .select(col(statsCol))
-          .groupBy(input_file_name().as("file_path"))
-          .agg(min(col(statsCol)).as("min_v"), max(col(statsCol)).as("max_v"),
-            count(lit(1)).as("n_rows"))
-          .withColumn("file_path", concat(lit(qualified + "/"),
-            element_at(split(col("file_path"), "/"), -1)))
-          .withColumn("commit_ver", lit(ver))
-          .withColumn("op", lit("add"))
-          .collect().toIndexedSeq
-      }
+    val stats = manifestStats(spark, tmp, Seq(statsCol -> dt))
+    val staged = stats.map { f =>
+      org.apache.spark.sql.Row(s"$qualified/${f.path.getName}",
+        footerValue(dt, f.cols(0).min), footerValue(dt, f.cols(0).max),
+        f.rows, ver, "add")
+    }.sortBy(_.getString(0))
     // First commit on an empty layout (a streaming sink's tick one)
     // bootstraps the directory — append and build are then ONE code path.
     fs.mkdirs(dataDir)
-    for (f <- parts0) {
+    for (f <- stats.map(_.path)) {
       // A silently failed rename would leave the manifest row (committed
       // below) pointing at a missing file — the one inconsistency the
       // commit ordering exists to rule out. Hadoop signals failure by
       // RETURN VALUE here, not exception.
-      val moved = fs.rename(f.getPath, new Path(dataDir, f.getPath.getName))
-      require(moved, s"stageDataFiles: rename failed for ${f.getPath}")
+      val moved = fs.rename(f, new Path(dataDir, f.getName))
+      require(moved, s"stageDataFiles: rename failed for $f")
     }
     fs.delete(tmp, true)
-    // Schema identical between the two stats paths (the scan aggregation
-    // derives exactly manifestSchema with a nullable file_path — the
-    // concat/element_at projection is nullable).
-    (parts0.length, staged, manifestSchema(dt, filePathNullable = true))
+    (stats.length, staged, manifestSchema(dt))
   }
 
   /** Append `rows` as ONE new manifest part — the visibility commit, made
@@ -1131,6 +1129,8 @@ object Layout {
   def writeManifested2D(df: DataFrame, path: String,
                         colA: String, colB: String, numFiles: Int): Unit = {
     val spark = df.sparkSession
+    val (dtA, dtB) = (df.schema(colA).dataType, df.schema(colB).dataType)
+    requireFooterStats(spark, Seq(colA -> dtA, colB -> dtB))
     val bounds = boundLiterals(df, colA, colB)
     val (aMin, aMax) = (bounds(s"${colA}_min"), bounds(s"${colA}_max"))
     val (bMin, bMax) = (bounds(s"${colB}_min"), bounds(s"${colB}_max"))
@@ -1145,39 +1145,22 @@ object Layout {
       .drop("__h")
       .write.mode(SaveMode.Overwrite).parquet(s"$path/data")
     // The envelopes come from the footers the write just produced, as in
-    // writeManifested; the scan below runs only where the footer gate
-    // declines (ManifestSpec pins the two row for row).
-    import org.apache.hadoop.fs.Path
-    val dataDir = new Path(s"$path/data")
+    // writeManifested.
+    val dataDir = new org.apache.hadoop.fs.Path(s"$path/data")
     val fs = dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(dataDir).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).toIndexedSeq
-    val (dtA, dtB) = (df.schema(colA).dataType, df.schema(colB).dataType)
-    val manifest = footerFileStats(spark.sparkContext.hadoopConfiguration,
-        files, Seq(colA -> dtA, colB -> dtB)) match {
-      case Some(stats) =>
-        val rows = stats.map { f =>
-          val Seq(a, b) = f.cols
-          org.apache.spark.sql.Row(inputFileNameString(fs, f.path),
-            footerValue(dtA, a.min), footerValue(dtA, a.max),
-            footerValue(dtB, b.min), footerValue(dtB, b.max), f.rows)
-        }.sortBy(_.getString(0))
-        import org.apache.spark.sql.types._
-        val schema = StructType(Seq(
-          StructField("file_path", StringType, nullable = false),
-          StructField("min_a", dtA), StructField("max_a", dtA),
-          StructField("min_b", dtB), StructField("max_b", dtB),
-          StructField("n_rows", LongType, nullable = false)))
-        spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-      case None =>
-        spark.read.parquet(s"$path/data")
-          .select(col(colA), col(colB))
-          .groupBy(input_file_name().as("file_path"))
-          .agg(min(col(colA)).as("min_a"), max(col(colA)).as("max_a"),
-            min(col(colB)).as("min_b"), max(col(colB)).as("max_b"),
-            count(lit(1)).as("n_rows"))
-    }
-    manifest.coalesce(1)
+    val rows = manifestStats(spark, dataDir, Seq(colA -> dtA, colB -> dtB)).map { f =>
+      val Seq(a, b) = f.cols
+      org.apache.spark.sql.Row(inputFileNameString(fs, f.path),
+        footerValue(dtA, a.min), footerValue(dtA, a.max),
+        footerValue(dtB, b.min), footerValue(dtB, b.max), f.rows)
+    }.sortBy(_.getString(0))
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("file_path", StringType, nullable = false),
+      StructField("min_a", dtA), StructField("max_a", dtA),
+      StructField("min_b", dtB), StructField("max_b", dtB),
+      StructField("n_rows", LongType, nullable = false)))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
       .write.mode(SaveMode.Overwrite).parquet(s"$path/manifest2d")
   }
 

@@ -175,10 +175,12 @@ object Runtime {
     * plus the replay-specific twist: after `write`, strictly increasing
     * mtimes are stamped in `names` order — the file source replays
     * oldest-mtime first, so flush batches always FOLLOW the data batches
-    * regardless of copy timing. Returns the staged directory. */
+    * regardless of copy timing. `kind` must be one of [[ReplayKinds]].
+    * Returns the staged directory. */
   private def stageReplay(spark: SparkSession, dir: String, kind: String,
                           names: Seq[String])
                          (write: java.nio.file.Path => Unit): java.nio.file.Path = {
+    require(ReplayKinds.contains(kind), s"replay kind $kind is missing from ReplayKinds")
     val staged = Tables.stagedFixture(spark, dir, kind) { d =>
       val p = java.nio.file.Paths.get(d)
       write(p)
@@ -410,6 +412,33 @@ object Runtime {
         col("c_ts"), col("p_ts"))
   }
 
+  /** The click side, the purchase side and the interval condition the
+    * outer stream joins share. The watermark is applied at the SOURCE: the
+    * per-side type filters are pushed BELOW the EventTimeWatermark node by
+    * the optimizer, so a side that filters the flush sentinel out would
+    * compute its watermark from its own rows only (observed: the
+    * clicks-side watermark stalled at max-click-ts − delay and the last
+    * unmatched clicks never got their null proof). Both sides therefore
+    * KEEP the sentinel through the watermark collector, and it never
+    * matches: the purchase-side sentinel is remapped to user −2 (the
+    * click-side one stays −1, so sentinel never matches sentinel or any
+    * real row). Whether a sentinel can emit ALONE depends on the join
+    * type; each caller says why it cannot. */
+  private def outerJoinSides(events: DataFrame, windowMinutes: Int)
+      : (DataFrame, DataFrame, org.apache.spark.sql.Column) = {
+    val wm = events.withWatermark("ts", "1 hour")
+    val clicks = wm.filter(col("event_type").isin("click", "flush"))
+      .select(col("user_id"), col("event_id").as("click_id"), col("ts").as("c_ts"))
+    val purchases = wm.filter(col("event_type").isin("purchase", "flush"))
+      .select(when(col("event_type") === "flush", lit(-2L))
+          .otherwise(col("user_id")).as("p_user_id"),
+        col("event_id").as("purchase_id"), col("ts").as("p_ts"))
+    (clicks, purchases,
+      col("user_id") === col("p_user_id") &&
+        col("c_ts") <= col("p_ts") &&
+        col("c_ts") >= col("p_ts") - expr(s"INTERVAL $windowMinutes MINUTES"))
+  }
+
   /** LEFT-OUTER stream-stream join — every click, with the purchase it
     * preceded within the window or NULL if none ever arrives. Unlike the
     * inner form ([[clickPurchaseJoin]]), the null results can only emit
@@ -421,30 +450,12 @@ object Runtime {
     * state on both sides is watermark-bounded exactly as in the inner
     * join. */
   def clickPurchaseJoinOuter(events: DataFrame, windowMinutes: Int = 60): DataFrame = {
-    val wm = events.withWatermark("ts", "1 hour")
-    // The per-side type filters are pushed BELOW the EventTimeWatermark
-    // node by the optimizer, so a side that filters the flush sentinel out
-    // would compute its watermark from its own rows only (observed: the
-    // clicks-side watermark stalled at max-click-ts − delay and the last
-    // unmatched clicks never got their null proof). Both sides therefore
-    // KEEP the sentinel through the watermark collector; it can never
-    // reach the output: the purchase-side sentinel is remapped to user −2
-    // (the click-side one stays −1, so sentinel never matches sentinel or
-    // any real row), right-side rows don't emit alone under left-outer,
-    // and the left sentinel's own eviction threshold (sentinel_ts +
-    // window) sits ABOVE the maximum reachable watermark (sentinel_ts −
-    // delay) by construction, so it dies in state when the query ends.
-    val clicks = wm.filter(col("event_type").isin("click", "flush"))
-      .select(col("user_id"), col("event_id").as("click_id"), col("ts").as("c_ts"))
-    val purchases = wm.filter(col("event_type").isin("purchase", "flush"))
-      .select(when(col("event_type") === "flush", lit(-2L))
-          .otherwise(col("user_id")).as("p_user_id"),
-        col("event_id").as("purchase_id"), col("ts").as("p_ts"))
-    clicks.join(purchases,
-      col("user_id") === col("p_user_id") &&
-        col("c_ts") <= col("p_ts") &&
-        col("c_ts") >= col("p_ts") - expr(s"INTERVAL $windowMinutes MINUTES"),
-      "left_outer")
+    // Right-side rows don't emit alone under left-outer, and the left
+    // sentinel's own eviction threshold (sentinel_ts + window) sits ABOVE
+    // the maximum reachable watermark (sentinel_ts − delay) by
+    // construction, so it dies in state when the query ends.
+    val (clicks, purchases, on) = outerJoinSides(events, windowMinutes)
+    clicks.join(purchases, on, "left_outer")
       // p_ts stays internal: a nullable TIMESTAMP output column would hash
       // as NaT — the one null representation the oracle-compare layers
       // don't guarantee equal — while the nullable BIGINT purchase_id
@@ -460,7 +471,7 @@ object Runtime {
     * proof are watermark-finalized: a click's null emits once the watermark
     * passes c_ts + window (no matching purchase can still arrive), a
     * purchase's once it passes p_ts (no matching click can). Sentinel
-    * discipline is [[clickPurchaseJoinOuter]]'s — watermark applied at the
+    * discipline is [[outerJoinSides]]' — watermark applied at the
     * SOURCE so the optimizer's filter pushdown can't starve either side's
     * watermark collector, purchase-side sentinel remapped to user −2 so
     * sentinel never matches anything — with one full-outer-specific twist:
@@ -479,18 +490,8 @@ object Runtime {
     * equal (nullable BIGINTs surface as NaN, which does). user_id =
     * coalesce(click side, purchase side) is never null. */
   def clickPurchaseJoinFull(events: DataFrame, windowMinutes: Int = 60): DataFrame = {
-    val wm = events.withWatermark("ts", "1 hour")
-    val clicks = wm.filter(col("event_type").isin("click", "flush"))
-      .select(col("user_id"), col("event_id").as("click_id"), col("ts").as("c_ts"))
-    val purchases = wm.filter(col("event_type").isin("purchase", "flush"))
-      .select(when(col("event_type") === "flush", lit(-2L))
-          .otherwise(col("user_id")).as("p_user_id"),
-        col("event_id").as("purchase_id"), col("ts").as("p_ts"))
-    clicks.join(purchases,
-      col("user_id") === col("p_user_id") &&
-        col("c_ts") <= col("p_ts") &&
-        col("c_ts") >= col("p_ts") - expr(s"INTERVAL $windowMinutes MINUTES"),
-      "full_outer")
+    val (clicks, purchases, on) = outerJoinSides(events, windowMinutes)
+    clicks.join(purchases, on, "full_outer")
       .select(coalesce(col("user_id"), col("p_user_id")).as("user_id"),
         col("click_id"), col("purchase_id"))
   }
@@ -508,18 +509,8 @@ object Runtime {
     * rows — keep the NaT trap out entirely), user_id = coalesce of
     * whichever side is present. */
   def clickPurchaseJoinRight(events: DataFrame, windowMinutes: Int = 60): DataFrame = {
-    val wm = events.withWatermark("ts", "1 hour")
-    val clicks = wm.filter(col("event_type").isin("click", "flush"))
-      .select(col("user_id"), col("event_id").as("click_id"), col("ts").as("c_ts"))
-    val purchases = wm.filter(col("event_type").isin("purchase", "flush"))
-      .select(when(col("event_type") === "flush", lit(-2L))
-          .otherwise(col("user_id")).as("p_user_id"),
-        col("event_id").as("purchase_id"), col("ts").as("p_ts"))
-    clicks.join(purchases,
-      col("user_id") === col("p_user_id") &&
-        col("c_ts") <= col("p_ts") &&
-        col("c_ts") >= col("p_ts") - expr(s"INTERVAL $windowMinutes MINUTES"),
-      "right_outer")
+    val (clicks, purchases, on) = outerJoinSides(events, windowMinutes)
+    clicks.join(purchases, on, "right_outer")
       .select(coalesce(col("user_id"), col("p_user_id")).as("user_id"),
         col("click_id"), col("purchase_id"))
   }
@@ -713,6 +704,11 @@ object Runtime {
         col("n_events"), col("sum_value"))
   }
 
+  /** The state-partition count of every stream the runners start, in
+    * place of the session's batch width ([[withStreamSettings]] item 1
+    * says why 8). */
+  private val StatePartitions = 8
+
   /** The FOUR SESSION SETTINGS every stream runner fixes for the length of
     * its bounded run, each restored afterwards to exactly what it was
     * before the call (set to its old value, or unset again). Gate/bench
@@ -728,10 +724,7 @@ object Runtime {
     *    micro-batch commits 32 partitions × up-to-4 state stores of
     *    near-empty deltas, and those ~128 concurrent tiny fsyncs dominate
     *    the whole run (measured 44 s cumulative commit time vs 2 s at 8
-    *    partitions, same results). Default 8 here; a production deployment
-    *    sets `graft.stream.shufflePartitions` to match its throughput (e.g.
-    *    ≥ cores, like any shuffle width) — the knob exists precisely
-    *    because this is the one width AQE can never fix.
+    *    partitions, same results), so it is fixed at [[StatePartitions]].
     * 2. RocksDB state store, the declared 100 TB posture (r17): the default
     *    HDFS-backed provider keeps ALL state on the executor heap, so
     *    stream-stream join and dedup state outgrows memory long before the
@@ -751,8 +744,7 @@ object Runtime {
     *    FS, 4 CPUs), most of a replay micro-batch's fixed cost. */
   private def withStreamSettings[T](spark: SparkSession)(body: => T): T = {
     val fixed = Seq(
-      "spark.sql.shuffle.partitions" ->
-        spark.conf.get("graft.stream.shufflePartitions", "8"),
+      "spark.sql.shuffle.partitions" -> StatePartitions.toString,
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
@@ -780,6 +772,17 @@ object Runtime {
     q
   }
 
+  /** The memory sink `name`'s rows as a `LocalRelation`: rows the driver
+    * already holds, so a collect of them runs no job and a sort of them is
+    * answered on the driver (`graft.plans.LocalSort`). A read of the sink
+    * table is a `MemoryPlan`, which that rule does not see. */
+  private def sinkRows(spark: SparkSession, name: String): DataFrame = {
+    val qe = spark.table(name).queryExecution
+    org.apache.spark.sql.graft.ColumnBridge.frame(spark,
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+        qe.analyzed.output.map(_.newInstance()), qe.executedPlan.executeCollect().toSeq))
+  }
+
   /** Run an APPEND-mode stream (stateless transforms, watermark dedup) to
     * completion against the replayed file source — append twin of
     * [[runToCompletion]] (dedup/stateless plans reject complete mode). */
@@ -790,7 +793,7 @@ object Runtime {
       .queryName(name)
       .outputMode("append"),
       s"stream $name")
-    spark.table(name)
+    sinkRows(spark, name)
   }
 
   /** [[runToCompletionAppend]] plus LATE-DATA ACCOUNTING: also returns the
@@ -813,7 +816,7 @@ object Runtime {
       s"stream $name")
     val dropped = q.recentProgress.iterator
       .flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
-    (spark.table(name), dropped)
+    (sinkRows(spark, name), dropped)
   }
 
   /** CHECKPOINT RESTART / RECOVERY — the exactly-once-across-restart proof
@@ -1271,7 +1274,7 @@ object Runtime {
       .queryName(name)
       .outputMode("complete"),
       s"stream $name")
-    spark.table(name)
+    sinkRows(spark, name)
   }
 
   /** COMPLETE-MODE SERVING SNAPSHOT — the third member of the output-mode
@@ -1321,21 +1324,31 @@ object Runtime {
       val mid = spark.table(name).collect().toSeq
       arrive(names(1))
       q.processAllAvailable()
-      (spark.table(name), mid)
+      (sinkRows(spark, name), mid)
     } finally q.stop()
   }
+
+  /** Every replay fixture kind [[stageReplay]] stages; [[stageAllReplays]]
+    * builds each one. */
+  private[graft] val ReplayKinds = Seq("stream", "stream-redeliver", "stream-flush",
+    "stream-split", "stream-late", "docs-redeliver", "cdc-replay", "docs-corpus-dedup")
 
   /** Pre-build every content-keyed replay fixture for `dir` — the bench
     * warmup calls this so arrival-dir staging (a build-once artifact, not
     * stream work) is never billed to whichever timed streaming key runs
     * first. Constructing the source DataFrames runs stageReplay eagerly;
-    * no stream is started. */
+    * no stream is started. The CDC replay stages the changeset
+    * `q_stream_cdc_apply` derives from `dir`'s customer table. */
   def stageAllReplays(spark: SparkSession, dir: String): Unit = {
     eventsStream(spark, dir)
     eventsStreamWithRedelivery(spark, dir)
     eventsStreamWithFlush(spark, dir)
     eventsStreamSplitByTime(spark, dir)
+    eventsStreamLateArrivals(spark, dir)
     documentsStreamWithRedelivery(spark, dir)
+    stageCdcReplay(spark, dir,
+      graft.queries.Relational.mergeChangeset(Tables.customer(spark, dir)))
+    corpusArrivalsDir(spark, dir)
     ()
   }
 }

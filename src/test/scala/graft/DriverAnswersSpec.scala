@@ -83,6 +83,30 @@ class DriverAnswersSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("footer aggregate == scan aggregate: timestamp_ntz with nulls, an all-null file, pre-1582 under LEGACY") {
+    // Stored as INT64 TIMESTAMP(MICROS, isAdjustedToUTC = false); the
+    // session is UTC, so the cast keeps the micros.
+    def ntz(fromUs: Long) = spark.range(0, 3000).select(
+      when(col("id") % 4 =!= 0,
+        timestamp_micros(lit(fromUs) + col("id") * 123456789L).cast("timestamp_ntz")).as("t"),
+      lit(null).cast("timestamp_ntz").as("none"))
+    val modern = write(ntz(1700000000000000L), s"$base/ntz", 3)
+    // Around 1494, written in the legacy hybrid calendar: NTZ is not
+    // rebased, so the footer still holds what the scan returns.
+    val legacy = s"$base/ntz-legacy"
+    withConf("spark.sql.parquet.datetimeRebaseModeInWrite", "LEGACY") {
+      ntz(-15000000000000000L).repartition(2).write.mode("overwrite").parquet(legacy)
+    }
+    for (dir <- Seq(modern, legacy)) {
+      val df = spark.read.parquet(dir)
+      assert(df.schema("t").dataType == TimestampNTZType)
+      assert(answeredFromFooters(stats(df)), s"$dir: the rule did not fire")
+      val got = stats(df).collect().toSeq
+      assert(got == without(FooterAggregate.ruleName)(stats(df).collect().toSeq), dir)
+      assert(got.head.get(0) != null && got.head.get(3) == null, s"$dir: $got")
+    }
+  }
+
   test("footer aggregate over an empty file and an empty directory gives (null, null, 0)") {
     val empty = write(src.limit(0), s"$base/empty-file", 1)
     val emptyDir = s"$base/empty-dir"
@@ -178,6 +202,15 @@ class DriverAnswersSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     // A non-deterministic order is left to Spark.
     assert(!local.orderBy(rand(1)).queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+  }
+
+  test("local sort: q_stream_join's result is the sink's rows, sorted with no job") {
+    val df = SparkEntry.queries("q_stream_join")(spark, Sf0001)
+    assert(df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+      "the sort over the memory sink's rows was not answered on the driver")
+    var rows = Seq.empty[Row]
+    assert(jobsOf { rows = df.collect().toSeq } == 0)
+    assert(rows.nonEmpty)
   }
 
   test("local sort: q_text_unigram_train's action runs at most one job") {

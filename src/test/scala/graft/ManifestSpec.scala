@@ -356,9 +356,12 @@ class ManifestSpec extends AnyFunSuite {
     val ckpt = sys.props("java.io.tmpdir") + "/graft-manifest-stream-ckpt"
     Tables.deleteRecursively(d)
     Tables.deleteRecursively(ckpt)
+    // `ts` stored as TIMESTAMP_NTZ, as q_stream_sink_manifest stores it:
+    // parquet keeps exact footer stats for it (the session is UTC).
     graft.streaming.Runtime.runToManifestedParquet(
       graft.streaming.Runtime.eventsStreamSplitByTime(spark, Sf0001)
-        .select(col("event_id"), col("ts"), col("event_type"), col("value")),
+        .select(col("event_id"), col("ts").cast("timestamp_ntz").as("ts"),
+          col("event_type"), col("value")),
       d, ckpt, statsCol = "ts", numFilesPerTick = 4)
     def parts(sub: String) = Files.list(Paths.get(s"$d/$sub")).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
@@ -372,8 +375,8 @@ class ManifestSpec extends AnyFunSuite {
     assert(manRows == Tables.events(spark, Sf0001).count() + 1)
     // Mid-January range straddles the median split: the planned read must
     // skip files, touch BOTH ticks' generations, and stay lossless.
-    val lo = lit("2024-01-10").cast("timestamp")
-    val hi = lit("2024-01-20").cast("timestamp")
+    val lo = lit("2024-01-10").cast("timestamp_ntz")
+    val hi = lit("2024-01-20").cast("timestamp_ntz")
     val pruned = Layout.manifestPrunedRead(spark, d, lo, hi)
     assert(pruned.inputFiles.length > 1 &&
       pruned.inputFiles.length < parts("data").size,
@@ -691,7 +694,9 @@ class ManifestSpec extends AnyFunSuite {
         .writeStream.outputMode("append")
         .option("checkpointLocation", ckpt)
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          Layout.appendManifested(b, sink, "ts", 4); ()
+          // TIMESTAMP_NTZ: the manifest's stats type for event time.
+          Layout.appendManifested(
+            b.withColumn("ts", col("ts").cast("timestamp_ntz")), sink, "ts", 4); ()
         }.start()
       try {
         q.processAllAvailable() // micro-batch 1 committed
@@ -807,7 +812,7 @@ class ManifestSpec extends AnyFunSuite {
     Tables.deleteRecursively(base)
   }
 
-  test("footer stats == scan stats row for row for Long, Int, micros Timestamp, Date; other types take the scan") {
+  test("footer stats == scan stats row for row for Long, Int, micros Timestamp, NTZ, Date; other types are rejected") {
     import org.apache.spark.sql.types._
     // A quarter of every column is null, so range clustering puts the
     // nulls in files of their own: all-null footers are covered too.
@@ -815,6 +820,12 @@ class ManifestSpec extends AnyFunSuite {
         "l" -> (col("id") * 7919L % 100003L - 50000L),
         "i" -> (col("id") * 104729L % 65537L - 30000L).cast("int"),
         "ts" -> timestamp_micros(lit(1700000000000000L) + col("id") * 123456789L),
+        "ntz" -> timestamp_micros(lit(1700000000000000L) + col("id") * 123456789L)
+          .cast("timestamp_ntz"),
+        // Around 1494: before the Gregorian cutover, where a legacy-calendar
+        // writer would rebase a DATE or TIMESTAMP.
+        "ntz_old" -> timestamp_micros(lit(-15000000000000000L) + col("id") * 123456789L)
+          .cast("timestamp_ntz"),
         "d" -> date_add(lit("1990-01-01").cast("date"), (col("id") * 37 % 9000).cast("int")),
         "s" -> concat(lit("k"), (col("id") * 31 % 997).cast("string")),
         "dec" -> (col("id") / 7).cast(DecimalType(12, 4)))
@@ -822,25 +833,34 @@ class ManifestSpec extends AnyFunSuite {
     val base = sys.props("java.io.tmpdir") + "/graft-manifest-footer-spec"
     Tables.deleteRecursively(base)
     val tsType = "spark.sql.parquet.outputTimestampType"
-    // (stats column, parquet timestamp type it is written with, footer path
-    // expected). Spark's default timestamp type is INT96, which has no
-    // exact footer stats, so only a TIMESTAMP_MICROS write takes the footer.
-    val cases = Seq(("l", None, true), ("i", None, true),
-      ("ts", Some("TIMESTAMP_MICROS"), true), ("d", None, true),
-      ("ts", Some("INT96"), false), ("s", None, false), ("dec", None, false))
-    for ((c, ts, footerPath) <- cases) {
-      val d = s"$base/$c-${ts.getOrElse("default")}"
-      val prevTs = spark.conf.getOption(tsType)
-      ts.foreach(spark.conf.set(tsType, _))
-      try Layout.writeManifested(src.select(col(c)), d, c, 6)
-      finally prevTs.fold(spark.conf.unset(tsType))(spark.conf.set(tsType, _))
+    val rebase = "spark.sql.parquet.datetimeRebaseModeInWrite"
+    // Write column `c` as a manifested layout at `d`, under `conf` if set.
+    def write(c: String, d: String, conf: Option[(String, String)]): Unit =
+      conf.fold(Layout.writeManifested(src.select(col(c)), d, c, 6)) { case (k, v) =>
+        withConf(k, v)(Layout.writeManifested(src.select(col(c)), d, c, 6))
+      }
+    // (stats column, session setting of the write). Spark's default
+    // timestamp type is INT96, which has no exact footer stats; NTZ is
+    // always INT64 micros, and is not rebased even under LEGACY.
+    val admitted = Seq(("l", None), ("i", None), ("ts", Some(tsType -> "TIMESTAMP_MICROS")),
+      ("ntz", None), ("ntz_old", Some(rebase -> "LEGACY")), ("d", None))
+    for ((c, conf) <- admitted) {
+      val d = s"$base/$c"
+      write(c, d, conf)
       val dataDir = new org.apache.hadoop.fs.Path(s"$d/data")
       val files = dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .listStatus(dataDir).map(_.getPath).filter(_.getName.endsWith(".parquet")).toSeq
-      val footer = Layout.footerFileStats(spark.sparkContext.hadoopConfiguration, files,
-        Seq(c -> src.schema(c).dataType))
-      assert(footer.isDefined == footerPath,
-        s"$c ($ts): footer path ${if (footer.isDefined) "taken" else "declined"}")
+      assert(Layout.footerFileStats(spark.sparkContext.hadoopConfiguration, files,
+        Seq(c -> src.schema(c).dataType)).isDefined, s"$c: footer path declined")
+      if (c == "ntz_old") {
+        // The leg is vacuous unless the files really are marked legacy.
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(files.head,
+            spark.sparkContext.hadoopConfiguration))
+        try assert(reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .containsKey("org.apache.spark.legacyDateTime"), "no legacy-calendar marker")
+        finally reader.close()
+      }
       val manifest = spark.read.parquet(s"$d/manifest")
         .select("file_path", "min_v", "max_v", "n_rows")
         .collect().map(_.toSeq).sortBy(_.head.toString).toSeq
@@ -849,13 +869,24 @@ class ManifestSpec extends AnyFunSuite {
         .agg(min(col(c)), max(col(c)), count(lit(1)))
         .collect().map(_.toSeq).sortBy(_.head.toString).toSeq
       assert(manifest.length == files.length)
-      assert(manifest == scan, s"$c ($ts): manifest != scan:\n$manifest\n$scan")
+      assert(manifest == scan, s"$c: manifest != scan:\n$manifest\n$scan")
       assert(manifest.exists(_(1) == null) && manifest.exists(_(1) != null),
-        s"$c ($ts): no all-null file next to a valued one — the null leg is vacuous")
+        s"$c: no all-null file next to a valued one — the null leg is vacuous")
+    }
+    // A type without exact footer stats is rejected before anything is
+    // written, with the column and its type in the message.
+    val rejected = Seq(("ts", Some(tsType -> "INT96"), "TIMESTAMP written as INT96"),
+      ("s", None, "STRING"), ("dec", None, "DECIMAL(12,4)"))
+    for ((c, conf, typeName) <- rejected) {
+      val d = s"$base/$c-rejected"
+      val e = intercept[IllegalArgumentException](write(c, d, conf))
+      assert(e.getMessage.contains(s"`$c`") && e.getMessage.contains(typeName),
+        s"$c: ${e.getMessage}")
+      assert(!new java.io.File(d).exists(), s"$c: files written before the rejection")
     }
     Tables.deleteRecursively(base)
   }
-  test("2-D manifest: footer envelopes == scan envelopes row for row; other types take the scan") {
+  test("2-D manifest: footer envelopes == scan envelopes row for row; other types are rejected") {
     import org.apache.spark.sql.types._
     // A quarter of each column is null, on different rows, so some files
     // hold nulls in one column only.
@@ -865,31 +896,32 @@ class ManifestSpec extends AnyFunSuite {
       when(col("id") % 4 =!= 2, (col("id") / 7).cast(DecimalType(12, 4))).as("dec"))
     val base = sys.props("java.io.tmpdir") + "/graft-manifest-2d-footer-spec"
     Tables.deleteRecursively(base)
-    // (column pair, footer path expected): a decimal column has no exact
-    // footer stats, so its manifest is the scan's.
-    for (((ca, cb), footerPath) <- Seq((("a", "b"), true), (("a", "dec"), false))) {
-      val d = s"$base/$ca-$cb"
-      Layout.writeManifested2D(src.select(col(ca), col(cb)), d, ca, cb, 6)
-      val dataDir = new org.apache.hadoop.fs.Path(s"$d/data")
-      val files = dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .listStatus(dataDir).map(_.getPath).filter(_.getName.endsWith(".parquet")).toSeq
-      val footer = Layout.footerFileStats(spark.sparkContext.hadoopConfiguration, files,
-        Seq(ca -> src.schema(ca).dataType, cb -> src.schema(cb).dataType))
-      assert(footer.isDefined == footerPath,
-        s"$ca, $cb: footer path ${if (footer.isDefined) "taken" else "declined"}")
-      val cols = Seq("file_path", "min_a", "max_a", "min_b", "max_b", "n_rows")
-      val manifest = spark.read.parquet(s"$d/manifest2d").select(cols.map(col): _*)
-      val scan = spark.read.parquet(s"$d/data")
-        .groupBy(input_file_name().as("file_path"))
-        .agg(min(col(ca)), max(col(ca)), min(col(cb)), max(col(cb)), count(lit(1)))
-        .toDF(cols: _*)
-      assert(manifest.schema.map(f => f.name -> f.dataType) ==
-        scan.schema.map(f => f.name -> f.dataType), s"$ca, $cb: manifest types != scan types")
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(_.toSeq).sortBy(_.head.toString).toSeq
-      assert(rows(manifest).length == files.length)
-      assert(rows(manifest) == rows(scan), s"$ca, $cb: manifest != scan")
+    val d = s"$base/a-b"
+    Layout.writeManifested2D(src.select(col("a"), col("b")), d, "a", "b", 6)
+    val dataDir = new org.apache.hadoop.fs.Path(s"$d/data")
+    val files = dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(dataDir).map(_.getPath).filter(_.getName.endsWith(".parquet")).toSeq
+    assert(Layout.footerFileStats(spark.sparkContext.hadoopConfiguration, files,
+      Seq("a" -> LongType, "b" -> IntegerType)).isDefined, "footer path declined")
+    val cols = Seq("file_path", "min_a", "max_a", "min_b", "max_b", "n_rows")
+    val manifest = spark.read.parquet(s"$d/manifest2d").select(cols.map(col): _*)
+    val scan = spark.read.parquet(s"$d/data")
+      .groupBy(input_file_name().as("file_path"))
+      .agg(min(col("a")), max(col("a")), min(col("b")), max(col("b")), count(lit(1)))
+      .toDF(cols: _*)
+    assert(manifest.schema.map(f => f.name -> f.dataType) ==
+      scan.schema.map(f => f.name -> f.dataType), "manifest types != scan types")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).sortBy(_.head.toString).toSeq
+    assert(rows(manifest).length == files.length)
+    assert(rows(manifest) == rows(scan), "manifest != scan")
+    // A decimal column has no exact footer stats: rejected before the write.
+    val rejected = s"$base/a-dec"
+    val e = intercept[IllegalArgumentException] {
+      Layout.writeManifested2D(src.select(col("a"), col("dec")), rejected, "a", "dec", 6)
     }
+    assert(e.getMessage.contains("`dec`") && e.getMessage.contains("DECIMAL(12,4)"), e.getMessage)
+    assert(!new java.io.File(rejected).exists(), "files written before the rejection")
     Tables.deleteRecursively(base)
   }
 }

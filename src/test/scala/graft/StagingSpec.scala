@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 
 /** Tables.stagedFixture contract: reuse while the data directory and the
   * build are unchanged, restaging when either changes (including a table
@@ -63,6 +64,20 @@ class StagingSpec extends AnyFunSuite {
         assert(writes.get() == 2, "a changed table must invalidate the marker")
         assert(Files.readString(Paths.get(d1, "data.txt")) == "w2")
       }
+    }
+  }
+
+  test("stageAllReplays stages every replay kind, and every fixture under the root is one") {
+    withReplayRoot { root =>
+      graft.streaming.Runtime.stageAllReplays(spark, Data)
+      for (kind <- graft.streaming.Runtime.ReplayKinds)
+        assert(Files.exists(marker(kind, Data)), s"replay kind $kind was not staged")
+      val listing = Files.list(Paths.get(root))
+      val dirs = try listing.iterator().asScala.filter(Files.isDirectory(_)).toSeq
+        finally listing.close()
+      assert(dirs.size == graft.streaming.Runtime.ReplayKinds.size,
+        s"fixtures under the root: ${dirs.map(_.getFileName).mkString(", ")}")
+      for (d <- dirs) assert(Files.exists(d.resolve(".staged")), s"$d has no marker")
     }
   }
 
